@@ -829,7 +829,7 @@ def q_write_navigation(spark, sf_dir):
     )
 
     # four projections read the same written table: persist it so one
-    # driver action runs the write mapInPandas once, not four times
+    # driver action runs the write kernel once, not four times
     nav = write_pdfs_navigation(extract_spans(_corpus(spark, sf_dir))).persist()
     ol = (
         extract_outlines(nav)

@@ -23,7 +23,7 @@ Stages (each output lands under --output for auditability):
                   lines keep only their first occurrence
   5. chunk        surviving docs -> overlapping training windows
 
-Every stage is DataFrame-native (mapInPandas only inside extraction);
+Every stage is DataFrame-native (Python row kernels only inside extraction);
 at cluster scale the shuffles are: extraction none, dedup's LSH band
 join + label propagation, chunking none.
 """
@@ -76,10 +76,10 @@ def main(argv=None):
     )
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from sparkpdf.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("sparkpdf-curate").getOrCreate()
+    spark = get_spark("sparkpdf-curate")
 
     from sparkpdf.operators.dedup import dup_clusters
     from sparkpdf.operators.extract import extract_spans

@@ -63,9 +63,9 @@ def main(argv=None):
     )
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from sparkpdf.session import get_spark
 
-    spark = SparkSession.builder.appName("sparkpdf-extract").getOrCreate()
+    spark = get_spark("sparkpdf-extract")
 
     from sparkpdf.operators.extract import (
         extract_interleaved,

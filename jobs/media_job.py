@@ -26,10 +26,10 @@ Outputs under --output:
                 per-format decision (resumed runs replay it)
 plus ONE summary JSON line on stdout.
 
-Scale shape: payload extraction is the one mapInPandas pass; the
+Scale shape: payload extraction is the one Python pass; the
 policy costs one per-format aggregate over magic-sniffed heads plus
 sample_per_format driver-side decode timings (plans/salting.py's
-scalar-collect class); features are a second mapInPandas pass over
+scalar-collect class); features are a second Python pass over
 the persisted payload table (never recomputed from the PDFs).
 """
 
@@ -58,12 +58,12 @@ def main(argv=None, spark=None):
     g.add_argument("--force-header-only", action="store_true")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from sparkpdf.session import get_spark
     from pyspark.sql import functions as F
 
     own_session = spark is None
     if own_session:
-        spark = SparkSession.builder.appName("sparkpdf-media").getOrCreate()
+        spark = get_spark("sparkpdf-media")
 
     from sparkpdf.operators.multimodal import (
         extract_media_features,

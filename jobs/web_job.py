@@ -6,7 +6,7 @@ resumable spark-submit surface (the PDF leg is jobs/extract_job.py).
         --output /data/web_docs \
         --batches 8                     (checkpoint slices)
 
-Pipeline: scan -> checkpointed per-slice extraction (ONE mapInPandas
+Pipeline: scan -> checkpointed per-slice extraction (ONE Python
 pass per slice: boilerplate-stripped main_text + title + metadata
 scalars + outlinks + heading outline + table shapes + n_bytes +
 error quarantine) -> host-level link-graph aggregate.
@@ -64,12 +64,12 @@ def main(argv=None, spark=None):
     ap.add_argument("--big-doc-bytes", type=int, default=64 << 20)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from sparkpdf.session import get_spark
     from pyspark.sql import functions as F
 
     owns_spark = spark is None
     if owns_spark:
-        spark = SparkSession.builder.appName("sparkpdf-web").getOrCreate()
+        spark = get_spark("sparkpdf-web")
 
     from sparkpdf.operators.text import extract_web_docs, link_host_degree
     from sparkpdf.plans.checkpoint import CheckpointedExtraction

@@ -26,7 +26,7 @@ from typing import List, Optional, Tuple
 
 # printable-ASCII sanitizer for the corpus generators (round 9):
 # byte-identical to the old per-char genexpr, C-speed
-_NONPRINTABLE = _re.compile(r"[^ -~]")
+NONPRINTABLE = _re.compile(r"[^ -~]")
 
 _DROP_ENTIRELY = {"script", "style", "noscript", "template"}
 _BOILERPLATE = {"nav", "header", "footer", "aside", "form"}
@@ -187,23 +187,22 @@ _FAST_DISABLED = _os.environ.get("SPARKPDF_HTML_FAST", "1") == "0"
 # syntax is a strict SUBSET of attrfind_tolerant (leading whitespace
 # required, names can't start with quote/=, unquoted values can't
 # start with a quote) — anything outside the subset fails the match
-# and bails to stdlib rather than risking a divergent parse
-_F_STARTTAG = _re.compile(
-    r"<([a-zA-Z][-.a-zA-Z0-9:_]*)"
-    r"((?:\s+[^\s/>=\"'][^\s/=>]*"
-    r"(?:\s*=\s*(?:\"[^\"]*\"|'[^']*'|(?![\"'=])[^\s>]+))?)*)"
-    r"\s*(/?)>"
-)
+# and bails to stdlib rather than risking a divergent parse. One
+# attribute fragment serves the start-tag scan and the attr walk.
+_ATTR_NAME = r"[^\s/>=\"'][^\s/=>]*"
 # unquoted values must not START with '=' (nor a quote): stdlib's
 # attrfind_tolerant eats runs of '=' ('foo==\"bar\"' -> ('foo','bar')),
 # so a leading '=' here would swallow the extra equals into the value
 # and silently diverge — excluding it makes the whole start-tag match
 # fail and the document bail to stdlib instead (r9 review finding,
 # pinned in tests/test_html_fast.py)
-_F_ATTR = _re.compile(
-    r"\s+([^\s/>=\"'][^\s/=>]*)"
-    r"(?:\s*=\s*(\"[^\"]*\"|'[^']*'|(?![\"'=])[^\s>]+))?"
+_ATTR_VALUE = r"\"[^\"]*\"|'[^']*'|(?![\"'=])[^\s>]+"
+_F_STARTTAG = _re.compile(
+    r"<([a-zA-Z][-.a-zA-Z0-9:_]*)"
+    rf"((?:\s+{_ATTR_NAME}(?:\s*=\s*(?:{_ATTR_VALUE}))?)*)"
+    r"\s*(/?)>"
 )
+_F_ATTR = _re.compile(rf"\s+({_ATTR_NAME})(?:\s*=\s*({_ATTR_VALUE}))?")
 _F_ENDTAG = _re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 _F_COMMENT_CLOSE = _re.compile(r"--\s*>")  # stdlib _markupbase.Marked...
 _F_CDATA_CLOSE = {
@@ -597,7 +596,7 @@ def synthesize_html(doc_id: int, text: str) -> str:
     real boilerplate (nav with links, header/footer, script/style, a
     link-dense related-articles div) that the extractor must strip,
     leaving exactly the planted paragraphs."""
-    printable = _NONPRINTABLE.sub("?", text)
+    printable = NONPRINTABLE.sub("?", text)
     body = _htmlmod.escape(printable)
     return (
         "<!DOCTYPE html><html><head>"
@@ -623,7 +622,7 @@ def synthesize_interleaved_html(doc_id: int, text: str) -> str:
     and the usual boilerplate (nav links, header h1, script, footer)
     the extractor must strip. Span contract: exactly
     [text(lead), media_ref(img-{d}), text('closing paragraph {d}')]."""
-    printable = _NONPRINTABLE.sub("?", text)
+    printable = NONPRINTABLE.sub("?", text)
     body = _htmlmod.escape(printable)
     return (
         "<!DOCTYPE html><html><head>"
@@ -664,7 +663,7 @@ def synthesize_webpage(doc_id: int, text: str) -> str:
     d = int(doc_id)
     lang = ("en", "de", "fr", "es", "it")[d % 5]
     robots = "noindex,nofollow" if d % 7 == 0 else "index,follow"
-    printable = _NONPRINTABLE.sub("?", text)
+    printable = NONPRINTABLE.sub("?", text)
     body = _htmlmod.escape(printable)
     parts = [
         f'<!DOCTYPE html><html lang="{lang}"><head>',

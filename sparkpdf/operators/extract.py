@@ -4,19 +4,18 @@ pdf_raw(doc_id, pdf_bytes) -> documents_interleaved
     (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>, n_pages,
      n_bytes, error)
 
-All per-document work happens inside ONE `mapInPandas` kernel per Arrow
-batch (SURVEY.md §3.2): the JVM<->Python Arrow IPC is the only process
-boundary, there is NO shuffle in the extraction path, and no per-row
-Python UDFs exist anywhere (input_hint mandate). Catalyst still prunes
-columns/partitions upstream because the input is a plain DataFrame scan.
+Every lane here is a per-document row function run by the one Arrow
+adapter (`_kernel.map_kernel`, SURVEY.md §3.2): the JVM<->Python Arrow
+IPC is the only process boundary, there is NO shuffle in the extraction
+path, and no per-row Python UDFs exist anywhere (input_hint mandate).
+Catalyst still prunes columns/partitions upstream because the input is
+a plain DataFrame scan.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -29,6 +28,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ._kernel import doc_id_str, map_kernel, quarantine_message
 
 SPAN_STRUCT = StructType(
     [
@@ -63,105 +64,49 @@ PAGE_SPAN_SCHEMA = StructType(
 )
 
 
-def _extract_batches_fn(password: bytes = b""):
-    """Kernel adapter factory: loops DOCS inside an Arrow batch
-    (batch-level Python, not per-row Spark UDFs — SURVEY §2.15)."""
+def _span_row(doc_id, data, password: bytes = b""):
+    """One documents_interleaved row for a document's bytes."""
+    from ..kernels.extract import extract_doc
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.extract import extract_doc
-
-        for pdf in batches:
-            out = {"doc_id": [], "spans": [], "n_pages": [], "n_bytes": [], "error": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                data = bytes(blob) if blob is not None else b""
-                res = extract_doc(data, password=password)
-                out["doc_id"].append(str(doc_id))
-                out["spans"].append(
-                    [
-                        (s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in res["spans"]
-                    ]
-                )
-                out["n_pages"].append(res["n_pages"])
-                out["n_bytes"].append(len(data))
-                out["error"].append(res["error"])
-            yield pd.DataFrame(out)
-
-    return gen
+    data = data or b""
+    res = extract_doc(data, password=password)
+    return doc_id, res["spans"], res["n_pages"], len(data), res["error"]
 
 
-_extract_batches = _extract_batches_fn()  # default: no password
+def _stats_row(doc_id, data):
+    """One STATS_SCHEMA row for a document's bytes."""
+    from ..kernels.extract import extract_doc
+
+    data = data or b""
+    res = extract_doc(data)
+    texts = [s["text"] or "" for s in res["spans"] if s["kind"] == "text"]
+    return (doc_id, res["n_pages"], len(texts),
+            len(res["spans"]) - len(texts), sum(map(len, texts)),
+            len(data), res["error"])
 
 
-def _extract_batches_arrow_fn(password: bytes = b""):
-    """Arrow-native kernel adapter (mapInArrow): spans are assembled as
-    one flat StructArray + a ListArray offset vector per batch instead
-    of per-row Python lists-of-tuples boxed through pandas object
-    columns. Measured only ~1.03x over mapInPandas at local[32] (the
-    nested-output cost is dominated by IPC transfer volume, which both
-    paths share) — kept because it removes pandas object boxing from
-    the hottest loop and is byte-identical in output (tested)."""
+def _text_pdf(doc_id, text) -> bytes:
+    """The synthesized corpus document for a documents(doc_id, text)
+    row (shared by synthesize_pdf_corpus and the fused lanes)."""
+    from ..testing.pdfgen import doc_to_pdf
 
-    def gen(batches):
-        import pyarrow as pa
+    return doc_to_pdf(text or "", n_media=1, title=f"doc-{doc_id}")
 
-        from ..kernels.extract import extract_doc
 
-        for rb in batches:
-            doc_ids = rb.column(0)
-            blobs = rb.column(1)
-            out_ids = []
-            kinds: list = []
-            texts: list = []
-            mrefs: list = []
-            offs: list = []
-            list_offsets = [0]
-            n_pages = []
-            n_bytes = []
-            errors = []
-            for doc_id, blob in zip(doc_ids, blobs):
-                data = blob.as_py() if blob.is_valid else b""
-                res = extract_doc(data, password=password)
-                out_ids.append(str(doc_id))
-                for s in res["spans"]:
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                list_offsets.append(len(kinds))
-                n_pages.append(res["n_pages"])
-                n_bytes.append(len(data))
-                errors.append(res["error"])
-            spans = pa.ListArray.from_arrays(
-                pa.array(list_offsets, type=pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(kinds, type=pa.string()),
-                        pa.array(texts, type=pa.string()),
-                        pa.array(mrefs, type=pa.string()),
-                        pa.array(offs, type=pa.int32()),
-                    ],
-                    names=["kind", "text", "media_ref", "offset"],
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.string()),
-                    spans,
-                    pa.array(n_pages, type=pa.int32()),
-                    pa.array(n_bytes, type=pa.int64()),
-                    pa.array(errors, type=pa.string()),
-                ],
-                names=["doc_id", "spans", "n_pages", "n_bytes", "error"],
-            )
-
-    return gen
+def _synth_input(documents: DataFrame, n_partitions: int | None):
+    """documents -> (doc_id string, text) repartitioned by doc_id
+    BEFORE the kernel: a small parquet scan arrives as 1-2 tasks, which
+    would serialize the per-doc Python work."""
+    if n_partitions is None:
+        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
+    return documents.select(doc_id_str(), F.col("text")).repartition(
+        n_partitions, "doc_id")
 
 
 def synthesize_and_extract_spans(
     documents: DataFrame, n_partitions: int | None = None
 ) -> DataFrame:
-    """Fused synthesize_pdf_corpus + extract_spans in ONE mapInArrow
+    """Fused synthesize_pdf_corpus + extract_spans in ONE Python
     layer (round 9): row-identical to
     extract_spans(synthesize_pdf_corpus(documents)) — pinned by
     tests/test_fused_extract.py and the extract_spans oracle — but the
@@ -169,71 +114,10 @@ def synthesize_and_extract_spans(
     pipeline pays ONE python-runner layer instead of two chained ones
     (each (task x runner) costs a measured ~6 ms serialized worker
     handshake; at 32 tasks that is ~0.2 s of wall per layer)."""
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
-
-    def gen(batches):
-        import pyarrow as pa
-
-        from ..kernels.extract import extract_doc
-        from ..testing.pdfgen import doc_to_pdf
-
-        for rb in batches:
-            out_ids = []
-            kinds: list = []
-            texts: list = []
-            mrefs: list = []
-            offs: list = []
-            list_offsets = [0]
-            n_pages = []
-            n_bytes = []
-            errors = []
-            for doc_id, text in zip(rb.column(0), rb.column(1)):
-                d = str(doc_id)
-                data = doc_to_pdf(
-                    text.as_py() if text.is_valid else "",
-                    n_media=1,
-                    title=f"doc-{d}",
-                )
-                res = extract_doc(data)
-                out_ids.append(d)
-                for s in res["spans"]:
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                list_offsets.append(len(kinds))
-                n_pages.append(res["n_pages"])
-                n_bytes.append(len(data))
-                errors.append(res["error"])
-            spans = pa.ListArray.from_arrays(
-                pa.array(list_offsets, type=pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(kinds, type=pa.string()),
-                        pa.array(texts, type=pa.string()),
-                        pa.array(mrefs, type=pa.string()),
-                        pa.array(offs, type=pa.int32()),
-                    ],
-                    names=["kind", "text", "media_ref", "offset"],
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.string()),
-                    spans,
-                    pa.array(n_pages, type=pa.int32()),
-                    pa.array(n_bytes, type=pa.int64()),
-                    pa.array(errors, type=pa.string()),
-                ],
-                names=["doc_id", "spans", "n_pages", "n_bytes", "error"],
-            )
-
-    return docs.repartition(n_partitions, "doc_id").mapInArrow(
-        gen, schema=INTERLEAVED_SCHEMA
+    return map_kernel(
+        _synth_input(documents, n_partitions), ["doc_id", "text"],
+        lambda d, text: [_span_row(d, _text_pdf(d, text))],
+        INTERLEAVED_SCHEMA,
     )
 
 
@@ -244,111 +128,43 @@ def synthesize_and_extract_stats(
     python-runner layer, and NEITHER the PDF bytes NOR the span text
     ever cross Arrow — the output is five scalars per doc. Row-identical
     to extract_stats(synthesize_pdf_corpus(documents))."""
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
-
-    def gen(batches):
-        import pyarrow as pa
-
-        from ..kernels.extract import extract_doc
-        from ..testing.pdfgen import doc_to_pdf
-
-        for rb in batches:
-            out = {k.name: [] for k in STATS_SCHEMA.fields}
-            for doc_id, text in zip(rb.column(0), rb.column(1)):
-                d = str(doc_id)
-                data = doc_to_pdf(
-                    text.as_py() if text.is_valid else "",
-                    n_media=1,
-                    title=f"doc-{d}",
-                )
-                res = extract_doc(data)
-                n_text = sum(
-                    1 for s in res["spans"] if s["kind"] == "text")
-                out["doc_id"].append(d)
-                out["n_pages"].append(res["n_pages"])
-                out["n_text"].append(n_text)
-                out["n_media"].append(len(res["spans"]) - n_text)
-                out["n_chars"].append(
-                    sum(len(s["text"] or "") for s in res["spans"]
-                        if s["kind"] == "text")
-                )
-                out["n_bytes"].append(len(data))
-                out["error"].append(res["error"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["doc_id"], type=pa.string()),
-                    pa.array(out["n_pages"], type=pa.int32()),
-                    pa.array(out["n_text"], type=pa.int32()),
-                    pa.array(out["n_media"], type=pa.int32()),
-                    pa.array(out["n_chars"], type=pa.int64()),
-                    pa.array(out["n_bytes"], type=pa.int64()),
-                    pa.array(out["error"], type=pa.string()),
-                ],
-                names=[f.name for f in STATS_SCHEMA.fields],
-            )
-
-    return docs.repartition(n_partitions, "doc_id").mapInArrow(
-        gen, schema=STATS_SCHEMA
+    return map_kernel(
+        _synth_input(documents, n_partitions), ["doc_id", "text"],
+        lambda d, text: [_stats_row(d, _text_pdf(d, text))],
+        STATS_SCHEMA,
     )
 
 
 def extract_spans(pdf_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """pdf_raw(doc_id, pdf_bytes, ...) -> documents_interleaved.
     `password` decrypts standard-security-handler docs (C3)."""
-    import os
-
-    if os.environ.get("SPARKPDF_PANDAS_SPANS"):  # comparison/debug path
-        return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-            _extract_batches_fn(password) if password else _extract_batches,
-            schema=INTERLEAVED_SCHEMA,
-        )
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInArrow(
-        _extract_batches_arrow_fn(password),
-        schema=INTERLEAVED_SCHEMA,
+    return map_kernel(
+        pdf_raw, [doc_id_str(), "pdf_bytes"],
+        lambda d, data: [_span_row(d, data, password)],
+        INTERLEAVED_SCHEMA,
     )
 
 
-def _extract_page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _page_rows(doc_id, data):
     from ..kernels.extract import extract_doc, page_text
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "page_no": [], "spans": [], "full_text": [],
-            "rotate": [], "mediabox": [], "error": [],
-        }
-        for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-            data = bytes(blob) if blob is not None else b""
-            # single parse: page metas come from extract_doc's own
-            # PdfDocument (round-1 parsed every doc twice here)
-            res = extract_doc(data, with_page_meta=True)
-            metas: dict = res["page_meta"]
-            by_page: dict = {p: [] for p in range(res["n_pages"])}
-            for s in res["spans"]:
-                by_page.setdefault(s["page_no"], []).append(s)
-            for page_no in sorted(by_page):
-                spans = by_page[page_no]
-                meta = metas.get(page_no, {})
-                rows["doc_id"].append(str(doc_id))
-                rows["page_no"].append(page_no)
-                rows["spans"].append(
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-                )
-                rows["full_text"].append(page_text(res["spans"], page_no))
-                rows["rotate"].append(meta.get("rotate", 0))
-                rows["mediabox"].append(meta.get("mediabox"))
-                rows["error"].append(res["error"])
-        yield pd.DataFrame(rows)
+    # single parse: page metas come from extract_doc's own PdfDocument
+    res = extract_doc(data or b"", with_page_meta=True)
+    metas: dict = res["page_meta"]
+    by_page: dict = {p: [] for p in range(res["n_pages"])}
+    for s in res["spans"]:
+        by_page.setdefault(s["page_no"], []).append(s)
+    for page_no in sorted(by_page):
+        meta = metas.get(page_no, {})
+        yield (doc_id, page_no, by_page[page_no],
+               page_text(res["spans"], page_no), meta.get("rotate", 0),
+               meta.get("mediabox"), res["error"])
 
 
 def extract_page_spans(pdf_raw: DataFrame) -> DataFrame:
     """Page-granular variant feeding split/merge/page-range operators."""
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        _extract_page_batches, schema=PAGE_SPAN_SCHEMA
-    )
+    return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], _page_rows,
+                      PAGE_SPAN_SCHEMA)
 
 
 # --- corpus synthesis (documents table -> pdf_raw), also distributed --------
@@ -359,23 +175,6 @@ PDF_RAW_SCHEMA = StructType(
         StructField("pdf_bytes", BinaryType()),
     ]
 )
-
-
-def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..testing.pdfgen import doc_to_pdf
-
-    for pdf in batches:
-        out = {"doc_id": [], "pdf_bytes": []}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            out["doc_id"].append(str(doc_id))
-            out["pdf_bytes"].append(
-                doc_to_pdf(
-                    text if text is not None else "",
-                    n_media=1,
-                    title=f"doc-{doc_id}",
-                )
-            )
-        yield pd.DataFrame(out)
 
 
 # markup shapes that identify an HTML prefix ahead of a quoted
@@ -401,67 +200,41 @@ def _sniff_is_pdf(data: bytes) -> bool:
     return idx >= 0 and not _HTML_PREFIX.search(data[:idx])
 
 
-def _interleaved_batches_fn(with_ctype: bool):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.extract import extract_doc
-        from ..kernels.html import html_to_spans
+def _interleaved_row(doc_id, data, ctype=None):
+    from ..kernels.extract import extract_doc
+    from ..kernels.html import html_to_spans
 
-        for pdf in batches:
-            out = {"doc_id": [], "spans": [], "n_pages": [],
-                   "n_bytes": [], "error": []}
-            ctypes = (pdf["content_type"] if with_ctype
-                      else [None] * len(pdf))
-            for doc_id, blob, ctype in zip(
-                    pdf["doc_id"], pdf["payload"], ctypes):
-                data = bytes(blob) if blob is not None else b""
+    data = data or b""
+    try:
+        # inside the try: a malformed content_type must quarantine the
+        # ROW, never kill the task (invariant 2)
+        base = (ctype.split(";")[0].strip().lower()
+                if isinstance(ctype, str) and ctype else "")
+        # a declared upstream content type (e.g. the WARC HTTP
+        # envelope) outranks the byte sniff
+        if base == "application/pdf" or (
+                base not in ("text/html",) and _sniff_is_pdf(data)):
+            res = extract_doc(data)
+            spans, n_pages, error = res["spans"], res["n_pages"], res["error"]
+        else:
+            # textual lane: a NUL/control-dense payload is not a
+            # document of either kind -> quarantine (a torn-header PDF
+            # still routes above via the magic-in-first-1KB scan)
+            head = data[:4096]
+            ctrl = sum(1 for b in head if b < 9 or 13 < b < 32)
+            if data and ctrl * 10 > len(head):
+                spans, n_pages = [], 0
+                error = "unrecognized payload (binary, no PDF magic)"
+            else:
                 try:
-                    # inside the try: a non-string/NaN content_type
-                    # must quarantine the ROW, never kill the task
-                    # (invariant 2)
-                    base = (str(ctype).split(";")[0].strip().lower()
-                            if isinstance(ctype, str) and ctype
-                            else "")
-                    # a declared upstream content type (e.g. the WARC
-                    # HTTP envelope) outranks the byte sniff
-                    if base == "application/pdf" or (
-                            base not in ("text/html",)
-                            and _sniff_is_pdf(data)):
-                        res = extract_doc(data)
-                        spans = res["spans"]
-                        n_pages, error = res["n_pages"], res["error"]
-                    else:
-                        # textual lane: a NUL/control-dense payload is
-                        # not a document of either kind -> quarantine
-                        # (a torn-header PDF still routes above via
-                        # the magic-in-first-1KB scan)
-                        head = data[:4096]
-                        ctrl = sum(1 for b in head
-                                   if b < 9 or 13 < b < 32)
-                        if data and ctrl * 10 > len(head):
-                            spans, n_pages = [], 0
-                            error = ("unrecognized payload (binary, "
-                                     "no PDF magic)")
-                        else:
-                            try:
-                                textual = data.decode("utf-8")
-                            except UnicodeDecodeError:
-                                textual = data.decode("latin-1")
-                            res = html_to_spans(textual)
-                            spans, n_pages, error = res["spans"], 1, None
-                except Exception as exc:  # quarantine, never dead task
-                    spans, n_pages = [], 0
-                    error = f"{type(exc).__name__}: {exc}"[:500]
-                out["doc_id"].append(str(doc_id))
-                out["spans"].append(
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in spans]
-                )
-                out["n_pages"].append(n_pages)
-                out["n_bytes"].append(len(data))
-                out["error"].append(error)
-            yield pd.DataFrame(out)
-
-    return gen
+                    textual = data.decode("utf-8")
+                except UnicodeDecodeError:
+                    textual = data.decode("latin-1")
+                spans = html_to_spans(textual)["spans"]
+                n_pages, error = 1, None
+    except Exception as exc:  # the row keeps spans=[], n_pages=0, n_bytes
+        spans, n_pages, error = [], 0, quarantine_message(exc)
+    return [(doc_id, spans, n_pages, len(data), error)]
 
 
 def extract_interleaved(
@@ -485,16 +258,10 @@ def extract_interleaved(
     application/pdf forces the PDF lane, text/html the DOM lane; only
     unlabeled payloads fall back to the magic scan (which itself
     requires no '<' before the magic, see _sniff_is_pdf)."""
-    if content_type_col is None:
-        return raw.select("doc_id", "payload").mapInPandas(
-            _interleaved_batches_fn(False), schema=INTERLEAVED_SCHEMA
-        )
-    return raw.select(
-        "doc_id", "payload",
-        F.col(content_type_col).alias("content_type"),
-    ).mapInPandas(
-        _interleaved_batches_fn(True), schema=INTERLEAVED_SCHEMA
-    )
+    cols = [doc_id_str(), "payload"]
+    if content_type_col is not None:
+        cols.append(F.col(content_type_col).alias("content_type"))
+    return map_kernel(raw, cols, _interleaved_row, INTERLEAVED_SCHEMA)
 
 
 def synthesize_interleaved_corpus(
@@ -508,33 +275,19 @@ def synthesize_interleaved_corpus(
     nav/header/footer boilerplate the extractor must strip. Both
     lanes are closed-form so one DuckDB oracle covers the mixed
     output."""
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        spark = documents.sparkSession
-        n_partitions = spark.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         from ..kernels.html import synthesize_interleaved_html
         from ..testing.pdfgen import doc_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                if d % 2 == 0:
-                    payload = doc_to_pdf(text, title=f"doc-{d}")
-                else:
-                    payload = synthesize_interleaved_html(
-                        d, text).encode("utf-8")
-                out["doc_id"].append(str(d))
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+        d = int(doc_id)
+        if d % 2 == 0:
+            return [(str(d), doc_to_pdf(text, title=f"doc-{d}"))]
+        return [(str(d), synthesize_interleaved_html(d, text).encode("utf-8"))]
 
-    return docs.repartition(n_partitions, "doc_id").mapInPandas(
-        gen, schema="doc_id string, payload binary"
-    )
+    return map_kernel(_synth_input(documents, n_partitions),
+                      ["doc_id", "text"], row,
+                      "doc_id string, payload binary")
 
 
 def synthesize_pdf_corpus(
@@ -556,45 +309,24 @@ def synthesize_pdf_corpus(
     q_extract_spans wall). Skewed REAL corpora should size partitions
     with plans/salting.py, not this default.
     """
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        spark = documents.sparkSession
-        n_partitions = spark.sparkContext.defaultParallelism
-    return docs.repartition(n_partitions, "doc_id").mapInPandas(
-        _synth_batches, schema=PDF_RAW_SCHEMA
-    )
-
-
-def _synth_paged_batches(n_pages: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..testing.pdfgen import doc_to_pdf_paged
-
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(str(doc_id))
-                out["pdf_bytes"].append(
-                    doc_to_pdf_paged(text if text is not None else "", n_pages)
-                )
-            yield pd.DataFrame(out)
-
-    return gen
+    return map_kernel(_synth_input(documents, n_partitions),
+                      ["doc_id", "text"],
+                      lambda d, text: [(d, _text_pdf(d, text))],
+                      PDF_RAW_SCHEMA)
 
 
 def synthesize_paged_corpus(
     documents: DataFrame, n_pages: int = 3, n_partitions: int | None = None
 ) -> DataFrame:
     """Multi-page variant of synthesize_pdf_corpus (page ops at scale)."""
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(n_partitions, "doc_id").mapInPandas(
-        _synth_paged_batches(n_pages), schema=PDF_RAW_SCHEMA
-    )
+
+    def row(doc_id, text):
+        from ..testing.pdfgen import doc_to_pdf_paged
+
+        return [(doc_id, doc_to_pdf_paged(text or "", n_pages))]
+
+    return map_kernel(_synth_input(documents, n_partitions),
+                      ["doc_id", "text"], row, PDF_RAW_SCHEMA)
 
 
 # --- metadata-only projection (P1: getDocumentInfo analog) -------------------
@@ -609,34 +341,25 @@ DOCINFO_SCHEMA = StructType(
 )
 
 
-def _docinfo_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _docinfo_row(doc_id, data):
     from ..kernels.document import PdfDocument
-    from ..kernels.cos import PdfError
 
-    for pdf in batches:
-        out = {"doc_id": [], "title": [], "producer": [], "info_n_pages": []}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-            title = producer = None
-            n_pages = 0
-            try:
-                doc = PdfDocument(bytes(blob))
-                info = doc.doc_info() or {}
+    def _s(v):
+        if isinstance(v, bytes):
+            return v.decode("latin-1", "replace")
+        return str(v) if v is not None else None
 
-                def _s(v):
-                    if isinstance(v, bytes):
-                        return v.decode("latin-1", "replace")
-                    return str(v) if v is not None else None
-
-                title = _s(info.get("/Title"))
-                producer = _s(info.get("/Producer"))
-                n_pages = doc.num_pages()
-            except (PdfError, Exception):
-                pass
-            out["doc_id"].append(str(doc_id))
-            out["title"].append(title)
-            out["producer"].append(producer)
-            out["info_n_pages"].append(n_pages)
-        yield pd.DataFrame(out)
+    title = producer = None
+    n_pages = 0
+    try:
+        doc = PdfDocument(data)
+        info = doc.doc_info() or {}
+        title = _s(info.get("/Title"))
+        producer = _s(info.get("/Producer"))
+        n_pages = doc.num_pages()
+    except Exception:  # unparseable: null metadata, 0 pages
+        pass
+    return [(doc_id, title, producer, n_pages)]
 
 
 def extract_docinfo(pdf_raw: DataFrame) -> DataFrame:
@@ -644,9 +367,8 @@ def extract_docinfo(pdf_raw: DataFrame) -> DataFrame:
     _reader.py:244-260): the kernel touches only the xref chain +
     /Info object — content streams are never decoded, which is what
     makes metadata queries cheap at 100 TB."""
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        _docinfo_batches, schema=DOCINFO_SCHEMA
-    )
+    return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], _docinfo_row,
+                      DOCINFO_SCHEMA)
 
 
 # --- interactive-document projections (P2/P4/P5) -----------------------------
@@ -680,62 +402,45 @@ OUTLINES_SCHEMA = StructType(
 )
 
 
-def _projection_batches(project):
-    """Factory for doc->rows projection kernels (fields/dests/outlines)."""
+def _project(pdf_raw: DataFrame, project, schema: StructType) -> DataFrame:
+    """doc -> rows projection (fields/dests/outlines/...): `project(doc)`
+    yields one dict per output row, keyed by the schema's column names
+    after doc_id."""
+    fields = schema.names[1:]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, data):
         from ..kernels.document import PdfDocument
 
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(blob))
-                    for rec in project(doc):
-                        rows.append({"doc_id": str(doc_id), **rec})
-                except Exception:
-                    continue  # quarantine: skip unparseable docs
-            yield pd.DataFrame(rows)
+        rows = []
+        try:
+            for rec in project(PdfDocument(data)):
+                rows.append((doc_id, *(rec.get(f) for f in fields)))
+        except Exception:
+            pass  # quarantine: an unparseable doc contributes no rows
+        return rows
 
-    return gen
+    return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], row, schema)
 
 
 def extract_form_fields(pdf_raw: DataFrame) -> DataFrame:
     """AcroForm projection (parity: getFields, _reader.py:355-450 —
     whose Field ctor is dead code in the reference; we implement the
     intended semantics, see kernels/document.form_fields)."""
-    kernel = _projection_batches(
-        lambda doc: (
-            {
-                "name": f["name"],
-                "ft": f["ft"],
-                "value": f["value"],
-                "flags": f["flags"],
-            }
-            for f in doc.form_fields()
-        )
-    )
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=FORM_FIELDS_SCHEMA
-    )
+    return _project(pdf_raw, lambda doc: doc.form_fields(),
+                    FORM_FIELDS_SCHEMA)
 
 
 def extract_named_dests(pdf_raw: DataFrame) -> DataFrame:
     """Name-tree destinations (parity: getNamedDestinations,
     _reader.py:464-503)."""
-    kernel = _projection_batches(lambda doc: iter(doc.named_destinations()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=NAMED_DESTS_SCHEMA
-    )
+    return _project(pdf_raw, lambda doc: doc.named_destinations(),
+                    NAMED_DESTS_SCHEMA)
 
 
 def extract_outlines(pdf_raw: DataFrame) -> DataFrame:
     """Bookmark tree flattened with level (parity: getOutlines,
     _reader.py:513-558)."""
-    kernel = _projection_batches(lambda doc: iter(doc.outlines()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=OUTLINES_SCHEMA
-    )
+    return _project(pdf_raw, lambda doc: doc.outlines(), OUTLINES_SCHEMA)
 
 
 LINKS_SCHEMA = StructType(
@@ -751,10 +456,8 @@ LINKS_SCHEMA = StructType(
 def extract_links(pdf_raw: DataFrame) -> DataFrame:
     """Link-annotation projection (the read side of removeLinks,
     _writer.py:871-877)."""
-    kernel = _projection_batches(lambda doc: iter(doc.link_annotations()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=LINKS_SCHEMA
-    )
+    return _project(pdf_raw, lambda doc: doc.link_annotations(),
+                    LINKS_SCHEMA)
 
 
 ATTACHMENTS_SCHEMA = StructType(
@@ -783,10 +486,7 @@ def extract_attachments(pdf_raw: DataFrame) -> DataFrame:
                 "sha8": hashlib.sha256(data).hexdigest()[:8],
             }
 
-    kernel = _projection_batches(project)
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=ATTACHMENTS_SCHEMA
-    )
+    return _project(pdf_raw, project, ATTACHMENTS_SCHEMA)
 
 
 JAVASCRIPT_SCHEMA = StructType(
@@ -801,10 +501,8 @@ JAVASCRIPT_SCHEMA = StructType(
 def extract_javascript(pdf_raw: DataFrame) -> DataFrame:
     """Document-open JavaScript projection (read side of addJS,
     _writer.py:237-279): /Names//JavaScript entries + /OpenAction."""
-    kernel = _projection_batches(lambda doc: iter(doc.javascript()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=JAVASCRIPT_SCHEMA
-    )
+    return _project(pdf_raw, lambda doc: doc.javascript(),
+                    JAVASCRIPT_SCHEMA)
 
 
 XMP_SCHEMA = StructType(
@@ -858,10 +556,7 @@ def extract_xmp(pdf_raw: DataFrame) -> DataFrame:
             "custom_car": d["custom"].get("my car"),
         }
 
-    kernel = _projection_batches(project)
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=XMP_SCHEMA
-    )
+    return _project(pdf_raw, project, XMP_SCHEMA)
 
 
 VIEWER_PREFS_SCHEMA = StructType(
@@ -876,40 +571,27 @@ VIEWER_PREFS_SCHEMA = StructType(
 def extract_viewer_prefs(pdf_raw: DataFrame) -> DataFrame:
     """Catalog /PageLayout + /PageMode projection (parity:
     getPageLayout/getPageMode, _reader.py:654-693)."""
-    kernel = _projection_batches(
-        lambda doc: iter(
-            [{"page_layout": doc.page_layout(), "page_mode": doc.page_mode()}]
-        )
-    )
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=VIEWER_PREFS_SCHEMA
+    return _project(
+        pdf_raw,
+        lambda doc: [{"page_layout": doc.page_layout(),
+                      "page_mode": doc.page_mode()}],
+        VIEWER_PREFS_SCHEMA,
     )
 
 
 # --- write side: spans -> PDF bytes (SURVEY §2.2 K1 inverse) ------------------
 
-def _write_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernels.write import spans_to_pdf
+def _page(spans) -> list:
+    return [{"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
+            for s in spans]
 
-    for pdf in batches:
-        out = {"doc_id": [], "pdf_bytes": []}
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            page = [
-                {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-                for s in spans
-            ]
-            out["doc_id"].append(str(doc_id))
-            # even docs get the classic xref table, odd docs the PDF 1.5
-            # cross-reference STREAM — the round-trip query certifies
-            # both serializations with the same oracle
-            try:
-                d = int(doc_id)
-            except (TypeError, ValueError):
-                d = 0
-            out["pdf_bytes"].append(
-                spans_to_pdf([page], xref_stream=bool(d % 2))
-            )
-        yield pd.DataFrame(out)
+
+def _write(interleaved: DataFrame, pdf_fn) -> DataFrame:
+    """documents_interleaved -> pdf_raw: `pdf_fn(doc_id, page)` writes
+    one document from its spans as a single page."""
+    return map_kernel(interleaved, [doc_id_str(), "spans"],
+                      lambda d, spans: [(d, pdf_fn(d, _page(spans)))],
+                      PDF_RAW_SCHEMA)
 
 
 def write_pdfs(interleaved: DataFrame) -> DataFrame:
@@ -917,10 +599,19 @@ def write_pdfs(interleaved: DataFrame) -> DataFrame:
     of extract_spans: extract(write(spans)) == spans, and the REFERENCE
     reads the written files (tests/test_write.py). Odd doc_ids are
     serialized with a PDF 1.5 xref STREAM, even ones with the classic
-    table (both read back identically)."""
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        _write_batches, schema=PDF_RAW_SCHEMA
-    )
+    table (both read back identically) — the round-trip query
+    certifies both serializations with the same oracle."""
+
+    def pdf(doc_id, page):
+        from ..kernels.write import spans_to_pdf
+
+        try:
+            d = int(doc_id)
+        except (TypeError, ValueError):
+            d = 0
+        return spans_to_pdf([page], xref_stream=bool(d % 2))
+
+    return _write(interleaved, pdf)
 
 
 def write_pdfs_enriched(
@@ -938,38 +629,22 @@ def write_pdfs_enriched(
     the RC4 output (tests/test_write.py interop); it rejects the AES
     modes, which our reader decrypts (tests/test_aes.py)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pdf(d, page):
         from ..kernels.write import spans_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                d = str(doc_id)
-                page = [
-                    {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-                    for s in spans
-                ]
-                out["doc_id"].append(d)
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page],
-                        title=f"doc-{d}",
-                        bookmarks=[(f"bm-{d}", 0)],
-                        links=[(0, f"https://example.org/w/{d}")],
-                        attachments=[
-                            (f"att-{d}.txt", f"payload-{d}".encode())
-                        ],
-                        form_fields=[(f"wfld-{d}", f"wval-{d}")],
-                        user_password=password,
-                        encryption=encryption,
-                        permissions=permissions,
-                    )
-                )
-            yield pd.DataFrame(out)
+        return spans_to_pdf(
+            [page],
+            title=f"doc-{d}",
+            bookmarks=[(f"bm-{d}", 0)],
+            links=[(0, f"https://example.org/w/{d}")],
+            attachments=[(f"att-{d}.txt", f"payload-{d}".encode())],
+            form_fields=[(f"wfld-{d}", f"wval-{d}")],
+            user_password=password,
+            encryption=encryption,
+            permissions=permissions,
+        )
 
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        gen, schema=PDF_RAW_SCHEMA
-    )
+    return _write(interleaved, pdf)
 
 
 def write_pdfs_viewer_prefs(interleaved: DataFrame) -> DataFrame:
@@ -980,31 +655,14 @@ def write_pdfs_viewer_prefs(interleaved: DataFrame) -> DataFrame:
     the DuckDB oracle restates them by formula."""
     from ..kernels.write import _VALID_LAYOUTS, _VALID_MODES
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pdf(doc_id, page):
         from ..kernels.write import spans_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                d = int(doc_id)
-                page = [
-                    {"kind": s["kind"], "text": s["text"],
-                     "media_ref": s["media_ref"]}
-                    for s in spans
-                ]
-                out["doc_id"].append(str(doc_id))
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page],
-                        page_layout=_VALID_LAYOUTS[d % 7],
-                        page_mode=_VALID_MODES[d % 6],
-                    )
-                )
-            yield pd.DataFrame(out)
+        d = int(doc_id)
+        return spans_to_pdf([page], page_layout=_VALID_LAYOUTS[d % 7],
+                            page_mode=_VALID_MODES[d % 6])
 
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        gen, schema=PDF_RAW_SCHEMA
-    )
+    return _write(interleaved, pdf)
 
 
 def write_pdfs_navigation(interleaved: DataFrame) -> DataFrame:
@@ -1017,49 +675,31 @@ def write_pdfs_navigation(interleaved: DataFrame) -> DataFrame:
     _writer.py:237-279). All values derive from doc_id so the DuckDB
     oracle can recompute them."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pdf(d, page0):
         from ..kernels.write import spans_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                d = str(doc_id)
-                page0 = [
-                    {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-                    for s in spans
-                ]
-                page1 = [{"kind": "text", "text": f"appendix {d}\n", "media_ref": None}]
-                out["doc_id"].append(d)
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page0, page1],
-                        bookmarks=[(f"root-{d}", 0), (f"child-{d}", 1, 0)],
-                        links=[
-                            (0, 1, (10, 10, 200, 30), "/Fit"),  # GoTo
-                            (1, f"https://example.org/n/{d}"),  # URI
-                        ],
-                        named_dests=[(f"nd-{d}", 1)],
-                        javascript=f"app.alert('{d}');",
-                    )
-                )
-            yield pd.DataFrame(out)
+        page1 = [{"kind": "text", "text": f"appendix {d}\n",
+                  "media_ref": None}]
+        return spans_to_pdf(
+            [page0, page1],
+            bookmarks=[(f"root-{d}", 0), (f"child-{d}", 1, 0)],
+            links=[
+                (0, 1, (10, 10, 200, 30), "/Fit"),  # GoTo
+                (1, f"https://example.org/n/{d}"),  # URI
+            ],
+            named_dests=[(f"nd-{d}", 1)],
+            javascript=f"app.alert('{d}');",
+        )
 
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        gen, schema=PDF_RAW_SCHEMA
-    )
+    return _write(interleaved, pdf)
 
 
-def _write_paged_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _write_paged_group(key, pdf):
+    import pandas as pd
+
     from ..kernels.write import spans_to_pdf
 
-    pdf = pdf.sort_values("page_no")
-    pages = [
-        [
-            {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-            for s in spans
-        ]
-        for spans in pdf["spans"]
-    ]
+    pages = [_page(spans) for spans in pdf.sort_values("page_no")["spans"]]
     return pd.DataFrame({"doc_id": [key[0]], "pdf_bytes": [spans_to_pdf(pages)]})
 
 
@@ -1087,32 +727,10 @@ STATS_SCHEMA = StructType(
 )
 
 
-def _stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernels.extract import extract_doc
-
-    for pdf in batches:
-        out = {k.name: [] for k in STATS_SCHEMA.fields}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-            data = bytes(blob) if blob is not None else b""
-            res = extract_doc(data)
-            n_text = sum(1 for s in res["spans"] if s["kind"] == "text")
-            out["doc_id"].append(str(doc_id))
-            out["n_pages"].append(res["n_pages"])
-            out["n_text"].append(n_text)
-            out["n_media"].append(len(res["spans"]) - n_text)
-            out["n_chars"].append(
-                sum(len(s["text"] or "") for s in res["spans"] if s["kind"] == "text")
-            )
-            out["n_bytes"].append(len(data))
-            out["error"].append(res["error"])
-        yield pd.DataFrame(out)
-
-
 def extract_stats(pdf_raw: DataFrame) -> DataFrame:
     """Corpus statistics WITHOUT shipping span text back over Arrow —
-    Catalyst cannot prune columns inside a mapInPandas output, so
+    Catalyst cannot prune columns inside a Python lane's output, so
     stats-only pipelines at 100 TB use this kernel and move ~50x fewer
     bytes JVM<-python than extract_spans."""
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        _stats_batches, schema=STATS_SCHEMA
-    )
+    return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"],
+                      lambda d, data: [_stats_row(d, data)], STATS_SCHEMA)

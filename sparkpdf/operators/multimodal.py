@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Real Spark-side plumbing (schema, Arrow batch shape, mapInPandas
-signatures, partitioning) with REAL decode for every modality
+Real Spark-side plumbing (schema, Arrow batch shape, the one
+row-kernel adapter, partitioning) with REAL decode for every modality
 (kernels/media.py + kernels/jpeg.py + kernels/ccitt_g4.py — no codec
 library needed): image PIXELS (JPEG incl. progressive/12-bit/
 lossless, PNG, GIF animation, TIFF, G4 fax), audio SAMPLES (WAV PCM/
@@ -22,9 +22,7 @@ media table schema:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,6 +35,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ._kernel import doc_id_str, map_kernel
+from .extract import PDF_RAW_SCHEMA
 
 MEDIA_SCHEMA = StructType(
     [
@@ -229,6 +230,17 @@ DECODERS = {
 }
 
 
+def _per_doc(documents: DataFrame, schema, row_fn) -> DataFrame:
+    """One synthesized row per document: `row_fn(d)` gives the columns
+    after doc_id for the integer doc_id d. Repartitions by doc_id
+    first: a small scan arrives as 1-2 tasks, which would serialize
+    the per-doc Python work."""
+    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
+    n_parts = documents.sparkSession.sparkContext.defaultParallelism
+    return map_kernel(ids.repartition(n_parts, "doc_id"), ["doc_id"],
+                      lambda d: [(str(d), *row_fn(d))], schema)
+
+
 def synthesize_media(documents: DataFrame) -> DataFrame:
     """documents -> one deterministic fake-image row per doc (payload =
     md5(text) bytes via JVM-side functions; no Python here)."""
@@ -248,26 +260,15 @@ def synthesize_image_media(documents: DataFrame) -> DataFrame:
     height = 8 + doc_id % 16 — so the oracle can state the expected
     dims in pure SQL while the engine must actually parse the binary
     headers to reproduce them."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import make_jpeg, make_png
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 16 + d % 32, 8 + d % 16
-                payload = make_png(w, h) if d % 2 == 0 else make_jpeg(w, h)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"img-{d}")
-                out["modality"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+        w, h = 16 + d % 32, 8 + d % 16
+        payload = make_png(w, h) if d % 2 == 0 else make_jpeg(w, h)
+        return f"img-{d}", "image", payload
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_bmp_media(documents: DataFrame) -> DataFrame:
@@ -281,40 +282,28 @@ def synthesize_bmp_media(documents: DataFrame) -> DataFrame:
     at dims (24 + (d%3)*8) x (8 + (d%2)*8) — the tiff corpus
     formulas, so the oracle is the same closed form with a palette
     CASE on the d%4==2 lane."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
+    twisted = b"".join(
+        bytes(((7 * i + 13) % 256,) * 3 + (0,)) for i in range(256))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import numpy as np
 
         from ..testing.imagegen import make_bmp
 
-        twisted = b"".join(
-            bytes(((7 * i + 13) % 256,) * 3 + (0,)) for i in range(256))
+        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
+        img = np.zeros((h, w), np.uint8)
+        for y in range(h):
+            img[y, :] = 40 + ((d + y * 11) % 50) * 4
+        lane = d % 4
+        if lane == 2:
+            payload = make_bmp(img, bits=8, palette=twisted)
+        elif lane == 3:
+            payload = make_bmp(img, bits=8, rle=True)
+        else:
+            payload = make_bmp(img, topdown=(lane == 1))
+        return f"bmp-{d}", "image", payload
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-                img = np.zeros((h, w), np.uint8)
-                for y in range(h):
-                    img[y, :] = 40 + ((d + y * 11) % 50) * 4
-                lane = d % 4
-                if lane == 2:
-                    payload = make_bmp(img, bits=8, palette=twisted)
-                elif lane == 3:
-                    payload = make_bmp(img, bits=8, rle=True)
-                else:
-                    payload = make_bmp(img, topdown=(lane == 1))
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"bmp-{d}")
-                out["modality"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
-
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_pnm_media(documents: DataFrame) -> DataFrame:
@@ -325,38 +314,27 @@ def synthesize_pnm_media(documents: DataFrame) -> DataFrame:
     maxval 65535 storing g*257, the standard 8->16 bit scaling, so
     the native-depth mean is exactly 257x the 8-bit formula). Same
     g(d,y)/dims formulas as the bmp corpus."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import numpy as np
 
         from ..testing.imagegen import make_pnm
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-                img = np.zeros((h, w), np.uint8)
-                for y in range(h):
-                    img[y, :] = 40 + ((d + y * 11) % 50) * 4
-                lane = d % 3
-                if lane == 1:
-                    payload = make_pnm(np.repeat(img[..., None], 3, axis=2))
-                elif lane == 2:
-                    payload = make_pnm(
-                        img.astype(np.uint16) * 257, maxval=65535)
-                else:
-                    payload = make_pnm(img)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"pnm-{d}")
-                out["modality"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
+        img = np.zeros((h, w), np.uint8)
+        for y in range(h):
+            img[y, :] = 40 + ((d + y * 11) % 50) * 4
+        lane = d % 3
+        if lane == 1:
+            payload = make_pnm(np.repeat(img[..., None], 3, axis=2))
+        elif lane == 2:
+            payload = make_pnm(
+                img.astype(np.uint16) * 257, maxval=65535)
+        else:
+            payload = make_pnm(img)
+        return f"pnm-{d}", "image", payload
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_webp_media(documents: DataFrame) -> DataFrame:
@@ -365,26 +343,14 @@ def synthesize_webp_media(documents: DataFrame) -> DataFrame:
     canvas) at formula dims width = 16 + d%32, height = 8 + d%16 —
     each layout encodes dims differently, so one dims oracle
     certifies all three header parsers."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import make_webp
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                kind = ("vp8", "vp8l", "vp8x")[d % 3]
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"webp-{d}")
-                out["modality"].append("image")
-                out["payload"].append(
-                    make_webp(16 + d % 32, 8 + d % 16, kind))
-            yield pd.DataFrame(out)
+        kind = ("vp8", "vp8l", "vp8x")[d % 3]
+        return f"webp-{d}", "image", make_webp(16 + d % 32, 8 + d % 16, kind)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_jp2_media(documents: DataFrame) -> DataFrame:
@@ -396,29 +362,16 @@ def synthesize_jp2_media(documents: DataFrame) -> DataFrame:
     different structure (SIZ grid vs ihdr), so one dims oracle
     certifies the codestream parser, the box walk, and the
     extended-length path."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import make_jp2
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                kind = ("j2k", "jp2", "jp2xl")[d % 3]
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"jp2-{d}")
-                out["modality"].append("image")
-                out["payload"].append(
-                    make_jp2(20 + d % 40, 10 + d % 20,
-                             n_components=1 + (d % 2) * 2,
-                             bit_depth=(8, 10, 12, 16)[d % 4],
-                             kind=kind))
-            yield pd.DataFrame(out)
+        kind = ("j2k", "jp2", "jp2xl")[d % 3]
+        return f"jp2-{d}", "image", make_jp2(
+            20 + d % 40, 10 + d % 20, n_components=1 + (d % 2) * 2,
+            bit_depth=(8, 10, 12, 16)[d % 4], kind=kind)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_tga_ico_media(documents: DataFrame) -> DataFrame:
@@ -430,46 +383,33 @@ def synthesize_tga_ico_media(documents: DataFrame) -> DataFrame:
     PNG-compressed entry — the full PNG pixel path inside the ICO
     container). Same g(d,y)/dims formulas as the bmp corpus, so the
     oracle is one closed form with the palette CASE on lane 2."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
+    twisted = b"".join(bytes(((7 * i + 13) % 256,) * 3) for i in range(256))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import numpy as np
 
         from ..testing.imagegen import make_ico, make_tga
 
-        twisted = b"".join(
-            bytes(((7 * i + 13) % 256,) * 3) for i in range(256))
+        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
+        img = np.zeros((h, w), np.uint8)
+        for y in range(h):
+            img[y, :] = 40 + ((d + y * 11) % 50) * 4
+        lane = d % 5
+        if lane == 0:
+            payload = make_tga(img, topdown=(d % 2 == 1))
+        elif lane == 1:
+            payload = make_tga(
+                np.repeat(img[..., None], 3, axis=2), rle=True)
+        elif lane == 2:
+            payload = make_tga(img, img_type=1, palette=twisted,
+                               rle=(d % 2 == 1))
+        elif lane == 3:
+            payload = make_ico(img)
+        else:
+            payload = make_ico(img, png=True)
+        return f"tga-{d}", "image", payload
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-                img = np.zeros((h, w), np.uint8)
-                for y in range(h):
-                    img[y, :] = 40 + ((d + y * 11) % 50) * 4
-                lane = d % 5
-                if lane == 0:
-                    payload = make_tga(img, topdown=(d % 2 == 1))
-                elif lane == 1:
-                    payload = make_tga(
-                        np.repeat(img[..., None], 3, axis=2), rle=True)
-                elif lane == 2:
-                    payload = make_tga(img, img_type=1, palette=twisted,
-                                       rle=(d % 2 == 1))
-                elif lane == 3:
-                    payload = make_ico(img)
-                else:
-                    payload = make_ico(img, png=True)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"tga-{d}")
-                out["modality"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
-
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_g4_media(documents: DataFrame) -> DataFrame:
@@ -477,30 +417,19 @@ def synthesize_g4_media(documents: DataFrame) -> DataFrame:
     height = 8 + doc_id % 16, the top half(height//2 rows) solid black —
     so the expected ink_ratio is (height//2)/height, SQL-restatable,
     while the engine must really run the T.6 MMR decode to measure it."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..kernels.ccitt_g4 import g4_encode
         from ..kernels.filters import ccitt_fax_wrap
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 16 + d % 32, 8 + d % 16
-                bitmap = [[1] * w if r < h // 2 else [0] * w for r in range(h)]
-                payload = ccitt_fax_wrap(
-                    g4_encode(bitmap, w), {"/K": -1, "/Columns": w, "/Rows": h}
-                )
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"scan-{d}")
-                out["modality"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+        w, h = 16 + d % 32, 8 + d % 16
+        bitmap = [[1] * w if r < h // 2 else [0] * w for r in range(h)]
+        payload = ccitt_fax_wrap(
+            g4_encode(bitmap, w), {"/K": -1, "/Columns": w, "/Rows": h}
+        )
+        return f"scan-{d}", "image", payload
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_av_media(documents: DataFrame) -> DataFrame:
@@ -522,11 +451,8 @@ def synthesize_av_media(documents: DataFrame) -> DataFrame:
               (granule math stays exact: 24000 and 48000 divide 1000ms)
       6 AVI:  width = 160 + (d%10)*32, height = 120 + (d%6)*32,
               duration_ms = 400 + d%800 (25 fps -> exact usec math)"""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import (
             make_avi,
             make_flac,
@@ -537,52 +463,44 @@ def synthesize_av_media(documents: DataFrame) -> DataFrame:
             make_wav,
         )
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 7
-                if v == 0:
-                    modality = "audio"
-                    payload = make_wav(8000 + (d % 8) * 1000, 100 + d % 400)
-                elif v == 1:
-                    modality = "video"
-                    payload = make_mp4(
-                        320 + (d % 8) * 16, 240 + (d % 4) * 16, 500 + d % 1000
-                    )
-                elif v == 2:
-                    modality = "audio"
-                    payload = make_mp3(5 + d % 20, id3=(d % 8 == 6))
-                elif v == 3:
-                    modality = "video"
-                    payload = make_mkv(
-                        100 + d % 300, 80 + d % 200, 700 + d % 900
-                    )
-                elif v == 4:
-                    modality = "audio"
-                    payload = make_flac(
-                        16000 + (d % 4) * 8000, 200 + d % 600
-                    )
-                elif v == 5:
-                    modality = "audio"
-                    payload = make_ogg(
-                        24000 if d % 2 == 0 else 16000 + (d % 3) * 16000,
-                        300 + d % 500,
-                        codec="vorbis" if d % 2 == 0 else "opus",
-                    )
-                else:
-                    modality = "video"
-                    payload = make_avi(
-                        160 + (d % 10) * 32, 120 + (d % 6) * 32,
-                        400 + d % 800,
-                    )
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"av-{d}")
-                out["modality"].append(modality)
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+        v = d % 7
+        if v == 0:
+            modality = "audio"
+            payload = make_wav(8000 + (d % 8) * 1000, 100 + d % 400)
+        elif v == 1:
+            modality = "video"
+            payload = make_mp4(
+                320 + (d % 8) * 16, 240 + (d % 4) * 16, 500 + d % 1000
+            )
+        elif v == 2:
+            modality = "audio"
+            payload = make_mp3(5 + d % 20, id3=(d % 8 == 6))
+        elif v == 3:
+            modality = "video"
+            payload = make_mkv(
+                100 + d % 300, 80 + d % 200, 700 + d % 900
+            )
+        elif v == 4:
+            modality = "audio"
+            payload = make_flac(
+                16000 + (d % 4) * 8000, 200 + d % 600
+            )
+        elif v == 5:
+            modality = "audio"
+            payload = make_ogg(
+                24000 if d % 2 == 0 else 16000 + (d % 3) * 16000,
+                300 + d % 500,
+                codec="vorbis" if d % 2 == 0 else "opus",
+            )
+        else:
+            modality = "video"
+            payload = make_avi(
+                160 + (d % 10) * 32, 120 + (d % 6) * 32,
+                400 + d % 800,
+            )
+        return f"av-{d}", modality, payload
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_gif_media(documents: DataFrame) -> DataFrame:
@@ -595,30 +513,18 @@ def synthesize_gif_media(documents: DataFrame) -> DataFrame:
       often in each row, so mean_luma = avg_k palette[k], exactly.
     Odd docs are INTERLACED (4-pass row order) — same pixels, so the
     oracle doesn't move while the de-interlacer is exercised."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import make_gif_frame
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + d % 8
-                pal = [(v, v, v) for v in
-                       (30 + ((d + k * 7) % 26) * 8 for k in range(8))]
-                rows = [[(x + y) % 8 for x in range(w)] for y in range(h)]
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"gif-{d}")
-                out["modality"].append("image")
-                out["payload"].append(
-                    make_gif_frame(rows, pal, interlace=bool(d % 2))
-                )
-            yield pd.DataFrame(out)
+        w, h = 24 + (d % 3) * 8, 8 + d % 8
+        pal = [(v, v, v) for v in
+               (30 + ((d + k * 7) % 26) * 8 for k in range(8))]
+        rows = [[(x + y) % 8 for x in range(w)] for y in range(h)]
+        return (f"gif-{d}", "image",
+                make_gif_frame(rows, pal, interlace=bool(d % 2)))
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_animated_gif_media(documents: DataFrame) -> DataFrame:
@@ -629,33 +535,20 @@ def synthesize_animated_gif_media(documents: DataFrame) -> DataFrame:
     mean_luma = avg_k(30 + ((d + k*7) % 26) * 8) exactly. The engine
     must walk the real block stream (gif_frames_info) AND LZW-decode
     frame 1 to match."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import make_animated_gif
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + d % 8
-                pal = [(v, v, v) for v in
-                       (30 + ((d + k * 7) % 26) * 8 for k in range(8))]
-                rows = [[(x + y) % 8 for x in range(w)] for y in range(h)]
-                n = 1 + d % 4
-                delay = 10 + d % 20
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"anim-{d}")
-                out["modality"].append("image")
-                out["payload"].append(
-                    make_animated_gif([rows] * n, pal, [delay] * n,
-                                      loop=d % 3)
-                )
-            yield pd.DataFrame(out)
+        w, h = 24 + (d % 3) * 8, 8 + d % 8
+        pal = [(v, v, v) for v in
+               (30 + ((d + k * 7) % 26) * 8 for k in range(8))]
+        rows = [[(x + y) % 8 for x in range(w)] for y in range(h)]
+        n = 1 + d % 4
+        delay = 10 + d % 20
+        return f"anim-{d}", "image", make_animated_gif(
+            [rows] * n, pal, [delay] * n, loop=d % 3)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
@@ -677,11 +570,8 @@ def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
     width = 24 + (d%3)*8, height = 8 + (d%2)*8, row y is the constant
     40 + ((d + y*11) % 50) * 4 -> mean_luma = avg_y(row value), exact
     (heights 8/16 keep the mean's decimals terminating)."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import numpy as np
 
         from ..testing.imagegen import (
@@ -691,48 +581,40 @@ def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
             make_tiff_tiled,
         )
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-                img = np.zeros((h, w), dtype=np.uint8)
-                for y in range(h):
-                    img[y, :] = 40 + ((d + y * 11) % 50) * 4
-                v = d % 8
-                if v == 0:
-                    payload = make_tiff(img)
-                elif v == 1:
-                    payload = make_tiff(img, compression=5,
-                                        rows_per_strip=4, predictor=2)
-                elif v == 2:
-                    payload = make_tiff_tiled(img, 16, 16, compression=5)
-                elif v == 3:
-                    payload = make_tiff_jpeg(img, rows_per_strip=8)
-                elif v == 4:
-                    rgb = np.repeat(img[..., None], 3, axis=2)
-                    payload = make_tiff(rgb, compression=5,
-                                        rows_per_strip=4, predictor=2,
-                                        planar=2)
-                elif v == 5:
-                    rgb = np.repeat(img[..., None], 3, axis=2)
-                    payload = make_tiff_tiled(rgb, 16, 16,
-                                              compression=5,
-                                              predictor=2, planar=2)
-                elif v == 6:
-                    rgb = np.repeat(img[..., None], 3, axis=2)
-                    payload = make_tiff_jpeg(rgb, rows_per_strip=8,
-                                             planar=2,
-                                             shared_tables=True)
-                else:
-                    payload = make_tiff_ojpeg(img)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"tif-{d}")
-                out["modality"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
+        img = np.zeros((h, w), dtype=np.uint8)
+        for y in range(h):
+            img[y, :] = 40 + ((d + y * 11) % 50) * 4
+        v = d % 8
+        if v == 0:
+            payload = make_tiff(img)
+        elif v == 1:
+            payload = make_tiff(img, compression=5,
+                                rows_per_strip=4, predictor=2)
+        elif v == 2:
+            payload = make_tiff_tiled(img, 16, 16, compression=5)
+        elif v == 3:
+            payload = make_tiff_jpeg(img, rows_per_strip=8)
+        elif v == 4:
+            rgb = np.repeat(img[..., None], 3, axis=2)
+            payload = make_tiff(rgb, compression=5,
+                                rows_per_strip=4, predictor=2,
+                                planar=2)
+        elif v == 5:
+            rgb = np.repeat(img[..., None], 3, axis=2)
+            payload = make_tiff_tiled(rgb, 16, 16,
+                                      compression=5,
+                                      predictor=2, planar=2)
+        elif v == 6:
+            rgb = np.repeat(img[..., None], 3, axis=2)
+            payload = make_tiff_jpeg(rgb, rows_per_strip=8,
+                                     planar=2,
+                                     shared_tables=True)
+        else:
+            payload = make_tiff_ojpeg(img)
+        return f"tif-{d}", "image", payload
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_lossless_jpeg_media(documents: DataFrame) -> DataFrame:
@@ -740,33 +622,20 @@ def synthesize_lossless_jpeg_media(documents: DataFrame) -> DataFrame:
     predictor = 1 + d%7 (decode is exact for every selector), row y
     constant 400 + ((d + y*13) % 200) * 16, width = 24 + (d%3)*8,
     height = 8 + (d%2)*8 -> mean_luma = avg_y(row value) exactly."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import numpy as np
 
         from ..kernels.jpeg import encode_jpeg_lossless
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-                img = np.zeros((h, w), dtype=np.uint16)
-                for y in range(h):
-                    img[y, :] = 400 + ((d + y * 13) % 200) * 16
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"ljpg-{d}")
-                out["modality"].append("image")
-                out["payload"].append(
-                    encode_jpeg_lossless(img, predictor=1 + d % 7,
-                                         precision=12)
-                )
-            yield pd.DataFrame(out)
+        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
+        img = np.zeros((h, w), dtype=np.uint16)
+        for y in range(h):
+            img[y, :] = 400 + ((d + y * 13) % 200) * 16
+        return f"ljpg-{d}", "image", encode_jpeg_lossless(
+            img, predictor=1 + d % 7, precision=12)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 MEDIA_PAYLOAD_SCHEMA = StructType(
@@ -784,32 +653,14 @@ def extract_media_payloads(pdf_raw: DataFrame) -> DataFrame:
     scale. media_ref is 'p{page}/{name}' so multi-page name reuse stays
     unique."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, data):
         from ..kernels.document import PdfDocument
 
-        cols = ("doc_id", "media_ref", "modality", "payload", "error")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(blob))
-                    for m in doc.media_objects():
-                        out["doc_id"].append(str(doc_id))
-                        out["media_ref"].append(f"p{m['page_no']}/{m['name']}")
-                        out["modality"].append("image")
-                        out["payload"].append(m["data"])
-                        out["error"].append(None)
-                except Exception as exc:  # quarantine, never drop
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(None)
-                    out["modality"].append(None)
-                    out["payload"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
+        return [(doc_id, f"p{m['page_no']}/{m['name']}", "image", m["data"],
+                 None) for m in PdfDocument(bytes(data)).media_objects()]
 
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        gen, schema=MEDIA_PAYLOAD_SCHEMA
-    )
+    return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], row,
+                      MEDIA_PAYLOAD_SCHEMA)
 
 
 def _tile_jpeg(d: int) -> bytes:
@@ -883,22 +734,11 @@ def synthesize_jpeg12_media(documents: DataFrame) -> DataFrame:
     tile t value = 1248 + 32 * ((t*7 + doc_id) % 51) — the engine must
     run the full 12-bit decode (16-bit DQT, SOF1/SOF2, 2048 level
     shift) to reproduce the SQL-restatable mean."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"jpg12-{d}")
-                out["modality"].append("image")
-                out["payload"].append(_tile_jpeg12(d))
-            yield pd.DataFrame(out)
+    def row(d):
+        return f"jpg12-{d}", "image", _tile_jpeg12(d)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_jpeg_media(documents: DataFrame) -> DataFrame:
@@ -910,22 +750,23 @@ def synthesize_jpeg_media(documents: DataFrame) -> DataFrame:
     the engine must run the full Huffman + IDCT decode — including the
     4:2:0/4:2:2 chroma upsample and DRI/RSTn restart handling on two of
     every three docs — to match."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"jpg-{d}")
-                out["modality"].append("image")
-                out["payload"].append(_tile_jpeg(d))
-            yield pd.DataFrame(out)
+    def row(d):
+        return f"jpg-{d}", "image", _tile_jpeg(d)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
+
+
+def _media_pdf(d: int, payload: bytes) -> bytes:
+    """A one-page PDF for doc d: one text span and ONE embedded media
+    XObject 'img00' holding `payload`."""
+    from ..kernels.write import spans_to_pdf
+
+    page = [
+        {"kind": "text", "text": f"doc {d}\n", "media_ref": None},
+        {"kind": "media_ref", "text": None, "media_ref": "img00"},
+    ]
+    return spans_to_pdf([page], media_payloads={"img00": payload})
 
 
 def write_pdfs_with_jpeg_media(documents: DataFrame) -> DataFrame:
@@ -935,30 +776,8 @@ def write_pdfs_with_jpeg_media(documents: DataFrame) -> DataFrame:
     side of the end-to-end chain
     encode JPEG -> embed in PDF -> reopen PDF -> pull XObject ->
     Huffman+IDCT decode -> stats, all in-engine and SQL-verifiable."""
-    docs = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, pdf_bytes binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.write import spans_to_pdf
-
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                page = [
-                    {"kind": "text", "text": f"doc {d}\n", "media_ref": None},
-                    {"kind": "media_ref", "text": None, "media_ref": "img00"},
-                ]
-                out["doc_id"].append(str(d))
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page], media_payloads={"img00": _tile_jpeg(d)}
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return docs.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, PDF_RAW_SCHEMA,
+                    lambda d: (_media_pdf(d, _tile_jpeg(d)),))
 
 
 def write_pdfs_with_jp2_media(documents: DataFrame) -> DataFrame:
@@ -969,75 +788,19 @@ def write_pdfs_with_jp2_media(documents: DataFrame) -> DataFrame:
     pull the payload -> header parse -> dims/bits, all in-engine and
     SQL-verifiable. Layout rotates d%3 so the codestream, container
     and XLBox paths all survive the PDF round-trip byte-exactly."""
-    docs = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, pdf_bytes binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.write import spans_to_pdf
+    def row(d):
         from ..testing.imagegen import make_jp2
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                page = [
-                    {"kind": "text", "text": f"doc {d}\n", "media_ref": None},
-                    {"kind": "media_ref", "text": None, "media_ref": "img00"},
-                ]
-                payload = make_jp2(
-                    20 + d % 40, 10 + d % 20,
-                    n_components=1 + (d % 2) * 2,
-                    bit_depth=(8, 10, 12, 16)[d % 4],
-                    kind=("j2k", "jp2", "jp2xl")[d % 3],
-                )
-                out["doc_id"].append(str(d))
-                out["pdf_bytes"].append(
-                    spans_to_pdf([page], media_payloads={"img00": payload})
-                )
-            yield pd.DataFrame(out)
+        payload = make_jp2(
+            20 + d % 40, 10 + d % 20,
+            n_components=1 + (d % 2) * 2,
+            bit_depth=(8, 10, 12, 16)[d % 4],
+            kind=("j2k", "jp2", "jp2xl")[d % 3],
+        )
+        return (_media_pdf(d, payload),)
 
-    return docs.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
-
-
-def _make_feature_batches(pixel_formats: "set | None" = None):
-    def _feature_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        decoders = dict(DECODERS)
-        decoders["image"] = lambda p: _decode_image(p, pixel_formats)
-        for pdf in batches:
-            out = {k.name: [] for k in FEATURE_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                decoder = decoders.get(row.modality)
-                try:
-                    meta = decoder(payload) if decoder else {}
-                except Exception:
-                    # quarantine discipline: a corrupt payload (e.g. a G4
-                    # TIFF with a truncated/garbled bitstream) yields empty
-                    # features, never a dead task
-                    meta = {}
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                out["modality"].append(row.modality)
-                out["format"].append(meta.get("format"))
-                out["width"].append(meta.get("width"))
-                out["height"].append(meta.get("height"))
-                out["n_bytes"].append(len(payload))
-                out["sha8"].append(hashlib.sha256(payload).hexdigest()[:8])
-                out["ink_ratio"].append(meta.get("ink_ratio"))
-                out["duration_ms"].append(meta.get("duration_ms"))
-                out["sample_rate"].append(meta.get("sample_rate"))
-                out["mean_luma"].append(meta.get("mean_luma"))
-                out["n_frames"].append(meta.get("n_frames"))
-                out["bits"].append(meta.get("bits"))
-            yield pd.DataFrame(out)
-
-    return _feature_batches
-
-
-_feature_batches = _make_feature_batches()
+    return _per_doc(documents, PDF_RAW_SCHEMA, row)
 
 
 def extract_media_features(
@@ -1048,9 +811,28 @@ def extract_media_features(
     `pixel_formats`: None = global SPARKPDF_PIXEL_STATS knob; a set
     (usually pixel_stats_policy(...)["decode_formats"]) = decode pixel
     statistics only for those image formats, header-only otherwise."""
-    return media.mapInPandas(
-        _make_feature_batches(pixel_formats), schema=FEATURE_SCHEMA
-    )
+    decoders = dict(DECODERS)
+    decoders["image"] = lambda p: _decode_image(p, pixel_formats)
+
+    def row(doc_id, media_ref, modality, payload):
+        payload = bytes(payload) if payload is not None else b""
+        decoder = decoders.get(modality)
+        try:
+            meta = decoder(payload) if decoder else {}
+        except Exception:
+            # quarantine discipline: a corrupt payload (e.g. a G4 TIFF
+            # with a truncated/garbled bitstream) yields empty
+            # features, never a dead task
+            meta = {}
+        return [(doc_id, media_ref, modality, meta.get("format"),
+                 meta.get("width"), meta.get("height"), len(payload),
+                 hashlib.sha256(payload).hexdigest()[:8],
+                 meta.get("ink_ratio"), meta.get("duration_ms"),
+                 meta.get("sample_rate"), meta.get("mean_luma"),
+                 meta.get("n_frames"), meta.get("bits"))]
+
+    return map_kernel(media, ["doc_id", "media_ref", "modality", "payload"],
+                      row, FEATURE_SCHEMA)
 
 
 AUDIO_PCM_SCHEMA = StructType(
@@ -1079,9 +861,9 @@ def extract_audio_pcm_features(media: DataFrame) -> DataFrame:
     dispatched on magic) and emit n_samples + normalized
     rms/peak/mean. Unsupported-codec payloads quarantine via the
     error column — never a raise, never a dropped row (the
-    extract_doc contract). Arrow-batched mapInPandas."""
+    extract_doc contract). One Arrow row-kernel pass."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, media_ref, payload):
         from ..kernels.media import (
             aiff_pcm_stats,
             au_pcm_stats,
@@ -1091,53 +873,32 @@ def extract_audio_pcm_features(media: DataFrame) -> DataFrame:
             wav_pcm_stats,
         )
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_PCM_SCHEMA.fields}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                out["doc_id"].append(str(doc_id))
-                out["media_ref"].append(str(media_ref))
-                stats, err = None, None
-                try:
-                    raw = bytes(payload)
-                    # magic dispatch (round 7): RIFF -> WAV lane
-                    # (incl. ADPCM), fLaC -> FLAC frame decode,
-                    # FORM/AIFF -> big-endian AIFF, .snd -> Sun AU;
-                    # all share the normalized
-                    # {n_samples, rms, peak, mean} contract
-                    if raw[:4] == b"fLaC":
-                        stats = flac_pcm_stats(raw)
-                    elif raw[:4] == b"OggS":
-                        stats = ogg_flac_pcm_stats(raw)
-                    elif raw[:4] == b"FORM":
-                        stats = aiff_pcm_stats(raw)
-                    elif raw[:4] == b".snd":
-                        stats = au_pcm_stats(raw)
-                    elif raw[4:8] == b"ftyp":
-                        stats = mp4_pcm_stats(raw)
-                    else:
-                        stats = wav_pcm_stats(raw)
-                    if stats is None:
-                        err = (
-                            "unsupported audio payload (not PCM/float/"
-                            "G.711/ADPCM WAV, AIFF, AU, or decodable "
-                            "native/Ogg FLAC)"
-                        )
-                except Exception as e:  # poison payloads quarantine
-                    err = f"{type(e).__name__}: {e}"
-                out["n_samples"].append(
-                    int(stats["n_samples"]) if stats else None
-                )
-                out["rms"].append(stats["rms"] if stats else None)
-                out["peak"].append(stats["peak"] if stats else None)
-                out["mean"].append(stats["mean"] if stats else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+        raw = bytes(payload)
+        # magic dispatch (round 7): RIFF -> WAV lane (incl. ADPCM),
+        # fLaC -> FLAC frame decode, FORM/AIFF -> big-endian AIFF,
+        # .snd -> Sun AU; all share the normalized
+        # {n_samples, rms, peak, mean} contract
+        if raw[:4] == b"fLaC":
+            stats = flac_pcm_stats(raw)
+        elif raw[:4] == b"OggS":
+            stats = ogg_flac_pcm_stats(raw)
+        elif raw[:4] == b"FORM":
+            stats = aiff_pcm_stats(raw)
+        elif raw[:4] == b".snd":
+            stats = au_pcm_stats(raw)
+        elif raw[4:8] == b"ftyp":
+            stats = mp4_pcm_stats(raw)
+        else:
+            stats = wav_pcm_stats(raw)
+        if stats is None:
+            return [(doc_id, media_ref, None, None, None, None,
+                     "unsupported audio payload (not PCM/float/G.711/ADPCM "
+                     "WAV, AIFF, AU, or decodable native/Ogg FLAC)")]
+        return [(doc_id, media_ref, int(stats["n_samples"]), stats["rms"],
+                 stats["peak"], stats["mean"], None)]
 
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        gen, schema=AUDIO_PCM_SCHEMA
-    )
+    return map_kernel(media, [doc_id_str(), "media_ref", "payload"], row,
+                      AUDIO_PCM_SCHEMA)
 
 
 def synthesize_wav_pcm_media(documents: DataFrame) -> DataFrame:
@@ -1159,63 +920,52 @@ def synthesize_wav_pcm_media(documents: DataFrame) -> DataFrame:
     All squares alternate +A/-A over an even frame count, so mean is
     exactly 0; amplitudes are picked so every 6-dp round is exact on
     both engines (terminating binary fractions)."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import struct
 
         from ..testing.imagegen import make_wav
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 6
-                rate = 8000 + (d % 8) * 1000
-                if v == 0:
-                    amp = 4096 * (1 + d % 7)
-                    n = 2 * (100 + d % 250)
-                    data = struct.pack(
-                        f"<{n}h", *([amp, -amp] * (n // 2))
-                    )
-                    wav = make_wav(rate, 0, bits=16, data=data)
-                elif v == 1:
-                    amp = 2 * (1 + d % 63)
-                    n = 2 * (50 + d % 200)
-                    data = bytes([128 + amp, 128 - amp] * (n // 2))
-                    wav = make_wav(rate, 0, bits=8, data=data)
-                elif v == 2:
-                    n = 2 * (60 + d % 100)
-                    data = bytes([0x80, 0x00] * (n // 2))
-                    wav = make_wav(rate, 0, bits=8, data=data, fmt_code=7)
-                elif v == 3:
-                    n = 2 * (60 + d % 100)
-                    data = bytes([0xAA, 0x2A] * (n // 2))
-                    wav = make_wav(rate, 0, bits=8, data=data, fmt_code=6)
-                elif v == 4:
-                    amp = (1 << 20) * (1 + d % 7)
-                    n = 2 * (40 + d % 80)
-                    pos = amp.to_bytes(3, "little", signed=True)
-                    neg = (-amp).to_bytes(3, "little", signed=True)
-                    data = (pos + neg) * (n // 2)
-                    wav = make_wav(rate, 0, bits=24, data=data)
-                else:
-                    amp = 0.125 * (1 + d % 7)
-                    n = 2 * (30 + d % 60)
-                    data = struct.pack(
-                        f"<{n}f", *([amp, -amp] * (n // 2))
-                    )
-                    wav = make_wav(rate, 0, bits=32, data=data,
-                                   fmt_code=3)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"wav-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(wav)
-            yield pd.DataFrame(out)
+        v = d % 6
+        rate = 8000 + (d % 8) * 1000
+        if v == 0:
+            amp = 4096 * (1 + d % 7)
+            n = 2 * (100 + d % 250)
+            data = struct.pack(
+                f"<{n}h", *([amp, -amp] * (n // 2))
+            )
+            wav = make_wav(rate, 0, bits=16, data=data)
+        elif v == 1:
+            amp = 2 * (1 + d % 63)
+            n = 2 * (50 + d % 200)
+            data = bytes([128 + amp, 128 - amp] * (n // 2))
+            wav = make_wav(rate, 0, bits=8, data=data)
+        elif v == 2:
+            n = 2 * (60 + d % 100)
+            data = bytes([0x80, 0x00] * (n // 2))
+            wav = make_wav(rate, 0, bits=8, data=data, fmt_code=7)
+        elif v == 3:
+            n = 2 * (60 + d % 100)
+            data = bytes([0xAA, 0x2A] * (n // 2))
+            wav = make_wav(rate, 0, bits=8, data=data, fmt_code=6)
+        elif v == 4:
+            amp = (1 << 20) * (1 + d % 7)
+            n = 2 * (40 + d % 80)
+            pos = amp.to_bytes(3, "little", signed=True)
+            neg = (-amp).to_bytes(3, "little", signed=True)
+            data = (pos + neg) * (n // 2)
+            wav = make_wav(rate, 0, bits=24, data=data)
+        else:
+            amp = 0.125 * (1 + d % 7)
+            n = 2 * (30 + d % 60)
+            data = struct.pack(
+                f"<{n}f", *([amp, -amp] * (n // 2))
+            )
+            wav = make_wav(rate, 0, bits=32, data=data,
+                           fmt_code=3)
+        return f"wav-{d}", "audio", wav
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_flac_pcm_media(documents: DataFrame) -> DataFrame:
@@ -1238,60 +988,49 @@ def synthesize_flac_pcm_media(documents: DataFrame) -> DataFrame:
     Amplitudes are terminating binary fractions (exact 6-dp rounds on
     both engines); FLAC is lossless, so decode is exact by
     construction."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import encode_flac
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 6
-                rate = 8000 + (d % 8) * 1000
-                if v == 0:
-                    amp = 1024 * (1 + d % 7)
-                    n = 100 + d % 250
-                    blob = encode_flac([amp] * n, rate,
-                                       subframe="constant")
-                elif v == 1:
-                    amp = 4096 * (1 + d % 7)
-                    n = 2 * (50 + d % 200)
-                    blob = encode_flac([amp, -amp] * (n // 2), rate,
-                                       subframe="verbatim")
-                elif v == 2:
-                    amp = 4096 * (1 + d % 7)
-                    n = 2 * (60 + d % 100)
-                    blob = encode_flac([amp, -amp] * (n // 2), rate,
-                                       subframe="fixed2",
-                                       partition_order=1)
-                elif v == 3:
-                    amp = (1 << 20) * (1 + d % 7)
-                    n = 2 * (40 + d % 80)
-                    blob = encode_flac([amp, -amp] * (n // 2), rate,
-                                       bits=24, subframe="lpc1")
-                elif v == 4:
-                    amp = 4096 * (1 + d % 7)
-                    n = 2 * (60 + d % 100)
-                    blob = encode_flac([amp, -amp] * (n // 2), rate,
-                                       channels=2,
-                                       stereo_mode="mid-side",
-                                       subframe="constant")
-                else:
-                    amp = 2 * (1 + d % 31)
-                    n = 2 * (50 + d % 200)
-                    blob = encode_flac([amp, -amp] * (n // 2), rate,
-                                       bits=8, subframe="fixed1",
-                                       rice_escape=True)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"flac-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+        v = d % 6
+        rate = 8000 + (d % 8) * 1000
+        if v == 0:
+            amp = 1024 * (1 + d % 7)
+            n = 100 + d % 250
+            blob = encode_flac([amp] * n, rate,
+                               subframe="constant")
+        elif v == 1:
+            amp = 4096 * (1 + d % 7)
+            n = 2 * (50 + d % 200)
+            blob = encode_flac([amp, -amp] * (n // 2), rate,
+                               subframe="verbatim")
+        elif v == 2:
+            amp = 4096 * (1 + d % 7)
+            n = 2 * (60 + d % 100)
+            blob = encode_flac([amp, -amp] * (n // 2), rate,
+                               subframe="fixed2",
+                               partition_order=1)
+        elif v == 3:
+            amp = (1 << 20) * (1 + d % 7)
+            n = 2 * (40 + d % 80)
+            blob = encode_flac([amp, -amp] * (n // 2), rate,
+                               bits=24, subframe="lpc1")
+        elif v == 4:
+            amp = 4096 * (1 + d % 7)
+            n = 2 * (60 + d % 100)
+            blob = encode_flac([amp, -amp] * (n // 2), rate,
+                               channels=2,
+                               stereo_mode="mid-side",
+                               subframe="constant")
+        else:
+            amp = 2 * (1 + d % 31)
+            n = 2 * (50 + d % 200)
+            blob = encode_flac([amp, -amp] * (n // 2), rate,
+                               bits=8, subframe="fixed1",
+                               rice_escape=True)
+        return f"flac-{d}", "audio", blob
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def extract_attachment_media(pdf_raw: DataFrame) -> DataFrame:
@@ -1329,37 +1068,16 @@ def extract_attachment_media(pdf_raw: DataFrame) -> DataFrame:
             return "image"
         return "other"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, data):
         from ..kernels.document import PdfDocument
 
-        cols = ("doc_id", "media_ref", "modality", "payload", "error")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(blob))
-                    for a in doc.attachments():
-                        data = a["data"]
-                        out["doc_id"].append(str(doc_id))
-                        out["media_ref"].append(a["filename"])
-                        out["modality"].append(
-                            sniff(data) if data else None)
-                        out["payload"].append(data)
-                        out["error"].append(
-                            None if data is not None
-                            else "undecodable attachment stream")
-                except Exception as exc:  # quarantine, never drop
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(None)
-                    out["modality"].append(None)
-                    out["payload"].append(None)
-                    out["error"].append(
-                        f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
+        return [(doc_id, a["filename"], sniff(a["data"]) if a["data"] else None,
+                 a["data"], None if a["data"] is not None
+                 else "undecodable attachment stream")
+                for a in PdfDocument(bytes(data)).attachments()]
 
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        gen, schema=MEDIA_PAYLOAD_SCHEMA
-    )
+    return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], row,
+                      MEDIA_PAYLOAD_SCHEMA)
 
 
 def synthesize_attachment_pdf_media(documents: DataFrame) -> DataFrame:
@@ -1373,27 +1091,17 @@ def synthesize_attachment_pdf_media(documents: DataFrame) -> DataFrame:
     wavs = synthesize_wav_pcm_media(documents)
     n_parts = documents.sparkSession.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d, media_ref, payload):
         from ..kernels.write import spans_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                d = str(doc_id)
-                page = [{"kind": "text", "text": f"audio host {d}",
-                         "media_ref": None}]
-                out["doc_id"].append(d)
-                out["pdf_bytes"].append(spans_to_pdf(
-                    [page], title=f"att-{d}",
-                    attachments=[(f"{media_ref}.wav", bytes(payload))],
-                ))
-            yield pd.DataFrame(out)
+        page = [{"kind": "text", "text": f"audio host {d}", "media_ref": None}]
+        return [(d, spans_to_pdf(
+            [page], title=f"att-{d}",
+            attachments=[(f"{media_ref}.wav", bytes(payload))],
+        ))]
 
-    return wavs.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema="doc_id string, pdf_bytes binary"
-    )
+    return map_kernel(wavs.repartition(n_parts, "doc_id"),
+                      ["doc_id", "media_ref", "payload"], row, PDF_RAW_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -1417,51 +1125,34 @@ def extract_video_frame_features(media: DataFrame) -> DataFrame:
     the from-scratch JPEG kernel, emitting one row per frame
     (frame_idx, dims, mean luma). Undecodable payloads emit a
     single quarantine row with the error column set — never a raise,
-    never a dropped doc (the extract_doc contract). Arrow-batched
-    mapInPandas; per-frame rows explode kernel-side so Spark never
+    never a dropped doc (the extract_doc contract). One Arrow
+    row-kernel pass; per-frame rows explode kernel-side so Spark never
     ships pixel arrays."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, media_ref, payload):
         from ..kernels.media import (
             avi_mjpeg_frames,
             mkv_mjpeg_frames,
             mp4_mjpeg_frames,
         )
 
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_FRAME_SCHEMA.fields}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                frames, err = None, None
-                try:
-                    raw = bytes(payload)
-                    if raw[4:8] == b"ftyp":
-                        frames = mp4_mjpeg_frames(raw)
-                    elif raw[:4] == b"\x1a\x45\xdf\xa3":
-                        frames = mkv_mjpeg_frames(raw)
-                    else:
-                        frames = avi_mjpeg_frames(raw)
-                    if frames is None:
-                        err = ("unsupported video payload (not an AVI/"
-                               "MP4/MKV with decodable MJPEG frames)")
-                except Exception as e:  # poison payloads quarantine
-                    err = f"{type(e).__name__}: {e}"
-                for row in (frames if frames else [None]):
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(str(media_ref))
-                    out["frame_idx"].append(
-                        row["frame_idx"] if row else None)
-                    out["width"].append(row["width"] if row else None)
-                    out["height"].append(row["height"] if row else None)
-                    out["mean_luma"].append(
-                        row["mean_luma"] if row else None)
-                    out["error"].append(err)
-            yield pd.DataFrame(out)
+        raw = bytes(payload)
+        if raw[4:8] == b"ftyp":
+            frames = mp4_mjpeg_frames(raw)
+        elif raw[:4] == b"\x1a\x45\xdf\xa3":
+            frames = mkv_mjpeg_frames(raw)
+        else:
+            frames = avi_mjpeg_frames(raw)
+        if not frames:
+            return [(doc_id, media_ref, None, None, None, None,
+                     None if frames is not None else
+                     "unsupported video payload (not an AVI/MP4/MKV with "
+                     "decodable MJPEG frames)")]
+        return [(doc_id, media_ref, f["frame_idx"], f["width"], f["height"],
+                 f["mean_luma"], None) for f in frames]
 
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        gen, schema=VIDEO_FRAME_SCHEMA
-    )
+    return map_kernel(media, [doc_id_str(), "media_ref", "payload"], row,
+                      VIDEO_FRAME_SCHEMA)
 
 
 AUDIO_SEGMENT_SCHEMA = StructType(
@@ -1485,42 +1176,22 @@ def extract_audio_segments(media: DataFrame,
     segment with the exact-int stats contract — the audio analog of
     per-frame video rows, feeding windowed analytics (silence spans,
     loudness segmentation). Undecodable payloads emit a single
-    quarantine row; Arrow-batched mapInPandas, rows explode
+    quarantine row; one Arrow row-kernel pass, rows explode
     kernel-side."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, media_ref, payload):
         from ..kernels.media import wav_pcm_segment_stats
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_SEGMENT_SCHEMA.fields}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                segs, err = None, None
-                try:
-                    segs = wav_pcm_segment_stats(bytes(payload),
-                                                 segment_samples)
-                    if segs is None:
-                        err = ("unsupported audio payload (not a "
-                               "decodable WAV)")
-                except Exception as e:  # poison payloads quarantine
-                    err = f"{type(e).__name__}: {e}"
-                for st in (segs if segs else [None]):
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(str(media_ref))
-                    out["seg_idx"].append(
-                        st["seg_idx"] if st else None)
-                    out["n_samples"].append(
-                        int(st["n_samples"]) if st else None)
-                    out["rms"].append(st["rms"] if st else None)
-                    out["peak"].append(st["peak"] if st else None)
-                    out["mean"].append(st["mean"] if st else None)
-                    out["error"].append(err)
-            yield pd.DataFrame(out)
+        segs = wav_pcm_segment_stats(bytes(payload), segment_samples)
+        if not segs:
+            return [(doc_id, media_ref, None, None, None, None, None,
+                     None if segs is not None else
+                     "unsupported audio payload (not a decodable WAV)")]
+        return [(doc_id, media_ref, st["seg_idx"], int(st["n_samples"]),
+                 st["rms"], st["peak"], st["mean"], None) for st in segs]
 
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        gen, schema=AUDIO_SEGMENT_SCHEMA
-    )
+    return map_kernel(media, [doc_id_str(), "media_ref", "payload"], row,
+                      AUDIO_SEGMENT_SCHEMA)
 
 
 def detect_silence_spans(segments: DataFrame,
@@ -1593,11 +1264,8 @@ def synthesize_mjpeg_media(documents: DataFrame) -> DataFrame:
     widths 24/40 are 72/120 bytes — not multiples of 4). The
     frame formulas are container/codec-independent, so ONE
     generate_series oracle covers every demux+decode path."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import numpy as np
 
         from ..kernels.jpeg import encode_jpeg
@@ -1607,42 +1275,34 @@ def synthesize_mjpeg_media(documents: DataFrame) -> DataFrame:
             make_mp4_mjpeg,
         )
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                nf = 1 + d % 5
-                w = 16 + 8 * (d % 4)
-                h = 8 + 8 * (d % 3)
-                grays = [16 + 2 * ((d + 37 * i) % 112)
-                         for i in range(nf)]
-                lane = d % 5
-                if lane in (3, 4):  # uncompressed DIB lanes (round 7)
-                    tiles = [np.full((h, w), g, dtype=np.uint8)
-                             for g in grays]
-                    blob = make_avi(
-                        w, h, 0, fps=25, dib_frames=tiles,
-                        dib_bits=24 if lane == 3 else 8,
-                        topdown=(lane == 3 and d % 2 == 1))
-                else:
-                    frames = [
-                        encode_jpeg(np.full((h, w), g, dtype=np.uint8))
-                        for g in grays
-                    ]
-                    if lane == 1:
-                        blob = make_mp4_mjpeg(w, h, frames,
-                                              samples_per_chunk=2)
-                    elif lane == 2:
-                        blob = make_mkv_mjpeg(w, h, frames)
-                    else:
-                        blob = make_avi(w, h, 0, fps=25, frames=frames)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"mjpeg-{d}")
-                out["modality"].append("video")
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+        nf = 1 + d % 5
+        w = 16 + 8 * (d % 4)
+        h = 8 + 8 * (d % 3)
+        grays = [16 + 2 * ((d + 37 * i) % 112)
+                 for i in range(nf)]
+        lane = d % 5
+        if lane in (3, 4):  # uncompressed DIB lanes (round 7)
+            tiles = [np.full((h, w), g, dtype=np.uint8)
+                     for g in grays]
+            blob = make_avi(
+                w, h, 0, fps=25, dib_frames=tiles,
+                dib_bits=24 if lane == 3 else 8,
+                topdown=(lane == 3 and d % 2 == 1))
+        else:
+            frames = [
+                encode_jpeg(np.full((h, w), g, dtype=np.uint8))
+                for g in grays
+            ]
+            if lane == 1:
+                blob = make_mp4_mjpeg(w, h, frames,
+                                      samples_per_chunk=2)
+            elif lane == 2:
+                blob = make_mkv_mjpeg(w, h, frames)
+            else:
+                blob = make_avi(w, h, 0, fps=25, frames=frames)
+        return f"mjpeg-{d}", "video", blob
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_bigendian_audio_media(documents: DataFrame) -> DataFrame:
@@ -1665,67 +1325,56 @@ def synthesize_bigendian_audio_media(documents: DataFrame) -> DataFrame:
     The engine must walk IFF chunks (COMM's 80-bit extended rate,
     the AIFC compression fourcc, SSND offset) or the .snd header and
     decode the samples to match the oracle's restated formulas."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import struct
 
         from ..testing.imagegen import make_aiff, make_au
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 8
-                k = 1 + d % 7
-                rate = 8000 + (d % 8) * 1000
-                if v == 0:
-                    amp = 4096 * k
-                    n = 2 * (50 + d % 200)
-                    blob = make_aiff(rate, 1, 16, struct.pack(
-                        f">{n}h", *([amp, -amp] * (n // 2))))
-                elif v == 1:
-                    amp = 2 * (1 + d % 63)
-                    n = 2 * (40 + d % 120)
-                    blob = make_aiff(rate, 1, 8, struct.pack(
-                        f">{n}b", *([amp, -amp] * (n // 2))))
-                elif v == 2:
-                    amp = (1 << 20) * k
-                    n = 2 * (30 + d % 90)
-                    pos = amp.to_bytes(3, "big", signed=True)
-                    neg = (-amp).to_bytes(3, "big", signed=True)
-                    blob = make_aiff(rate, 2, 24, (pos + neg) * (n // 2))
-                elif v == 3:
-                    amp = 4096 * k
-                    n = 2 * (60 + d % 100)
-                    blob = make_au(rate, 1, 3, struct.pack(
-                        f">{n}h", *([amp, -amp] * (n // 2))))
-                elif v == 4:
-                    n = 2 * (60 + d % 100)
-                    blob = make_au(rate, 1, 1, bytes([0x80, 0x00] * (n // 2)))
-                elif v == 5:
-                    n = 2 * (60 + d % 100)
-                    blob = make_au(rate, 1, 27, bytes([0xAA, 0x2A] * (n // 2)))
-                elif v == 6:
-                    amp = 4096 * k
-                    n = 2 * (50 + d % 150)
-                    blob = make_aiff(rate, 1, 16, struct.pack(
-                        f"<{n}h", *([amp, -amp] * (n // 2))),
-                        compression=b"sowt")
-                else:
-                    n = 2 * (40 + d % 120)
-                    blob = make_aiff(rate, 1, 8,
-                                     bytes([0x80, 0x00] * (n // 2)),
-                                     compression=b"ulaw")
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"be-audio-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+        v = d % 8
+        k = 1 + d % 7
+        rate = 8000 + (d % 8) * 1000
+        if v == 0:
+            amp = 4096 * k
+            n = 2 * (50 + d % 200)
+            blob = make_aiff(rate, 1, 16, struct.pack(
+                f">{n}h", *([amp, -amp] * (n // 2))))
+        elif v == 1:
+            amp = 2 * (1 + d % 63)
+            n = 2 * (40 + d % 120)
+            blob = make_aiff(rate, 1, 8, struct.pack(
+                f">{n}b", *([amp, -amp] * (n // 2))))
+        elif v == 2:
+            amp = (1 << 20) * k
+            n = 2 * (30 + d % 90)
+            pos = amp.to_bytes(3, "big", signed=True)
+            neg = (-amp).to_bytes(3, "big", signed=True)
+            blob = make_aiff(rate, 2, 24, (pos + neg) * (n // 2))
+        elif v == 3:
+            amp = 4096 * k
+            n = 2 * (60 + d % 100)
+            blob = make_au(rate, 1, 3, struct.pack(
+                f">{n}h", *([amp, -amp] * (n // 2))))
+        elif v == 4:
+            n = 2 * (60 + d % 100)
+            blob = make_au(rate, 1, 1, bytes([0x80, 0x00] * (n // 2)))
+        elif v == 5:
+            n = 2 * (60 + d % 100)
+            blob = make_au(rate, 1, 27, bytes([0xAA, 0x2A] * (n // 2)))
+        elif v == 6:
+            amp = 4096 * k
+            n = 2 * (50 + d % 150)
+            blob = make_aiff(rate, 1, 16, struct.pack(
+                f"<{n}h", *([amp, -amp] * (n // 2))),
+                compression=b"sowt")
+        else:
+            n = 2 * (40 + d % 120)
+            blob = make_aiff(rate, 1, 8,
+                             bytes([0x80, 0x00] * (n // 2)),
+                             compression=b"ulaw")
+        return f"be-audio-{d}", "audio", blob
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_segmented_wav_media(documents: DataFrame) -> DataFrame:
@@ -1736,36 +1385,24 @@ def synthesize_segmented_wav_media(documents: DataFrame) -> DataFrame:
     segment is full, loud segments have rms = peak = k/8 / mean 0 and
     silent ones are exactly 0 — closed forms for BOTH the
     per-segment query and the silence-span islands."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import struct
 
         from ..testing.imagegen import make_wav
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                k = 1 + d % 7
-                amp = 4096 * k
-                r = 1 + d % 3
-                loud_segs = 2 + d % 3
-                quiet_segs = 1 + d % 2
-                vals = ((([amp, -amp] * 32) * loud_segs
-                         + [0] * (64 * quiet_segs)) * r)
-                data = struct.pack(f"<{len(vals)}h", *vals)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"seg-wav-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(
-                    make_wav(8000 + (d % 8) * 1000, 0, bits=16,
-                             data=data))
-            yield pd.DataFrame(out)
+        k = 1 + d % 7
+        amp = 4096 * k
+        r = 1 + d % 3
+        loud_segs = 2 + d % 3
+        quiet_segs = 1 + d % 2
+        vals = ((([amp, -amp] * 32) * loud_segs
+                 + [0] * (64 * quiet_segs)) * r)
+        data = struct.pack(f"<{len(vals)}h", *vals)
+        return f"seg-wav-{d}", "audio", make_wav(
+            8000 + (d % 8) * 1000, 0, bits=16, data=data)
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_mp4_pcm_media(documents: DataFrame) -> DataFrame:
@@ -1779,51 +1416,40 @@ def synthesize_mp4_pcm_media(documents: DataFrame) -> DataFrame:
       3: 'raw ' unsigned 8-bit, A = 2*(1 + d%63), n = 2*(50 + d%120)
     The table samples hold 64 PCM frames each (2 per chunk), so the
     engine exercises real stsc/stco/stsz resolution per §8.7."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         import struct
 
         from ..testing.imagegen import make_mp4_pcm
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 4
-                k = 1 + d % 7
-                rate = 8000 + (d % 8) * 1000
-                if v == 0:
-                    n = 2 * (50 + d % 200)
-                    amp = 4096 * k
-                    blob = make_mp4_pcm(rate, 1, b"sowt", struct.pack(
-                        f"<{n}h", *([amp, -amp] * (n // 2))))
-                elif v == 1:
-                    n = 2 * (60 + d % 100)
-                    amp = 4096 * k
-                    blob = make_mp4_pcm(rate, 1, b"twos", struct.pack(
-                        f">{n}h", *([amp, -amp] * (n // 2))))
-                elif v == 2:
-                    n = 2 * (40 + d % 80)
-                    amp = (1 << 20) * k
-                    pos = amp.to_bytes(3, "big", signed=True)
-                    neg = (-amp).to_bytes(3, "big", signed=True)
-                    blob = make_mp4_pcm(rate, 2, b"in24",
-                                        (pos + neg) * (n // 2))
-                else:
-                    n = 2 * (50 + d % 120)
-                    amp = 2 * (1 + d % 63)
-                    blob = make_mp4_pcm(rate, 1, b"raw ", bytes(
-                        [128 + amp, 128 - amp] * (n // 2)))
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"mp4-pcm-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+        v = d % 4
+        k = 1 + d % 7
+        rate = 8000 + (d % 8) * 1000
+        if v == 0:
+            n = 2 * (50 + d % 200)
+            amp = 4096 * k
+            blob = make_mp4_pcm(rate, 1, b"sowt", struct.pack(
+                f"<{n}h", *([amp, -amp] * (n // 2))))
+        elif v == 1:
+            n = 2 * (60 + d % 100)
+            amp = 4096 * k
+            blob = make_mp4_pcm(rate, 1, b"twos", struct.pack(
+                f">{n}h", *([amp, -amp] * (n // 2))))
+        elif v == 2:
+            n = 2 * (40 + d % 80)
+            amp = (1 << 20) * k
+            pos = amp.to_bytes(3, "big", signed=True)
+            neg = (-amp).to_bytes(3, "big", signed=True)
+            blob = make_mp4_pcm(rate, 2, b"in24",
+                                (pos + neg) * (n // 2))
+        else:
+            n = 2 * (50 + d % 120)
+            amp = 2 * (1 + d % 63)
+            blob = make_mp4_pcm(rate, 1, b"raw ", bytes(
+                [128 + amp, 128 - amp] * (n // 2)))
+        return f"mp4-pcm-{d}", "audio", blob
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_ogg_flac_media(documents: DataFrame) -> DataFrame:
@@ -1841,45 +1467,34 @@ def synthesize_ogg_flac_media(documents: DataFrame) -> DataFrame:
          n = 2*(60 + d%100) total samples
     All page CRCs are real and VERIFIED by the demuxer; rms = peak =
     k/8 exactly for every variant, mean 0."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import make_ogg_flac
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 4
-                amp = 4096 * (1 + d % 7)
-                rate = 8000 + (d % 8) * 1000
-                if v == 0:
-                    n = 2 * (50 + d % 200)
-                    blob = make_ogg_flac([amp, -amp] * (n // 2), rate)
-                elif v == 1:
-                    n = 2 * (60 + d % 100)
-                    blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
-                                         block_size=32)
-                elif v == 2:
-                    n = 2 * (300 + d % 300)
-                    blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
-                                         subframe="verbatim",
-                                         max_segs_per_page=4)
-                else:
-                    n = 2 * (60 + d % 100)
-                    blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
-                                         channels=2,
-                                         stereo_mode="mid-side",
-                                         subframe="constant")
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"ogg-flac-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+        v = d % 4
+        amp = 4096 * (1 + d % 7)
+        rate = 8000 + (d % 8) * 1000
+        if v == 0:
+            n = 2 * (50 + d % 200)
+            blob = make_ogg_flac([amp, -amp] * (n // 2), rate)
+        elif v == 1:
+            n = 2 * (60 + d % 100)
+            blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
+                                 block_size=32)
+        elif v == 2:
+            n = 2 * (300 + d % 300)
+            blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
+                                 subframe="verbatim",
+                                 max_segs_per_page=4)
+        else:
+            n = 2 * (60 + d % 100)
+            blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
+                                 channels=2,
+                                 stereo_mode="mid-side",
+                                 subframe="constant")
+        return f"ogg-flac-{d}", "audio", blob
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def synthesize_adpcm_media(documents: DataFrame) -> DataFrame:
@@ -1902,61 +1517,50 @@ def synthesize_adpcm_media(documents: DataFrame) -> DataFrame:
     run the public adaptation tables to match; peaks are terminating
     binary fractions, means/rms mirror the kernel's exact-int
     accumulation in the oracle's CASE formulas."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    schema = "doc_id string, media_ref string, modality string, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(d):
         from ..testing.imagegen import (
             ima_adpcm_block,
             make_wav_adpcm,
             ms_adpcm_block,
         )
 
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "modality": [], "payload": []}
-            for (doc_id,) in pdf.itertuples(index=False):
-                d = int(doc_id)
-                v = d % 4
-                k = 1 + d % 7
-                blocks = 1 + d % 4
-                rate = 8000 + (d % 8) * 1000
-                if v == 0:
-                    g = 2 + d % 6
-                    ba = 4 + 4 * g
-                    blk = ima_adpcm_block(
-                        [4096 * k - 2], [0], bytes([0xB3]) * (4 * g))
-                    wav = make_wav_adpcm(rate, 1, 17, ba, 1 + 8 * g,
-                                         blk * blocks)
-                elif v == 1:
-                    g = 1 + d % 5
-                    ba = 8 + 8 * g
-                    blk = ima_adpcm_block(
-                        [4096 * k, -4096 * k], [0, 0], bytes(8 * g))
-                    wav = make_wav_adpcm(rate, 2, 17, ba, 1 + 8 * g,
-                                         blk * blocks)
-                elif v == 2:
-                    m = 2 + d % 7
-                    ba = 7 + m
-                    blk = ms_adpcm_block(
-                        [0], [16], [4096 * k - 8], [4096 * k - 8],
-                        bytes([0x1F]) * m)
-                    wav = make_wav_adpcm(rate, 1, 2, ba, 2 + 2 * m,
-                                         blk * blocks)
-                else:
-                    m = 1 + d % 6
-                    ba = 7 + m
-                    blk = ms_adpcm_block(
-                        [1], [16], [4096 * k], [4096 * k], bytes(m))
-                    wav = make_wav_adpcm(rate, 1, 2, ba, 2 + 2 * m,
-                                         blk * blocks)
-                out["doc_id"].append(str(d))
-                out["media_ref"].append(f"adpcm-{d}")
-                out["modality"].append("audio")
-                out["payload"].append(wav)
-            yield pd.DataFrame(out)
+        v = d % 4
+        k = 1 + d % 7
+        blocks = 1 + d % 4
+        rate = 8000 + (d % 8) * 1000
+        if v == 0:
+            g = 2 + d % 6
+            ba = 4 + 4 * g
+            blk = ima_adpcm_block(
+                [4096 * k - 2], [0], bytes([0xB3]) * (4 * g))
+            wav = make_wav_adpcm(rate, 1, 17, ba, 1 + 8 * g,
+                                 blk * blocks)
+        elif v == 1:
+            g = 1 + d % 5
+            ba = 8 + 8 * g
+            blk = ima_adpcm_block(
+                [4096 * k, -4096 * k], [0, 0], bytes(8 * g))
+            wav = make_wav_adpcm(rate, 2, 17, ba, 1 + 8 * g,
+                                 blk * blocks)
+        elif v == 2:
+            m = 2 + d % 7
+            ba = 7 + m
+            blk = ms_adpcm_block(
+                [0], [16], [4096 * k - 8], [4096 * k - 8],
+                bytes([0x1F]) * m)
+            wav = make_wav_adpcm(rate, 1, 2, ba, 2 + 2 * m,
+                                 blk * blocks)
+        else:
+            m = 1 + d % 6
+            ba = 7 + m
+            blk = ms_adpcm_block(
+                [1], [16], [4096 * k], [4096 * k], bytes(m))
+            wav = make_wav_adpcm(rate, 1, 2, ba, 2 + 2 * m,
+                                 blk * blocks)
+        return f"adpcm-{d}", "audio", wav
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
+    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def sniff_image_format(payload_col) -> "F.Column":

@@ -195,7 +195,7 @@ def remove_links(pdf_raw: DataFrame) -> DataFrame:
     text+media content but no annotation dictionaries — so the output
     PDFs provably contain zero link annotations while full_text is
     byte-identical (write_roundtrip contract). One extraction pass + one
-    write pass, both mapInPandas, no shuffle."""
+    write pass, both Arrow row-kernel passes, no shuffle."""
     from .extract import extract_spans, write_pdfs
 
     return write_pdfs(extract_spans(pdf_raw))

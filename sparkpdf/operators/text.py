@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._kernel import doc_id_str, map_kernel, quarantine_message
+
 # small public stopword lists (enough for a deterministic heuristic)
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "that", "for", "with"],
@@ -329,61 +331,44 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
 HTML_MAIN_SCHEMA = "doc_id string, title string, main_text string"
 
 
+def _by_doc(documents: DataFrame, *cols: str) -> DataFrame:
+    """documents -> (doc_id long, *cols) hash-partitioned by doc_id at
+    defaultParallelism: a small scan arrives as 1-2 tasks, which would
+    serialize the per-doc Python work of a synthesizer."""
+    n_parts = documents.sparkSession.sparkContext.defaultParallelism
+    return documents.select(
+        F.col("doc_id").cast("long").alias("doc_id"), *cols
+    ).repartition(n_parts, "doc_id")
+
+
 def synthesize_html_corpus(documents: DataFrame) -> DataFrame:
     """documents -> (doc_id, html): deterministic pages with real
     boilerplate around the text (kernels/html.synthesize_html)."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    docs = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(d, text):
         from ..kernels.html import synthesize_html
 
-        for pdf in batches:
-            out = {"doc_id": [], "html": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(str(doc_id))
-                out["html"].append(synthesize_html(int(doc_id), text or ""))
-            yield pd.DataFrame(out)
+        return [(str(d), synthesize_html(d, text or ""))]
 
-    return docs.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema="doc_id string, html string"
-    )
+    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
+                      "doc_id string, html string")
 
 
 def extract_html_main(pages: DataFrame) -> DataFrame:
     """(doc_id, html) -> (doc_id, title, main_text): boilerplate strip
     via the DOM-walk heuristics in kernels/html.py. Poison inputs
     quarantine to NULLs (same discipline as PDF extraction)."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(doc_id, html_text):
         from ..kernels.html import extract_main_html
 
-        for pdf in batches:
-            out = {"doc_id": [], "title": [], "main_text": []}
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
-                try:
-                    res = extract_main_html(
-                        html_text if html_text is not None else ""
-                    )
-                except Exception:
-                    res = {"title": None, "main_text": None}
-                out["doc_id"].append(str(doc_id))
-                out["title"].append(res["title"])
-                out["main_text"].append(res["main_text"])
-            yield pd.DataFrame(out)
+        try:
+            res = extract_main_html(html_text or "")
+        except Exception:
+            return [(doc_id, None, None)]
+        return [(doc_id, res["title"], res["main_text"])]
 
-    return pages.select("doc_id", "html").mapInPandas(
-        gen, schema=HTML_MAIN_SCHEMA
-    )
+    return map_kernel(pages, [doc_id_str(), "html"], row, HTML_MAIN_SCHEMA)
 
 
 WEB_FEATURES_SCHEMA = (
@@ -404,30 +389,14 @@ def synthesize_web_corpus(documents: DataFrame) -> DataFrame:
     (kernels/html.synthesize_webpage — planted links/meta/headings/
     tables, all doc_id formulas) for the web-feature queries; the
     html_main oracle keeps its own unchanged synthesize_html corpus."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    docs = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(d, text):
         from ..kernels.html import synthesize_webpage
 
-        for pdf in batches:
-            out = {"doc_id": [], "html": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(str(doc_id))
-                out["html"].append(
-                    synthesize_webpage(int(doc_id), text or "")
-                )
-            yield pd.DataFrame(out)
+        return [(str(d), synthesize_webpage(d, text or ""))]
 
-    return docs.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema="doc_id string, html string"
-    )
+    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
+                      "doc_id string, html string")
 
 
 def synthesize_warc_corpus(documents: DataFrame) -> DataFrame:
@@ -439,49 +408,32 @@ def synthesize_warc_corpus(documents: DataFrame) -> DataFrame:
     d%9==0 else 200, and ODD docs use the CommonCrawl
     per-record-gzip-member layout (even docs plain) so both file
     forms decode in every corpus."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    docs = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(d, text):
         from ..kernels.html import synthesize_webpage
         from ..kernels.warc import build_warc
 
-        for pdf in batches:
-            out = {"doc_id": [], "warc_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                uri = f"https://example.com/doc/{d}"
-                html = synthesize_webpage(d, text or "")
-                recs = [
-                    {"warc_type": "warcinfo",
-                     "record_id": f"<urn:warcinfo:{d}>",
-                     "body": b"software: sparkpdf-fixture\r\n"},
-                    {"warc_type": "request",
-                     "record_id": f"<urn:request:{d}>",
-                     "target_uri": uri,
-                     "body": (f"GET /doc/{d} HTTP/1.1\r\n"
-                              "Host: example.com\r\n\r\n"
-                              ).encode("latin-1")},
-                    {"warc_type": "response",
-                     "record_id": f"<urn:response:{d}>",
-                     "target_uri": uri,
-                     "http_status": 404 if d % 9 == 0 else 200,
-                     "body": html.encode("latin-1")},
-                ]
-                out["doc_id"].append(str(d))
-                out["warc_bytes"].append(
-                    build_warc(recs, gzip_members=(d % 2 == 1)))
-            yield pd.DataFrame(out)
+        uri = f"https://example.com/doc/{d}"
+        html = synthesize_webpage(d, text or "")
+        recs = [
+            {"warc_type": "warcinfo",
+             "record_id": f"<urn:warcinfo:{d}>",
+             "body": b"software: sparkpdf-fixture\r\n"},
+            {"warc_type": "request",
+             "record_id": f"<urn:request:{d}>",
+             "target_uri": uri,
+             "body": (f"GET /doc/{d} HTTP/1.1\r\n"
+                      "Host: example.com\r\n\r\n").encode("latin-1")},
+            {"warc_type": "response",
+             "record_id": f"<urn:response:{d}>",
+             "target_uri": uri,
+             "http_status": 404 if d % 9 == 0 else 200,
+             "body": html.encode("latin-1")},
+        ]
+        return [(str(d), build_warc(recs, gzip_members=(d % 2 == 1)))]
 
-    return docs.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema="doc_id string, warc_bytes binary"
-    )
+    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
+                      "doc_id string, warc_bytes binary")
 
 
 def synthesize_warc_mixed_corpus(documents: DataFrame) -> DataFrame:
@@ -492,51 +444,33 @@ def synthesize_warc_mixed_corpus(documents: DataFrame) -> DataFrame:
     real CommonCrawl shape where crawls interleave document formats.
     Odd docs use the per-record-gzip-member layout. Feeds
     sources/warc_source.warc_documents -> extract_interleaved."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    docs = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(d, text):
         from ..kernels.html import synthesize_interleaved_html
         from ..kernels.warc import build_warc
         from ..testing.pdfgen import doc_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "warc_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                uri = f"https://example.com/doc/{d}"
-                if d % 2 == 0:
-                    body = doc_to_pdf(text or "", title=f"doc-{d}")
-                    ctype = "application/pdf"
-                else:
-                    body = synthesize_interleaved_html(
-                        d, text or "").encode("latin-1")
-                    ctype = "text/html; charset=utf-8"
-                recs = [
-                    {"warc_type": "warcinfo",
-                     "record_id": f"<urn:warcinfo:{d}>",
-                     "body": b"software: sparkpdf-fixture\r\n"},
-                    {"warc_type": "response",
-                     "record_id": f"<urn:response:{d}>",
-                     "target_uri": uri,
-                     "http_status": 200,
-                     "http_content_type": ctype,
-                     "body": body},
-                ]
-                out["doc_id"].append(str(d))
-                out["warc_bytes"].append(
-                    build_warc(recs, gzip_members=(d % 2 == 1)))
-            yield pd.DataFrame(out)
+        if d % 2 == 0:
+            body = doc_to_pdf(text or "", title=f"doc-{d}")
+            ctype = "application/pdf"
+        else:
+            body = synthesize_interleaved_html(d, text or "").encode("latin-1")
+            ctype = "text/html; charset=utf-8"
+        recs = [
+            {"warc_type": "warcinfo",
+             "record_id": f"<urn:warcinfo:{d}>",
+             "body": b"software: sparkpdf-fixture\r\n"},
+            {"warc_type": "response",
+             "record_id": f"<urn:response:{d}>",
+             "target_uri": f"https://example.com/doc/{d}",
+             "http_status": 200,
+             "http_content_type": ctype,
+             "body": body},
+        ]
+        return [(str(d), build_warc(recs, gzip_members=(d % 2 == 1)))]
 
-    return docs.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema="doc_id string, warc_bytes binary"
-    )
+    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
+                      "doc_id string, warc_bytes binary")
 
 
 def extract_web_features(pages: DataFrame) -> DataFrame:
@@ -547,56 +481,28 @@ def extract_web_features(pages: DataFrame) -> DataFrame:
     inputs quarantine via the error column — never raises, never
     drops rows (the extract_doc discipline).
 
-    Scale shape: ONE mapInPandas pass, no shuffle; downstream
+    Scale shape: ONE Python pass, no shuffle; downstream
     link/heading/table queries explode map-side. At 10^12 docs this
     is the crawl-graph feeder (outlinks -> anchor-text corpus +
     URL frontier), so everything stays in the one Arrow batch walk."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(doc_id, html_text):
         from ..kernels.html import parse_webpage
 
-        cols = ("lang", "title", "canonical", "description", "robots",
-                "og_title", "charset")
+        res = parse_webpage(html_text or "")
+        return [(
+            doc_id,
+            *(res[k] for k in ("lang", "title", "canonical", "description",
+                               "robots", "og_title", "charset")),
+            [(l["href"], l["anchor"], l["nofollow"], l["boiler"])
+             for l in res["links"]],
+            [(h["level"], h["text"], h["boiler"]) for h in res["headings"]],
+            [(t["n_rows"], t["n_cols"], t["cells"]) for t in res["tables"]],
+            [(x["heading"], x["level"], x["text"]) for x in res["sections"]],
+            None,
+        )]
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id",) + cols + ("links", "headings",
-                                         "tables", "sections",
-                                         "error")}
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
-                out["doc_id"].append(str(doc_id))
-                try:
-                    res = parse_webpage(
-                        html_text if html_text is not None else ""
-                    )
-                    err = None
-                except Exception as exc:  # quarantine, never raise
-                    res = None
-                    err = f"{type(exc).__name__}: {exc}"
-                for k in cols:
-                    out[k].append(res[k] if res else None)
-                out["links"].append(
-                    [(l["href"], l["anchor"], l["nofollow"],
-                      l["boiler"]) for l in res["links"]]
-                    if res else None)
-                out["headings"].append(
-                    [(h["level"], h["text"], h["boiler"])
-                     for h in res["headings"]] if res else None)
-                out["tables"].append(
-                    [(t["n_rows"], t["n_cols"], t["cells"])
-                     for t in res["tables"]] if res else None)
-                out["sections"].append(
-                    [(s["heading"], s["level"], s["text"])
-                     for s in res["sections"]] if res else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return pages.select("doc_id", "html").mapInPandas(
-        gen, schema=WEB_FEATURES_SCHEMA
-    )
+    return map_kernel(pages, [doc_id_str(), "html"], row, WEB_FEATURES_SCHEMA)
 
 
 WEB_DOC_SCHEMA = (
@@ -613,7 +519,7 @@ WEB_DOC_SCHEMA = (
 
 def extract_web_docs(pages: DataFrame) -> DataFrame:
     """The production HTML lane (jobs/web_job.py): main-content strip
-    AND the full DOM feature set in ONE mapInPandas pass over the
+    AND the full DOM feature set in ONE Python pass over the
     corpus — per doc: title + boilerplate-stripped main_text
     (extract_main_html), metadata scalars, outlinks, heading outline,
     table shapes (parse_webpage), plus n_bytes (utf-8 size of the raw
@@ -622,53 +528,30 @@ def extract_web_docs(pages: DataFrame) -> DataFrame:
 
     Scale shape: one corpus read, no shuffle; the checkpoint layer
     slices by doc_id hash and records per-partition lineage."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(doc_id, html_text):
         from ..kernels.html import parse_web_doc
 
-        meta_cols = ("lang", "canonical", "description", "robots",
-                     "og_title", "charset")
+        raw = html_text or ""
+        n_bytes = len(raw.encode("utf-8"))
+        try:
+            # one tokenization feeds both parsers (round 9)
+            main, feats = parse_web_doc(raw)
+        except Exception as exc:  # the row keeps n_bytes
+            return [(doc_id, *[None] * 11, n_bytes, quarantine_message(exc))]
+        return [(
+            doc_id, feats["title"], main["main_text"],
+            *(feats[k] for k in ("lang", "canonical", "description",
+                                 "robots", "og_title", "charset")),
+            [(l["href"], l["anchor"], l["nofollow"], l["boiler"])
+             for l in feats["links"]],
+            [(h["level"], h["text"], h["boiler"]) for h in feats["headings"]],
+            [(t["n_rows"], t["n_cols"], t["cells"]) for t in feats["tables"]],
+            n_bytes,
+            None,
+        )]
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "title", "main_text") + meta_cols
-                   + ("links", "headings", "tables", "n_bytes",
-                      "error")}
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
-                raw = html_text if html_text is not None else ""
-                out["doc_id"].append(str(doc_id))
-                out["n_bytes"].append(len(raw.encode("utf-8")))
-                try:
-                    # one tokenization feeds both parsers (round 9)
-                    main, feats = parse_web_doc(raw)
-                    err = None
-                except Exception as exc:  # quarantine, never raise
-                    main = feats = None
-                    err = f"{type(exc).__name__}: {exc}"[:500]
-                out["title"].append(feats["title"] if feats else None)
-                out["main_text"].append(
-                    main["main_text"] if main else None)
-                for k in meta_cols:
-                    out[k].append(feats[k] if feats else None)
-                out["links"].append(
-                    [(l["href"], l["anchor"], l["nofollow"],
-                      l["boiler"]) for l in feats["links"]]
-                    if feats else None)
-                out["headings"].append(
-                    [(h["level"], h["text"], h["boiler"])
-                     for h in feats["headings"]] if feats else None)
-                out["tables"].append(
-                    [(t["n_rows"], t["n_cols"], t["cells"])
-                     for t in feats["tables"]] if feats else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return pages.select("doc_id", "html").mapInPandas(
-        gen, schema=WEB_DOC_SCHEMA
-    )
+    return map_kernel(pages, [doc_id_str(), "html"], row, WEB_DOC_SCHEMA)
 
 
 def extract_robots_rules(documents: DataFrame,
@@ -679,80 +562,42 @@ def extract_robots_rules(documents: DataFrame,
     the synthesized per-doc robots.txt and emit the crawl-policy
     signals a frontier needs — crawl delay, sitemap count, and the
     allow/deny decision for each probe path under `agent` plus the
-    '*'-group decision an unknown agent would get. One mapInPandas
+    '*'-group decision an unknown agent would get. One Python
     pass, no shuffle; at crawl scale this joins (broadcast) against
     the per-host frontier."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     probe_cols = [f"allowed_{i}" for i in range(len(probe_paths))]
     schema = ("doc_id long, crawl_delay double, n_sitemaps int, "
               + ", ".join(f"{c} int" for c in probe_cols)
               + ", other_agent_tmp int")
 
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(d):
         from ..kernels.robots import (
             crawl_delay, is_allowed, parse_robots, synthesize_robots)
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ["doc_id", "crawl_delay", "n_sitemaps"]
-                   + probe_cols + ["other_agent_tmp"]}
-            for (doc_id,) in zip(pdf["doc_id"]):
-                d = int(doc_id)
-                r = parse_robots(synthesize_robots(d))
-                out["doc_id"].append(d)
-                out["crawl_delay"].append(crawl_delay(r, agent))
-                out["n_sitemaps"].append(len(r["sitemaps"]))
-                for c, p in zip(probe_cols, probe_paths):
-                    out[c].append(int(is_allowed(r, agent, p)))
-                out["other_agent_tmp"].append(
-                    int(is_allowed(r, "otherbot", "/tmp/x")))
-            yield pd.DataFrame(out)
+        r = parse_robots(synthesize_robots(d))
+        return [(d, crawl_delay(r, agent), len(r["sitemaps"]),
+                 *(int(is_allowed(r, agent, p)) for p in probe_paths),
+                 int(is_allowed(r, "otherbot", "/tmp/x")))]
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema=schema
-    )
+    return map_kernel(_by_doc(documents), ["doc_id"], row, schema)
 
 
 def extract_sitemap_entries(documents: DataFrame) -> DataFrame:
     """Per-doc sitemap parse (kernels/sitemap.py): one row per
     <url>/<sitemap> entry with the container kind — the crawl
-    frontier's seed stream. One mapInPandas pass, entry explode
+    frontier's seed stream. One Python pass, entry explode
     Python-side (entries per sitemap are tiny); no shuffle."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     schema = ("doc_id long, entry_idx int, kind string, loc string, "
               "lastmod string, priority string")
 
-    def gen(batches: "Iterator[pd.DataFrame]"):
+    def row(d):
         from ..kernels.sitemap import parse_sitemap, synthesize_sitemap
 
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "entry_idx", "kind",
-                                   "loc", "lastmod", "priority")}
-            for (doc_id,) in zip(pdf["doc_id"]):
-                d = int(doc_id)
-                r = parse_sitemap(synthesize_sitemap(d))
-                for i, e in enumerate(r["entries"]):
-                    out["doc_id"].append(d)
-                    out["entry_idx"].append(i)
-                    out["kind"].append(r["kind"])
-                    out["loc"].append(e.get("loc"))
-                    out["lastmod"].append(e.get("lastmod"))
-                    out["priority"].append(e.get("priority"))
-            yield pd.DataFrame(out)
+        r = parse_sitemap(synthesize_sitemap(d))
+        return [(d, i, r["kind"], e.get("loc"), e.get("lastmod"),
+                 e.get("priority")) for i, e in enumerate(r["entries"])]
 
-    return ids.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema=schema
-    )
+    return map_kernel(_by_doc(documents), ["doc_id"], row, schema)
 
 
 def canonical_url(col) -> "F.Column":

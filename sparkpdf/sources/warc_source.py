@@ -12,7 +12,7 @@
   torn archives quarantine via the error column without dropping the
   file row.
 
-Scale shape: one mapInPandas pass, record explode is map-side (a WARC
+Scale shape: one Python pass, record explode is map-side (a WARC
 file's records never shuffle); at CommonCrawl scale each ~1 GB .warc.gz
 is one input row, so partition sizing rides binaryFile's
 maxPartitionBytes and the per-file gzip members stream through zlib
@@ -24,10 +24,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._kernel import doc_id_str, map_kernel, quarantine_message
+
+
 WARC_PAGE_SCHEMA = (
     "doc_id string, record_id string, url string, http_status int, "
     "content_type string, html string, n_bytes long, error string"
 )
+
+
+def _demux(schema: str, emit):
+    """Row function for a WARC lane over (doc_id, warc_bytes):
+    `emit(record)` maps each response record to its output columns
+    (a dict; unnamed columns stay null) or None to skip it. A torn /
+    corrupt archive yields ONE quarantine row for the file."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def out(**cols):
+        return tuple(cols.get(n) for n in names)
+
+    def row(doc_id, data):
+        from ..kernels.warc import parse_warc
+
+        data = data or b""
+        try:
+            records = parse_warc(data)
+        except Exception as exc:
+            records, err = None, quarantine_message(exc)
+        else:
+            err = "warc: unparseable archive"
+        if records is None:
+            return [out(doc_id=doc_id, error=err, n_bytes=len(data))]
+        rows = []
+        for idx, rec in enumerate(records):
+            cols = emit(rec) if rec["warc_type"] == "response" else None
+            if cols is not None:
+                rows.append(out(doc_id=f"{doc_id}#{idx}", **cols))
+        return rows
+
+    return row
 
 
 def warc_pages(archives: DataFrame) -> DataFrame:
@@ -37,59 +72,22 @@ def warc_pages(archives: DataFrame) -> DataFrame:
     stable, lineage-friendly). html is decoded latin-1-lossless for
     text/html responses; other content types keep html NULL. A torn /
     corrupt archive yields ONE quarantine row for the file."""
-    from typing import Iterator
 
-    import pandas as pd
+    def emit(rec):
+        ctype = rec["http_content_type"] or ""
+        # MIME types are case-insensitive (RFC 2045 §5.1)
+        is_html = ctype.split(";")[0].strip().lower() == "text/html"
+        return dict(
+            record_id=rec["record_id"],
+            url=rec["target_uri"],
+            http_status=rec["http_status"],
+            content_type=ctype or None,
+            html=rec["body"].decode("latin-1") if is_html else None,
+            n_bytes=len(rec["body"]),
+        )
 
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.warc import parse_warc
-
-        cols = ("doc_id", "record_id", "url", "http_status",
-                "content_type", "html", "n_bytes", "error")
-
-        for pdf in batches:
-            out = {k: [] for k in cols}
-
-            def emit(**kw):
-                for k in cols:
-                    out[k].append(kw.get(k))
-
-            for doc_id, raw in zip(pdf["doc_id"], pdf["warc_bytes"]):
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    records = parse_warc(data)
-                except Exception as exc:  # quarantine, never raise
-                    records = None
-                    err = f"{type(exc).__name__}: {exc}"[:500]
-                else:
-                    err = "warc: unparseable archive"
-                if records is None:
-                    emit(doc_id=str(doc_id), error=err,
-                         n_bytes=len(data))
-                    continue
-                for idx, rec in enumerate(records):
-                    if rec["warc_type"] != "response":
-                        continue
-                    ctype = rec["http_content_type"] or ""
-                    # MIME types are case-insensitive (RFC 2045 §5.1)
-                    is_html = (
-                        ctype.split(";")[0].strip().lower() == "text/html"
-                    )
-                    emit(
-                        doc_id=f"{doc_id}#{idx}",
-                        record_id=rec["record_id"],
-                        url=rec["target_uri"],
-                        http_status=rec["http_status"],
-                        content_type=ctype or None,
-                        html=(rec["body"].decode("latin-1")
-                              if is_html else None),
-                        n_bytes=len(rec["body"]),
-                    )
-            yield pd.DataFrame(out)
-
-    return archives.select("doc_id", "warc_bytes").mapInPandas(
-        gen, schema=WARC_PAGE_SCHEMA
-    )
+    return map_kernel(archives, [doc_id_str(), "warc_bytes"],
+                      _demux(WARC_PAGE_SCHEMA, emit), WARC_PAGE_SCHEMA)
 
 
 WARC_DOCUMENT_SCHEMA = (
@@ -109,57 +107,24 @@ def warc_documents(archives: DataFrame) -> DataFrame:
     CommonCrawl drop into one span table. Same demux discipline as
     warc_pages: map-side explode, torn archives quarantine as one
     error row, other content types skipped."""
-    from typing import Iterator
 
-    import pandas as pd
+    def emit(rec):
+        ctype = rec["http_content_type"] or ""
+        base = ctype.split(";")[0].strip().lower()
+        if rec["http_status"] != 200 or base not in (
+                "text/html", "application/pdf"):
+            return None
+        return dict(
+            url=rec["target_uri"],
+            http_status=rec["http_status"],
+            content_type=ctype or None,
+            payload=rec["body"],
+            n_bytes=len(rec["body"]),
+        )
 
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.warc import parse_warc
-
-        cols = ("doc_id", "url", "http_status", "content_type",
-                "payload", "n_bytes", "error")
-
-        for pdf in batches:
-            out = {k: [] for k in cols}
-
-            def emit(**kw):
-                for k in cols:
-                    out[k].append(kw.get(k))
-
-            for doc_id, raw in zip(pdf["doc_id"], pdf["warc_bytes"]):
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    records = parse_warc(data)
-                except Exception as exc:
-                    records = None
-                    err = f"{type(exc).__name__}: {exc}"[:500]
-                else:
-                    err = "warc: unparseable archive"
-                if records is None:
-                    emit(doc_id=str(doc_id), error=err,
-                         n_bytes=len(data))
-                    continue
-                for idx, rec in enumerate(records):
-                    if rec["warc_type"] != "response":
-                        continue
-                    ctype = (rec["http_content_type"] or "")
-                    base = ctype.split(";")[0].strip().lower()
-                    if rec["http_status"] != 200 or base not in (
-                            "text/html", "application/pdf"):
-                        continue
-                    emit(
-                        doc_id=f"{doc_id}#{idx}",
-                        url=rec["target_uri"],
-                        http_status=rec["http_status"],
-                        content_type=ctype or None,
-                        payload=rec["body"],
-                        n_bytes=len(rec["body"]),
-                    )
-            yield pd.DataFrame(out)
-
-    return archives.select("doc_id", "warc_bytes").mapInPandas(
-        gen, schema=WARC_DOCUMENT_SCHEMA
-    )
+    return map_kernel(archives, [doc_id_str(), "warc_bytes"],
+                      _demux(WARC_DOCUMENT_SCHEMA, emit),
+                      WARC_DOCUMENT_SCHEMA)
 
 
 def read_warc_dir(

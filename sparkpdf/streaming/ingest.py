@@ -6,7 +6,7 @@ with resumable checkpoints — which plans/checkpoint.py provides. This
 module is the complementary CONTINUOUS-ARRIVAL path: new pdf_raw
 parquet files landing in a directory are extracted exactly-once via
 Spark's own streaming checkpoint (offsets + sink commit log), using the
-SAME stateless mapInPandas kernel as the batch path. No watermarks or
+SAME stateless Arrow row kernel as the batch path. No watermarks or
 stateful operators are needed — extraction is per-document pure
 (SURVEY §2.14).
 

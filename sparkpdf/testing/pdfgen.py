@@ -2,7 +2,7 @@
 
 Everything is enumeration-deterministic (no randomness): the same call
 always yields byte-identical PDFs, so goldens and benches are stable.
-This module is also used DISTRIBUTED (inside mapInPandas) to synthesise
+This module is also used DISTRIBUTED (inside the Arrow row kernels) to synthesise
 the pdf_raw corpus from /root/testdata documents rows.
 """
 
@@ -15,7 +15,7 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 
 # printable-ASCII sanitizer — canonical definition lives with the
 # HTML corpus generators (kernels/html.py); one pattern, one comment
-from ..kernels.html import _NONPRINTABLE  # noqa: E402
+from ..kernels.html import NONPRINTABLE  # noqa: E402
 
 HEADER = b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n"
 
@@ -388,7 +388,7 @@ def doc_to_pdf_paged(text: str, n_pages: int, title: Optional[str] = None) -> by
     equal substrings (K = ceil(len/n)), one Tj per page — page i's
     extracted text is substr(printable, i*K, K) + "\n", reproducible in
     ANSI SQL for the oracle."""
-    printable = _NONPRINTABLE.sub("?", text)
+    printable = NONPRINTABLE.sub("?", text)
     k = max(1, -(-len(printable) // n_pages))
     chunks = [printable[i * k : (i + 1) * k] for i in range(n_pages)]
     return simple_pdf(
@@ -405,7 +405,7 @@ def doc_to_pdf(text: str, n_media: int = 1, title: Optional[str] = None) -> byte
     a trailing newline, and exactly `n_media` media spans named
     'img%02d' follow the text span.
     """
-    printable = _NONPRINTABLE.sub("?", text)
+    printable = NONPRINTABLE.sub("?", text)
     content = bytearray(b"BT /F1 12 Tf (" + esc_string(printable) + b") Tj ET")
     b = PdfBuilder()
     # WinAnsi -> cp1252 decode: identity on printable ASCII, so the

@@ -24,7 +24,15 @@ def load_reference():
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["PyPDF2"] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        # drop the half-initialised package, so a later call raises the
+        # real error again instead of returning a broken module
+        for name in [n for n in sys.modules
+                     if n == "PyPDF2" or n.startswith("PyPDF2.")]:
+            del sys.modules[name]
+        raise
     # xmp.py imports PyPDF2.utils, which only exists as the _utils alias
     if "PyPDF2._utils" in sys.modules:
         sys.modules.setdefault("PyPDF2.utils", sys.modules["PyPDF2._utils"])

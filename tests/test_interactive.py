@@ -212,6 +212,22 @@ def test_no_per_row_python_udfs():
     assert offenders == []
 
 
+def test_single_python_boundary():
+    """Every Python lane crosses the JVM<->Python boundary through the
+    one row-kernel adapter: mapInPandas/mapInArrow appear only in
+    operators/_kernel.py (grouped applyInPandas* are other APIs)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "sparkpdf"
+    offenders = [
+        (str(py.relative_to(root)), needle)
+        for py in root.rglob("*.py")
+        for needle in (".mapInPandas(", ".mapInArrow(")
+        if needle in py.read_text()
+    ]
+    assert offenders == [("operators/_kernel.py", ".mapInArrow(")]
+
+
 def test_paper_sizes_parity():
     from sparkpdf.kernels.geometry import PAPER_SIZES, scale_mediabox
 

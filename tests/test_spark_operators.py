@@ -229,19 +229,6 @@ def test_media_features_real_decode(spark, docs):
         assert r.width == 16 + d % 32 and r.height == 8 + d % 16
 
 
-def test_extract_arrow_and_pandas_paths_identical(spark, corpus, monkeypatch):
-    """extract_spans' mapInArrow default and the mapInPandas debug path
-    (SPARKPDF_PANDAS_SPANS=1) must produce identical rows."""
-    import importlib
-
-    from sparkpdf.operators import extract as ex
-
-    arrow_rows = sorted(str(r) for r in ex.extract_spans(corpus).collect())
-    monkeypatch.setenv("SPARKPDF_PANDAS_SPANS", "1")
-    pandas_rows = sorted(str(r) for r in ex.extract_spans(corpus).collect())
-    assert arrow_rows == pandas_rows and len(arrow_rows) > 0
-
-
 def test_av_media_features_and_quarantine(spark, docs):
     """Audio/video modality dispatch: WAV/MP4/MP3/MKV/FLAC/Ogg/AVI
     containers yield real header metadata (round 5 widens the corpus
