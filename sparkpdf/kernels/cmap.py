@@ -24,11 +24,20 @@ _TOKEN = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 
 _CMD_SECTION_BEGIN = {b"begincodespacerange", b"beginbfchar", b"beginbfrange"}
 
+# bound on one CMap's memo: ~2.5 MB, beyond the glyph count of real fonts
+_MEMO_MAX = 1 << 14
+
 
 class CMap:
-    """Compiled ToUnicode mapping for one font."""
+    """Compiled ToUnicode mapping for one font.
 
-    __slots__ = ("fchars", "franges", "codespace", "codelengths")
+    The match at a position depends only on the next `width` bytes
+    (the longest codespace or bfrange code), so `code2text` memoises
+    `_match` on that window: a font's glyph codes repeat across every
+    string and page that uses it."""
+
+    __slots__ = ("fchars", "franges", "codespace", "codelengths",
+                 "_memo", "_width")
 
     def __init__(self):
         self.fchars: Dict[bytes, bytes] = {}
@@ -36,45 +45,55 @@ class CMap:
         self.franges: List[Tuple[bytes, bytes, Union[bytes, list]]] = []
         self.codespace: List[Tuple[bytes, bytes]] = []
         self.codelengths: List[int] = []
+        self._memo: Optional[Dict[bytes, Tuple[bytes, int]]] = None
+        self._width = 0
 
     def code2text(self, code: bytes) -> str:
+        memo = self._memo
+        if memo is None:  # first use: the CMap is complete by now
+            memo = self._memo = {}
+            self._width = max(
+                [*(self.codelengths or [1, 2]),
+                 *(len(lo) for lo, _, _ in self.franges)])
+        width = self._width
         out = bytearray()
         i = 0
         n = len(code)
-        fchars = self.fchars
-        lengths = self.codelengths or [1, 2]
         while i < n:
-            matched = False
-            for ln in lengths:
-                hit = fchars.get(code[i : i + ln])
-                if hit is not None:
-                    out += hit if isinstance(hit, bytes) else str(hit).encode("utf-16-be")
-                    i += ln
-                    matched = True
-                    break
-            if matched:
-                continue
-            for lo, hi, dst in self.franges:
-                ln = len(lo)
-                if i + ln > n:
-                    continue
-                if all(lo[k] <= code[i + k] <= hi[k] for k in range(ln)):
-                    offset = code[i + ln - 1] - lo[ln - 1]
-                    if isinstance(dst, list):
-                        d = dst[offset] if offset < len(dst) else None
-                        if isinstance(d, bytes):
-                            out += d
-                        elif isinstance(d, str):
-                            out += d.encode("utf-16-be")
-                    else:
-                        out += _shift_be(dst, offset)
-                    i += ln
-                    matched = True
-                    break
-            if not matched:
-                out += b"\xff\xfd"
-                i += 1
+            window = code[i : i + width]
+            hit = memo.get(window)
+            if hit is None:
+                hit = self._match(window)
+                if len(memo) < _MEMO_MAX:
+                    memo[window] = hit
+            out += hit[0]
+            i += hit[1]
         return out.decode("utf-16-be", "replace")
+
+    def _match(self, code: bytes) -> Tuple[bytes, int]:
+        """The rule-by-rule match at the start of `code` (the next
+        `width` bytes): (UTF-16BE bytes, bytes consumed)."""
+        n = len(code)
+        for ln in self.codelengths or [1, 2]:
+            hit = self.fchars.get(code[:ln])
+            if hit is not None:
+                return (hit if isinstance(hit, bytes)
+                        else str(hit).encode("utf-16-be")), ln
+        for lo, hi, dst in self.franges:
+            ln = len(lo)
+            if ln > n:
+                continue
+            if all(lo[k] <= code[k] <= hi[k] for k in range(ln)):
+                offset = code[ln - 1] - lo[ln - 1]
+                if not isinstance(dst, list):
+                    return _shift_be(dst, offset), ln
+                d = dst[offset] if offset < len(dst) else None
+                if isinstance(d, bytes):
+                    return d, ln
+                if isinstance(d, str):
+                    return d.encode("utf-16-be"), ln
+                return b"", ln
+        return b"\xff\xfd", 1
 
 
 def _shift_be(dst: bytes, offset: int) -> bytes:
@@ -129,7 +148,9 @@ def parse_cmap(data: bytes) -> CMap:
             operands.clear()
         elif tok == b"endbfchar":
             for i in range(0, len(operands) - 1, 2):
-                cm.fchars[_as_raw(operands[i])] = _as_bytes(operands[i + 1])
+                src = _as_raw(operands[i])
+                if src:  # an empty code would match without advancing
+                    cm.fchars[src] = _as_bytes(operands[i + 1])
             operands.clear()
         elif tok == b"endbfrange":
             for i in range(0, len(operands) - 2, 3):

@@ -12,7 +12,7 @@ from __future__ import annotations
 import re
 from typing import Iterator, List, Tuple
 
-from .cos import (Name, PdfError, parse_dict, parse_hex_string,
+from .cos import (Name, PdfError, make_string, parse_dict, parse_hex_string,
                   parse_literal_string, parse_object, skip_ws)
 
 _OPERATOR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
@@ -29,7 +29,9 @@ INLINE_IMAGE_OP = "INLINE IMAGE"
 _SCAN = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:"
-    rb"(?P<lit>\()"
+    rb"(?P<hexstr><(?:[0-9A-Fa-f]{2})*>)"
+    rb"|(?P<litstr>\([^()\\]*\))"
+    rb"|(?P<lit>\()"
     rb"|(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
     rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
     rb"|(?P<op>[A-Za-z'\"][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
@@ -78,6 +80,10 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
                 except ValueError:  # overflow -> 0
                     v = 0
             operands.append(v)
+        elif g == "hexstr":  # even-length pure hex: parse_hex_string's value
+            operands.append(bytes.fromhex(m.group(g)[1:-1].decode()))
+        elif g == "litstr":  # no nesting or escapes: the bytes verbatim
+            operands.append(make_string(m.group(g)[1:-1]))
         elif g == "lit":
             try:
                 v, pos = parse_literal_string(data, m.start("lit"))

@@ -142,17 +142,20 @@ _KEYWORD_VALUES = {b"true": True, b"false": False, b"null": None}
 
 # interned Name cache (round 9): PDF name tokens repeat massively
 # (/Type, /Length, /Filter, ...) — reuse the immutable Name instead of
-# re-decoding per occurrence; bounded so adversarial inputs cannot
-# grow it without limit
+# re-decoding per occurrence. Cleared when full, so adversarial inputs
+# cannot grow it without limit and one early document full of unique
+# names cannot pin it for the life of a worker.
 _NAME_CACHE: dict = {}
+_NAME_CACHE_MAX = 4096
 
 
 def _make_name(raw: bytes) -> "Name":
     n = _NAME_CACHE.get(raw)
     if n is None:
         n = Name(raw.decode("utf-8", "surrogateescape"))
-        if len(_NAME_CACHE) < 4096:
-            _NAME_CACHE[raw] = n
+        if len(_NAME_CACHE) >= _NAME_CACHE_MAX:
+            _NAME_CACHE.clear()
+        _NAME_CACHE[raw] = n
     return n
 _REF_OR_NUMBER = re.compile(
     rb"(?:(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+R(?![0-9A-Za-z]))"

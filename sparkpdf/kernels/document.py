@@ -30,6 +30,8 @@ class PdfDocument:
         self._cache: Dict[int, Any] = {}
         self._objstm_cache: Dict[int, List[Tuple[int, Any]]] = {}
         self._pages: Optional[List[dict]] = None
+        # id(font dict) -> (font dict, Encoding), see fonts.resolve_font_encoding
+        self.font_encodings: Dict[int, Tuple[dict, Any]] = {}
         self._decryptor = None
         enc = self.xref.trailer.get("/Encrypt")
         if enc is not None:

@@ -61,17 +61,25 @@ def _apply_predictor(data: bytes, parms: Optional[dict]) -> bytes:
     ftypes = a[:, 0]
     rows = a[:, 1:].astype(np.int16)  # working copy, room for sums
     prev = np.zeros(rowlen, dtype=np.int16)
-    for r in range(nrows):
+    r = 0
+    while r < nrows:
         ft = ftypes[r]
         row = rows[r]
+        if ft == 2:  # a run of Up rows: one running sum down the columns
+            end = r + 1
+            while end < nrows and ftypes[end] == 2:
+                end += 1
+            run = np.cumsum(np.vstack((prev, rows[r:end])), axis=0,
+                            dtype=np.uint8)
+            rows[r:end] = run[1:]
+            prev = rows[end - 1]
+            r = end
+            continue
         if ft == 0:
             pass
         elif ft == 1:  # Sub: left neighbour, sequential in-row
             for c in range(bpp, rowlen):
                 row[c] = (row[c] + row[c - bpp]) & 0xFF
-        elif ft == 2:  # Up: fully vectorized
-            row += prev
-            row &= 0xFF
         elif ft == 3:  # Average
             for c in range(rowlen):
                 left = row[c - bpp] if c >= bpp else 0
@@ -93,43 +101,46 @@ def _apply_predictor(data: bytes, parms: Optional[dict]) -> bytes:
         else:
             raise PdfError(f"unknown PNG filter type {ft}")
         prev = row
+        r += 1
     return rows.astype(np.uint8).tobytes()
 
 
 def lzw_decode(data: bytes, parms: Optional[dict]) -> bytes:
     """Variable-width LZW, 9->12-bit codes, CLEAR=256 STOP=257
-    (parity: filters.py:204-293); fresh implementation."""
+    (parity: filters.py:204-293); fresh implementation. A code never
+    spans more than 3 bytes, so each is one shift and mask of the
+    24-bit big-endian window starting at its first byte."""
+    d = np.frombuffer(data + b"\0\0", dtype=np.uint8).astype(np.uint32)
+    windows = memoryview((d[:-2] << 16) | (d[1:-1] << 8) | d[2:])
+    nbits = 8 * len(data)
     table = [bytes([i]) for i in range(256)] + [b"", b""]
     out = []
     width = 9
     prev: Optional[bytes] = None
-    bitbuf = 0
-    nbits = 0
-    for byte in data:
-        bitbuf = (bitbuf << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (bitbuf >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == 256:  # CLEARDICT
-                table = table[:258]
-                width = 9
-                prev = None
-                continue
-            if code == 257:  # STOP
-                return _apply_predictor(b"".join(out), parms)
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            else:
-                entry = prev + prev[:1]
-                table.append(entry)
-            out.append(entry)
-            prev = entry
-            if len(table) >= (1 << width) - 1 and width < 12:
-                width += 1
+    pos = 0  # bit offset of the next code
+    while pos + width <= nbits:
+        code = (windows[pos >> 3] >> (24 - width - (pos & 7))) & (
+            (1 << width) - 1)
+        pos += width
+        if code == 256:  # CLEARDICT
+            table = table[:258]
+            width = 9
+            prev = None
+            continue
+        if code == 257:  # STOP
+            break
+        if prev is None:
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+            table.append(prev + entry[:1])
+        else:
+            entry = prev + prev[:1]
+            table.append(entry)
+        out.append(entry)
+        prev = entry
+        if len(table) >= (1 << width) - 1 and width < 12:
+            width += 1
     return _apply_predictor(b"".join(out), parms)
 
 

@@ -65,12 +65,23 @@ def differences_table(diff_list) -> dict:
 
 def resolve_font_encoding(doc, page: dict, font_name: str) -> Encoding:
     """(page resources, /Fx) -> Encoding for as_text. `doc` is a
-    PdfDocument used to chase indirect refs."""
+    PdfDocument used to chase indirect refs; it keeps each font's
+    Encoding, so pages sharing a font dict (the usual case) compile its
+    /ToUnicode CMap once per document."""
     resources = doc.resolve(page.get("/Resources")) or {}
     fonts = doc.resolve(resources.get("/Font")) or {}
     font = doc.resolve(fonts.get(font_name))
     if not isinstance(font, dict):
         return DEFAULT_ENCODING
+    # keyed by identity; the entry holds the font so the id stays unique
+    hit = doc.font_encodings.get(id(font))
+    if hit is None:
+        hit = doc.font_encodings[id(font)] = (font, _font_encoding(doc, font))
+    return hit[1]
+
+
+def _font_encoding(doc, font: dict) -> Encoding:
+    """The cascade above for one resolved font dict."""
     to_unicode = doc.resolve(font.get("/ToUnicode"))
     if isinstance(to_unicode, StreamObj):
         return parse_cmap(to_unicode.get_data(doc.resolve))
