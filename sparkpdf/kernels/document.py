@@ -258,21 +258,46 @@ class PdfDocument:
     def named_destinations(self) -> List[dict]:
         """Flattened /Dests dict or /Names name tree (parity:
         getNamedDestinations, _reader.py:464-503)."""
-        root = self.root
-        tree = self.resolve(root.get("/Dests"))
+        tree = self.resolve(self.root.get("/Dests"))
         if not isinstance(tree, dict):
-            names = self.resolve(root.get("/Names"))
-            tree = (
-                self.resolve(names.get("/Dests"))
-                if isinstance(names, dict)
-                else None
-            )
+            tree = self._names_entry("/Dests")
         if not isinstance(tree, dict):
             return []
         out: List[dict] = []
         page_no = self._page_number_map()
+        for key, dest in self._name_tree(tree):
+            dest = self.resolve(dest)
+            if isinstance(dest, dict):
+                dest = self.resolve(dest.get("/D"))
+            if not isinstance(dest, list) or not dest:
+                continue
+            page_ref = dest[0]
+            out.append(
+                {
+                    "name": _as_str(key),
+                    "page_no": page_no.get(
+                        page_ref.idnum if isinstance(page_ref, Ref) else -1
+                    ),
+                    "fit": _as_str(dest[1]) if len(dest) > 1 else None,
+                }
+            )
+        return out
+
+    def _names_entry(self, key: str):
+        """The catalog /Names dictionary's `key` name tree, or None."""
+        names = self.resolve(self.root.get("/Names"))
+        return self.resolve(names.get(key)) if isinstance(names, dict) else None
+
+    def _name_tree(self, tree):
+        """(key, value) leaf pairs of a name tree in document order:
+        each node's /Kids subtrees, depth-first, before the node's own
+        /Names pairs (PDF 32000 §7.9.6). Keys are resolved, values are
+        left as stored (callers may want a value's Ref id). A /Kids
+        Ref seen twice is skipped (cyclic-tree guard)."""
+        if not isinstance(tree, dict):
+            return
         stack = [tree]
-        seen: set = set()  # cyclic /Kids guard (same class as ADVICE r1)
+        seen: set = set()
         while stack:
             node = stack.pop()
             for kid in reversed(self.resolve(node.get("/Kids")) or []):
@@ -283,25 +308,9 @@ class PdfDocument:
                 kid = self.resolve(kid)
                 if isinstance(kid, dict):
                     stack.append(kid)
-            names = self.resolve(node.get("/Names")) or []
-            for i in range(0, len(names) - 1, 2):
-                key = self.resolve(names[i])
-                dest = self.resolve(names[i + 1])
-                if isinstance(dest, dict):
-                    dest = self.resolve(dest.get("/D"))
-                if not isinstance(dest, list) or not dest:
-                    continue
-                page_ref = dest[0]
-                out.append(
-                    {
-                        "name": _as_str(key),
-                        "page_no": page_no.get(
-                            page_ref.idnum if isinstance(page_ref, Ref) else -1
-                        ),
-                        "fit": _as_str(dest[1]) if len(dest) > 1 else None,
-                    }
-                )
-        return out
+            pairs = self.resolve(node.get("/Names")) or []
+            for i in range(0, len(pairs) - 1, 2):
+                yield self.resolve(pairs[i]), pairs[i + 1]
 
     def outlines(self) -> List[dict]:
         """Flattened bookmark tree via /First-/Next chains with level
@@ -376,47 +385,26 @@ class PdfDocument:
         (_writer.py:280-358; PDF 32000 §7.11.3/7.11.4). /UF preferred
         over /F for the display name; undecodable payloads yield None
         data (quarantine discipline)."""
-        names = self.resolve(self.root.get("/Names"))
-        if not isinstance(names, dict):
-            return []
-        tree = self.resolve(names.get("/EmbeddedFiles"))
-        if not isinstance(tree, dict):
-            return []
         out: List[dict] = []
-        stack = [tree]
-        seen: set = set()
-        while stack:
-            node = stack.pop()
-            for kid in reversed(self.resolve(node.get("/Kids")) or []):
-                if isinstance(kid, Ref):
-                    if kid.idnum in seen:
-                        continue
-                    seen.add(kid.idnum)
-                kid = self.resolve(kid)
-                if isinstance(kid, dict):
-                    stack.append(kid)
-            pairs = self.resolve(node.get("/Names")) or []
-            for i in range(0, len(pairs) - 1, 2):
-                spec = self.resolve(pairs[i + 1])
-                if not isinstance(spec, dict):
-                    continue
-                data = None
-                ef = self.resolve(spec.get("/EF"))
-                if isinstance(ef, dict):
-                    f = self.resolve(ef.get("/F")) or self.resolve(
-                        ef.get("/UF")
-                    )
-                    if isinstance(f, StreamObj):
-                        try:
-                            data = f.get_data(self.resolve)
-                        except Exception:
-                            data = None
-                fname = (
-                    _as_str(self.resolve(spec.get("/UF")))
-                    or _as_str(self.resolve(spec.get("/F")))
-                    or _as_str(self.resolve(pairs[i]))
-                )
-                out.append({"filename": fname, "data": data})
+        for key, spec in self._name_tree(self._names_entry("/EmbeddedFiles")):
+            spec = self.resolve(spec)
+            if not isinstance(spec, dict):
+                continue
+            data = None
+            ef = self.resolve(spec.get("/EF"))
+            if isinstance(ef, dict):
+                f = self.resolve(ef.get("/F")) or self.resolve(ef.get("/UF"))
+                if isinstance(f, StreamObj):
+                    try:
+                        data = f.get_data(self.resolve)
+                    except Exception:
+                        data = None
+            fname = (
+                _as_str(self.resolve(spec.get("/UF")))
+                or _as_str(self.resolve(spec.get("/F")))
+                or _as_str(key)
+            )
+            out.append({"filename": fname, "data": data})
         return out
 
     def media_objects(self) -> List[dict]:
@@ -512,27 +500,10 @@ class PdfDocument:
                     js = None
             out.append({"name": _as_str(name), "js": _as_str(js)})
 
-        names = self.resolve(self.root.get("/Names"))
-        if isinstance(names, dict):
-            tree = self.resolve(names.get("/JavaScript"))
-            stack = [tree] if isinstance(tree, dict) else []
-            seen: set = set()
-            while stack:
-                node = stack.pop()
-                for kid in reversed(self.resolve(node.get("/Kids")) or []):
-                    if isinstance(kid, Ref):
-                        if kid.idnum in seen:
-                            continue
-                        seen.add(kid.idnum)
-                    kid = self.resolve(kid)
-                    if isinstance(kid, dict):
-                        stack.append(kid)
-                pairs = self.resolve(node.get("/Names")) or []
-                for i in range(0, len(pairs) - 1, 2):
-                    ref = pairs[i + 1]
-                    if isinstance(ref, Ref):
-                        seen_ids.add(ref.idnum)
-                    emit(self.resolve(pairs[i]), ref)
+        for key, ref in self._name_tree(self._names_entry("/JavaScript")):
+            if isinstance(ref, Ref):
+                seen_ids.add(ref.idnum)
+            emit(key, ref)
         oa = self.root.get("/OpenAction")
         # skip /OpenAction when it aliases a name-tree entry (addJS
         # registers the same action object in both places)

@@ -19,7 +19,6 @@ layer catches everything and emits NULL main_text for poison inputs.
 from __future__ import annotations
 
 import html as _htmlmod
-import os as _os
 import re as _re
 from html.parser import HTMLParser
 from typing import List, Optional, Tuple
@@ -181,8 +180,6 @@ class _SpanParser(_MainTextParser):
 # fast path can never change a single output row; parity is pinned by
 # tests/test_html_fast.py's differential event-stream suite.
 
-_FAST_DISABLED = _os.environ.get("SPARKPDF_HTML_FAST", "1") == "0"
-
 # tag name exactly as stdlib tagfind_tolerant's leading form; attr
 # syntax is a strict SUBSET of attrfind_tolerant (leading whitespace
 # required, names can't start with quote/=, unquoted values can't
@@ -218,8 +215,6 @@ _EV_DATA, _EV_START, _EV_END, _EV_STARTEND = 0, 1, 2, 3
 def _fast_events(raw: str):
     """Tokenize `raw` into the stdlib-identical event list, or None to
     signal the caller to fall back to html.parser."""
-    if _FAST_DISABLED:
-        return None
     events = []
     add = events.append
     i = 0

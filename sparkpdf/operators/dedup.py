@@ -203,11 +203,19 @@ def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
 
     Bits are read from the hex digest nibble-wise so the DuckDB oracle
     can reproduce them without hex->int casts."""
+    agg = _simhash_votes(documents, bits)
+    return agg.select("doc_id", _pack_votes(0, bits).alias("simhash"))
+
+
+def _simhash_votes(documents: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, v0..v{bits-1}): v_b sums +1/-1 over the doc's tokens by
+    bit b of md5(token), read nibble-wise from the hex digest."""
     n_parts = documents.sparkSession.sparkContext.defaultParallelism
     toks = documents.repartition(n_parts, "doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.explode(_norm_tokens("text")).alias("tok"),
     ).withColumn("h", F.md5(F.col("tok").cast("binary")))
+
     # nibble value of hex char c: position in "0123456789abcdef" - 1
     def nibble(col, idx):
         return F.instr(F.lit("0123456789abcdef"), F.substring(col, idx + 1, 1)) - 1
@@ -220,13 +228,18 @@ def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
         ).alias(f"v{b}")
         for b in range(bits)
     ]
-    agg = toks.groupBy("doc_id").agg(*votes)
-    packed = reduce(
-        lambda acc, b: acc + F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(0),
-        range(bits),
+    return toks.groupBy("doc_id").agg(*votes)
+
+
+def _pack_votes(first: int, width: int):
+    """Sign bits of votes v{first}..v{first+width-1} packed into one
+    long, bit i = v{first+i} > 0."""
+    return reduce(
+        lambda acc, i: acc
+        + F.when(F.col(f"v{first + i}") > 0, F.lit(1 << i)).otherwise(0),
+        range(width),
         F.lit(0),
-    )
-    return agg.select("doc_id", packed.cast("long").alias("simhash"))
+    ).cast("long")
 
 
 def ngram_jaccard_pairs(
@@ -598,34 +611,11 @@ def simhash_bands(
     16-bit join key (cardinality 2^16, uniform by construction)."""
     total_bits = n_bands * band_bits
     assert total_bits <= 128  # md5 budget
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    toks = documents.repartition(n_parts, "doc_id").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(_norm_tokens("text")).alias("tok"),
-    ).withColumn("h", F.md5(F.col("tok").cast("binary")))
-
-    def nibble(col, idx):
-        return F.instr(F.lit("0123456789abcdef"), F.substring(col, idx + 1, 1)) - 1
-
-    votes = [
-        F.sum(
-            F.when(
-                F.shiftright(nibble(F.col("h"), b // 4), 3 - (b % 4)) % 2 == 1, 1
-            ).otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(total_bits)
-    ]
-    agg = toks.groupBy("doc_id").agg(*votes)
-    bands = []
-    for j in range(n_bands):
-        packed = reduce(
-            lambda acc, i: acc
-            + F.when(F.col(f"v{j * band_bits + i}") > 0, F.lit(1 << i)).otherwise(0),
-            range(band_bits),
-            F.lit(0),
-        )
-        bands.append(packed.cast("long").alias(f"band{j}"))
-    return agg.select("doc_id", *bands)
+    agg = _simhash_votes(documents, total_bits)
+    return agg.select("doc_id", *[
+        _pack_votes(j * band_bits, band_bits).alias(f"band{j}")
+        for j in range(n_bands)
+    ])
 
 
 def simhash_pairs(
@@ -856,7 +846,7 @@ def remove_duplicate_lines(documents: DataFrame, sep: str = "\n") -> DataFrame:
     shuffles on h — both the groupBy and the join back carry only
     (doc_id, pos, h), so a million-occurrence boilerplate line lands
     ~20 bytes per occurrence in its join partition instead of the
-    line itself (measured: scripts/line_shuffle_bench.py). Kept text
+    line itself (measured: bench_extra.py line_shuffle). Kept text
     is rebuilt DOC-SIDE from the original text by dropped position —
     the zip_with/slice discipline of remove_duplicate_substrings —
     and docs with no dropped occurrence skip the rebuild entirely via

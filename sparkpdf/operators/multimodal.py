@@ -68,9 +68,8 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-# every format _decode_image has a real pixel path for — the explicit
-# "decode everything" set (pixel_formats=None means "let the
-# SPARKPDF_PIXEL_STATS env knob decide", which is NOT the same thing)
+# every format _decode_image has a real pixel path for — the
+# "decode everything" set that pixel_formats=None stands for
 PIXEL_DECODABLE_FORMATS = frozenset(
     {"jpeg", "png", "gif", "tiff", "bmp", "pnm", "tga", "ico"})
 
@@ -82,11 +81,11 @@ def _decode_image(payload: bytes, pixel_formats: "set | None" = None) -> dict:
     MMR pixel decode (kernels/ccitt_g4) and report ink_ratio.
     Unrecognised payloads report no dimensions.
 
-    `pixel_formats`: None = the SPARKPDF_PIXEL_STATS env knob decides
-    globally (default on); a set = decode pixel statistics only for
-    those formats (the per-corpus decision pixel_stats_policy makes)."""
-    import os
-
+    `pixel_formats`: None = every format in PIXEL_DECODABLE_FORMATS; a
+    set = decode pixel statistics only for those formats (the
+    per-corpus decision pixel_stats_policy makes; an empty set is
+    header-only: dims/format/digest stay, mean_luma/ink_ratio are
+    skipped)."""
     from ..kernels.media import (
         gif_mean_luma,
         image_dims,
@@ -95,13 +94,7 @@ def _decode_image(payload: bytes, pixel_formats: "set | None" = None) -> dict:
     )
 
     meta = image_dims(payload) or {}
-    if pixel_formats is not None:
-        if meta.get("format") not in pixel_formats:
-            return meta
-    elif os.environ.get("SPARKPDF_PIXEL_STATS", "1") == "0":
-        # scale knob: header-only mode for image-heavy corpora where
-        # the (Python) pixel decoders would dominate executor CPU —
-        # dims/format/digest stay, mean_luma/ink_ratio are skipped
+    if pixel_formats is not None and meta.get("format") not in pixel_formats:
         return meta
     if meta.get("format") == "tiff":
         r = ink_ratio(payload)
@@ -808,7 +801,7 @@ def extract_media_features(
 ) -> DataFrame:
     """Arrow-batched feature extraction (decode -> dims/digest).
 
-    `pixel_formats`: None = global SPARKPDF_PIXEL_STATS knob; a set
+    `pixel_formats`: None = every decodable format; a set
     (usually pixel_stats_policy(...)["decode_formats"]) = decode pixel
     statistics only for those image formats, header-only otherwise."""
     decoders = dict(DECODERS)
@@ -1601,7 +1594,7 @@ def pixel_stats_policy(
     min_mb_per_sec: float = 0.2,
 ) -> dict:
     """Data-driven decode-vs-header decision (the 100 TB CPU policy):
-    instead of a blanket SPARKPDF_PIXEL_STATS knob, SAMPLE a few image
+    instead of one blanket decode-or-not switch, SAMPLE a few image
     payloads per format, MEASURE the pixel-decode throughput on them,
     project the corpus-wide core-seconds from the per-format byte
     totals (one small JVM aggregate over magic-byte sniffed formats),

@@ -74,6 +74,26 @@ def brute_force_topk(
     )
 
 
+def _plane_weight(j, d):
+    # fixed LCG, reproducible in ANSI SQL for the oracle
+    return ((1103515245 * (j * 1024 + d) + 12345) % 2001 - 1000) / 1000.0
+
+
+def _bucket_bit(g, j, dim):
+    """1 << j when `unit` lies on the non-negative side of hyperplane
+    g (weights _plane_weight(g, 0..dim-1)), else 0."""
+    proj = F.aggregate(
+        F.zip_with(
+            "unit",
+            F.array(*[F.lit(_plane_weight(g, d)) for d in range(dim)]),
+            lambda v, w: v * w,
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    return F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+
+
 def lsh_bucket_topk(
     embeddings: DataFrame, n_planes: int = 4, n_queries: int = 8, k: int = 3,
     dim: int = 64,
@@ -86,25 +106,10 @@ def lsh_bucket_topk(
     100 TB this turns the cross join into a bucket-equi-join whose fan-in
     we control with n_planes."""
     unit = with_unit_vectors(embeddings)
-
-    def plane_weight(j, d):
-        return ((1103515245 * (j * 1024 + d) + 12345) % 2001 - 1000) / 1000.0
-
-    def bucket_bit(j):
-        proj = F.aggregate(
-            F.zip_with(
-                "unit",
-                F.array(*[F.lit(plane_weight(j, d)) for d in range(dim)]),
-                lambda v, w: v * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-
     bucketed = unit.withColumn(
         "bucket",
-        sum([bucket_bit(j) for j in range(n_planes)], F.lit(0)).cast("int"),
+        sum([_bucket_bit(j, j, dim) for j in range(n_planes)],
+            F.lit(0)).cast("int"),
     )
     queries = bucketed.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -131,11 +136,6 @@ def lsh_bucket_topk(
     )
 
 
-def _plane_weight(j, d):
-    # fixed LCG, reproducible in ANSI SQL for the oracle
-    return ((1103515245 * (j * 1024 + d) + 12345) % 2001 - 1000) / 1000.0
-
-
 def banded_lsh_buckets(
     embeddings: DataFrame, n_bands: int, n_planes: int, dim: int = 64
 ) -> DataFrame:
@@ -146,22 +146,9 @@ def banded_lsh_buckets(
     MinHash-LSH: P(candidate) = 1 - (1 - p^n_planes)^n_bands with
     p = 1 - theta/pi."""
     unit = with_unit_vectors(embeddings)
-
-    def bucket_bit(g, j):
-        proj = F.aggregate(
-            F.zip_with(
-                "unit",
-                F.array(*[F.lit(_plane_weight(g, d)) for d in range(dim)]),
-                lambda v, w: v * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-
     bands = [
         sum(
-            [bucket_bit(b * n_planes + j, j) for j in range(n_planes)],
+            [_bucket_bit(b * n_planes + j, j, dim) for j in range(n_planes)],
             F.lit(0),
         ).cast("int").alias(f"bucket{b}")
         for b in range(n_bands)

@@ -934,7 +934,7 @@ def bigram_surprisal(documents: DataFrame,
     comfortably under the broadcast threshold
     (_bigram_shape_decision), 'head_tail' otherwise. Both shapes
     compute micro from the same counts, so they are hash-identical by
-    construction (asserted in scripts/token_shuffle_bench.py).
+    construction (asserted in bench_extra.py token_shuffle).
 
     Output: doc_id, surprisal (6dp), n_bigrams."""
     if shape not in ("auto", "head_tail", "occ_join"):

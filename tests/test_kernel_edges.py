@@ -431,10 +431,11 @@ def test_mp3_and_mkv_header_parse():
     assert mp3_info(b"\xff\xe0") is None and mkv_info(b"\x1a\x45") is None
 
 
-def test_pixel_stats_env_knob(monkeypatch):
-    """SPARKPDF_PIXEL_STATS=0 switches _decode_image to header-only
-    (the documented 100 TB image-heavy-corpus mode): dims survive,
-    pixel-derived stats are skipped."""
+def test_pixel_stats_header_only():
+    """pixel_formats=set() is header-only (the image-heavy-corpus mode
+    pixel_stats_policy picks when no format fits the budget): dims
+    survive, pixel-derived stats are skipped; None decodes every
+    format."""
     import numpy as np
 
     from sparkpdf.kernels.jpeg import encode_jpeg
@@ -443,8 +444,7 @@ def test_pixel_stats_env_knob(monkeypatch):
     enc = encode_jpeg(np.full((8, 8), 100, dtype=np.uint8))
     full = _decode_image(enc)
     assert full["mean_luma"] == 100.0 and full["width"] == 8
-    monkeypatch.setenv("SPARKPDF_PIXEL_STATS", "0")
-    hdr = _decode_image(enc)
+    hdr = _decode_image(enc, pixel_formats=set())
     assert "mean_luma" not in hdr and hdr["width"] == 8
 
 
