@@ -2870,7 +2870,9 @@ def flac_pcm_samples(b: bytes):
             )
             i = fend + 2
             bits_shared = r.bits  # keep a lazily-built view for later frames
-        except (ValueError, IndexError):
+        except (ValueError, IndexError, OverflowError):
+            # OverflowError: a corrupt LPC/FIXED recurrence can grow past
+            # int64, which no valid stream (samples <= 32 bits) reaches
             return None
     if not out:
         return None

@@ -347,6 +347,7 @@ def test_flac_round_trip_lossless(values, subframe, bits, porder):
 
 @given(st.integers(0, 2**31 - 1))
 @settings(max_examples=120, deadline=None)
+@example(seed=1_616_460_464)  # LPC recurrence overflowed int64
 def test_flac_corruption_fuzz(seed):
     """Random byte flips in a valid FLAC must never raise: decode
     either still succeeds or quarantines to None (the CRC-8/16
