@@ -33,6 +33,8 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 
+from .media import mean_luma
+
 # Annex K.1 quantization tables (luminance / chrominance), row-major
 QUANT_LUMA = np.array([
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -1505,17 +1507,8 @@ def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 1,
 
 
 def jpeg_mean_luma(data: bytes):
-    """Mean luminance of a decodable baseline JPEG (integer arithmetic
-    over the decoded samples, single final division, 6dp — same oracle
-    discipline as kernels/media.png_mean_luma)."""
+    """Mean luminance of a decodable JPEG: kernels/media.mean_luma over
+    the decoded samples (integer arithmetic, single final division,
+    6dp)."""
     img = decode_jpeg(data)
-    if img is None:
-        return None
-    a = img.astype(np.int64)
-    if a.ndim == 2:
-        total = int(a.sum() * 1000)
-        npx = a.shape[0] * a.shape[1]
-    else:
-        total = int((a[..., 0] * 299 + a[..., 1] * 587 + a[..., 2] * 114).sum())
-        npx = a.shape[0] * a.shape[1]
-    return round(total / (1000.0 * npx), 6)
+    return None if img is None else mean_luma(img)

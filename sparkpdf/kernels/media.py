@@ -5,8 +5,8 @@ Grew from round-1 header introspection (JPEG SOFn / PNG IHDR / GIF LSD
 
 * image pixels: PNG (all color/depth combos + Adam7), GIF (LZW +
   animation compositing), TIFF (strips/tiles/planar/JPEG-in-TIFF),
-  plus the G4 fax codec in kernels/ccitt_g4.py and the full JPEG
-  codec in kernels/jpeg.py;
+  BMP/ICO DIB rasters, PNM, TGA, plus the G4 fax codec in
+  kernels/ccitt_g4.py and the full JPEG codec in kernels/jpeg.py;
 * audio samples: WAV (PCM 8-32, float32, G.711 mu/A-law, IMA +
   Microsoft ADPCM via precomputed adaptation tables), FLAC (native
   frame decode, CRC-verified, and Ogg-encapsulated per the
@@ -14,9 +14,23 @@ Grew from round-1 header introspection (JPEG SOFn / PNG IHDR / GIF LSD
   and PCM-in-MP4 through the shared ISO-BMFF sample-table walk;
 * video frames: MJPEG demuxed from RIFF/AVI (movi chunks), ISO-BMFF
   (stsd/stsc/stco/stsz resolution) and Matroska (V_MJPEG
-  SimpleBlocks), each frame through the JPEG kernel;
+  SimpleBlocks), each frame decoded once through the JPEG kernel;
 * container metadata: WAV/MP4/MP3/MKV/FLAC/Ogg/AVI duration, rate
-  and dimension probes (av_info).
+  and dimension probes.
+
+Each media decision lives in one place:
+
+* _iter_chunks walks every RIFF (WAV, AVI) and IFF (AIFF) chunk list
+  and owns the even-offset pad advance; LIST children walk with it,
+  clipped to the parent's end;
+* _linear_pcm, _g711 and _float32_pcm decode every PCM sample format
+  (WAV, AIFF/AIFC, AU, PCM-in-MP4); _pcm_int_stats / _float_stats
+  reduce the samples;
+* mean_luma holds the integer 299/587/114 luma reduction that every
+  image and video-frame lane (and kernels/jpeg.jpeg_mean_luma) uses;
+* one dispatcher per modality: pixel_stats (format -> lane table;
+  PIXEL_DECODABLE_FORMATS is its key set), pcm_stats and
+  video_frames (magic bytes), audio_info and video_info (headers).
 
 Contract everywhere: undecodable or corrupt payloads return None —
 the operators' error-column quarantine lane — never a raise. The
@@ -28,6 +42,7 @@ closed-form corpora hash-match SQL oracles.
 
 from __future__ import annotations
 
+import struct
 from typing import Optional
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -35,6 +50,51 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # JPEG SOFn markers that carry frame dimensions: C0-CF minus DHT (C4),
 # JPG-extension (C8) and DAC (CC)
 _SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def mean_luma(px, bgr: bool = False) -> float:
+    """Mean ITU-R 601 luminance of an (h, w) gray or (h, w, c >= 3)
+    color pixel array — the one reduction every image and video-frame
+    lane shares. INTEGER arithmetic: the sum of 299R + 587G + 114B per
+    pixel (channels read B, G, R when `bgr`; alpha ignored), ONE
+    division at the end, rounded to 6 dp, so a SQL oracle restates it
+    bit-for-bit and float summation order never enters. Samples keep
+    their native depth (a 12-bit JPEG or 16-bit PNM reports its native
+    mean)."""
+    import numpy as np
+
+    a = np.asarray(px).astype(np.int64)
+    if a.ndim == 2:  # gray: the weights collapse onto the one sample
+        total = int(a.sum()) * 1000
+    else:
+        r, b = (2, 0) if bgr else (0, 2)
+        total = int((a[..., r] * 299 + a[..., 1] * 587
+                     + a[..., b] * 114).sum())
+    return round(total / (1000.0 * a.shape[1] * a.shape[0]), 6)
+
+
+def _decoded_luma(decoded):
+    """mean_luma of a (width, height, channels, pixel_bytes) decode;
+    gray(+alpha) decodes reduce their first sample. None passes
+    through (quarantine)."""
+    import numpy as np
+
+    if decoded is None:
+        return None
+    w, h, ch, pix = decoded
+    px = np.frombuffer(pix, np.uint8).reshape(h, w, ch)
+    return mean_luma(px if ch >= 3 else px[..., 0])
+
+
+def _bgra_palette(raw: bytes):
+    """256 BGRA palette quads (the DIB color table) as a (256, 4)
+    array, or None when fewer are present."""
+    import numpy as np
+
+    pal = np.frombuffer(raw, np.uint8)
+    if pal.size < 4 * 256:
+        return None
+    return pal[:4 * 256].reshape(256, 4)
 
 
 def png_dims(b: bytes) -> Optional[dict]:
@@ -172,22 +232,16 @@ def bmp_mean_luma(b: bytes):
     if data_off >= len(b):
         return None
     if fmt["compression"] == b"\x01\x00\x00\x00":  # BI_RLE8
-        import numpy as np
-
         if fmt["bits"] != 8 or fmt["height"] <= 0:
             return None  # RLE is 8-bit bottom-up only per the format
-        pal = np.frombuffer(fmt["palette"], np.uint8)
-        if pal.size < 4 * 256:
+        pal = _bgra_palette(fmt["palette"])
+        if pal is None:
             return None
         idx = _bmp_rle8_decode(
             b[data_off:], fmt["width"], fmt["height"])
         if idx is None:
             return None
-        pal = pal[:4 * 256].reshape(256, 4).astype(np.int64)
-        lut = pal[:, 2] * 299 + pal[:, 1] * 587 + pal[:, 0] * 114
-        total = int(lut[idx].sum())
-        return round(
-            total / (1000.0 * fmt["width"] * fmt["height"]), 6)
+        return mean_luma(pal[idx], bgr=True)
     if fmt["compression"] != b"\x00\x00\x00\x00":
         return None  # BI_RLE4/BI_BITFIELDS: quarantine
     st = _dib_frame_stats(b[data_off:], fmt)
@@ -275,7 +329,7 @@ def pnm_mean_luma(b: bytes):
     at maxval < 256 else 2 bytes big-endian (the PNM spec's only two
     encodings). Mean is over NATIVE sample values (a 16-bit graymap
     reports its 16-bit mean — the jpeg12 discipline) with RGB reduced
-    by the exact integer 299/587/114 luma. None = truncated raster."""
+    by mean_luma. None = truncated raster."""
     import numpy as np
 
     meta = pnm_dims(b)
@@ -291,14 +345,7 @@ def pnm_mean_luma(b: bytes):
     a = np.frombuffer(raster, np.uint8)
     if bps == 2:
         a = (a[0::2].astype(np.int64) << 8) | a[1::2]
-    else:
-        a = a.astype(np.int64)
-    if spp == 3:
-        px = a.reshape(-1, 3)
-        total = int((px[:, 0] * 299 + px[:, 1] * 587
-                     + px[:, 2] * 114).sum())
-        return round(total / (1000.0 * w * h), 6)
-    return round(int(a.sum()) / float(w * h), 6)
+    return mean_luma(a.reshape((h, w, 3) if spp == 3 else (h, w)))
 
 
 def webp_dims(b: bytes) -> Optional[dict]:
@@ -523,14 +570,12 @@ def tga_mean_luma(b: bytes):
         if len(cbytes) < hd["cm_len"] * csize:
             return None
         i += hd["cm_len"] * csize
-        cm = np.frombuffer(cbytes, np.uint8).reshape(-1, csize) \
-            .astype(np.int64)  # NEP50: uint8 * int wraps mod 256
-        lut = np.zeros(256, np.int64)
-        # map entries land at cm_first..cm_first+cm_len-1 (BGR order)
-        vals = cm[:, 2] * 299 + cm[:, 1] * 587 + cm[:, 0] * 114
+        cm = np.frombuffer(cbytes, np.uint8).reshape(-1, csize)
+        # map entries land at cm_first..cm_first+cm_len-1 (BGR(A)
+        # order); indices outside the map read black
+        cmap = np.zeros((256, csize), np.uint8)
         hi = min(hd["cm_first"] + hd["cm_len"], 256)
-        lut[hd["cm_first"]:hi] = vals[:hi - hd["cm_first"]]
-        cmap = lut
+        cmap[hd["cm_first"]:hi] = cm[:hi - hd["cm_first"]]
     if hd["img_type"] >= 9:  # RLE forms
         raster = _tga_rle_expand(b[i:], w * h, psize)
         if raster is None:
@@ -539,16 +584,10 @@ def tga_mean_luma(b: bytes):
         raster = b[i:i + w * h * psize]
         if len(raster) < w * h * psize:
             return None
-    a = np.frombuffer(raster, np.uint8)
-    if hd["img_type"] in (3, 11):
-        total = int(a.astype(np.int64).sum()) * 1000
-    elif cmap is not None:
-        total = int(cmap[a].sum())
-    else:
-        px = a.reshape(-1, psize).astype(np.int64)
-        total = int((px[:, 2] * 299 + px[:, 1] * 587
-                     + px[:, 0] * 114).sum())  # BGR(A)
-    return round(total / (1000.0 * w * h), 6)
+    px = np.frombuffer(raster, np.uint8).reshape(h, w, psize)
+    if psize == 1:  # grayscale samples or colormap indices
+        px = px[..., 0] if cmap is None else cmap[px[..., 0]]
+    return mean_luma(px, bgr=True)
 
 
 def ico_dims(b: bytes) -> Optional[dict]:
@@ -615,7 +654,9 @@ def image_dims(b: bytes) -> Optional[dict]:
     return dims
 
 
-def _tiff_tag(b: bytes, want: int) -> Optional[int]:
+def _tiff_entry(b: bytes, want: int):
+    """(byte order, type, count, entry offset) of tag `want` in the
+    first IFD, or None (absent, or the entry table runs past EOF)."""
     bo = "little" if b[:2] == b"II" else "big"
     ifd = int.from_bytes(b[4:8], bo)
     n = int.from_bytes(b[ifd:ifd + 2], bo)
@@ -623,36 +664,32 @@ def _tiff_tag(b: bytes, want: int) -> Optional[int]:
         e = ifd + 2 + 12 * k
         if e + 12 > len(b):
             return None
-        tag = int.from_bytes(b[e:e + 2], bo)
-        if tag != want:
-            continue
-        typ = int.from_bytes(b[e + 2:e + 4], bo)
-        if typ == 3:
-            return int.from_bytes(b[e + 8:e + 10], bo)
-        return int.from_bytes(b[e + 8:e + 12], bo)
+        if int.from_bytes(b[e:e + 2], bo) == want:
+            return (bo, int.from_bytes(b[e + 2:e + 4], bo),
+                    int.from_bytes(b[e + 4:e + 8], bo), e)
     return None
+
+
+def _tiff_tag(b: bytes, want: int) -> Optional[int]:
+    ent = _tiff_entry(b, want)
+    if ent is None:
+        return None
+    bo, typ, _, e = ent
+    return int.from_bytes(b[e + 8:e + (10 if typ == 3 else 12)], bo)
 
 
 def _tiff_tag_bytes(b: bytes, want: int) -> Optional[bytes]:
     """Raw payload of a BYTE/UNDEFINED IFD tag (e.g. JPEGTables 347)."""
-    bo = "little" if b[:2] == b"II" else "big"
-    ifd = int.from_bytes(b[4:8], bo)
-    n = int.from_bytes(b[ifd:ifd + 2], bo)
-    for k in range(n):
-        e = ifd + 2 + 12 * k
-        if e + 12 > len(b):
-            return None
-        if int.from_bytes(b[e:e + 2], bo) != want:
-            continue
-        typ = int.from_bytes(b[e + 2:e + 4], bo)
-        cnt = int.from_bytes(b[e + 4:e + 8], bo)
-        if typ not in (1, 7) or cnt == 0:
-            return None
-        base = e + 8 if cnt <= 4 else int.from_bytes(b[e + 8:e + 12], bo)
-        if base + cnt > len(b):
-            return None
-        return b[base:base + cnt]
-    return None
+    ent = _tiff_entry(b, want)
+    if ent is None:
+        return None
+    bo, typ, cnt, e = ent
+    if typ not in (1, 7) or cnt == 0:
+        return None
+    base = e + 8 if cnt <= 4 else int.from_bytes(b[e + 8:e + 12], bo)
+    if base + cnt > len(b):
+        return None
+    return b[base:base + cnt]
 
 
 def _tiff_jpeg_block(b: bytes, raw: bytes):
@@ -702,32 +739,23 @@ def tiff_g4_pixels(b: bytes):
 def _tiff_tag_array(b: bytes, want: int):
     """All values of a SHORT/LONG IFD tag (inline when they fit in the
     4-byte value field, else at the pointed-to offset)."""
-    bo = "little" if b[:2] == b"II" else "big"
-    ifd = int.from_bytes(b[4:8], bo)
-    n = int.from_bytes(b[ifd:ifd + 2], bo)
-    for k in range(n):
-        e = ifd + 2 + 12 * k
-        if e + 12 > len(b):
-            return None
-        tag = int.from_bytes(b[e:e + 2], bo)
-        if tag != want:
-            continue
-        typ = int.from_bytes(b[e + 2:e + 4], bo)
-        cnt = int.from_bytes(b[e + 4:e + 8], bo)
-        size = 2 if typ == 3 else 4
-        if typ not in (3, 4) or cnt == 0:
-            return None
-        if cnt * size <= 4:
-            base = e + 8
-        else:
-            base = int.from_bytes(b[e + 8:e + 12], bo)
-        if base + cnt * size > len(b):
-            return None
-        return [
-            int.from_bytes(b[base + i * size:base + (i + 1) * size], bo)
-            for i in range(cnt)
-        ]
-    return None
+    ent = _tiff_entry(b, want)
+    if ent is None:
+        return None
+    bo, typ, cnt, e = ent
+    size = 2 if typ == 3 else 4
+    if typ not in (3, 4) or cnt == 0:
+        return None
+    if cnt * size <= 4:
+        base = e + 8
+    else:
+        base = int.from_bytes(b[e + 8:e + 12], bo)
+    if base + cnt * size > len(b):
+        return None
+    return [
+        int.from_bytes(b[base + i * size:base + (i + 1) * size], bo)
+        for i in range(cnt)
+    ]
 
 
 def _packbits_decode(data: bytes, expect: int) -> bytes:
@@ -1107,20 +1135,7 @@ def _tiff_decode_tiled(b, w, h, spp, depth, photometric, predictor,
 def tiff_mean_luma(b: bytes):
     """Mean ITU-R 601 luminance of a baseline TIFF (same integer
     discipline as png_mean_luma)."""
-    import numpy as _np
-
-    decoded = tiff_pixels(b)
-    if decoded is None:
-        return None
-    w, h, ch, pix = decoded
-    arr = _np.frombuffer(pix, _np.uint8).reshape(h, w, ch).astype(_np.int64)
-    if ch >= 3:
-        total = int(
-            (arr[..., 0] * 299 + arr[..., 1] * 587 + arr[..., 2] * 114).sum()
-        )
-    else:
-        total = int(arr[..., 0].sum() * 1000)
-    return round(total / (1000.0 * w * h), 6)
+    return _decoded_luma(tiff_pixels(b))
 
 
 def ink_ratio(b: bytes) -> Optional[float]:
@@ -1140,40 +1155,55 @@ def ink_ratio(b: bytes) -> Optional[float]:
 # boxes) — no codec library needed; SAMPLE decode stays out of scope.
 
 
-def wav_info(b: bytes) -> Optional[dict]:
-    """WAV (RIFF): walk the chunk list for fmt (channels, sample rate,
-    bits) and data (payload size -> duration). Chunk sizes pad to even
-    offsets per the RIFF spec."""
+def _iter_chunks(b: bytes, start: int, end: int, order: str):
+    """Walk a RIFF ('little') or IFF ('big') chunk list in b[start:end]:
+    yield (fourcc, body_start, declared_body_end) for every chunk whose
+    8-byte header fits. Bodies pad to even offsets per both specs. The
+    declared end may run past `end` or the buffer; each caller decides
+    whether that clips (slicing) or quarantines (a torn movi chunk)."""
+    i = start
+    while i + 8 <= end:
+        size = int.from_bytes(b[i + 4:i + 8], order)
+        yield b[i:i + 4], i + 8, i + 8 + size
+        i += 8 + size + (size & 1)
+
+
+def _wav_parse(b: bytes):
+    """The one WAV fmt/data parse shared by wav_info and _wav_samples:
+    (fmt, data) where fmt = (format code, channels, sample rate, byte
+    rate, block align, bits) of the last well-formed fmt chunk and data
+    = (body_start, declared_body_end) of the last data chunk, either
+    None when absent. None when b is not RIFF/WAVE."""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         return None
-    channels = rate = bits = None
-    data_size = None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i:i + 4]
-        size = int.from_bytes(b[i + 4:i + 8], "little")
-        if cid == b"fmt " and size >= 16 and i + 24 <= len(b):
-            # size >= 16 guards against a truncated fmt chunk whose
-            # "body" would otherwise be the NEXT chunk's header bytes
-            # read as format code / bits — garbage decoded as PCM
-            channels = int.from_bytes(b[i + 10:i + 12], "little")
-            rate = int.from_bytes(b[i + 12:i + 16], "little")
-            bits = int.from_bytes(b[i + 22:i + 24], "little")
+    fmt = data = None
+    for cid, s, e in _iter_chunks(b, 12, len(b), "little"):
+        if cid == b"fmt " and e - s >= 16 and s + 16 <= len(b):
+            # a short fmt chunk (size < 16) is ignored, not read with
+            # the NEXT chunk's header bytes as its format code / bits
+            fmt = struct.unpack_from("<HHIIHH", b, s)
         elif cid == b"data":
-            data_size = size
-        i += 8 + size + (size & 1)
-    if rate is None:
+            data = (s, e)
+    return fmt, data
+
+
+def wav_info(b: bytes) -> Optional[dict]:
+    """WAV (RIFF): fmt chunk (channels, sample rate, bits) and data
+    chunk size (-> duration)."""
+    fmt, data = _wav_parse(b) or (None, None)
+    if fmt is None:
         return None
+    _, channels, rate, _, _, bits = fmt
     out = {
         "format": "wav",
         "sample_rate": rate,
         "channels": channels,
         "bits": bits,
     }
-    if data_size is not None and rate and channels and bits:
+    if data is not None and rate and channels and bits:
         bytes_per_sec = rate * channels * (bits // 8)
         if bytes_per_sec:
-            out["duration_ms"] = data_size * 1000 // bytes_per_sec
+            out["duration_ms"] = (data[1] - data[0]) * 1000 // bytes_per_sec
     return out
 
 
@@ -1200,6 +1230,56 @@ def _alaw_to_linear(a: int) -> int:
     else:
         x = ((mant << 4) + 0x108) << (exp - 1)
     return x if sign else -x
+
+
+def _g711(data: bytes, alaw: bool):
+    """G.711 bytes -> (int64 samples, full scale): A-law when `alaw`,
+    else mu-law, through the one 256-entry table built from the
+    closed-form expansions above."""
+    import numpy as np
+
+    expand = _alaw_to_linear if alaw else _ulaw_to_linear
+    lut = np.array([expand(v) for v in range(256)], dtype=np.int64)
+    return lut[np.frombuffer(data, dtype=np.uint8)], 32768.0
+
+
+def _linear_pcm(data: bytes, bits: int, order: str, offset8: bool = False):
+    """Linear PCM bytes -> (int64 samples, full scale 2^(bits-1)), or
+    None for depths other than 8/16/24/32. `order` is '<' (little-
+    endian) or '>' (big-endian); a trailing partial sample is dropped.
+    Samples are signed except 8-bit with `offset8` (offset-binary, as
+    WAV and QuickTime 'raw ' store it)."""
+    import numpy as np
+
+    if bits not in (8, 16, 24, 32):
+        return None
+    width = bits // 8
+    data = data[:len(data) - len(data) % width]
+    if bits == 24:  # no numpy dtype: assemble big-endian, sign-extend
+        a = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
+        a = a.astype(np.int64)
+        if order == "<":
+            a = a[:, ::-1]
+        x = (a[:, 0] << 16) | (a[:, 1] << 8) | a[:, 2]
+        x = np.where(x >= 1 << 23, x - (1 << 24), x)
+    elif bits == 8 and offset8:
+        x = np.frombuffer(data, dtype=np.uint8).astype(np.int64) - 128
+    else:
+        x = np.frombuffer(data, dtype=f"{order}i{width}").astype(np.int64)
+    return x, float(1 << (bits - 1))
+
+
+def _float32_pcm(data: bytes, order: str):
+    """IEEE float32 bytes -> float64 samples, or None when there are
+    none or any is NaN/Inf (those would flow straight through np.mean
+    into the feature row — quarantine instead)."""
+    import numpy as np
+
+    xf = np.frombuffer(data[:len(data) - len(data) % 4],
+                       dtype=f"{order}f4").astype(np.float64)
+    if not xf.size or not np.isfinite(xf).all():
+        return None
+    return xf
 
 
 # --- ADPCM (public specs: IMA/DVI ADPCM per the IMA Digital Audio ---
@@ -1427,76 +1507,34 @@ def _wav_samples(b: bytes):
     codecs — the quarantine lane). Shared by wav_pcm_stats and the
     per-segment features; integer samples accumulate exactly
     downstream so closed-form corpora hash-match an SQL oracle."""
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return None
     import numpy as np
 
-    audio_fmt = channels = rate = bits = block_align = None
-    data = None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i:i + 4]
-        size = int.from_bytes(b[i + 4:i + 8], "little")
-        if cid == b"fmt " and size >= 16 and i + 24 <= len(b):
-            # short fmt chunk (size < 16) = unsupported, not "read the
-            # next chunk's header as the format body" (quarantine)
-            audio_fmt = int.from_bytes(b[i + 8:i + 10], "little")
-            channels = int.from_bytes(b[i + 10:i + 12], "little")
-            rate = int.from_bytes(b[i + 12:i + 16], "little")
-            block_align = int.from_bytes(b[i + 20:i + 22], "little")
-            bits = int.from_bytes(b[i + 22:i + 24], "little")
-        elif cid == b"data":
-            data = b[i + 8:i + 8 + size]
-        i += 8 + size + (size & 1)
-    if audio_fmt is None or data is None or not bits:
+    fmt, data = _wav_parse(b) or (None, None)
+    if fmt is None or data is None:
         return None
+    audio_fmt, channels, _, _, block_align, bits = fmt
+    if not bits:
+        return None
+    data = b[data[0]:data[1]]
     if audio_fmt in (2, 17) and bits == 4:
         # compressed lanes: decode to int16 via the spec state machines
         dec = (_ms_adpcm_decode if audio_fmt == 2 else _ima_adpcm_decode)(
-            data, channels or 0, block_align or 0)
+            data, channels, block_align)
         if not dec:
             return None
-        x = np.array(dec, dtype=np.int64)
-        full = 32768.0
-    elif audio_fmt == 1 and bits == 8:
-        x = np.frombuffer(data, dtype=np.uint8).astype(np.int64) - 128
-        full = 128.0
-    elif audio_fmt == 1 and bits == 16:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 2)], dtype="<i2"
-        ).astype(np.int64)
-        full = 32768.0
-    elif audio_fmt == 1 and bits == 24:
-        raw = data[: len(data) - (len(data) % 3)]
-        a = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        x = a[:, 0] | (a[:, 1] << 8) | (a[:, 2] << 16)
-        x = np.where(x >= 1 << 23, x - (1 << 24), x)
-        full = float(1 << 23)
-    elif audio_fmt == 1 and bits == 32:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 4)], dtype="<i4"
-        ).astype(np.int64)
-        full = float(1 << 31)
+        r = np.array(dec, dtype=np.int64), 32768.0
+    elif audio_fmt == 1:
+        r = _linear_pcm(data, bits, "<", offset8=True)
     elif audio_fmt == 3 and bits == 32:
-        xf = np.frombuffer(
-            data[: len(data) - (len(data) % 4)], dtype="<f4"
-        ).astype(np.float64)
-        n = int(xf.size)
-        if not n or not np.isfinite(xf).all():
-            # NaN/Inf payload floats would flow straight through
-            # np.mean into the feature row — quarantine instead
-            return None
-        return xf, None
+        xf = _float32_pcm(data, "<")
+        return None if xf is None else (xf, None)
     elif audio_fmt in (6, 7) and bits == 8:
-        table = _alaw_to_linear if audio_fmt == 6 else _ulaw_to_linear
-        lut = np.array([table(v) for v in range(256)], dtype=np.int64)
-        x = lut[np.frombuffer(data, dtype=np.uint8)]
-        full = 32768.0
+        r = _g711(data, alaw=audio_fmt == 6)
     else:
         return None
-    if not int(x.size):
+    if r is None or not int(r[0].size):
         return None
-    return x, full
+    return r
 
 
 def _float_stats(xf) -> dict:
@@ -1521,9 +1559,7 @@ def wav_pcm_stats(b: bytes) -> Optional[dict]:
     if r is None:
         return None
     x, full = r
-    if full is None:
-        return _float_stats(x)
-    return _pcm_int_stats(x, full)
+    return _float_stats(x) if full is None else _pcm_int_stats(x, full)
 
 
 def wav_pcm_segment_stats(b: bytes, segment: int):
@@ -1607,64 +1643,31 @@ def aiff_pcm_stats(b: bytes) -> Optional[dict]:
     if len(b) < 12 or b[:4] != b"FORM" or b[8:12] not in (b"AIFF",
                                                           b"AIFC"):
         return None
-    import numpy as np
-
     is_aifc = b[8:12] == b"AIFC"
-    bits = rate = None
+    bits = rate = data = None
     comp = b"NONE"
-    data = None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i:i + 4]
-        size = int.from_bytes(b[i + 4:i + 8], "big")
-        if cid == b"COMM" and size >= 18 and i + 26 <= len(b):
-            bits = int.from_bytes(b[i + 14:i + 16], "big")
-            rate = _ieee_extended(b[i + 16:i + 26])
+    for cid, s, e in _iter_chunks(b, 12, len(b), "big"):
+        if cid == b"COMM" and e - s >= 18 and s + 18 <= len(b):
+            bits = int.from_bytes(b[s + 6:s + 8], "big")
+            rate = _ieee_extended(b[s + 8:s + 18])
             if is_aifc:
-                if size < 22 or i + 30 > len(b):
+                if e - s < 22 or s + 22 > len(b):
                     return None  # AIFC COMM must carry the fourcc
-                comp = b[i + 26:i + 30]
-        elif cid == b"SSND" and size >= 8:
-            off = int.from_bytes(b[i + 8:i + 12], "big")
-            data = b[i + 16 + off:i + 8 + size]
-        i += 8 + size + (size & 1)  # IFF chunks pad to even offsets
+                comp = b[s + 18:s + 22]
+        elif cid == b"SSND" and e - s >= 8:
+            off = int.from_bytes(b[s:s + 4], "big")
+            data = b[s + 8 + off:e]
     if bits is None or data is None or rate is None:
         return None
     if comp in (b"ulaw", b"ULAW", b"alaw", b"ALAW"):
-        table = (_ulaw_to_linear if comp.lower() == b"ulaw"
-                 else _alaw_to_linear)
-        lut = np.array([table(v) for v in range(256)], dtype=np.int64)
-        x = lut[np.frombuffer(data, dtype=np.uint8)]
-        return _pcm_int_stats(x, 32768.0)
-    if comp == b"sowt" and bits == 16:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 2)], dtype="<i2"
-        ).astype(np.int64)
-        return _pcm_int_stats(x, 32768.0)
-    if comp not in (b"NONE", b"twos"):
-        return None  # compressed AIFC outside the decoded subset
-    if bits == 8:
-        x = np.frombuffer(data, dtype=np.int8).astype(np.int64)
-        full = 128.0
-    elif bits == 16:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 2)], dtype=">i2"
-        ).astype(np.int64)
-        full = 32768.0
-    elif bits == 24:
-        raw = data[: len(data) - (len(data) % 3)]
-        a = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        x = (a[:, 0] << 16) | (a[:, 1] << 8) | a[:, 2]
-        x = np.where(x >= 1 << 23, x - (1 << 24), x)
-        full = float(1 << 23)
-    elif bits == 32:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 4)], dtype=">i4"
-        ).astype(np.int64)
-        full = float(1 << 31)
+        r = _g711(data, alaw=comp.lower() == b"alaw")
+    elif comp == b"sowt" and bits == 16:
+        r = _linear_pcm(data, 16, "<")
+    elif comp in (b"NONE", b"twos"):
+        r = _linear_pcm(data, bits, ">")
     else:
-        return None
-    return _pcm_int_stats(x, full)
+        return None  # compressed AIFC outside the decoded subset
+    return None if r is None else _pcm_int_stats(*r)
 
 
 def au_pcm_stats(b: bytes) -> Optional[dict]:
@@ -1676,8 +1679,6 @@ def au_pcm_stats(b: bytes) -> Optional[dict]:
     ADPCM variants...) quarantines (None)."""
     if len(b) < 24 or b[:4] != b".snd":
         return None
-    import numpy as np
-
     off = int.from_bytes(b[4:8], "big")
     size = int.from_bytes(b[8:12], "big")
     enc = int.from_bytes(b[12:16], "big")
@@ -1686,45 +1687,13 @@ def au_pcm_stats(b: bytes) -> Optional[dict]:
     end = len(b) if size == 0xFFFFFFFF else min(len(b), off + size)
     data = b[off:end]
     if enc in (1, 27):
-        table = _ulaw_to_linear if enc == 1 else _alaw_to_linear
-        lut = np.array([table(v) for v in range(256)], dtype=np.int64)
-        x = lut[np.frombuffer(data, dtype=np.uint8)]
-        full = 32768.0
-    elif enc == 2:
-        x = np.frombuffer(data, dtype=np.int8).astype(np.int64)
-        full = 128.0
-    elif enc == 3:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 2)], dtype=">i2"
-        ).astype(np.int64)
-        full = 32768.0
-    elif enc == 4:
-        raw = data[: len(data) - (len(data) % 3)]
-        a = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        x = (a[:, 0] << 16) | (a[:, 1] << 8) | a[:, 2]
-        x = np.where(x >= 1 << 23, x - (1 << 24), x)
-        full = float(1 << 23)
-    elif enc == 5:
-        x = np.frombuffer(
-            data[: len(data) - (len(data) % 4)], dtype=">i4"
-        ).astype(np.int64)
-        full = float(1 << 31)
-    elif enc == 6:
-        xf = np.frombuffer(
-            data[: len(data) - (len(data) % 4)], dtype=">f4"
-        ).astype(np.float64)
-        n = int(xf.size)
-        if not n or not np.isfinite(xf).all():
-            return None
-        return {
-            "n_samples": n,
-            "rms": round(float(np.sqrt(np.mean(xf * xf))), 6),
-            "peak": round(float(np.max(np.abs(xf))), 6),
-            "mean": round(float(np.mean(xf)), 6),
-        }
-    else:
-        return None
-    return _pcm_int_stats(x, full)
+        return _pcm_int_stats(*_g711(data, alaw=enc == 27))
+    if enc in (2, 3, 4, 5):
+        return _pcm_int_stats(*_linear_pcm(data, 8 * (enc - 1), ">"))
+    if enc == 6:
+        xf = _float32_pcm(data, ">")
+        return None if xf is None else _float_stats(xf)
+    return None
 
 
 def _iter_boxes(b: bytes, start: int, end: int):
@@ -2111,17 +2080,7 @@ def _gif_decode_first(b: bytes):
 def gif_mean_luma(b: bytes):
     """Mean ITU-R 601 luminance of a GIF's first frame (same integer
     discipline as png_mean_luma: one division, 6dp)."""
-    import numpy as _np
-
-    decoded = gif_pixels(b)
-    if decoded is None:
-        return None
-    w, h, _ch, pix = decoded
-    arr = _np.frombuffer(pix, _np.uint8).reshape(h, w, 3).astype(_np.int64)
-    total = int(
-        (arr[..., 0] * 299 + arr[..., 1] * 587 + arr[..., 2] * 114).sum()
-    )
-    return round(total / (1000.0 * w * h), 6)
+    return _decoded_luma(gif_pixels(b))
 
 
 # --- MP3 (MPEG-1/2 audio layer III frame headers, public ISO 11172-3) --------
@@ -2293,8 +2252,6 @@ def mkv_mjpeg_frames(b: bytes):
     frames quarantine (None)."""
     if b[:4] != b"\x1a\x45\xdf\xa3":
         return None
-    from .jpeg import decode_jpeg, jpeg_mean_luma
-
     for eid, s, e in _ebml_walk(b, 0, len(b)):
         if eid != 0x18538067:  # Segment
             continue
@@ -2330,17 +2287,10 @@ def mkv_mjpeg_frames(b: bytes):
             flags = b[j + 2]
             if flags & 0x06:
                 return False  # lacing outside the decoded subset
-            payload = b[j + 3:body_e]
-            img = decode_jpeg(payload)
-            luma = jpeg_mean_luma(payload)
-            if img is None or luma is None:
+            frame = _jpeg_frame(b[j + 3:body_e])
+            if frame is None:
                 return False
-            frames.append({
-                "frame_idx": len(frames),
-                "width": int(img.shape[1]),
-                "height": int(img.shape[0]),
-                "mean_luma": luma,
-            })
+            frames.append(frame)
             return True
 
         for e2, s2, e2e in _ebml_walk(b, s, e):
@@ -2354,7 +2304,7 @@ def mkv_mjpeg_frames(b: bytes):
                     for e4, s4, e4e in _ebml_walk(b, s3, e3e):
                         if e4 == 0xA1 and not _block(s4, e4e):
                             return None
-        return frames or None
+        return _frame_rows(frames)
     return None
 
 
@@ -2887,30 +2837,11 @@ def flac_pcm_stats(b: bytes) -> Optional[dict]:
     wav_pcm_stats: {n_samples, rms, peak, mean} normalized to full
     scale (2^(bits-1)) and rounded to 6 dp, exact int64 accumulation.
     None = quarantine (not FLAC / unsupported subset / CRC fail)."""
-    import math
-
-    import numpy as np
-
     decoded = flac_pcm_samples(b)
     if decoded is None:
         return None
     x, bits, _, _ = decoded
-    full = float(1 << (bits - 1))
-    n = int(x.size)
-    if not n:
-        return None
-    if n * (full * full) < float(1 << 62):
-        s = int(np.sum(x))
-        ss = int(np.sum(x * x))
-    else:
-        s = sum(int(v) for v in x)
-        ss = sum(int(v) * int(v) for v in x)
-    return {
-        "n_samples": n,
-        "rms": round(math.sqrt(ss / n) / full, 6),
-        "peak": round(int(np.max(np.abs(x))) / full, 6),
-        "mean": round(s / n / full, 6),
-    }
+    return _pcm_int_stats(x, float(1 << (bits - 1)))
 
 
 # --- Ogg (RFC 3533 pages; Vorbis I / Opus (RFC 7845) ident headers) ----------
@@ -3083,35 +3014,37 @@ def ogg_info(b: bytes) -> Optional[dict]:
 # --- AVI (RIFF 'AVI ' + hdrl/avih main header) -------------------------------
 
 
+def _riff_lists(b: bytes, start: int, end: int, kind: bytes):
+    """Yield (children_start, end) for every LIST `kind` chunk in
+    b[start:end], its end clipped to the parent's."""
+    for cid, s, e in _iter_chunks(b, start, end, "little"):
+        if cid == b"LIST" and b[s:s + 4] == kind:
+            yield s + 4, min(e, end)
+
+
+def _is_avi(b: bytes) -> bool:
+    return len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI "
+
+
 def avi_info(b: bytes) -> Optional[dict]:
     """AVI: RIFF form 'AVI ', LIST hdrl -> avih (MicroSecPerFrame,
     TotalFrames, Width, Height)."""
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+    if not _is_avi(b):
         return None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i:i + 4]
-        size = int.from_bytes(b[i + 4:i + 8], "little")
-        if cid == b"LIST" and b[i + 8:i + 12] == b"hdrl":
-            j = i + 12
-            end = min(i + 8 + size, len(b))
-            while j + 8 <= end:
-                c2 = b[j:j + 4]
-                s2 = int.from_bytes(b[j + 4:j + 8], "little")
-                if c2 == b"avih" and j + 8 + 40 <= end:
-                    a = b[j + 8:j + 48]
-                    usec = int.from_bytes(a[0:4], "little")
-                    frames = int.from_bytes(a[16:20], "little")
-                    out = {
-                        "format": "avi",
-                        "width": int.from_bytes(a[32:36], "little"),
-                        "height": int.from_bytes(a[36:40], "little"),
-                    }
-                    if usec and frames:
-                        out["duration_ms"] = frames * usec // 1000
-                    return out
-                j += 8 + s2 + (s2 & 1)
-        i += 8 + size + (size & 1)
+    for start, end in _riff_lists(b, 12, len(b), b"hdrl"):
+        for cid, s, _ in _iter_chunks(b, start, end, "little"):
+            if cid == b"avih" and s + 40 <= end:
+                a = b[s:s + 40]
+                usec = int.from_bytes(a[0:4], "little")
+                frames = int.from_bytes(a[16:20], "little")
+                out = {
+                    "format": "avi",
+                    "width": int.from_bytes(a[32:36], "little"),
+                    "height": int.from_bytes(a[36:40], "little"),
+                }
+                if usec and frames:
+                    out["duration_ms"] = frames * usec // 1000
+                return out
     return None
 
 
@@ -3120,55 +3053,35 @@ def _avi_video_format(b: bytes):
     strl -> strh/strf): {width, height (signed — negative = top-down),
     bits, compression, palette (BGRA quads as bytes, or b"")}. None
     when no video strl is present (header-only fixtures)."""
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+    if not _is_avi(b):
         return None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i:i + 4]
-        size = int.from_bytes(b[i + 4:i + 8], "little")
-        if cid == b"LIST" and b[i + 8:i + 12] == b"hdrl":
-            j = i + 12
-            end = min(i + 8 + size, len(b))
-            while j + 8 <= end:
-                c2 = b[j:j + 4]
-                s2 = int.from_bytes(b[j + 4:j + 8], "little")
-                if c2 == b"LIST" and b[j + 8:j + 12] == b"strl":
-                    k = j + 12
-                    e2 = min(j + 8 + s2, end)
-                    is_vids = False
-                    while k + 8 <= e2:
-                        c3 = b[k:k + 4]
-                        s3 = int.from_bytes(b[k + 4:k + 8], "little")
-                        body = b[k + 8:k + 8 + s3]
-                        if c3 == b"strh" and len(body) >= 4:
-                            is_vids = body[:4] == b"vids"
-                        elif c3 == b"strf" and is_vids \
-                                and len(body) >= 40:
-                            return {
-                                "width": int.from_bytes(
-                                    body[4:8], "little"),
-                                "height": int.from_bytes(
-                                    body[8:12], "little",
-                                    signed=True),
-                                "bits": int.from_bytes(
-                                    body[14:16], "little"),
-                                "compression": body[16:20],
-                                "palette": bytes(body[40:]),
-                            }
-                        k += 8 + s3 + (s3 & 1)
-                j += 8 + s2 + (s2 & 1)
-            return None
-        i += 8 + size + (size & 1)
+    hdrl = next(_riff_lists(b, 12, len(b), b"hdrl"), None)
+    if hdrl is None:
+        return None
+    for start, end in _riff_lists(b, *hdrl, b"strl"):
+        is_vids = False
+        for cid, s, e in _iter_chunks(b, start, end, "little"):
+            body = b[s:e]
+            if cid == b"strh" and len(body) >= 4:
+                is_vids = body[:4] == b"vids"
+            elif cid == b"strf" and is_vids and len(body) >= 40:
+                return {
+                    "width": int.from_bytes(body[4:8], "little"),
+                    "height": int.from_bytes(body[8:12], "little",
+                                             signed=True),
+                    "bits": int.from_bytes(body[14:16], "little"),
+                    "compression": body[16:20],
+                    "palette": bytes(body[40:]),
+                }
     return None
 
 
 def _dib_frame_stats(payload: bytes, fmt: dict):
     """Decode one uncompressed BI_RGB DIB frame (AVI '00db' chunk):
-    24-bit BGR or 8-bit palettized rows, padded to 4 bytes, bottom-up
-    for positive biHeight (top-down when negative). Returns
-    (width, height, mean_luma) with the integer-accumulation /
-    single-final-division / 6-dp luma discipline (299/587/114), or
-    None for torn/unsupported frames."""
+    24-bit BGR or 8-bit palettized rows, padded to 4 bytes (row order
+    — bottom-up for positive biHeight, top-down when negative — does
+    not move the mean). Returns (width, height, mean_luma), or None
+    for torn/unsupported frames."""
     import numpy as np
 
     w = fmt["width"]
@@ -3181,22 +3094,33 @@ def _dib_frame_stats(payload: bytes, fmt: dict):
         return None
     rows = np.frombuffer(
         payload[:rowbytes * h], np.uint8).reshape(h, rowbytes)
-    if fmt["height"] > 0:
-        rows = rows[::-1]  # bottom-up storage
     if bits == 24:
-        px = rows[:, :w * 3].reshape(h, w, 3).astype(np.int64)
-        total = int(
-            (px[..., 2] * 299 + px[..., 1] * 587
-             + px[..., 0] * 114).sum())  # BGR order
+        px = rows[:, :w * 3].reshape(h, w, 3)
     else:
-        pal = np.frombuffer(fmt["palette"], np.uint8)
-        if pal.size < 4 * 256:
+        pal = _bgra_palette(fmt["palette"])
+        if pal is None:
             return None
-        pal = pal[:4 * 256].reshape(256, 4).astype(np.int64)
-        # palette quads are BGRA
-        lut = pal[:, 2] * 299 + pal[:, 1] * 587 + pal[:, 0] * 114
-        total = int(lut[rows[:, :w]].sum())
-    return w, h, round(total / (1000.0 * w * h), 6)
+        px = pal[rows[:, :w]]
+    return w, h, mean_luma(px, bgr=True)
+
+
+def _jpeg_frame(payload: bytes):
+    """Decode one MJPEG frame ONCE -> (width, height, mean_luma), or
+    None when the JPEG kernel cannot decode it."""
+    from .jpeg import decode_jpeg
+
+    img = decode_jpeg(payload)
+    if img is None:
+        return None
+    return int(img.shape[1]), int(img.shape[0]), mean_luma(img)
+
+
+def _frame_rows(frames):
+    """[(width, height, mean_luma)] -> the per-frame contract shared by
+    the AVI/MP4/MKV lanes: [{frame_idx, width, height, mean_luma}], or
+    None when there are no frames."""
+    return [{"frame_idx": i, "width": w, "height": h, "mean_luma": luma}
+            for i, (w, h, luma) in enumerate(frames)] or None
 
 
 def avi_mjpeg_frames(b: bytes):
@@ -3211,54 +3135,31 @@ def avi_mjpeg_frames(b: bytes):
     gray value). Any undecodable frame quarantines the whole payload
     (None) — a torn stream should land in the error column, not emit
     a partial frame list that looks complete."""
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+    if not _is_avi(b):
         return None
-    from .jpeg import decode_jpeg, jpeg_mean_luma
-
-    movi = None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i:i + 4]
-        size = int.from_bytes(b[i + 4:i + 8], "little")
-        if cid == b"LIST" and b[i + 8:i + 12] == b"movi":
-            movi = (i + 12, min(i + 8 + size, len(b)))
-            break
-        i += 8 + size + (size & 1)
+    movi = next(_riff_lists(b, 12, len(b), b"movi"), None)
     if movi is None:
         return None
     fmt = None  # parsed lazily, only when a non-JPEG chunk appears
-    j, end = movi
     frames = []
-    while j + 8 <= end:
-        cid = b[j:j + 4]
-        size = int.from_bytes(b[j + 4:j + 8], "little")
-        if j + 8 + size > end:
+    for cid, s, e in _iter_chunks(b, *movi, "little"):
+        if e > movi[1]:
             return None  # torn chunk
-        if cid[2:4] in (b"dc", b"db"):
-            payload = b[j + 8:j + 8 + size]
-            if payload[:2] == b"\xff\xd8":
-                img = decode_jpeg(payload)
-                luma = jpeg_mean_luma(payload)
-                if img is None or luma is None:
-                    return None
-                fw, fh = int(img.shape[1]), int(img.shape[0])
-            else:  # uncompressed DIB lane (BI_RGB)
-                if fmt is None:
-                    fmt = _avi_video_format(b)
-                if not fmt or fmt["compression"] != b"\x00\x00\x00\x00":
-                    return None
-                st = _dib_frame_stats(payload, fmt)
-                if st is None:
-                    return None
-                fw, fh, luma = st
-            frames.append({
-                "frame_idx": len(frames),
-                "width": fw,
-                "height": fh,
-                "mean_luma": luma,
-            })
-        j += 8 + size + (size & 1)
-    return frames or None
+        if cid[2:4] not in (b"dc", b"db"):
+            continue
+        payload = b[s:e]
+        if payload[:2] == b"\xff\xd8":
+            frame = _jpeg_frame(payload)
+        else:  # uncompressed DIB lane (BI_RGB)
+            if fmt is None:
+                fmt = _avi_video_format(b)
+            if not fmt or fmt["compression"] != b"\x00\x00\x00\x00":
+                return None
+            frame = _dib_frame_stats(payload, fmt)
+        if frame is None:
+            return None
+        frames.append(frame)
+    return _frame_rows(frames)
 
 
 def _mp4_sample_tables(b: bytes):
@@ -3358,26 +3259,24 @@ def mp4_mjpeg_frames(b: bytes):
     the JPEG kernel. Emits the same per-frame contract as
     avi_mjpeg_frames; a torn sample table or undecodable sample
     quarantines the payload (None)."""
-    from .jpeg import decode_jpeg, jpeg_mean_luma
-
     for fourcc, _entry, locs in _mp4_sample_tables(b) or ():
         if fourcc not in (b"jpeg", b"mjpa", b"mjpb"):
             continue
         frames = []
         for pos, size in locs:
-            payload = b[pos:pos + size]
-            img = decode_jpeg(payload)
-            luma = jpeg_mean_luma(payload)
-            if img is None or luma is None:
+            frame = _jpeg_frame(b[pos:pos + size])
+            if frame is None:
                 return None
-            frames.append({
-                "frame_idx": len(frames),
-                "width": int(img.shape[1]),
-                "height": int(img.shape[0]),
-                "mean_luma": luma,
-            })
-        return frames or None
+            frames.append(frame)
+        return _frame_rows(frames)
     return None
+
+
+# QuickTime/ISO uncompressed audio sample entries -> (bits, byte order)
+_MP4_PCM_ENTRIES = {
+    b"sowt": (16, "<"), b"twos": (16, ">"), b"in24": (24, ">"),
+    b"raw ": (8, "<"),  # 8-bit offset-binary
+}
 
 
 def mp4_pcm_stats(b: bytes) -> Optional[dict]:
@@ -3388,41 +3287,13 @@ def mp4_pcm_stats(b: bytes) -> Optional[dict]:
     bytes concatenate into one PCM stream and the stats use the
     exact-int accumulation shared with the WAV/AIFF lanes.
     Compressed audio codecs (mp4a/AAC...) quarantine (None)."""
-    import numpy as np
-
-    decode = {
-        b"sowt": ("<i2", 2, 32768.0),
-        b"twos": (">i2", 2, 32768.0),
-        b"raw ": (None, 1, 128.0),
-        b"in24": (None, 3, float(1 << 23)),
-    }
     for fourcc, _entry, locs in _mp4_sample_tables(b) or ():
-        if fourcc not in decode:
+        if fourcc not in _MP4_PCM_ENTRIES:
             continue
         data = b"".join(b[pos:pos + size] for pos, size in locs)
-        dtype, width, full = decode[fourcc]
-        data = data[: len(data) - (len(data) % width)]
-        if fourcc == b"raw ":
-            x = np.frombuffer(data, dtype=np.uint8).astype(np.int64) - 128
-        elif fourcc == b"in24":
-            a = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-            a = a.astype(np.int64)
-            x = (a[:, 0] << 16) | (a[:, 1] << 8) | a[:, 2]
-            x = np.where(x >= 1 << 23, x - (1 << 24), x)
-        else:
-            x = np.frombuffer(data, dtype=dtype).astype(np.int64)
-        return _pcm_int_stats(x, full)
+        bits, order = _MP4_PCM_ENTRIES[fourcc]
+        return _pcm_int_stats(*_linear_pcm(data, bits, order, offset8=True))
     return None
-
-
-def av_info(b: bytes) -> Optional[dict]:
-    """Sniff audio/video containers by magic."""
-    if not b:
-        return None
-    return (
-        wav_info(b) or avi_info(b) or mp4_info(b) or mkv_info(b)
-        or flac_info(b) or ogg_info(b) or mp3_info(b)
-    )
 
 
 # --- PNG pixel decode (round 3) ----------------------------------------------
@@ -3547,21 +3418,95 @@ def png_pixels(b: bytes):
 
 
 def png_mean_luma(b: bytes):
-    """Mean ITU-R 601 luminance of a PNG, in INTEGER arithmetic
-    (sum of 299R+587G+114B per pixel, ONE division at the end, rounded
-    6dp) so a SQL oracle restates it bit-for-bit — float summation
-    order never enters."""
-    import numpy as _np
+    """Mean ITU-R 601 luminance of a PNG (mean_luma: integer
+    299/587/114 sum, one division, 6 dp)."""
+    return _decoded_luma(png_pixels(b))
 
-    decoded = png_pixels(b)
-    if decoded is None:
-        return None
-    w, h, ch, pix = decoded
-    arr = _np.frombuffer(pix, dtype=_np.uint8).reshape(h, w, ch).astype(_np.int64)
-    if ch >= 3:
-        total = int(
-            (arr[..., 0] * 299 + arr[..., 1] * 587 + arr[..., 2] * 114).sum()
-        )
-    else:  # grayscale (+alpha): weights collapse onto the single sample
-        total = int(arr[..., 0].sum() * 1000)
-    return round(total / (1000.0 * w * h), 6)
+
+# --- one dispatcher per modality ---------------------------------------------
+
+
+def _jpeg_mean_luma(b: bytes):
+    from .jpeg import jpeg_mean_luma
+
+    return jpeg_mean_luma(b)
+
+
+# sniffed image format -> mean-luma lane
+_LUMA_LANES = {
+    "jpeg": _jpeg_mean_luma,
+    "png": png_mean_luma,
+    "gif": gif_mean_luma,
+    "tiff": tiff_mean_luma,
+    "bmp": bmp_mean_luma,
+    "pnm": pnm_mean_luma,
+    "tga": tga_mean_luma,
+    "ico": ico_mean_luma,
+}
+
+# every format with a real pixel path (webp and jp2 are header-only)
+PIXEL_DECODABLE_FORMATS = frozenset(_LUMA_LANES)
+
+
+def pixel_stats(b: bytes, fmt: Optional[str]) -> dict:
+    """Pixel statistics of an image payload sniffed as `fmt` (the
+    image_dims format): mean_luma, except ink_ratio for Group-4 fax
+    TIFFs, plus n_frames/duration_ms for GIF animations. Fields a
+    decode could not produce are left out; {} for formats with no
+    pixel codec."""
+    stats = {}
+    if fmt == "tiff":
+        ink = ink_ratio(b)
+        if ink is not None:
+            return {"ink_ratio": round(ink, 6)}
+    elif fmt == "gif":  # animation metadata (frames + summed GCE delays)
+        info = gif_frames_info(b) or {}
+        stats = {"n_frames": info.get("n_frames"),
+                 "duration_ms": info.get("duration_ms") or None}
+    if fmt in _LUMA_LANES:
+        stats["mean_luma"] = _LUMA_LANES[fmt](b)
+    return {k: v for k, v in stats.items() if v is not None}
+
+
+# leading magic -> sample lane; anything else is probed as WAV (or
+# PCM-in-MP4 when ISO-BMFF's 'ftyp' sits at offset 4)
+_PCM_LANES = {
+    b"fLaC": flac_pcm_stats,
+    b"OggS": ogg_flac_pcm_stats,
+    b"FORM": aiff_pcm_stats,
+    b".snd": au_pcm_stats,
+}
+
+
+def pcm_stats(b: bytes) -> Optional[dict]:
+    """Sample-level audio stats for any decoded container — WAV (PCM,
+    float, G.711, ADPCM), native and Ogg FLAC, AIFF/AIFC, AU and
+    PCM-in-MP4 — dispatched on magic bytes: {n_samples, rms, peak,
+    mean}, or None (quarantine)."""
+    lane = _PCM_LANES.get(bytes(b[:4]))
+    if lane is None:
+        lane = mp4_pcm_stats if b[4:8] == b"ftyp" else wav_pcm_stats
+    return lane(b)
+
+
+def video_frames(b: bytes):
+    """Per-frame video rows for any decoded container — MJPEG in
+    ISO-BMFF or Matroska, MJPEG/DIB in AVI — dispatched on magic
+    bytes: [{frame_idx, width, height, mean_luma}], or None."""
+    if b[4:8] == b"ftyp":
+        return mp4_mjpeg_frames(b)
+    if b[:4] == b"\x1a\x45\xdf\xa3":
+        return mkv_mjpeg_frames(b)
+    return avi_mjpeg_frames(b)
+
+
+def audio_info(b: bytes) -> Optional[dict]:
+    """Audio container header probe (WAV, FLAC, Ogg, MP3): sample
+    rate, channels, bits, duration — or None."""
+    return wav_info(b) or flac_info(b) or ogg_info(b) or mp3_info(b)
+
+
+def video_info(b: bytes) -> Optional[dict]:
+    """Video container header probe (AVI, MP4, Matroska/WebM):
+    duration and frame dims — or None."""
+    return avi_info(b) or mp4_info(b) or mkv_info(b)

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernels.media import PIXEL_DECODABLE_FORMATS, audio_info, video_info
 from ._kernel import doc_id_str, map_kernel
 from .extract import PDF_RAW_SCHEMA
 
@@ -68,158 +69,49 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-# every format _decode_image has a real pixel path for — the
-# "decode everything" set that pixel_formats=None stands for
-PIXEL_DECODABLE_FORMATS = frozenset(
-    {"jpeg", "png", "gif", "tiff", "bmp", "pnm", "tga", "ico"})
-
-
 def _decode_image(payload: bytes, pixel_formats: "set | None" = None) -> dict:
-    """REAL header decode: true width/height parsed from the JPEG SOF /
-    PNG IHDR / GIF LSD / TIFF IFD structures (kernels/media.py) — no
-    codec library needed. Group-4 TIFF payloads additionally get a full
-    MMR pixel decode (kernels/ccitt_g4) and report ink_ratio.
-    Unrecognised payloads report no dimensions.
+    """REAL header decode: true width/height parsed from the container
+    headers (kernels/media.image_dims) — no codec library needed —
+    plus pixel statistics from kernels/media.pixel_stats (mean luma;
+    ink_ratio for Group-4 fax TIFFs; frame count and duration for GIF
+    animations). Unrecognised payloads report no dimensions.
 
     `pixel_formats`: None = every format in PIXEL_DECODABLE_FORMATS; a
     set = decode pixel statistics only for those formats (the
     per-corpus decision pixel_stats_policy makes; an empty set is
     header-only: dims/format/digest stay, mean_luma/ink_ratio are
     skipped)."""
-    from ..kernels.media import (
-        gif_mean_luma,
-        image_dims,
-        ink_ratio,
-        png_mean_luma,
-    )
+    from ..kernels.media import image_dims, pixel_stats
 
     meta = image_dims(payload) or {}
-    if pixel_formats is not None and meta.get("format") not in pixel_formats:
+    fmt = meta.get("format")
+    if pixel_formats is None or fmt in pixel_formats:
+        meta.update(pixel_stats(payload, fmt))
+    return meta
+
+
+def _header_decoder(info, kind: str, containers: str):
+    """REAL container decode for a header-only modality: `info`'s
+    metadata (kernels/media.audio_info: WAV/MP3/FLAC/Ogg sample rate,
+    channels, bits, duration; kernels/media.video_info: AVI/MP4/MKV
+    duration + frame dims). Other containers (aac/ape/flv/ogv...) need
+    codecs not present in this container — they raise and quarantine
+    to empty features."""
+    def decode(payload: bytes) -> dict:
+        meta = info(payload)
+        if meta is None:
+            raise NotImplementedError(
+                f"{kind} decode beyond {containers} requires codecs not "
+                "in this container")
         return meta
-    if meta.get("format") == "tiff":
-        r = ink_ratio(payload)
-        if r is not None:
-            meta["ink_ratio"] = round(r, 6)
-        else:
-            # non-fax TIFF: baseline strip decode (none/LZW/PackBits,
-            # kernels/media.tiff_pixels — round 4)
-            from ..kernels.media import tiff_mean_luma
 
-            luma = tiff_mean_luma(payload)
-            if luma is not None:
-                meta["mean_luma"] = luma
-    elif meta.get("format") == "png":
-        # REAL pixel decode (zlib + PNG row filters, kernels/media.py;
-        # round 4 widens to palette / 1-16 bit / Adam7)
-        luma = png_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    elif meta.get("format") == "gif":
-        # REAL first-frame decode (GIF-flavor LZW + palette expansion
-        # + 4-pass de-interlace, kernels/media.py — round 4); round 5
-        # adds animation metadata (frame count + summed GCE delays)
-        from ..kernels.media import gif_frames_info
-
-        frames = gif_frames_info(payload)
-        if frames is not None:
-            meta["n_frames"] = frames["n_frames"]
-            if frames["duration_ms"]:
-                meta["duration_ms"] = frames["duration_ms"]
-        luma = gif_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    elif meta.get("format") == "jpeg":
-        # REAL pixel decode for baseline, progressive (Annex G),
-        # 12-bit (SOF1/SOF2 + 16-bit DQT) AND lossless (SOF3, Annex H)
-        # JPEG incl. 4:2:0/4:2:2 and restart markers (from-scratch
-        # T.81 codec, kernels/jpeg.py); arithmetic-coded payloads keep
-        # header-only metadata
-        from ..kernels.jpeg import jpeg_mean_luma
-
-        luma = jpeg_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    elif meta.get("format") == "bmp":
-        # REAL DIB raster decode (round 7): 24-bit BGR / 8-bit
-        # palettized BI_RGB, bottom-up and top-down row orders —
-        # shares the AVI '00db' video lane's raster math
-        from ..kernels.media import bmp_mean_luma
-
-        luma = bmp_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    elif meta.get("format") == "pnm":
-        # REAL netpbm raster decode (round 7): P5 gray / P6 RGB,
-        # 8-bit and 16-bit-BE samples, native-depth mean (the
-        # jpeg12 discipline)
-        from ..kernels.media import pnm_mean_luma
-
-        luma = pnm_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    elif meta.get("format") == "tga":
-        # REAL TGA raster decode (round 7): gray/truecolor/palettized
-        # + all three RLE forms, top-down and bottom-up
-        from ..kernels.media import tga_mean_luma
-
-        luma = tga_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    elif meta.get("format") == "ico":
-        # REAL ICO first-image decode (round 7): PNG-compressed
-        # entries through the full PNG path, classic entries through
-        # the shared DIB raster math (doubled-height AND mask parsed
-        # past, excluded from luma)
-        from ..kernels.media import ico_mean_luma
-
-        luma = ico_mean_luma(payload)
-        if luma is not None:
-            meta["mean_luma"] = luma
-    return meta
-
-
-def _decode_audio(payload: bytes) -> dict:
-    """REAL container decode for WAV/RIFF (fmt/data chunks), MP3
-    (Layer-III frame-header walk), FLAC (STREAMINFO block) and Ogg
-    (Vorbis/Opus ident + last-page granule — kernels/media.py): sample
-    rate, channels, bits, duration. Codecs beyond these (aac/ape/...)
-    need decoders not present in this container — they raise and
-    quarantine to empty features."""
-    from ..kernels.media import flac_info, mp3_info, ogg_info, wav_info
-
-    meta = (
-        wav_info(payload) or flac_info(payload) or ogg_info(payload)
-        or mp3_info(payload)
-    )
-    if meta is None:
-        raise NotImplementedError(
-            "audio decode beyond WAV/MP3/FLAC/Ogg requires codecs not in "
-            "this container"
-        )
-    return meta
-
-
-def _decode_video(payload: bytes) -> dict:
-    """REAL container decode for MP4/ISO-BMFF (mvhd/tkhd boxes), AVI
-    (RIFF hdrl/avih, kernels/media.avi_info) and
-    Matroska/WebM (EBML Segment/Info/Tracks, kernels/media.mkv_info):
-    duration + frame dims. Other containers (flv/ogv...) raise and
-    quarantine."""
-    from ..kernels.media import avi_info, mkv_info, mp4_info
-
-    meta = avi_info(payload) or mp4_info(payload) or mkv_info(payload)
-    if meta is None:
-        raise NotImplementedError(
-            "video decode beyond MP4/MKV/AVI requires codecs not in this "
-            "container"
-        )
-    return meta
+    return decode
 
 
 DECODERS = {
     "image": _decode_image,
-    "audio": _decode_audio,
-    "video": _decode_video,
+    "audio": _header_decoder(audio_info, "audio", "WAV/MP3/FLAC/Ogg"),
+    "video": _header_decoder(video_info, "video", "MP4/MKV/AVI"),
 }
 
 
@@ -847,46 +739,22 @@ AUDIO_PCM_SCHEMA = StructType(
 def extract_audio_pcm_features(media: DataFrame) -> DataFrame:
     """REAL sample-level audio features (round 6 — upgrades the audio
     lane beyond container headers): per payload, decode every sample
-    of a WAV body (linear PCM 8/16/24/32-bit, IEEE float32, G.711
-    A-law/mu-law — kernels/media.wav_pcm_stats) or a FLAC stream
-    (round 7 — CONSTANT/VERBATIM/FIXED/LPC subframes, rice residuals,
-    stereo decorrelation, CRC-verified — kernels/media.flac_pcm_stats,
+    of a WAV (PCM, float32, G.711, ADPCM), native or Ogg FLAC,
+    AIFF/AIFC, AU or PCM-in-MP4 body (kernels/media.pcm_stats,
     dispatched on magic) and emit n_samples + normalized
     rms/peak/mean. Unsupported-codec payloads quarantine via the
     error column — never a raise, never a dropped row (the
     extract_doc contract). One Arrow row-kernel pass."""
 
     def row(doc_id, media_ref, payload):
-        from ..kernels.media import (
-            aiff_pcm_stats,
-            au_pcm_stats,
-            flac_pcm_stats,
-            mp4_pcm_stats,
-            ogg_flac_pcm_stats,
-            wav_pcm_stats,
-        )
+        from ..kernels.media import pcm_stats
 
-        raw = bytes(payload)
-        # magic dispatch (round 7): RIFF -> WAV lane (incl. ADPCM),
-        # fLaC -> FLAC frame decode, FORM/AIFF -> big-endian AIFF,
-        # .snd -> Sun AU; all share the normalized
-        # {n_samples, rms, peak, mean} contract
-        if raw[:4] == b"fLaC":
-            stats = flac_pcm_stats(raw)
-        elif raw[:4] == b"OggS":
-            stats = ogg_flac_pcm_stats(raw)
-        elif raw[:4] == b"FORM":
-            stats = aiff_pcm_stats(raw)
-        elif raw[:4] == b".snd":
-            stats = au_pcm_stats(raw)
-        elif raw[4:8] == b"ftyp":
-            stats = mp4_pcm_stats(raw)
-        else:
-            stats = wav_pcm_stats(raw)
+        stats = pcm_stats(bytes(payload))
         if stats is None:
             return [(doc_id, media_ref, None, None, None, None,
                      "unsupported audio payload (not PCM/float/G.711/ADPCM "
-                     "WAV, AIFF, AU, or decodable native/Ogg FLAC)")]
+                     "WAV, AIFF/AIFC, AU, PCM-in-MP4 (sowt/twos/in24/raw), "
+                     "or decodable native/Ogg FLAC)")]
         return [(doc_id, media_ref, int(stats["n_samples"]), stats["rms"],
                  stats["peak"], stats["mean"], None)]
 
@@ -1112,9 +980,10 @@ VIDEO_FRAME_SCHEMA = StructType(
 
 def extract_video_frame_features(media: DataFrame) -> DataFrame:
     """REAL per-frame video decode (round 7 — upgrades the video lane
-    beyond container headers): MJPEG payloads in BOTH classic
-    containers — RIFF/AVI (LIST movi chunk walk) and ISO-BMFF MP4
-    (full stsd/stsc/stco/stsz sample-table demux) — decode through
+    beyond container headers): MJPEG payloads in RIFF/AVI (LIST movi
+    chunk walk, plus uncompressed DIB frames), ISO-BMFF MP4 (full
+    stsd/stsc/stco/stsz sample-table demux) and Matroska
+    (kernels/media.video_frames, dispatched on magic) decode through
     the from-scratch JPEG kernel, emitting one row per frame
     (frame_idx, dims, mean luma). Undecodable payloads emit a
     single quarantine row with the error column set — never a raise,
@@ -1123,19 +992,9 @@ def extract_video_frame_features(media: DataFrame) -> DataFrame:
     ships pixel arrays."""
 
     def row(doc_id, media_ref, payload):
-        from ..kernels.media import (
-            avi_mjpeg_frames,
-            mkv_mjpeg_frames,
-            mp4_mjpeg_frames,
-        )
+        from ..kernels.media import video_frames
 
-        raw = bytes(payload)
-        if raw[4:8] == b"ftyp":
-            frames = mp4_mjpeg_frames(raw)
-        elif raw[:4] == b"\x1a\x45\xdf\xa3":
-            frames = mkv_mjpeg_frames(raw)
-        else:
-            frames = avi_mjpeg_frames(raw)
+        frames = video_frames(bytes(payload))
         if not frames:
             return [(doc_id, media_ref, None, None, None, None,
                      None if frames is not None else
@@ -1752,7 +1611,7 @@ def sniff_av_format(payload_col) -> "F.Column":
 # not ship — each maps to its documented rationale. The policy emits
 # an explicit 'quarantined_no_codec' row for them (round 8, r7
 # verdict item 7): header metadata still flows (mp3_info / ogg_info
-# in _decode_audio), but a silent probe-pass would mislabel them
+# in DECODERS['audio']), but a silent probe-pass would mislabel them
 # decode-able or header_only-by-cost, both wrong.
 IMAGE_NO_CODEC_RATIONALE = {
     "webp": "VP8 boolean-arithmetic entropy decode / VP8L distance "
@@ -1784,30 +1643,12 @@ def _probe_av(payload: bytes, fmt: str):
     Formats with no sample codec raise NotImplementedError carrying
     the rationale; the policy turns that into an explicit
     quarantined_no_codec row instead of a bogus throughput."""
-    from ..kernels.media import (
-        aiff_pcm_stats,
-        au_pcm_stats,
-        avi_mjpeg_frames,
-        flac_pcm_stats,
-        mkv_mjpeg_frames,
-        ogg_flac_pcm_stats,
-        wav_pcm_stats,
-    )
+    from ..kernels.media import pcm_stats, video_frames
 
     if fmt in AV_NO_CODEC_RATIONALE:
         raise NotImplementedError(AV_NO_CODEC_RATIONALE[fmt])
-    if fmt == "mp4":
-        # ISO-BMFF carries either modality: probe video then audio
-        from ..kernels.media import mp4_mjpeg_frames, mp4_pcm_stats
-
-        return mp4_mjpeg_frames(payload) or mp4_pcm_stats(payload)
-    return {
-        "wav": wav_pcm_stats, "flac": flac_pcm_stats,
-        "aiff": aiff_pcm_stats, "au": au_pcm_stats,
-        "ogg-flac": ogg_flac_pcm_stats,
-        "avi": avi_mjpeg_frames,
-        "mkv": mkv_mjpeg_frames,
-    }[fmt](payload)
+    # ISO-BMFF carries either modality: probe video, then audio
+    return video_frames(payload) or pcm_stats(payload)
 
 
 def av_stats_policy(

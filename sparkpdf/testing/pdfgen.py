@@ -123,6 +123,10 @@ def lzw_encode(data: bytes) -> bytes:
         w = c
     if w:
         emit(table[w], width)
+        # the decoders add an entry for this last code too, and widen
+        # when it reaches their threshold: STOP goes out at that width
+        if next_code + 1 >= (1 << width) and width < 12:
+            width += 1
     emit(257, width)  # STOP
     if nbits:
         result.append((bitbuf << (8 - nbits)) & 0xFF)

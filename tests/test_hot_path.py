@@ -265,6 +265,7 @@ def test_up_runs_equal_per_row_unfilter(columns, colors, ftypes, rnd):
 @given(st.integers(0, 2**32 - 1), st.sampled_from([0, 1, 300, 2000, 9000]),
        st.sampled_from([4, 16, 256]))
 @example(0, 9000, 256)  # low redundancy: passes 12 bits, CLEAR, restarts
+@example(3037, 9000, 16)  # last code lands on a width bump: STOP widens
 @settings(max_examples=40, deadline=None)
 def test_lzw_round_trip(seed, n, alphabet):
     rnd = random.Random(seed)

@@ -252,7 +252,9 @@ def test_av_container_parsers():
     """WAV/RIFF and MP4/ISO-BMFF header parsing (audio/video stub
     closed): duration/rate/dims from container structures, truncated
     and foreign payloads rejected cleanly."""
-    from sparkpdf.kernels.media import av_info, mp4_info, wav_info
+    from sparkpdf.kernels.media import (
+        audio_info, mp4_info, video_info, wav_info,
+    )
     from sparkpdf.testing.imagegen import make_mp4, make_png, make_wav
 
     w = make_wav(12000, 250, channels=2, bits=16)
@@ -266,9 +268,10 @@ def test_av_container_parsers():
     assert got["brand"] == "isom"
     # sniffing: wrong container -> None, not an exception
     assert wav_info(m) is None and mp4_info(w) is None
-    assert av_info(w)["format"] == "wav"
-    assert av_info(m)["format"] == "mp4"
-    assert av_info(make_png(4, 4)) is None
+    assert audio_info(w)["format"] == "wav"
+    assert video_info(m)["format"] == "mp4"
+    png = make_png(4, 4)
+    assert audio_info(png) is None and video_info(png) is None
     # truncation tolerance: no IndexError on any prefix
     for n in range(0, len(m), 7):
         mp4_info(m[:n])
@@ -399,7 +402,9 @@ def test_mp3_and_mkv_header_parse():
     """MP3 Layer-III frame-header walk + Matroska EBML parse (public
     ISO 11172-3 / matroska.org specs): planted metadata reads back
     exactly; truncations and junk never raise."""
-    from sparkpdf.kernels.media import av_info, mkv_info, mp3_info
+    from sparkpdf.kernels.media import (
+        audio_info, mkv_info, mp3_info, video_info,
+    )
     from sparkpdf.testing.imagegen import make_mkv, make_mp3
 
     m = make_mp3(12)
@@ -426,8 +431,8 @@ def test_mp3_and_mkv_header_parse():
     assert mkv_info(make_mkv(100, 80, 700, doctype=b"webm"))["format"] == "webm"
     for n in range(0, len(k), 7):
         mkv_info(k[:n])
-    assert av_info(m)["format"] == "mp3"
-    assert av_info(k)["format"] == "mkv"
+    assert audio_info(m)["format"] == "mp3"
+    assert video_info(k)["format"] == "mkv"
     assert mp3_info(b"\xff\xe0") is None and mkv_info(b"\x1a\x45") is None
 
 
@@ -688,7 +693,9 @@ def test_flac_ogg_avi_header_parse():
     """Round-5 container widening: FLAC STREAMINFO bitfields, Ogg
     Vorbis/Opus ident + last-page granule duration, AVI avih — plus
     truncation/garbage quarantine (None, never a raise)."""
-    from sparkpdf.kernels.media import av_info, avi_info, flac_info, ogg_info
+    from sparkpdf.kernels.media import (
+        audio_info, avi_info, flac_info, ogg_info, video_info,
+    )
     from sparkpdf.testing.imagegen import make_avi, make_flac, make_ogg
 
     f = flac_info(make_flac(44100, 2500, channels=2, bits=16))
@@ -705,15 +712,16 @@ def test_flac_ogg_avi_header_parse():
     a = avi_info(make_avi(640, 360, 2000, fps=25))
     assert a == {"format": "avi", "width": 640, "height": 360,
                  "duration_ms": 2000}
-    # av_info dispatch picks each container by magic
-    assert av_info(make_flac(8000, 100))["format"] == "flac"
-    assert av_info(make_avi(32, 32, 40))["format"] == "avi"
-    assert av_info(make_ogg(24000, 100))["format"] == "ogg-vorbis"
+    # the header dispatchers pick each container by magic
+    assert audio_info(make_flac(8000, 100))["format"] == "flac"
+    assert video_info(make_avi(32, 32, 40))["format"] == "avi"
+    assert audio_info(make_ogg(24000, 100))["format"] == "ogg-vorbis"
     # quarantine: truncation sweeps and lookalike garbage return None
     for full in (make_flac(8000, 100), make_ogg(24000, 100),
                  make_avi(32, 32, 40)):
         for n in range(0, min(len(full), 40), 3):
-            for fn in (flac_info, ogg_info, avi_info, av_info):
+            for fn in (flac_info, ogg_info, avi_info, audio_info,
+                       video_info):
                 fn(full[:n])  # must not raise
     assert flac_info(b"fLaCgarbage") is None
     assert ogg_info(b"OggS\x00rubbish") is None
@@ -923,7 +931,7 @@ def test_avi_mjpeg_frame_decode():
         {"frame_idx": 1, "width": 16, "height": 8, "mean_luma": 100.0},
         {"frame_idx": 2, "width": 16, "height": 8, "mean_luma": 238.0},
     ]
-    # the frame-ful AVI still parses as an AVI header (av_info lane)
+    # the frame-ful AVI still parses as an AVI header (video_info lane)
     info = avi_info(avi)
     assert info["width"] == 16 and info["format"] == "avi"
     # header-only AVI (the av corpus shape) has no frames -> None
@@ -1310,7 +1318,7 @@ def test_mp4_mjpeg_sample_demux():
             {"frame_idx": i, "width": 16, "height": 8,
              "mean_luma": float(16 + 2 * i)} for i in range(nf)
         ]
-    # the movie still parses as an MP4 header (av_info lane)
+    # the movie still parses as an MP4 header (video_info lane)
     info = mp4_info(mp4)
     assert info["width"] == 16 and info["format"] == "mp4"
     # torn sample table: an stsz size pointing past EOF quarantines
@@ -1379,7 +1387,7 @@ def test_mkv_mjpeg_demux():
         {"frame_idx": i, "width": 16, "height": 8,
          "mean_luma": float(g)} for i, g in enumerate((16, 100, 238))
     ]
-    # still a parseable MKV header (av_info lane)
+    # still a parseable MKV header (video_info lane)
     info = mkv_info(mkv)
     assert info["width"] == 16 and info["format"] == "mkv"
     # header-only corpus shape has no V_MJPEG track -> None
@@ -1391,6 +1399,40 @@ def test_mkv_mjpeg_demux():
     for n in range(0, len(mkv), 5):
         mkv_mjpeg_frames(mkv[:n])
     assert mkv_mjpeg_frames(b"\x1a\x45\xdf\xa3" + bytes(8)) is None
+
+
+def test_mjpeg_lanes_decode_each_frame_once(monkeypatch):
+    """The AVI, MP4 and MKV MJPEG lanes decode every frame exactly
+    once: width, height and mean luma all come from one decode_jpeg
+    call per frame (through the video_frames dispatcher too)."""
+    import numpy as np
+
+    from sparkpdf.kernels import jpeg
+    from sparkpdf.kernels.media import (
+        avi_mjpeg_frames, mkv_mjpeg_frames, mp4_mjpeg_frames, video_frames,
+    )
+    from sparkpdf.testing.imagegen import (
+        make_avi, make_mkv_mjpeg, make_mp4_mjpeg,
+    )
+
+    calls = []
+    real = jpeg.decode_jpeg
+    monkeypatch.setattr(jpeg, "decode_jpeg",
+                        lambda data: calls.append(1) or real(data))
+    for n in (1, 2, 5):
+        frames = [jpeg.encode_jpeg(np.full((8, 16), 16 + 32 * i, np.uint8))
+                  for i in range(n)]
+        for lane, blob in (
+            (avi_mjpeg_frames, make_avi(16, 8, 0, fps=25, frames=frames)),
+            (mp4_mjpeg_frames, make_mp4_mjpeg(16, 8, frames)),
+            (mkv_mjpeg_frames, make_mkv_mjpeg(16, 8, frames)),
+        ):
+            for fn in (lane, video_frames):
+                calls.clear()
+                rows = fn(blob)
+                assert [r["mean_luma"] for r in rows] == [
+                    float(16 + 32 * i) for i in range(n)]
+                assert len(calls) == n, (fn.__name__, n, len(calls))
 
 
 def test_ogg_flac_decode():
@@ -1864,7 +1906,7 @@ def test_gif_animation_compositing():
 def test_round5_parsers_corruption_fuzz():
     """Deterministic byte-flip fuzz over every round-5 parser (FLAC /
     Ogg vorbis+opus / AVI / animated GIF / tiled + JPEG TIFF /
-    lossless JPEG / av_info dispatch): corrupted inputs must return
+    lossless JPEG / audio_info dispatch): corrupted inputs must return
     None or a partial dict, never raise (the operator layer's
     quarantine contract starts at the kernel boundary)."""
     import numpy as np
@@ -1895,7 +1937,7 @@ def test_round5_parsers_corruption_fuzz():
         (make_tiff_tiled(g, 8, 8, compression=5), media.tiff_pixels),
         (make_tiff_jpeg(g, rows_per_strip=4), media.tiff_pixels),
         (encode_jpeg_lossless(g), decode_jpeg),
-        (make_flac(8000, 100), media.av_info),
+        (make_flac(8000, 100), media.audio_info),
     ]
     for data, fn in fixtures:
         for trial in range(150):

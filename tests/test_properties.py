@@ -218,26 +218,36 @@ def test_op_roundtrip_framings():
 @given(st.binary(max_size=400))
 @settings(max_examples=300, deadline=None)
 def test_av_parsers_never_raise(data):
-    """wav_info/mp4_info/av_info must return dict-or-None on ANY bytes
-    — fuzzed garbage, truncations, and magic-prefixed noise included
-    (quarantine discipline: the feature kernel relies on it)."""
+    """The A/V header parsers, sample lanes, frame lanes and their
+    dispatchers must return dict/list-or-None on ANY bytes — fuzzed
+    garbage, truncations, and magic-prefixed noise included
+    (quarantine discipline: the feature kernels rely on it)."""
     from sparkpdf.kernels.media import (
-        av_info, mkv_info, mp3_info, mp4_info, wav_info,
+        aiff_pcm_stats, au_pcm_stats, audio_info, avi_info,
+        avi_mjpeg_frames, mkv_info, mp3_info, mp4_info, mp4_pcm_stats,
+        pcm_stats, video_frames, video_info, wav_info,
     )
 
     for probe in (
         data,
         b"RIFF" + data,
         b"RIFF\x10\x00\x00\x00WAVE" + data,
+        b"RIFF\x10\x00\x00\x00AVI " + data,
+        b"FORM\x10\x00\x00\x00AIFF" + data,
+        b"FORM\x10\x00\x00\x00AIFC" + data,
+        b".snd" + data,
         data[:4] + b"ftyp" + data[4:],
         (8).to_bytes(4, "big") + b"ftyp" + data,
         b"\xff\xfb" + data,
         b"ID3" + data,
         b"\x1a\x45\xdf\xa3" + data,
     ):
-        for fn in (wav_info, mp4_info, mp3_info, mkv_info, av_info):
+        for fn in (wav_info, mp4_info, mp3_info, mkv_info, avi_info,
+                   audio_info, video_info, aiff_pcm_stats, au_pcm_stats,
+                   mp4_pcm_stats, pcm_stats, avi_mjpeg_frames,
+                   video_frames):
             out = fn(probe)
-            assert out is None or isinstance(out, dict)
+            assert out is None or isinstance(out, (dict, list))
 
 
 @given(st.binary(max_size=300))

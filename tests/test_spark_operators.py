@@ -2730,7 +2730,7 @@ def test_av_policy_no_codec_rationale_rows(spark):
     not a bogus throughput from a no-op probe — while the sibling
     ogg-flac lane (same container, shipped codec) still measures and
     decodes, and header metadata still flows for the quarantined
-    formats via _decode_audio."""
+    formats via DECODERS["audio"]."""
     from pyspark.sql import Row
     from sparkpdf.operators.multimodal import (
         AV_NO_CODEC_RATIONALE,
