@@ -57,51 +57,48 @@ def _apply_predictor(data: bytes, parms: Optional[dict]) -> bytes:
     nrows = len(data) // stride
     if nrows * stride != len(data):
         data = data[: nrows * stride]
+    if nrows == 0:
+        return b""
     a = np.frombuffer(data, dtype=np.uint8).reshape(nrows, stride)
-    ftypes = a[:, 0]
     rows = a[:, 1:].astype(np.int16)  # working copy, room for sums
     prev = np.zeros(rowlen, dtype=np.int16)
-    r = 0
-    while r < nrows:
-        ft = ftypes[r]
-        row = rows[r]
-        if ft == 2:  # a run of Up rows: one running sum down the columns
-            end = r + 1
-            while end < nrows and ftypes[end] == 2:
-                end += 1
-            run = np.cumsum(np.vstack((prev, rows[r:end])), axis=0,
+    # [start, end) runs of one filter type, found once; types as ints
+    bounds = [0] + (np.flatnonzero(np.diff(a[:, 0])) + 1).tolist() + [nrows]
+    ftypes = a[bounds[:-1], 0].tolist()
+    for start, end, ft in zip(bounds, bounds[1:], ftypes):
+        if ft == 2:  # Up: one running sum down the columns of the run
+            run = np.cumsum(np.vstack((prev, rows[start:end])), axis=0,
                             dtype=np.uint8)
-            rows[r:end] = run[1:]
-            prev = rows[end - 1]
-            r = end
-            continue
-        if ft == 0:
-            pass
+            rows[start:end] = run[1:]
         elif ft == 1:  # Sub: left neighbour, sequential in-row
-            for c in range(bpp, rowlen):
-                row[c] = (row[c] + row[c - bpp]) & 0xFF
+            for row in rows[start:end]:
+                for c in range(bpp, rowlen):
+                    row[c] = (row[c] + row[c - bpp]) & 0xFF
         elif ft == 3:  # Average
-            for c in range(rowlen):
-                left = row[c - bpp] if c >= bpp else 0
-                row[c] = (row[c] + ((left + prev[c]) >> 1)) & 0xFF
+            for row in rows[start:end]:
+                for c in range(rowlen):
+                    left = row[c - bpp] if c >= bpp else 0
+                    row[c] = (row[c] + ((left + prev[c]) >> 1)) & 0xFF
+                prev = row
         elif ft == 4:  # Paeth (paethPredictor parity: filters.py:902-913)
-            for c in range(rowlen):
-                left = int(row[c - bpp]) if c >= bpp else 0
-                up = int(prev[c])
-                ul = int(prev[c - bpp]) if c >= bpp else 0
-                p = left + up - ul
-                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                if pa <= pb and pa <= pc:
-                    pr = left
-                elif pb <= pc:
-                    pr = up
-                else:
-                    pr = ul
-                row[c] = (row[c] + pr) & 0xFF
-        else:
+            for row in rows[start:end]:
+                for c in range(rowlen):
+                    left = int(row[c - bpp]) if c >= bpp else 0
+                    up = int(prev[c])
+                    ul = int(prev[c - bpp]) if c >= bpp else 0
+                    p = left + up - ul
+                    pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
+                    if pa <= pb and pa <= pc:
+                        pr = left
+                    elif pb <= pc:
+                        pr = up
+                    else:
+                        pr = ul
+                    row[c] = (row[c] + pr) & 0xFF
+                prev = row
+        elif ft != 0:
             raise PdfError(f"unknown PNG filter type {ft}")
-        prev = row
-        r += 1
+        prev = rows[end - 1]
     return rows.astype(np.uint8).tobytes()
 
 

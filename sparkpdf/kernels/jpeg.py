@@ -33,7 +33,7 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 
-from .media import mean_luma
+from .media import luma_image, mean_luma
 
 # Annex K.1 quantization tables (luminance / chrominance), row-major
 QUANT_LUMA = np.array([
@@ -1509,6 +1509,6 @@ def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 1,
 def jpeg_mean_luma(data: bytes):
     """Mean luminance of a decodable JPEG: kernels/media.mean_luma over
     the decoded samples (integer arithmetic, single final division,
-    6dp)."""
-    img = decode_jpeg(data)
+    6dp); None when the decode has no luma (media.luma_image)."""
+    img = luma_image(decode_jpeg(data))
     return None if img is None else mean_luma(img)

@@ -28,6 +28,7 @@ Each media decision lives in one place:
   reduce the samples;
 * mean_luma holds the integer 299/587/114 luma reduction that every
   image and video-frame lane (and kernels/jpeg.jpeg_mean_luma) uses;
+  luma_image is the one shape check the JPEG lanes run before it;
 * one dispatcher per modality: pixel_stats (format -> lane table;
   PIXEL_DECODABLE_FORMATS is its key set), pcm_stats and
   video_frames (magic bytes), audio_info and video_info (headers).
@@ -71,6 +72,17 @@ def mean_luma(px, bgr: bool = False) -> float:
         total = int((a[..., r] * 299 + a[..., 1] * 587
                      + a[..., b] * 114).sum())
     return round(total / (1000.0 * a.shape[1] * a.shape[0]), 6)
+
+
+def luma_image(img):
+    """`img` when mean_luma can reduce it — an (h, w) gray or (h, w,
+    c >= 3) color decode — else None (quarantine): the one shape check
+    of the JPEG lanes. SOF3 allows 1-4 components, so a 2-component
+    lossless JPEG decodes to (h, w, 2), which has no luma."""
+    if img is None or not (img.ndim == 2
+                           or (img.ndim == 3 and img.shape[2] >= 3)):
+        return None
+    return img
 
 
 def _decoded_luma(decoded):
@@ -3106,10 +3118,11 @@ def _dib_frame_stats(payload: bytes, fmt: dict):
 
 def _jpeg_frame(payload: bytes):
     """Decode one MJPEG frame ONCE -> (width, height, mean_luma), or
-    None when the JPEG kernel cannot decode it."""
+    None when the JPEG kernel cannot decode it or the decode has no
+    luma (luma_image)."""
     from .jpeg import decode_jpeg
 
-    img = decode_jpeg(payload)
+    img = luma_image(decode_jpeg(payload))
     if img is None:
         return None
     return int(img.shape[1]), int(img.shape[0]), mean_luma(img)

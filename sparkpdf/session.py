@@ -3,6 +3,19 @@
 Test/bench sessions run local[N]; under spark-submit the submitted
 master is kept and the same confs carry to a real cluster (SURVEY.md
 §4.3). Everything here is plain public Spark configuration.
+
+Local sessions this factory starts itself also boot their Python worker
+daemon through `sparkpdf.worker_daemon` (`spark.python.daemon.module`,
+with the package root on `spark.executorEnv.PYTHONPATH` so the daemon
+imports from any working directory). Spark puts `pyspark.zip` first on a
+worker's path and zipimport caches no bytecode, so the stock daemon
+recompiles ~90 pyspark modules in every new session (~1 s of the first
+task); when the installed pyspark is byte-identical to the zip, the
+module moves the zip behind it and runs `pyspark.daemon` unchanged,
+otherwise it keeps the stock order. spark-submit sessions keep the stock
+daemon: `--py-files` reach a worker only per task, after the daemon has
+started, so the module would not be importable there. The module must
+write nothing to stdout: the JVM reads the daemon's port from it.
 """
 
 from __future__ import annotations
@@ -10,6 +23,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the sparkpdf package (a zip path when the
+# package itself is imported from a zip)
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -53,7 +70,11 @@ def get_spark(
     # port; only a plain Python caller needs a master here. Reading the
     # conf instead would start a JVM before spark.driver.memory is set.
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.python.daemon.module", "sparkpdf.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        )
     wh = os.environ.get("SPARKPDF_WAREHOUSE")
     if wh:  # static conf: only effective before the first session
         builder = builder.config("spark.sql.warehouse.dir", wh)

@@ -2,7 +2,8 @@
 
 * the memoised CMap lookup equals the rule-by-rule matcher;
 * the tokenizer's inline string tokens equal the string parsers;
-* the run-wise Up predictor equals a per-row PNG unfilter;
+* the run-wise Up predictor equals a per-row PNG unfilter, drops a
+  trailing partial row and rejects unknown filter types;
 * LZW round-trips across its width bumps and clear codes;
 * a document's pages share one compiled ToUnicode CMap;
 * the worker's zip-directory hook re-reads only changed archives.
@@ -258,6 +259,28 @@ def test_up_runs_equal_per_row_unfilter(columns, colors, ftypes, rnd):
              "/BitsPerComponent": 8}
     assert filters._apply_predictor(data, parms) == _unfilter_rows(
         data, colors, rowlen)
+
+
+@given(st.integers(1, 8),
+       st.lists(st.sampled_from([0, 1, 2, 2, 2, 3, 4]), max_size=16),
+       st.integers(0, 24), st.randoms(use_true_random=False))
+@settings(max_examples=100, deadline=None)
+def test_predictor_drops_a_trailing_partial_row(columns, ftypes, tail, rnd):
+    rowlen = columns * 3
+    data = b"".join(bytes([ft]) + rnd.randbytes(rowlen) for ft in ftypes)
+    partial = rnd.randbytes(tail % (rowlen + 1))  # shorter than a row
+    parms = {"/Predictor": 12, "/Columns": columns, "/Colors": 3,
+             "/BitsPerComponent": 8}
+    assert filters._apply_predictor(data + partial, parms) == _unfilter_rows(
+        data, 3, rowlen)
+
+
+def test_predictor_rejects_an_unknown_filter_type():
+    # rowlen 2: an Up run, a Sub row, then filter type 7
+    data = bytes([2, 1, 2, 2, 3, 4, 1, 5, 6, 7, 8, 9])
+    parms = {"/Predictor": 12, "/Columns": 2}
+    with pytest.raises(cos.PdfError, match="unknown PNG filter type 7$"):
+        filters._apply_predictor(data, parms)
 
 
 # --- LZW round trip across width bumps and clear codes -----------------------

@@ -467,3 +467,27 @@ def test_lossless_rejects():
     # arithmetic-coded frame markers still quarantine
     assert decode_jpeg(enc.replace(b"\xff\xc3", b"\xff\xc9")) is None
     assert decode_jpeg(enc.replace(b"\xff\xc3", b"\xff\xcb")) is None
+
+
+def test_two_component_lossless_jpeg_quarantines():
+    """SOF3 allows 1-4 components; a 2-component decode is (h, w, 2),
+    which has no luma: jpeg_mean_luma and every MJPEG video lane
+    quarantine it (None) instead of raising IndexError."""
+    from sparkpdf.kernels.jpeg import encode_jpeg_lossless
+    from sparkpdf.kernels.media import video_frames
+    from sparkpdf.testing import imagegen
+
+    two = np.arange(8 * 16 * 2, dtype=np.uint8).reshape(8, 16, 2)
+    enc = encode_jpeg_lossless(two)
+    assert decode_jpeg(enc).shape == (8, 16, 2)
+    assert jpeg_mean_luma(enc) is None
+    for movie in (imagegen.make_avi(16, 8, 40, frames=[enc]),
+                  imagegen.make_mp4_mjpeg(16, 8, [enc]),
+                  imagegen.make_mkv_mjpeg(16, 8, [enc])):
+        assert video_frames(movie) is None
+    # the gray plane of the same frame still reduces
+    gray = encode_jpeg_lossless(np.ascontiguousarray(two[..., 0]))
+    assert jpeg_mean_luma(gray) == round(float(two[..., 0].mean()), 6)
+    assert video_frames(imagegen.make_avi(16, 8, 40, frames=[gray])) == [
+        {"frame_idx": 0, "width": 16, "height": 8,
+         "mean_luma": jpeg_mean_luma(gray)}]

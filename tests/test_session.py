@@ -1,5 +1,6 @@
 """The session factory under spark-submit: the submitted master wins,
-and the factory's Arrow batch cap still applies."""
+the factory's Arrow batch cap still applies and the stock worker daemon
+stays; a local session boots its workers from any working directory."""
 
 import json
 import os
@@ -19,6 +20,7 @@ spark = get_spark("sparkpdf-session-probe", cpus=3)
 print(json.dumps({
     "master": spark.sparkContext.master,
     "batch": spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
+    "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module"),
 }))
 spark.stop()
 """
@@ -42,7 +44,46 @@ def test_get_spark_keeps_the_spark_submit_master(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert got == {"master": "local[2]", "batch": "512"}
+    assert got == {"master": "local[2]", "batch": "512", "daemon": None}
+
+
+LOCAL_PROBE = """
+import json, sys
+sys.path.insert(0, {root!r})
+from sparkpdf.operators import _kernel
+from sparkpdf.session import get_spark
+
+def square(i):
+    yield i, i * i
+
+spark = get_spark("sparkpdf-daemon-probe", cpus=1)
+rows = _kernel.map_kernel(spark.range(3), ["id"], square,
+                          "id long, sq long").collect()
+print(json.dumps({{
+    "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module"),
+    "rows": sorted(r.sq for r in rows),
+}}))
+spark.stop()
+"""
+
+
+def test_local_session_workers_boot_outside_the_package_root(tmp_path):
+    """A caller that puts sparkpdf on sys.path by hand, from another
+    working directory and with no PYTHONPATH, still completes a Python
+    task: the daemon module is found through the session's
+    spark.executorEnv.PYTHONPATH."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(LOCAL_PROBE.format(root=ROOT))
+    env = {k: v for k, v in os.environ.items()
+           if k != "PYTHONPATH"
+           and not k.startswith(("SPARKPDF_", "PYSPARK_GATEWAY"))}
+    env["PYSPARK_PYTHON"] = sys.executable
+    proc = subprocess.run([sys.executable, str(probe)], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got == {"daemon": "sparkpdf.worker_daemon", "rows": [0, 1, 4]}
 
 
 def test_one_session_builder():
