@@ -28,7 +28,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sparkpdf.operators.extract import synthesize_pdf_corpus
+    from sparkpdf.testing.corpora import synthesize_pdf_corpus
 
     return synthesize_pdf_corpus(_t(spark, sf_dir, "documents"))
 
@@ -37,7 +37,7 @@ def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 9: fused synth+extract — one python-runner layer, PDF bytes
     # never cross Arrow; row-identical to
     # extract_spans(_corpus(...)) (tests/test_fused_extract.py)
-    from sparkpdf.operators.extract import synthesize_and_extract_spans
+    from sparkpdf.testing.corpora import synthesize_and_extract_spans
 
     return synthesize_and_extract_spans(_t(spark, sf_dir, "documents"))
 
@@ -71,10 +71,8 @@ def q_interleaved_extract(spark, sf_dir):
     # ONE extractor (per-doc sniff inside the batch kernel), ONE span
     # contract out: text spans + media_ref spans with contiguous
     # offsets regardless of source format
-    from sparkpdf.operators.extract import (
-        extract_interleaved,
-        synthesize_interleaved_corpus,
-    )
+    from sparkpdf.operators.extract import extract_interleaved
+    from sparkpdf.testing.corpora import synthesize_interleaved_corpus
 
     res = extract_interleaved(
         synthesize_interleaved_corpus(_t(spark, sf_dir, "documents"))
@@ -102,8 +100,8 @@ def q_warc_mixed_extract(spark, sf_dir):
     # warc_documents, then ONE extract_interleaved pass sniffs each
     # payload and emits the unified span contract
     from sparkpdf.operators.extract import extract_interleaved
-    from sparkpdf.operators.text import synthesize_warc_mixed_corpus
     from sparkpdf.sources.warc_source import warc_documents
+    from sparkpdf.testing.corpora import synthesize_warc_mixed_corpus
 
     mixed = warc_documents(
         synthesize_warc_mixed_corpus(_t(spark, sf_dir, "documents"))
@@ -286,10 +284,8 @@ def q_gif_pixel_stats(spark, sf_dir):
     # expansion + 4-pass de-interlace, kernels/media.py): the planted
     # gray palette makes the decoded mean luminance a pure doc_id
     # formula the oracle restates; odd docs are interlaced
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_gif_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_gif_media
 
     feats = extract_media_features(
         synthesize_gif_media(_t(spark, sf_dir, "documents"))
@@ -400,7 +396,8 @@ def q_html_main(spark, sf_dir):
     # north rule's HTML leg: boilerplate strip + DOM heuristics; the
     # planted article must survive byte-exactly, nav/footer/script and
     # the link-dense related block must not
-    from sparkpdf.operators.text import extract_html_main, synthesize_html_corpus
+    from sparkpdf.operators.text import extract_html_main
+    from sparkpdf.testing.corpora import synthesize_html_corpus
 
     return extract_html_main(
         synthesize_html_corpus(_t(spark, sf_dir, "documents"))
@@ -414,10 +411,8 @@ def _web_features(spark, sf_dir):
     # deterministic corpus (planted links/meta/headings/tables, all
     # doc_id formulas) through the one-DOM-pass parser; quarantine
     # rows excluded the pdf_embedded_media way (error IS NULL)
-    from sparkpdf.operators.text import (
-        extract_web_features,
-        synthesize_web_corpus,
-    )
+    from sparkpdf.operators.text import extract_web_features
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     return extract_web_features(
         synthesize_web_corpus(_t(spark, sf_dir, "documents"))
@@ -600,10 +595,8 @@ def q_ivfpq_residual_topk(spark, sf_dir):
     # corpus — PQ codebooks spend their bits on within-list structure;
     # L2 ADC from the query residual (the IP-LUT bias is measured and
     # documented in the operator docstring)
-    from sparkpdf.operators.similarity import (
-        ivfpq_residual_topk,
-        synthesize_clustered_embeddings,
-    )
+    from sparkpdf.operators.similarity import ivfpq_residual_topk
+    from sparkpdf.testing.corpora import synthesize_clustered_embeddings
 
     return ivfpq_residual_topk(
         synthesize_clustered_embeddings(_t(spark, sf_dir, "embeddings"))
@@ -618,8 +611,8 @@ def q_ivfpq_recall_clustered(spark, sf_dir):
     from sparkpdf.operators.similarity import (
         brute_force_topk,
         ivfpq_residual_topk,
-        synthesize_clustered_embeddings,
     )
+    from sparkpdf.testing.corpora import synthesize_clustered_embeddings
 
     cl = synthesize_clustered_embeddings(_t(spark, sf_dir, "embeddings"))
     exact = brute_force_topk(cl, n_queries=4, k=3).select(
@@ -658,11 +651,9 @@ def q_warc_pages(spark, sf_dir):
     # (sources/warc_source.warc_pages), then prove the HTTP payload
     # survived byte-exactly by running the DOM parser on it: og_title
     # and lang must match their planted formulas
-    from sparkpdf.operators.text import (
-        extract_web_features,
-        synthesize_warc_corpus,
-    )
+    from sparkpdf.operators.text import extract_web_features
     from sparkpdf.sources.warc_source import warc_pages
+    from sparkpdf.testing.corpora import synthesize_warc_corpus
 
     pages = warc_pages(
         synthesize_warc_corpus(_t(spark, sf_dir, "documents"))
@@ -974,10 +965,8 @@ def q_overlay_pages(spark, sf_dir):
 
 
 def _paged(spark, sf_dir, n_pages=3):
-    from sparkpdf.operators.extract import (
-        extract_page_spans,
-        synthesize_paged_corpus,
-    )
+    from sparkpdf.operators.extract import extract_page_spans
+    from sparkpdf.testing.corpora import synthesize_paged_corpus
 
     return extract_page_spans(
         synthesize_paged_corpus(_t(spark, sf_dir, "documents"), n_pages)
@@ -1031,7 +1020,7 @@ def q_insert_page(spark, sf_dir):
 
 def q_extract_stats(spark, sf_dir):
     # round 9: fused synth+stats — one python layer, scalars-only IPC
-    from sparkpdf.operators.extract import synthesize_and_extract_stats
+    from sparkpdf.testing.corpora import synthesize_and_extract_stats
 
     return synthesize_and_extract_stats(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1369,7 +1358,8 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 def q_multimodal_features(spark, sf_dir):
-    from sparkpdf.operators.multimodal import extract_media_features, synthesize_media
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_media
 
     return extract_media_features(
         synthesize_media(_t(spark, sf_dir, "documents"))
@@ -1379,10 +1369,8 @@ def q_multimodal_features(spark, sf_dir):
 def q_ccitt_ink_ratio(spark, sf_dir):
     # F8 closed: full T.6 MMR pixel decode of Group-4 TIFF payloads;
     # the oracle restates the planted black-rectangle ratio by formula
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_g4_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_g4_media
 
     return extract_media_features(
         synthesize_g4_media(_t(spark, sf_dir, "documents"))
@@ -1392,10 +1380,8 @@ def q_ccitt_ink_ratio(spark, sf_dir):
 def q_media_dims(spark, sf_dir):
     # REAL header decode: dims parsed from the PNG IHDR / JPEG SOF bytes
     # (kernels/media.py); the oracle restates them by formula
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_image_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_image_media
 
     return extract_media_features(
         synthesize_image_media(_t(spark, sf_dir, "documents"))
@@ -1420,10 +1406,8 @@ def q_png_pixel_stats(spark, sf_dir):
     # REAL PNG pixel decode (zlib + in-house PNG row filters): mean
     # ITU-R 601 luminance in integer arithmetic, restated pixel-by-pixel
     # in SQL — the engine must actually unfilter the scanlines to match
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_image_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_image_media
 
     feats = extract_media_features(
         synthesize_image_media(_t(spark, sf_dir, "documents"))
@@ -1438,10 +1422,8 @@ def q_jpeg_pixel_stats(spark, sf_dir):
     # kernels/jpeg.py — the reference passes ALL DCT payloads through
     # undecoded): flat even-offset tiles survive Annex-K quantization
     # exactly, so the oracle restates the decoded mean in SQL
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_jpeg_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_jpeg_media
 
     feats = extract_media_features(
         synthesize_jpeg_media(_t(spark, sf_dir, "documents"))
@@ -1455,10 +1437,8 @@ def q_jpeg12_pixel_stats(spark, sf_dir):
     # kernels/jpeg.py r5): planted tiles at 16x the 8-bit corpus
     # values survive the x16-scaled Annex-K quantization exactly, so
     # the oracle mean is exactly 16x the 8-bit formula
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_jpeg12_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_jpeg12_media
 
     feats = extract_media_features(
         synthesize_jpeg12_media(_t(spark, sf_dir, "documents"))
@@ -1507,10 +1487,8 @@ def q_gif_anim_stats(spark, sf_dir):
     # kernels/media.gif_frames_info): frame count and summed GCE
     # delays from the real block walk, mean luminance from the LZW
     # frame decode; all pure doc_id formulas for the oracle
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_animated_gif_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_animated_gif_media
 
     feats = extract_media_features(
         synthesize_animated_gif_media(_t(spark, sf_dir, "documents"))
@@ -1527,10 +1505,8 @@ def q_tiff_pixel_stats(spark, sf_dir):
     # tiled, planar x JPEG strips, and OLD-style JPEG (compression 6,
     # tags 513/514 — the VERDICT-r6 'missing #3' corner) — one oracle
     # formula certifies all eight decode paths at once
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_tiff_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_tiff_media
 
     feats = extract_media_features(
         synthesize_tiff_media(_t(spark, sf_dir, "documents"))
@@ -1544,10 +1520,8 @@ def q_bmp_pixel_stats(spark, sf_dir):
     # TWISTED palette) — same raster math as the AVI '00db' video
     # lane, under the BMP file header; one formula oracle, with the
     # palette indirection folded in on the d%3==2 lane
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_bmp_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_bmp_media
 
     feats = extract_media_features(
         synthesize_bmp_media(_t(spark, sf_dir, "documents"))
@@ -1559,10 +1533,8 @@ def q_pnm_pixel_stats(spark, sf_dir):
     # round 7: REAL binary-netpbm decode (P5 gray 8-bit / P6 RGB /
     # P5 16-bit big-endian at native depth — the jpeg12 discipline:
     # 16-bit mean is exactly 257x the 8-bit formula)
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_pnm_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_pnm_media
 
     feats = extract_media_features(
         synthesize_pnm_media(_t(spark, sf_dir, "documents"))
@@ -1575,10 +1547,8 @@ def q_webp_dims(spark, sf_dir):
     # different ways; header-only BY DESIGN (VP8 entropy decode is
     # conformance-vector-blocked — the arithmetic-JPEG rationale), so
     # pixel stats stay NULL and dims/format/digest flow
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_webp_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_webp_media
 
     feats = extract_media_features(
         synthesize_webp_media(_t(spark, sf_dir, "documents"))
@@ -1594,10 +1564,8 @@ def q_jp2_dims(spark, sf_dir):
     # structures; header-only BY DESIGN (EBCOT/MQ entropy decode is
     # conformance-vector-blocked — the WebP rationale), so pixel
     # stats stay NULL and dims/bit-depth flow
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_jp2_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_jp2_media
 
     feats = extract_media_features(
         synthesize_jp2_media(_t(spark, sf_dir, "documents"))
@@ -1614,8 +1582,8 @@ def q_pdf_embedded_jp2(spark, sf_dir):
     from sparkpdf.operators.multimodal import (
         extract_media_features,
         extract_media_payloads,
-        write_pdfs_with_jp2_media,
     )
+    from sparkpdf.testing.corpora import write_pdfs_with_jp2_media
 
     pdfs = write_pdfs_with_jp2_media(_t(spark, sf_dir, "documents"))
     payloads = extract_media_payloads(pdfs)
@@ -1637,10 +1605,8 @@ def q_tga_ico_pixel_stats(spark, sf_dir):
     # a twisted colormap) + ICO first-image decode (classic
     # doubled-height DIB entry AND a PNG-compressed entry through the
     # full PNG path) — five container/codec lanes, one formula oracle
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_tga_ico_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_tga_ico_media
 
     feats = extract_media_features(
         synthesize_tga_ico_media(_t(spark, sf_dir, "documents"))
@@ -1652,10 +1618,8 @@ def q_jpeg_lossless_stats(spark, sf_dir):
     # LOSSLESS JPEG (SOF3, Annex H) pixel decode: 12-bit gray, a
     # different predictor selector per doc (1 + d%7) — decode is exact
     # for every selector, so the oracle mean is the planted row formula
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_lossless_jpeg_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_lossless_jpeg_media
 
     feats = extract_media_features(
         synthesize_lossless_jpeg_media(_t(spark, sf_dir, "documents"))
@@ -1671,8 +1635,8 @@ def q_pdf_embedded_media(spark, sf_dir):
     from sparkpdf.operators.multimodal import (
         extract_media_features,
         extract_media_payloads,
-        write_pdfs_with_jpeg_media,
     )
+    from sparkpdf.testing.corpora import write_pdfs_with_jpeg_media
 
     pdfs = write_pdfs_with_jpeg_media(_t(spark, sf_dir, "documents"))
     payloads = extract_media_payloads(pdfs)  # error col = quarantine lane
@@ -1720,10 +1684,8 @@ def q_av_media_features(spark, sf_dir):
     # audio/video stub CLOSED (r2 verdict item 7): REAL WAV/RIFF chunk
     # and MP4/ISO-BMFF box parsing (kernels/media.py); the oracle
     # restates the planted container metadata by formula
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_av_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_av_media
 
     return extract_media_features(
         synthesize_av_media(_t(spark, sf_dir, "documents"))
@@ -1744,10 +1706,8 @@ def q_wav_pcm_stats(spark, sf_dir):
     # every WAV body sample decoded (16/8-bit PCM squares + G.711
     # mu-law/A-law via the public closed-form expansion); the oracle
     # restates the planted waveforms' exact rms/peak/mean by formula
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_wav_pcm_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_wav_pcm_media
 
     return extract_audio_pcm_features(
         synthesize_wav_pcm_media(_t(spark, sf_dir, "documents"))
@@ -1761,10 +1721,8 @@ def q_flac_pcm_stats(spark, sf_dir):
     # CONSTANT/VERBATIM/FIXED/LPC subframes + rice residuals incl.
     # escapes + mid-side decorrelation, CRC-8/16 verified) — the
     # oracle restates the planted lossless waveforms' exact stats
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_flac_pcm_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_flac_pcm_media
 
     return extract_audio_pcm_features(
         synthesize_flac_pcm_media(_t(spark, sf_dir, "documents"))
@@ -1783,8 +1741,8 @@ def q_attachment_audio_stats(spark, sf_dir):
     from sparkpdf.operators.multimodal import (
         extract_attachment_media,
         extract_audio_pcm_features,
-        synthesize_attachment_pdf_media,
     )
+    from sparkpdf.testing.corpora import synthesize_attachment_pdf_media
 
     media = extract_attachment_media(
         synthesize_attachment_pdf_media(_t(spark, sf_dir, "documents"))
@@ -1802,10 +1760,8 @@ def q_video_frame_stats(spark, sf_dir):
     # 8-bit palettized), rotating by d%5. The planted uniform
     # even-gray tiles decode losslessly in every lane, so one
     # generate_series oracle covers all demux+decode paths.
-    from sparkpdf.operators.multimodal import (
-        extract_video_frame_features,
-        synthesize_mjpeg_media,
-    )
+    from sparkpdf.operators.multimodal import extract_video_frame_features
+    from sparkpdf.testing.corpora import synthesize_mjpeg_media
 
     return extract_video_frame_features(
         synthesize_mjpeg_media(_t(spark, sf_dir, "documents"))
@@ -1820,10 +1776,8 @@ def q_aiff_au_pcm_stats(spark, sf_dir):
     # Sun/NeXT AU (.snd header; linear BE + G.711 lanes). The oracle
     # restates the planted squares' exact stats; the engine must
     # parse the containers and decode every big-endian sample.
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_bigendian_audio_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_bigendian_audio_media
 
     return extract_audio_pcm_features(
         synthesize_bigendian_audio_media(_t(spark, sf_dir, "documents"))
@@ -1837,10 +1791,8 @@ def q_audio_segment_stats(spark, sf_dir):
     # sliced into 64-sample windows, exact-int stats per segment. The
     # corpus aligns loud/silent blocks to segment boundaries, so
     # every row is closed-form over a generate_series cross join.
-    from sparkpdf.operators.multimodal import (
-        extract_audio_segments,
-        synthesize_segmented_wav_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_segments
+    from sparkpdf.testing.corpora import synthesize_segmented_wav_media
 
     return extract_audio_segments(
         synthesize_segmented_wav_media(_t(spark, sf_dir, "documents")),
@@ -1858,8 +1810,8 @@ def q_audio_silence_spans(spark, sf_dir):
     from sparkpdf.operators.multimodal import (
         detect_silence_spans,
         extract_audio_segments,
-        synthesize_segmented_wav_media,
     )
+    from sparkpdf.testing.corpora import synthesize_segmented_wav_media
 
     segs = extract_audio_segments(
         synthesize_segmented_wav_media(_t(spark, sf_dir, "documents")),
@@ -1879,8 +1831,8 @@ def q_video_scene_cuts(spark, sf_dir):
     from sparkpdf.operators.multimodal import (
         detect_scene_cuts,
         extract_video_frame_features,
-        synthesize_mjpeg_media,
     )
+    from sparkpdf.testing.corpora import synthesize_mjpeg_media
 
     frames = extract_video_frame_features(
         synthesize_mjpeg_media(_t(spark, sf_dir, "documents")))
@@ -1894,10 +1846,8 @@ def q_mp4_audio_stats(spark, sf_dir):
     # sowt/twos/in24/raw) — the engine resolves the ISO-BMFF sample
     # table (stsc runs x stco x stsz) and decodes every PCM sample;
     # compressed codecs (mp4a) quarantine. Closed-form squares.
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_mp4_pcm_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_mp4_pcm_media
 
     return extract_audio_pcm_features(
         synthesize_mp4_pcm_media(_t(spark, sf_dir, "documents"))
@@ -1912,10 +1862,8 @@ def q_ogg_flac_stats(spark, sf_dir):
     # reassemble packets through lacing incl. page-spanning
     # continuations, rebuild the native stream and run the full FLAC
     # frame decode. Closed-form squares: rms = peak = k/8, mean 0.
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_ogg_flac_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_ogg_flac_media
 
     return extract_audio_pcm_features(
         synthesize_ogg_flac_media(_t(spark, sf_dir, "documents"))
@@ -1931,10 +1879,8 @@ def q_adpcm_pcm_stats(spark, sf_dir):
     # on closed-form waveforms the oracle restates per variant;
     # the engine must parse the extended fmt chunk, walk the blocks
     # and run the IMA/MS adaptation state to match.
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_adpcm_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_adpcm_media
 
     return extract_audio_pcm_features(
         synthesize_adpcm_media(_t(spark, sf_dir, "documents"))

@@ -41,7 +41,7 @@ def bench_corpus(spark, sf_dir: str, mult: int):
     text expanded TEXT_REP x so per-doc work is realistic."""
     from pyspark.sql import functions as F
 
-    from sparkpdf.operators.extract import synthesize_pdf_corpus
+    from sparkpdf.testing.corpora import synthesize_pdf_corpus
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", F.expr(f"repeat(text, {TEXT_REP})").alias("text")
@@ -110,10 +110,8 @@ def timed_web_extraction(
     pass, best-of-N."""
     from pyspark.sql import functions as F
 
-    from sparkpdf.operators.text import (
-        extract_web_docs,
-        synthesize_web_corpus,
-    )
+    from sparkpdf.operators.text import extract_web_docs
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     docs = spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet")
@@ -162,10 +160,8 @@ def timed_interleaved_extraction(spark, sf_dir: str, cpus: int,
     best-of-N)."""
     from pyspark.sql import functions as F
 
-    from sparkpdf.operators.extract import (
-        extract_interleaved,
-        synthesize_interleaved_corpus,
-    )
+    from sparkpdf.operators.extract import extract_interleaved
+    from sparkpdf.testing.corpora import synthesize_interleaved_corpus
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     corpus = synthesize_interleaved_corpus(docs).repartition(cpus).persist()
@@ -210,8 +206,8 @@ def timed_stream_web(spark, sf_dir: str, cpus: int) -> dict:
 
     from pyspark.sql import functions as F
 
-    from sparkpdf.operators.text import synthesize_web_corpus
     from sparkpdf.streaming.ingest import stream_web_extract
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     base = os.path.join(tempfile.gettempdir(), "sparkpdf_stream_web")
     shutil.rmtree(base, ignore_errors=True)
@@ -483,10 +479,8 @@ def main():
     # sampled pixel-stats decision path (r4 verdict item 4): the
     # per-format decode-vs-header choice the production job would make
     # on this corpus's image mix
-    from sparkpdf.operators.multimodal import (
-        pixel_stats_policy,
-        synthesize_image_media,
-    )
+    from sparkpdf.operators.multimodal import pixel_stats_policy
+    from sparkpdf.testing.corpora import synthesize_image_media
 
     pol = pixel_stats_policy(
         synthesize_image_media(

@@ -192,7 +192,8 @@ def exp_web(argv):
     from pyspark.sql import functions as F
 
     import bench
-    from sparkpdf.operators.text import extract_web_docs, synthesize_web_corpus
+    from sparkpdf.operators.text import extract_web_docs
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     spark = _spark()
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
@@ -270,8 +271,8 @@ def exp_stream(argv):
     from pyspark.sql import functions as F
 
     import bench
-    from sparkpdf.operators.text import synthesize_web_corpus
     from sparkpdf.streaming.ingest import stream_web_extract
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     spark = _spark()
     base = os.path.join(tempfile.gettempdir(), "sparkpdf_stream_extra")

@@ -9,7 +9,8 @@
 Pipeline: scan -> byte-size-aware salting (skew defence, SURVEY §4.3)
 -> checkpointed per-slice extraction with a _progress manifest
 (restart with --resume skips completed slices; north-rule lineage).
-On a cluster, drop the local[] master and let spark-submit supply it.
+get_spark keeps the master spark-submit was given (--master), so the
+same command runs on a laptop or a cluster.
 """
 
 from __future__ import annotations

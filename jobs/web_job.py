@@ -79,7 +79,6 @@ def main(argv=None, spark=None):
         from sparkpdf.sources.warc_source import read_warc_dir, warc_pages
 
         if args.auto_target:
-            from sparkpdf.operators.text import extract_web_docs
             from sparkpdf.plans.salting import (
                 WHALE_COST_FACTOR,
                 plan_salted_partitions,

@@ -85,56 +85,6 @@ def _stats_row(doc_id, data):
             len(data), res["error"])
 
 
-def _text_pdf(doc_id, text) -> bytes:
-    """The synthesized corpus document for a documents(doc_id, text)
-    row (shared by synthesize_pdf_corpus and the fused lanes)."""
-    from ..testing.pdfgen import doc_to_pdf
-
-    return doc_to_pdf(text or "", n_media=1, title=f"doc-{doc_id}")
-
-
-def _synth_input(documents: DataFrame, n_partitions: int | None):
-    """documents -> (doc_id string, text) repartitioned by doc_id
-    BEFORE the kernel: a small parquet scan arrives as 1-2 tasks, which
-    would serialize the per-doc Python work."""
-    if n_partitions is None:
-        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
-    return documents.select(doc_id_str(), F.col("text")).repartition(
-        n_partitions, "doc_id")
-
-
-def synthesize_and_extract_spans(
-    documents: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
-    """Fused synthesize_pdf_corpus + extract_spans in ONE Python
-    layer (round 9): row-identical to
-    extract_spans(synthesize_pdf_corpus(documents)) — pinned by
-    tests/test_fused_extract.py and the extract_spans oracle — but the
-    synthesized PDF bytes never cross the Arrow boundary and the
-    pipeline pays ONE python-runner layer instead of two chained ones
-    (each (task x runner) costs a measured ~6 ms serialized worker
-    handshake; at 32 tasks that is ~0.2 s of wall per layer)."""
-    return map_kernel(
-        _synth_input(documents, n_partitions), ["doc_id", "text"],
-        lambda d, text: [_span_row(d, _text_pdf(d, text))],
-        INTERLEAVED_SCHEMA,
-    )
-
-
-def synthesize_and_extract_stats(
-    documents: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
-    """Fused synthesize_pdf_corpus + extract_stats (round 9): one
-    python-runner layer, and NEITHER the PDF bytes NOR the span text
-    ever cross Arrow — the output is five scalars per doc. Row-identical
-    to extract_stats(synthesize_pdf_corpus(documents))."""
-    return map_kernel(
-        _synth_input(documents, n_partitions), ["doc_id", "text"],
-        lambda d, text: [_stats_row(d, _text_pdf(d, text))],
-        STATS_SCHEMA,
-    )
-
-
 def extract_spans(pdf_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """pdf_raw(doc_id, pdf_bytes, ...) -> documents_interleaved.
     `password` decrypts standard-security-handler docs (C3)."""
@@ -167,7 +117,7 @@ def extract_page_spans(pdf_raw: DataFrame) -> DataFrame:
                       PAGE_SPAN_SCHEMA)
 
 
-# --- corpus synthesis (documents table -> pdf_raw), also distributed --------
+# --- pdf_raw and mixed PDF/HTML payloads ------------------------------------
 
 PDF_RAW_SCHEMA = StructType(
     [
@@ -262,71 +212,6 @@ def extract_interleaved(
     if content_type_col is not None:
         cols.append(F.col(content_type_col).alias("content_type"))
     return map_kernel(raw, cols, _interleaved_row, INTERLEAVED_SCHEMA)
-
-
-def synthesize_interleaved_corpus(
-    documents: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
-    """documents(doc_id, text) -> (doc_id, payload): even doc_ids
-    become PDFs (doc_to_pdf — the extract_spans corpus, 1 text + 1
-    media span), odd doc_ids become HTML pages with the doc text as
-    the lead paragraph, one <img src="img-{d}"> and a formula closing
-    paragraph (2 text spans + 1 media_ref span), with the usual
-    nav/header/footer boilerplate the extractor must strip. Both
-    lanes are closed-form so one DuckDB oracle covers the mixed
-    output."""
-
-    def row(doc_id, text):
-        from ..kernels.html import synthesize_interleaved_html
-        from ..testing.pdfgen import doc_to_pdf
-
-        d = int(doc_id)
-        if d % 2 == 0:
-            return [(str(d), doc_to_pdf(text, title=f"doc-{d}"))]
-        return [(str(d), synthesize_interleaved_html(d, text).encode("utf-8"))]
-
-    return map_kernel(_synth_input(documents, n_partitions),
-                      ["doc_id", "text"], row,
-                      "doc_id string, payload binary")
-
-
-def synthesize_pdf_corpus(
-    documents: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
-    """documents(doc_id, text, ...) -> pdf_raw(doc_id, pdf_bytes).
-
-    Deterministic: doc_to_pdf is pure, so the corpus is reproducible on
-    any cluster size; used by entry(), the oracle queries, and bench.
-
-    Repartitions BEFORE the kernel: a small parquet scan arrives as 1-2
-    tasks, which would serialize the per-doc Python work — the explicit
-    shuffle buys full-cluster parallelism for the expensive stage.
-
-    n_partitions defaults to 1x defaultParallelism (round 9): each
-    (task x python-runner) pays a measured ~6 ms serialized worker
-    handshake, so 2x parallelism doubled that convoy for zero balance
-    gain on a uniform synthesized corpus (64 -> 32 tasks halved
-    q_extract_spans wall). Skewed REAL corpora should size partitions
-    with plans/salting.py, not this default.
-    """
-    return map_kernel(_synth_input(documents, n_partitions),
-                      ["doc_id", "text"],
-                      lambda d, text: [(d, _text_pdf(d, text))],
-                      PDF_RAW_SCHEMA)
-
-
-def synthesize_paged_corpus(
-    documents: DataFrame, n_pages: int = 3, n_partitions: int | None = None
-) -> DataFrame:
-    """Multi-page variant of synthesize_pdf_corpus (page ops at scale)."""
-
-    def row(doc_id, text):
-        from ..testing.pdfgen import doc_to_pdf_paged
-
-        return [(doc_id, doc_to_pdf_paged(text or "", n_pages))]
-
-    return map_kernel(_synth_input(documents, n_partitions),
-                      ["doc_id", "text"], row, PDF_RAW_SCHEMA)
 
 
 # --- metadata-only projection (P1: getDocumentInfo analog) -------------------

@@ -30,7 +30,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -38,7 +37,6 @@ from pyspark.sql.types import (
 
 from ..kernels.media import PIXEL_DECODABLE_FORMATS, audio_info, video_info
 from ._kernel import doc_id_str, map_kernel
-from .extract import PDF_RAW_SCHEMA
 
 MEDIA_SCHEMA = StructType(
     [
@@ -115,414 +113,6 @@ DECODERS = {
 }
 
 
-def _per_doc(documents: DataFrame, schema, row_fn) -> DataFrame:
-    """One synthesized row per document: `row_fn(d)` gives the columns
-    after doc_id for the integer doc_id d. Repartitions by doc_id
-    first: a small scan arrives as 1-2 tasks, which would serialize
-    the per-doc Python work."""
-    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    return map_kernel(ids.repartition(n_parts, "doc_id"), ["doc_id"],
-                      lambda d: [(str(d), *row_fn(d))], schema)
-
-
-def synthesize_media(documents: DataFrame) -> DataFrame:
-    """documents -> one deterministic fake-image row per doc (payload =
-    md5(text) bytes via JVM-side functions; no Python here)."""
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias("media_ref"),
-        F.lit("image").alias("modality"),
-        # payload = ASCII bytes of the md5 hex digest: DuckDB's sha256
-        # only hashes VARCHAR, so the oracle chain is sha256(md5(text))
-        F.md5(F.col("text").cast("binary")).cast("binary").alias("payload"),
-    )
-
-
-def synthesize_image_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL image per doc (PNG for even doc_id, JPEG
-    for odd) with formula dimensions width = 16 + doc_id % 32,
-    height = 8 + doc_id % 16 — so the oracle can state the expected
-    dims in pure SQL while the engine must actually parse the binary
-    headers to reproduce them."""
-
-    def row(d):
-        from ..testing.imagegen import make_jpeg, make_png
-
-        w, h = 16 + d % 32, 8 + d % 16
-        payload = make_png(w, h) if d % 2 == 0 else make_jpeg(w, h)
-        return f"img-{d}", "image", payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_bmp_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL BMP per doc, rotating by d%4 across the
-    DIB variants (0 -> 24-bit bottom-up; 1 -> 24-bit TOP-DOWN,
-    negative biHeight; 2 -> 8-bit palettized over the TWISTED palette
-    pal[i] = (7*i+13)%256 — the indirection proves the decoder reads
-    the palette, not the indices; 3 -> BI_RLE8 COMPRESSED 8-bit over
-    the gray-identity palette — encoded runs AND absolute-mode spans,
-    round 7). Planted per-row gray g(d,y) = 40 + ((d + y*11) % 50)*4
-    at dims (24 + (d%3)*8) x (8 + (d%2)*8) — the tiff corpus
-    formulas, so the oracle is the same closed form with a palette
-    CASE on the d%4==2 lane."""
-    twisted = b"".join(
-        bytes(((7 * i + 13) % 256,) * 3 + (0,)) for i in range(256))
-
-    def row(d):
-        import numpy as np
-
-        from ..testing.imagegen import make_bmp
-
-        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-        img = np.zeros((h, w), np.uint8)
-        for y in range(h):
-            img[y, :] = 40 + ((d + y * 11) % 50) * 4
-        lane = d % 4
-        if lane == 2:
-            payload = make_bmp(img, bits=8, palette=twisted)
-        elif lane == 3:
-            payload = make_bmp(img, bits=8, rle=True)
-        else:
-            payload = make_bmp(img, topdown=(lane == 1))
-        return f"bmp-{d}", "image", payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_pnm_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL binary netpbm per doc, rotating by d%3
-    (0 -> P5 8-bit graymap; 1 -> P6 RGB pixmap with gray-valued
-    pixels — the integer 299/587/114 luma weights sum to 1000 so the
-    mean equals the planted gray exactly; 2 -> P5 16-BIT graymap at
-    maxval 65535 storing g*257, the standard 8->16 bit scaling, so
-    the native-depth mean is exactly 257x the 8-bit formula). Same
-    g(d,y)/dims formulas as the bmp corpus."""
-
-    def row(d):
-        import numpy as np
-
-        from ..testing.imagegen import make_pnm
-
-        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-        img = np.zeros((h, w), np.uint8)
-        for y in range(h):
-            img[y, :] = 40 + ((d + y * 11) % 50) * 4
-        lane = d % 3
-        if lane == 1:
-            payload = make_pnm(np.repeat(img[..., None], 3, axis=2))
-        elif lane == 2:
-            payload = make_pnm(
-                img.astype(np.uint16) * 257, maxval=65535)
-        else:
-            payload = make_pnm(img)
-        return f"pnm-{d}", "image", payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_webp_media(documents: DataFrame) -> DataFrame:
-    """documents -> one WebP per doc, layout rotating by d%3
-    (VP8 lossy header / VP8L lossless bitfields / VP8X extended
-    canvas) at formula dims width = 16 + d%32, height = 8 + d%16 —
-    each layout encodes dims differently, so one dims oracle
-    certifies all three header parsers."""
-
-    def row(d):
-        from ..testing.imagegen import make_webp
-
-        kind = ("vp8", "vp8l", "vp8x")[d % 3]
-        return f"webp-{d}", "image", make_webp(16 + d % 32, 8 + d % 16, kind)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_jp2_media(documents: DataFrame) -> DataFrame:
-    """documents -> one JPEG 2000 per doc, layout rotating by d%3
-    (raw j2k codestream / jp2 container / jp2 container with an
-    XLBox-length jp2c) at formula dims width = 20 + d%40,
-    height = 10 + d%20, n_components = 1 + (d%2)*2 (gray or RGB),
-    bit_depth = (8,10,12,16)[d%4] — each layout stores the dims in a
-    different structure (SIZ grid vs ihdr), so one dims oracle
-    certifies the codestream parser, the box walk, and the
-    extended-length path."""
-
-    def row(d):
-        from ..testing.imagegen import make_jp2
-
-        kind = ("j2k", "jp2", "jp2xl")[d % 3]
-        return f"jp2-{d}", "image", make_jp2(
-            20 + d % 40, 10 + d % 20, n_components=1 + (d % 2) * 2,
-            bit_depth=(8, 10, 12, 16)[d % 4], kind=kind)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_tga_ico_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL TGA or ICO per doc, rotating by d%5
-    (0 -> TGA grayscale type 3; 1 -> TGA truecolor type 2 with REAL
-    RLE packets, gray-valued BGR; 2 -> TGA palettized type 1 over the
-    TWISTED palette (7i+13)%256, RLE on odd docs; 3 -> ICO classic
-    DIB entry (doubled-height XOR+AND planes); 4 -> ICO with a
-    PNG-compressed entry — the full PNG pixel path inside the ICO
-    container). Same g(d,y)/dims formulas as the bmp corpus, so the
-    oracle is one closed form with the palette CASE on lane 2."""
-    twisted = b"".join(bytes(((7 * i + 13) % 256,) * 3) for i in range(256))
-
-    def row(d):
-        import numpy as np
-
-        from ..testing.imagegen import make_ico, make_tga
-
-        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-        img = np.zeros((h, w), np.uint8)
-        for y in range(h):
-            img[y, :] = 40 + ((d + y * 11) % 50) * 4
-        lane = d % 5
-        if lane == 0:
-            payload = make_tga(img, topdown=(d % 2 == 1))
-        elif lane == 1:
-            payload = make_tga(
-                np.repeat(img[..., None], 3, axis=2), rle=True)
-        elif lane == 2:
-            payload = make_tga(img, img_type=1, palette=twisted,
-                               rle=(d % 2 == 1))
-        elif lane == 3:
-            payload = make_ico(img)
-        else:
-            payload = make_ico(img, png=True)
-        return f"tga-{d}", "image", payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_g4_media(documents: DataFrame) -> DataFrame:
-    """documents -> one Group-4 TIFF per doc: width = 16 + doc_id % 32,
-    height = 8 + doc_id % 16, the top half(height//2 rows) solid black —
-    so the expected ink_ratio is (height//2)/height, SQL-restatable,
-    while the engine must really run the T.6 MMR decode to measure it."""
-
-    def row(d):
-        from ..kernels.ccitt_g4 import g4_encode
-        from ..kernels.filters import ccitt_fax_wrap
-
-        w, h = 16 + d % 32, 8 + d % 16
-        bitmap = [[1] * w if r < h // 2 else [0] * w for r in range(h)]
-        payload = ccitt_fax_wrap(
-            g4_encode(bitmap, w), {"/K": -1, "/Columns": w, "/Rows": h}
-        )
-        return f"scan-{d}", "image", payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_av_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL audio/video container per doc (doc_id % 7;
-    round 5 widens the round-3 4-way corpus with FLAC/Ogg/AVI) with
-    formula metadata the oracle can restate in SQL while the engine
-    must parse the real binary headers (RIFF chunks / BMFF boxes /
-    Layer-III frame walk / EBML / STREAMINFO bitfields / Ogg granule):
-      0 WAV:  sample_rate = 8000 + (d%8)*1000, duration_ms = 100 + d%400
-      1 MP4:  width = 320 + (d%8)*16, height = 240 + (d%4)*16,
-              duration_ms = 500 + d%1000
-      2 MP3:  sample_rate = 32000, frames = 5 + d%20 ->
-              duration_ms = (5 + d%20) * 36
-      3 MKV:  width = 100 + d%300, height = 80 + d%200,
-              duration_ms = 700 + d%900
-      4 FLAC: sample_rate = 16000 + (d%4)*8000, duration_ms = 200 + d%600
-      5 OGG:  vorbis (even d): rate = 24000, duration_ms = 300 + d%500;
-              opus (odd d): rate = 16000 + (d%3)*16000, same duration
-              (granule math stays exact: 24000 and 48000 divide 1000ms)
-      6 AVI:  width = 160 + (d%10)*32, height = 120 + (d%6)*32,
-              duration_ms = 400 + d%800 (25 fps -> exact usec math)"""
-
-    def row(d):
-        from ..testing.imagegen import (
-            make_avi,
-            make_flac,
-            make_mkv,
-            make_mp3,
-            make_mp4,
-            make_ogg,
-            make_wav,
-        )
-
-        v = d % 7
-        if v == 0:
-            modality = "audio"
-            payload = make_wav(8000 + (d % 8) * 1000, 100 + d % 400)
-        elif v == 1:
-            modality = "video"
-            payload = make_mp4(
-                320 + (d % 8) * 16, 240 + (d % 4) * 16, 500 + d % 1000
-            )
-        elif v == 2:
-            modality = "audio"
-            payload = make_mp3(5 + d % 20, id3=(d % 8 == 6))
-        elif v == 3:
-            modality = "video"
-            payload = make_mkv(
-                100 + d % 300, 80 + d % 200, 700 + d % 900
-            )
-        elif v == 4:
-            modality = "audio"
-            payload = make_flac(
-                16000 + (d % 4) * 8000, 200 + d % 600
-            )
-        elif v == 5:
-            modality = "audio"
-            payload = make_ogg(
-                24000 if d % 2 == 0 else 16000 + (d % 3) * 16000,
-                300 + d % 500,
-                codec="vorbis" if d % 2 == 0 else "opus",
-            )
-        else:
-            modality = "video"
-            payload = make_avi(
-                160 + (d % 10) * 32, 120 + (d % 6) * 32,
-                400 + d % 800,
-            )
-        return f"av-{d}", modality, payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_gif_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL LZW-coded GIF frame per doc. The planted
-    gray palette and index pattern make the decoded mean luminance a
-    pure doc_id formula (GIF decode is lossless palette lookup):
-      npal = 8, palette[k] = gray 30 + ((d + k*7) % 26) * 8
-      width = 24 + (d%3)*8  (a multiple of npal), height = 8 + d%8
-      index(x, y) = (x + y) % 8  -> every palette entry appears equally
-      often in each row, so mean_luma = avg_k palette[k], exactly.
-    Odd docs are INTERLACED (4-pass row order) — same pixels, so the
-    oracle doesn't move while the de-interlacer is exercised."""
-
-    def row(d):
-        from ..testing.imagegen import make_gif_frame
-
-        w, h = 24 + (d % 3) * 8, 8 + d % 8
-        pal = [(v, v, v) for v in
-               (30 + ((d + k * 7) % 26) * 8 for k in range(8))]
-        rows = [[(x + y) % 8 for x in range(w)] for y in range(h)]
-        return (f"gif-{d}", "image",
-                make_gif_frame(rows, pal, interlace=bool(d % 2)))
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_animated_gif_media(documents: DataFrame) -> DataFrame:
-    """documents -> one ANIMATED GIF per doc (round 5): n_frames =
-    1 + d%4 identical pattern frames, per-frame GCE delay =
-    (10 + d%20) cs -> duration_ms = n_frames * (10 + d%20) * 10; the
-    first frame reuses the gif corpus's gray-palette trick so
-    mean_luma = avg_k(30 + ((d + k*7) % 26) * 8) exactly. The engine
-    must walk the real block stream (gif_frames_info) AND LZW-decode
-    frame 1 to match."""
-
-    def row(d):
-        from ..testing.imagegen import make_animated_gif
-
-        w, h = 24 + (d % 3) * 8, 8 + d % 8
-        pal = [(v, v, v) for v in
-               (30 + ((d + k * 7) % 26) * 8 for k in range(8))]
-        rows = [[(x + y) % 8 for x in range(w)] for y in range(h)]
-        n = 1 + d % 4
-        delay = 10 + d % 20
-        return f"anim-{d}", "image", make_animated_gif(
-            [rows] * n, pal, [delay] * n, loop=d % 3)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
-    """documents -> one TIFF per doc cycling EIGHT organizations
-    over identical luma (rounds 5-7 — the oracle formula never moves
-    while the engine exercises every decode path):
-      d%8==0 strip, uncompressed      d%8==1 strip, LZW + predictor 2
-      d%8==2 TILED 16x16, LZW         d%8==3 JPEG strips (lossless SOF3)
-      d%8==4 RGB PLANAR (tag 284=2), LZW + predictor 2, multi-strip —
-             gray-valued planes (R=G=B=row value), so the 299/587/114
-             luma equals the gray formula exactly (round 6)
-      d%8==5 RGB PLANAR x TILED 16x16, LZW + predictor 2 (round 7 —
-             the §14 x §15 combination, previously a quarantine)
-      d%8==6 RGB PLANAR x JPEG strips (round 7 — §14 x compression 7,
-             per-plane grayscale SOF3 with shared JPEGTables)
-      d%8==7 OLD-style JPEG (compression 6, round 7): one SOF3
-             interchange stream under JPEGInterchangeFormat 513/514 —
-             lossless, so the shared formula still holds
-    width = 24 + (d%3)*8, height = 8 + (d%2)*8, row y is the constant
-    40 + ((d + y*11) % 50) * 4 -> mean_luma = avg_y(row value), exact
-    (heights 8/16 keep the mean's decimals terminating)."""
-
-    def row(d):
-        import numpy as np
-
-        from ..testing.imagegen import (
-            make_tiff,
-            make_tiff_jpeg,
-            make_tiff_ojpeg,
-            make_tiff_tiled,
-        )
-
-        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-        img = np.zeros((h, w), dtype=np.uint8)
-        for y in range(h):
-            img[y, :] = 40 + ((d + y * 11) % 50) * 4
-        v = d % 8
-        if v == 0:
-            payload = make_tiff(img)
-        elif v == 1:
-            payload = make_tiff(img, compression=5,
-                                rows_per_strip=4, predictor=2)
-        elif v == 2:
-            payload = make_tiff_tiled(img, 16, 16, compression=5)
-        elif v == 3:
-            payload = make_tiff_jpeg(img, rows_per_strip=8)
-        elif v == 4:
-            rgb = np.repeat(img[..., None], 3, axis=2)
-            payload = make_tiff(rgb, compression=5,
-                                rows_per_strip=4, predictor=2,
-                                planar=2)
-        elif v == 5:
-            rgb = np.repeat(img[..., None], 3, axis=2)
-            payload = make_tiff_tiled(rgb, 16, 16,
-                                      compression=5,
-                                      predictor=2, planar=2)
-        elif v == 6:
-            rgb = np.repeat(img[..., None], 3, axis=2)
-            payload = make_tiff_jpeg(rgb, rows_per_strip=8,
-                                     planar=2,
-                                     shared_tables=True)
-        else:
-            payload = make_tiff_ojpeg(img)
-        return f"tif-{d}", "image", payload
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_lossless_jpeg_media(documents: DataFrame) -> DataFrame:
-    """documents -> one LOSSLESS JPEG (SOF3) per doc: 12-bit gray,
-    predictor = 1 + d%7 (decode is exact for every selector), row y
-    constant 400 + ((d + y*13) % 200) * 16, width = 24 + (d%3)*8,
-    height = 8 + (d%2)*8 -> mean_luma = avg_y(row value) exactly."""
-
-    def row(d):
-        import numpy as np
-
-        from ..kernels.jpeg import encode_jpeg_lossless
-
-        w, h = 24 + (d % 3) * 8, 8 + (d % 2) * 8
-        img = np.zeros((h, w), dtype=np.uint16)
-        for y in range(h):
-            img[y, :] = 400 + ((d + y * 13) % 200) * 16
-        return f"ljpg-{d}", "image", encode_jpeg_lossless(
-            img, predictor=1 + d % 7, precision=12)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
 MEDIA_PAYLOAD_SCHEMA = StructType(
     MEDIA_SCHEMA.fields + [StructField("error", StringType())]
 )
@@ -546,146 +136,6 @@ def extract_media_payloads(pdf_raw: DataFrame) -> DataFrame:
 
     return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], row,
                       MEDIA_PAYLOAD_SCHEMA)
-
-
-def _tile_jpeg(d: int) -> bytes:
-    """The deterministic planted-tile JPEG for doc d: flat 8x8 tiles at
-    78 + 2*((t*7 + d) % 51) (even offsets from 128 survive Annex-K DC
-    quantization exactly). Encoding varies by doc so the corpus
-    exercises every decoder path while the ORACLE FORMULA never moves:
-      d%4==0 -> grayscale 4:4:4 baseline
-      d%4==1 -> gray-valued RGB, 4:2:0, restart_interval=2
-      d%4==2 -> gray-valued RGB, 4:2:2, restart_interval=1
-      d%4==3 -> gray-valued RGB, 4:2:0, PROGRESSIVE (SOF2, Annex G)
-    Gray-valued RGB keeps decode lossless under subsampling: Y == v
-    (the luma weights sum to 1) and Cb == Cr == 128 exactly, so chroma
-    box-averaging and upsampling are the identity; progressive carries
-    the same quantized coefficients as sequential, so it is equally
-    lossless on these tiles."""
-    import numpy as np
-
-    from ..kernels.jpeg import encode_jpeg, encode_jpeg_progressive
-
-    w, h = 16 + (d % 4) * 8, 8 + (d % 2) * 8
-    img = np.zeros((h, w), dtype=np.uint8)
-    tiles_x = w // 8
-    for ty in range(h // 8):
-        for tx in range(tiles_x):
-            t = ty * tiles_x + tx
-            img[ty * 8:(ty + 1) * 8, tx * 8:(tx + 1) * 8] = (
-                78 + 2 * ((t * 7 + d) % 51)
-            )
-    variant = d % 4
-    if variant == 0:
-        return encode_jpeg(img)
-    rgb = np.repeat(img[..., None], 3, axis=2)
-    if variant == 1:
-        return encode_jpeg(rgb, subsampling="420", restart_interval=2)
-    if variant == 2:
-        return encode_jpeg(rgb, subsampling="422", restart_interval=1)
-    return encode_jpeg_progressive(rgb, subsampling="420")
-
-
-def _tile_jpeg12(d: int) -> bytes:
-    """12-bit planted-tile JPEG for doc d (r4 verdict item 8 —
-    medical/scanned corpora): flat 8x8 tiles at
-    1248 + 32*((t*7 + d) % 51) = 16x the 8-bit corpus values, so the
-    offsets from the 2048 level shift are multiples of 32 and survive
-    the x16-scaled Annex-K DC quantization exactly (step 256, DC =
-    8*delta -> delta/32 integral). Even docs are EXTENDED SEQUENTIAL
-    (SOF1, 16-bit DQT); odd docs are 12-bit PROGRESSIVE (SOF2). The
-    oracle mean is exactly 16x the 8-bit formula."""
-    import numpy as np
-
-    from ..kernels.jpeg import encode_jpeg, encode_jpeg_progressive
-
-    w, h = 16 + (d % 4) * 8, 8 + (d % 2) * 8
-    img = np.zeros((h, w), dtype=np.uint16)
-    tiles_x = w // 8
-    for ty in range(h // 8):
-        for tx in range(tiles_x):
-            t = ty * tiles_x + tx
-            img[ty * 8:(ty + 1) * 8, tx * 8:(tx + 1) * 8] = (
-                1248 + 32 * ((t * 7 + d) % 51)
-            )
-    if d % 2 == 0:
-        return encode_jpeg(img, precision=12)
-    return encode_jpeg_progressive(img, precision=12)
-
-
-def synthesize_jpeg12_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL 12-bit JPEG per doc (_tile_jpeg12):
-    width = 16 + (doc_id % 4) * 8, height = 8 + (doc_id % 2) * 8,
-    tile t value = 1248 + 32 * ((t*7 + doc_id) % 51) — the engine must
-    run the full 12-bit decode (16-bit DQT, SOF1/SOF2, 2048 level
-    shift) to reproduce the SQL-restatable mean."""
-
-    def row(d):
-        return f"jpg12-{d}", "image", _tile_jpeg12(d)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_jpeg_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL baseline JPEG per doc (kernels/jpeg.py
-    encoder) with planted flat tiles (_tile_jpeg):
-      width = 16 + (doc_id % 4) * 8, height = 8 + (doc_id % 2) * 8,
-      tile t value = 78 + 2 * ((t*7 + doc_id) % 51)
-    so the oracle restates the decoded mean luminance in pure SQL while
-    the engine must run the full Huffman + IDCT decode — including the
-    4:2:0/4:2:2 chroma upsample and DRI/RSTn restart handling on two of
-    every three docs — to match."""
-
-    def row(d):
-        return f"jpg-{d}", "image", _tile_jpeg(d)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def _media_pdf(d: int, payload: bytes) -> bytes:
-    """A one-page PDF for doc d: one text span and ONE embedded media
-    XObject 'img00' holding `payload`."""
-    from ..kernels.write import spans_to_pdf
-
-    page = [
-        {"kind": "text", "text": f"doc {d}\n", "media_ref": None},
-        {"kind": "media_ref", "text": None, "media_ref": "img00"},
-    ]
-    return spans_to_pdf([page], media_payloads={"img00": payload})
-
-
-def write_pdfs_with_jpeg_media(documents: DataFrame) -> DataFrame:
-    """documents -> pdf_raw where each doc embeds ONE REAL baseline
-    JPEG ('img00') built with kernels/jpeg.encode_jpeg using the same
-    deterministic tile formulas as synthesize_jpeg_media — the input
-    side of the end-to-end chain
-    encode JPEG -> embed in PDF -> reopen PDF -> pull XObject ->
-    Huffman+IDCT decode -> stats, all in-engine and SQL-verifiable."""
-    return _per_doc(documents, PDF_RAW_SCHEMA,
-                    lambda d: (_media_pdf(d, _tile_jpeg(d)),))
-
-
-def write_pdfs_with_jp2_media(documents: DataFrame) -> DataFrame:
-    """documents -> pdf_raw where each doc embeds ONE JPEG 2000
-    payload ('img00', /Filter /JPXDecode — the reference's passthrough
-    filter) at the synthesize_jp2_media formulas: the end-to-end
-    chain  build jp2 -> embed as JPX XObject -> reopen the PDF ->
-    pull the payload -> header parse -> dims/bits, all in-engine and
-    SQL-verifiable. Layout rotates d%3 so the codestream, container
-    and XLBox paths all survive the PDF round-trip byte-exactly."""
-
-    def row(d):
-        from ..testing.imagegen import make_jp2
-
-        payload = make_jp2(
-            20 + d % 40, 10 + d % 20,
-            n_components=1 + (d % 2) * 2,
-            bit_depth=(8, 10, 12, 16)[d % 4],
-            kind=("j2k", "jp2", "jp2xl")[d % 3],
-        )
-        return (_media_pdf(d, payload),)
-
-    return _per_doc(documents, PDF_RAW_SCHEMA, row)
 
 
 def extract_media_features(
@@ -762,138 +212,6 @@ def extract_audio_pcm_features(media: DataFrame) -> DataFrame:
                       AUDIO_PCM_SCHEMA)
 
 
-def synthesize_wav_pcm_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL WAV per doc (doc_id % 6) whose waveform
-    has a CLOSED-FORM rms/peak/mean the oracle restates in SQL while
-    the engine must parse the RIFF chunks and decode every sample:
-      0: 16-bit PCM square wave, A = 4096*(1 + d%7)
-         -> rms = peak = A/32768 (exact eighths), n = 2*(100 + d%250)
-      1: 8-bit PCM square wave, A = 2*(1 + d%63)
-         -> rms = peak = A/128, n = 2*(50 + d%200)
-      2: G.711 mu-law, bytes 0x80/0x00 -> +-32124
-         -> rms = peak = 32124/32768, n = 2*(60 + d%100)
-      3: G.711 A-law, bytes 0xAA/0x2A -> +-32256
-         -> rms = peak = 32256/32768, n = 2*(60 + d%100)
-      4: 24-bit PCM square, A = 2^20*(1 + d%7)
-         -> rms = peak = A/2^23 (exact eighths), n = 2*(40 + d%80)
-      5: IEEE float32 square, amp = 0.125*(1 + d%7) (exact binary)
-         -> rms = peak = amp, n = 2*(30 + d%60)
-    All squares alternate +A/-A over an even frame count, so mean is
-    exactly 0; amplitudes are picked so every 6-dp round is exact on
-    both engines (terminating binary fractions)."""
-
-    def row(d):
-        import struct
-
-        from ..testing.imagegen import make_wav
-
-        v = d % 6
-        rate = 8000 + (d % 8) * 1000
-        if v == 0:
-            amp = 4096 * (1 + d % 7)
-            n = 2 * (100 + d % 250)
-            data = struct.pack(
-                f"<{n}h", *([amp, -amp] * (n // 2))
-            )
-            wav = make_wav(rate, 0, bits=16, data=data)
-        elif v == 1:
-            amp = 2 * (1 + d % 63)
-            n = 2 * (50 + d % 200)
-            data = bytes([128 + amp, 128 - amp] * (n // 2))
-            wav = make_wav(rate, 0, bits=8, data=data)
-        elif v == 2:
-            n = 2 * (60 + d % 100)
-            data = bytes([0x80, 0x00] * (n // 2))
-            wav = make_wav(rate, 0, bits=8, data=data, fmt_code=7)
-        elif v == 3:
-            n = 2 * (60 + d % 100)
-            data = bytes([0xAA, 0x2A] * (n // 2))
-            wav = make_wav(rate, 0, bits=8, data=data, fmt_code=6)
-        elif v == 4:
-            amp = (1 << 20) * (1 + d % 7)
-            n = 2 * (40 + d % 80)
-            pos = amp.to_bytes(3, "little", signed=True)
-            neg = (-amp).to_bytes(3, "little", signed=True)
-            data = (pos + neg) * (n // 2)
-            wav = make_wav(rate, 0, bits=24, data=data)
-        else:
-            amp = 0.125 * (1 + d % 7)
-            n = 2 * (30 + d % 60)
-            data = struct.pack(
-                f"<{n}f", *([amp, -amp] * (n // 2))
-            )
-            wav = make_wav(rate, 0, bits=32, data=data,
-                           fmt_code=3)
-        return f"wav-{d}", "audio", wav
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_flac_pcm_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL FLAC per doc (doc_id % 6) covering the
-    codec surface — the engine must parse STREAMINFO, frame headers,
-    subframes, rice residuals and stereo decorrelation (CRCs and all)
-    to recover waveforms whose stats the oracle restates in SQL:
-      0: CONSTANT subframe, 16-bit, A = 1024*(1 + d%7)
-         -> rms = peak = mean = A/32768, n = 100 + d%250
-      1: VERBATIM square +-A, A = 4096*(1 + d%7)
-         -> rms = peak = A/32768, mean 0, n = 2*(50 + d%200)
-      2: FIXED-2 square (partition order 1), same A
-         -> same closed form, n = 2*(60 + d%100)
-      3: LPC (order 1, shift 2) square, 24-bit, A = 2^20*(1 + d%7)
-         -> rms = peak = A/2^23 = 0.125*(1 + d%7), n = 2*(40 + d%80)
-      4: MID-SIDE stereo, L = +A / R = -A constant, A = 4096*(1+d%7)
-         -> rms = peak = A/32768, mean 0, n = 2*(60 + d%100)
-      5: 8-bit square with ESCAPED rice partitions, A = 2*(1 + d%31)
-         -> rms = peak = A/128, mean 0, n = 2*(50 + d%200)
-    Amplitudes are terminating binary fractions (exact 6-dp rounds on
-    both engines); FLAC is lossless, so decode is exact by
-    construction."""
-
-    def row(d):
-        from ..testing.imagegen import encode_flac
-
-        v = d % 6
-        rate = 8000 + (d % 8) * 1000
-        if v == 0:
-            amp = 1024 * (1 + d % 7)
-            n = 100 + d % 250
-            blob = encode_flac([amp] * n, rate,
-                               subframe="constant")
-        elif v == 1:
-            amp = 4096 * (1 + d % 7)
-            n = 2 * (50 + d % 200)
-            blob = encode_flac([amp, -amp] * (n // 2), rate,
-                               subframe="verbatim")
-        elif v == 2:
-            amp = 4096 * (1 + d % 7)
-            n = 2 * (60 + d % 100)
-            blob = encode_flac([amp, -amp] * (n // 2), rate,
-                               subframe="fixed2",
-                               partition_order=1)
-        elif v == 3:
-            amp = (1 << 20) * (1 + d % 7)
-            n = 2 * (40 + d % 80)
-            blob = encode_flac([amp, -amp] * (n // 2), rate,
-                               bits=24, subframe="lpc1")
-        elif v == 4:
-            amp = 4096 * (1 + d % 7)
-            n = 2 * (60 + d % 100)
-            blob = encode_flac([amp, -amp] * (n // 2), rate,
-                               channels=2,
-                               stereo_mode="mid-side",
-                               subframe="constant")
-        else:
-            amp = 2 * (1 + d % 31)
-            n = 2 * (50 + d % 200)
-            blob = encode_flac([amp, -amp] * (n // 2), rate,
-                               bits=8, subframe="fixed1",
-                               rice_escape=True)
-        return f"flac-{d}", "audio", blob
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
 def extract_attachment_media(pdf_raw: DataFrame) -> DataFrame:
     """pdf_raw -> media(doc_id, media_ref, modality, payload, error):
     pulls every EMBEDDED FILE (the catalog /Names /EmbeddedFiles tree,
@@ -939,30 +257,6 @@ def extract_attachment_media(pdf_raw: DataFrame) -> DataFrame:
 
     return map_kernel(pdf_raw, [doc_id_str(), "pdf_bytes"], row,
                       MEDIA_PAYLOAD_SCHEMA)
-
-
-def synthesize_attachment_pdf_media(documents: DataFrame) -> DataFrame:
-    """documents -> pdf_raw(doc_id, pdf_bytes) where each PDF carries
-    the doc's synthesize_wav_pcm_media waveform as an EMBEDDED FILE
-    (catalog /Names /EmbeddedFiles, the write side the reference
-    calls addAttachment). The end-to-end contract: PDF byte
-    serialization -> xref/COS parse -> name-tree walk -> Flate stream
-    decode -> RIFF chunk walk -> per-sample PCM/G.711 decode, all
-    under the SAME closed-form oracle as wav_pcm_stats."""
-    wavs = synthesize_wav_pcm_media(documents)
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-
-    def row(d, media_ref, payload):
-        from ..kernels.write import spans_to_pdf
-
-        page = [{"kind": "text", "text": f"audio host {d}", "media_ref": None}]
-        return [(d, spans_to_pdf(
-            [page], title=f"att-{d}",
-            attachments=[(f"{media_ref}.wav", bytes(payload))],
-        ))]
-
-    return map_kernel(wavs.repartition(n_parts, "doc_id"),
-                      ["doc_id", "media_ref", "payload"], row, PDF_RAW_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -1095,324 +389,6 @@ def detect_scene_cuts(frames: DataFrame,
         .select("doc_id", "media_ref", "frame_idx", "mean_luma",
                 "prev_luma", "delta")
     )
-
-
-def synthesize_mjpeg_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL movie per doc, container/codec rotating
-    by d%5 (0 -> RIFF/AVI MJPEG with movi chunks + idx1; 1 -> ISO-BMFF
-    MP4 MJPEG with a full stsd/stsc/stco/stsz sample table, 2 samples
-    per chunk so a short last chunk exercises real sample-to-chunk
-    resolution; 2 -> Matroska with a V_MJPEG TrackEntry and one
-    SimpleBlock per frame; 3 -> AVI UNCOMPRESSED 24-bit BI_RGB DIB,
-    top-down when d is odd; 4 -> AVI UNCOMPRESSED 8-bit palettized
-    DIB over the gray-identity palette — round 7 widens the video
-    lane beyond MJPEG): nf = 1 + d%5 uniform gray frames at value
-    g_i = 16 + 2*((d + 37*i) % 112) — EVEN gray values survive the
-    Annex-K DC quantizer exactly (DC = 8*(g-128) with quantizer 16
-    needs (g-128) even), and DIB decode is lossless for any value,
-    so each decoded frame's mean luma is its planted gray value
-    bit-for-bit. Dims (16 + 8*(d%4)) x (8 + 8*(d%3)) exercise
-    non-square tiles and real DIB row padding (24-bit rows of
-    widths 24/40 are 72/120 bytes — not multiples of 4). The
-    frame formulas are container/codec-independent, so ONE
-    generate_series oracle covers every demux+decode path."""
-
-    def row(d):
-        import numpy as np
-
-        from ..kernels.jpeg import encode_jpeg
-        from ..testing.imagegen import (
-            make_avi,
-            make_mkv_mjpeg,
-            make_mp4_mjpeg,
-        )
-
-        nf = 1 + d % 5
-        w = 16 + 8 * (d % 4)
-        h = 8 + 8 * (d % 3)
-        grays = [16 + 2 * ((d + 37 * i) % 112)
-                 for i in range(nf)]
-        lane = d % 5
-        if lane in (3, 4):  # uncompressed DIB lanes (round 7)
-            tiles = [np.full((h, w), g, dtype=np.uint8)
-                     for g in grays]
-            blob = make_avi(
-                w, h, 0, fps=25, dib_frames=tiles,
-                dib_bits=24 if lane == 3 else 8,
-                topdown=(lane == 3 and d % 2 == 1))
-        else:
-            frames = [
-                encode_jpeg(np.full((h, w), g, dtype=np.uint8))
-                for g in grays
-            ]
-            if lane == 1:
-                blob = make_mp4_mjpeg(w, h, frames,
-                                      samples_per_chunk=2)
-            elif lane == 2:
-                blob = make_mkv_mjpeg(w, h, frames)
-            else:
-                blob = make_avi(w, h, 0, fps=25, frames=frames)
-        return f"mjpeg-{d}", "video", blob
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_bigendian_audio_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL AIFF/AIFF-C or Sun AU payload per doc
-    (doc_id % 8) with closed-form waveforms (k = 1 + d%7; squares
-    alternate so mean is exactly 0 and every 6-dp round is exact on
-    both engines):
-      0: AIFF 16-bit BE square, A = 4096k -> rms = peak = k/8,
-         n = 2*(50 + d%200)
-      1: AIFF 8-bit SIGNED square (AIFF is signed at every depth),
-         A = 2*(1 + d%63) -> A/128, n = 2*(40 + d%120)
-      2: AIFF 24-bit STEREO (L=+A, R=-A constant), A = 2^20*k
-         -> 0.125k, n = 2*(30 + d%90) total samples
-      3: AU 16-bit BE square, A = 4096k -> k/8, n = 2*(60 + d%100)
-      4: AU G.711 mu-law 0x80/0x00 -> +-32124, n = 2*(60 + d%100)
-      5: AU G.711 A-law 0xAA/0x2A -> +-32256, n = 2*(60 + d%100)
-      6: AIFF-C 'sowt' (LITTLE-endian 16-bit inside the BE
-         container), A = 4096k -> k/8, n = 2*(50 + d%150)
-      7: AIFF-C 'ulaw' 0x80/0x00 -> +-32124, n = 2*(40 + d%120)
-    The engine must walk IFF chunks (COMM's 80-bit extended rate,
-    the AIFC compression fourcc, SSND offset) or the .snd header and
-    decode the samples to match the oracle's restated formulas."""
-
-    def row(d):
-        import struct
-
-        from ..testing.imagegen import make_aiff, make_au
-
-        v = d % 8
-        k = 1 + d % 7
-        rate = 8000 + (d % 8) * 1000
-        if v == 0:
-            amp = 4096 * k
-            n = 2 * (50 + d % 200)
-            blob = make_aiff(rate, 1, 16, struct.pack(
-                f">{n}h", *([amp, -amp] * (n // 2))))
-        elif v == 1:
-            amp = 2 * (1 + d % 63)
-            n = 2 * (40 + d % 120)
-            blob = make_aiff(rate, 1, 8, struct.pack(
-                f">{n}b", *([amp, -amp] * (n // 2))))
-        elif v == 2:
-            amp = (1 << 20) * k
-            n = 2 * (30 + d % 90)
-            pos = amp.to_bytes(3, "big", signed=True)
-            neg = (-amp).to_bytes(3, "big", signed=True)
-            blob = make_aiff(rate, 2, 24, (pos + neg) * (n // 2))
-        elif v == 3:
-            amp = 4096 * k
-            n = 2 * (60 + d % 100)
-            blob = make_au(rate, 1, 3, struct.pack(
-                f">{n}h", *([amp, -amp] * (n // 2))))
-        elif v == 4:
-            n = 2 * (60 + d % 100)
-            blob = make_au(rate, 1, 1, bytes([0x80, 0x00] * (n // 2)))
-        elif v == 5:
-            n = 2 * (60 + d % 100)
-            blob = make_au(rate, 1, 27, bytes([0xAA, 0x2A] * (n // 2)))
-        elif v == 6:
-            amp = 4096 * k
-            n = 2 * (50 + d % 150)
-            blob = make_aiff(rate, 1, 16, struct.pack(
-                f"<{n}h", *([amp, -amp] * (n // 2))),
-                compression=b"sowt")
-        else:
-            n = 2 * (40 + d % 120)
-            blob = make_aiff(rate, 1, 8,
-                             bytes([0x80, 0x00] * (n // 2)),
-                             compression=b"ulaw")
-        return f"be-audio-{d}", "audio", blob
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_segmented_wav_media(documents: DataFrame) -> DataFrame:
-    """documents -> one 16-bit WAV per doc whose waveform alternates
-    LOUD and SILENT blocks exactly aligned to 64-sample segments:
-    r = 1 + d%3 repeats of [L = 2 + d%3 loud segments (square +-A,
-    A = 4096k, k = 1 + d%7)] + [Q = 1 + d%2 zero segments]. Every
-    segment is full, loud segments have rms = peak = k/8 / mean 0 and
-    silent ones are exactly 0 — closed forms for BOTH the
-    per-segment query and the silence-span islands."""
-
-    def row(d):
-        import struct
-
-        from ..testing.imagegen import make_wav
-
-        k = 1 + d % 7
-        amp = 4096 * k
-        r = 1 + d % 3
-        loud_segs = 2 + d % 3
-        quiet_segs = 1 + d % 2
-        vals = ((([amp, -amp] * 32) * loud_segs
-                 + [0] * (64 * quiet_segs)) * r)
-        data = struct.pack(f"<{len(vals)}h", *vals)
-        return f"seg-wav-{d}", "audio", make_wav(
-            8000 + (d % 8) * 1000, 0, bits=16, data=data)
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_mp4_pcm_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL PCM-in-MP4 movie per doc (doc_id % 4),
-    QuickTime uncompressed sample entries over closed-form squares
-    (k = 1 + d%7; mean exactly 0 except the raw variant's midpoint):
-      0: 'sowt' LE 16-bit, A = 4096k, n = 2*(50 + d%200)
-      1: 'twos' BE 16-bit, A = 4096k, n = 2*(60 + d%100)
-      2: 'in24' BE 24-bit STEREO L=+A/R=-A, A = 2^20*k,
-         n = 2*(40 + d%80) total samples
-      3: 'raw ' unsigned 8-bit, A = 2*(1 + d%63), n = 2*(50 + d%120)
-    The table samples hold 64 PCM frames each (2 per chunk), so the
-    engine exercises real stsc/stco/stsz resolution per §8.7."""
-
-    def row(d):
-        import struct
-
-        from ..testing.imagegen import make_mp4_pcm
-
-        v = d % 4
-        k = 1 + d % 7
-        rate = 8000 + (d % 8) * 1000
-        if v == 0:
-            n = 2 * (50 + d % 200)
-            amp = 4096 * k
-            blob = make_mp4_pcm(rate, 1, b"sowt", struct.pack(
-                f"<{n}h", *([amp, -amp] * (n // 2))))
-        elif v == 1:
-            n = 2 * (60 + d % 100)
-            amp = 4096 * k
-            blob = make_mp4_pcm(rate, 1, b"twos", struct.pack(
-                f">{n}h", *([amp, -amp] * (n // 2))))
-        elif v == 2:
-            n = 2 * (40 + d % 80)
-            amp = (1 << 20) * k
-            pos = amp.to_bytes(3, "big", signed=True)
-            neg = (-amp).to_bytes(3, "big", signed=True)
-            blob = make_mp4_pcm(rate, 2, b"in24",
-                                (pos + neg) * (n // 2))
-        else:
-            n = 2 * (50 + d % 120)
-            amp = 2 * (1 + d % 63)
-            blob = make_mp4_pcm(rate, 1, b"raw ", bytes(
-                [128 + amp, 128 - amp] * (n // 2)))
-        return f"mp4-pcm-{d}", "audio", blob
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_ogg_flac_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL Ogg-FLAC stream per doc (doc_id % 4),
-    exercising every demux shape under closed-form waveforms
-    (k = 1 + d%7; squares alternate so mean is exactly 0):
-      0: one frame, one audio packet, one page (A = 4096k,
-         n = 2*(50 + d%200))
-      1: MULTI-FRAME (block_size 32 -> many packets packed greedily
-         into pages), A = 4096k, n = 2*(60 + d%100)
-      2: packet SPANNING pages (16-bit VERBATIM frame, 4-segment page
-         budget -> continuation flags + lacing reassembly),
-         A = 4096k, n = 2*(300 + d%300)
-      3: mid-side stereo constant L=+A/R=-A, A = 4096k,
-         n = 2*(60 + d%100) total samples
-    All page CRCs are real and VERIFIED by the demuxer; rms = peak =
-    k/8 exactly for every variant, mean 0."""
-
-    def row(d):
-        from ..testing.imagegen import make_ogg_flac
-
-        v = d % 4
-        amp = 4096 * (1 + d % 7)
-        rate = 8000 + (d % 8) * 1000
-        if v == 0:
-            n = 2 * (50 + d % 200)
-            blob = make_ogg_flac([amp, -amp] * (n // 2), rate)
-        elif v == 1:
-            n = 2 * (60 + d % 100)
-            blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
-                                 block_size=32)
-        elif v == 2:
-            n = 2 * (300 + d % 300)
-            blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
-                                 subframe="verbatim",
-                                 max_segs_per_page=4)
-        else:
-            n = 2 * (60 + d % 100)
-            blob = make_ogg_flac([amp, -amp] * (n // 2), rate,
-                                 channels=2,
-                                 stereo_mode="mid-side",
-                                 subframe="constant")
-        return f"ogg-flac-{d}", "audio", blob
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
-
-
-def synthesize_adpcm_media(documents: DataFrame) -> DataFrame:
-    """documents -> one REAL ADPCM WAV per doc (doc_id % 4) whose
-    nibble streams are constructed so the spec state machines decode
-    to closed-form waveforms (k = 1 + d%7, B = 1 + d%4 blocks):
-      0: IMA mono, pred A = 4096k-2 at step index 0 (step 7), bytes
-         0xB3 = nibbles 3/11 -> exactly +-4 with the index pinned at 0
-         -> samples per block: A, then (A+4, A) x 4g, g = 2 + d%6
-      1: IMA stereo, L=+A / R=-A (A = 4096k), all-zero nibbles (step 7
-         -> diff 0) -> constant; mean 0, rms = peak = A/32768 exact
-      2: MS mono, coeff set 0 (256,0), delta 16 (the floor: 230*16>>8
-         = 14 -> clamps back to 16), bytes 0x1F = +1/-1 -> A+16, A
-         alternation after the two header samples; A = 4096k-8,
-         m = 2 + d%7 data bytes
-      3: MS mono, coeff set 1 (512,-256): s1 = s2 = A = 4096k keeps
-         the prediction at A under zero nibbles -> constant;
-         mean = rms = peak = k/8 exact, m = 1 + d%6
-    The engine must parse the extended fmt chunk, walk the blocks and
-    run the public adaptation tables to match; peaks are terminating
-    binary fractions, means/rms mirror the kernel's exact-int
-    accumulation in the oracle's CASE formulas."""
-
-    def row(d):
-        from ..testing.imagegen import (
-            ima_adpcm_block,
-            make_wav_adpcm,
-            ms_adpcm_block,
-        )
-
-        v = d % 4
-        k = 1 + d % 7
-        blocks = 1 + d % 4
-        rate = 8000 + (d % 8) * 1000
-        if v == 0:
-            g = 2 + d % 6
-            ba = 4 + 4 * g
-            blk = ima_adpcm_block(
-                [4096 * k - 2], [0], bytes([0xB3]) * (4 * g))
-            wav = make_wav_adpcm(rate, 1, 17, ba, 1 + 8 * g,
-                                 blk * blocks)
-        elif v == 1:
-            g = 1 + d % 5
-            ba = 8 + 8 * g
-            blk = ima_adpcm_block(
-                [4096 * k, -4096 * k], [0, 0], bytes(8 * g))
-            wav = make_wav_adpcm(rate, 2, 17, ba, 1 + 8 * g,
-                                 blk * blocks)
-        elif v == 2:
-            m = 2 + d % 7
-            ba = 7 + m
-            blk = ms_adpcm_block(
-                [0], [16], [4096 * k - 8], [4096 * k - 8],
-                bytes([0x1F]) * m)
-            wav = make_wav_adpcm(rate, 1, 2, ba, 2 + 2 * m,
-                                 blk * blocks)
-        else:
-            m = 1 + d % 6
-            ba = 7 + m
-            blk = ms_adpcm_block(
-                [1], [16], [4096 * k], [4096 * k], bytes(m))
-            wav = make_wav_adpcm(rate, 1, 2, ba, 2 + 2 * m,
-                                 blk * blocks)
-        return f"adpcm-{d}", "audio", wav
-
-    return _per_doc(documents, MEDIA_SCHEMA, row)
 
 
 def sniff_image_format(payload_col) -> "F.Column":

@@ -603,67 +603,6 @@ def pq_topk(
     )
 
 
-def synthesize_clustered_embeddings(
-    embeddings: DataFrame, dim: int = 64
-) -> DataFrame:
-    """Deterministic CLUSTERED embedding corpus (round 8) — the
-    realistic-data counterpart of the iid-random embeddings table,
-    where ANN recall is meaningful (iid vectors are PQ's adversarial
-    worst case, pq_recall ~= 0.25 by design). Integer-valued so both
-    engines compute bit-identical doubles:
-
-      emb[j] = 10*center(c,j) + 2*pat(t,j) + micro(v,j)
-        c      = v % 8                      (cluster; vec 0..7 seed
-                                             one k-means centroid per
-                                             cluster)
-        k      = v // 32                    (duplicate-group block)
-        digit  = k%8 for subspaces 0,2;
-                 (k//8 + 2*(k%4)) % 8 for subspaces 1,3
-                 ((digit0, digit1) identifies k for k < 64, i.e. all
-                 test scales, so duplicate groups never merge; BOTH
-                 digits take every value 0..7 uniformly over k, so
-                 every subspace carries pattern signal in every
-                 cluster — a dead or cluster-skewed subspace would
-                 train its codebook on jitter/cluster offsets and
-                 corrupt the ADC sum)
-        t      = (digit + c) % 8            (+c so vecs 0..7 also seed
-                                             all 8 PQ patterns per
-                                             subspace)
-        center = ((c*37 + j*11) % 19) - 9
-        pat    = ((t*23 + j*5) % 9) - 4
-        micro  = ((v*13 + j*7) % 3) - 1
-
-    Structure: 8 well-separated centers >> 8 residual patterns per
-    subspace >> +-1 jitter; vectors sharing (c, k) — exactly 4 ids
-    v = 32k + 8i + c — are near-duplicates, so each query's exact
-    top-3 IS its duplicate group, and a residual codebook with 8
-    centroids can represent the patterns. Oracle-replayable: the SQL
-    states the same closed form."""
-    v = F.col("vec_id").cast("long")
-
-    def component(j):
-        digit = (
-            F.when((j < 16) | ((j >= 32) & (j < 48)),
-                   F.shiftright(v, 5) % 8)
-            .otherwise(
-                (F.shiftright(v, 8) % 8
-                 + 2 * (F.shiftright(v, 5) % 4)) % 8)
-        )
-        t = (digit + v % 8) % 8
-        center = ((v % 8) * 37 + j * 11) % 19 - 9
-        pat = (t * 23 + j * 5) % 9 - 4
-        micro = (v * 13 + j * 7) % 3 - 1
-        return (center * 10 + pat * 2 + micro).cast("double")
-
-    return embeddings.select(
-        v.alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)).cast("array<long>"),
-            component,
-        ).alias("embedding"),
-    )
-
-
 def ivfpq_residual_build(
     embeddings: DataFrame,
     n_lists: int = 8,

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._kernel import doc_id_str, map_kernel, quarantine_message
+from ._kernel import doc_id_str, map_docs, map_kernel, quarantine_message
 
 # small public stopword lists (enough for a deterministic heuristic)
 STOPWORDS = {
@@ -331,29 +331,6 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
 HTML_MAIN_SCHEMA = "doc_id string, title string, main_text string"
 
 
-def _by_doc(documents: DataFrame, *cols: str) -> DataFrame:
-    """documents -> (doc_id long, *cols) hash-partitioned by doc_id at
-    defaultParallelism: a small scan arrives as 1-2 tasks, which would
-    serialize the per-doc Python work of a synthesizer."""
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), *cols
-    ).repartition(n_parts, "doc_id")
-
-
-def synthesize_html_corpus(documents: DataFrame) -> DataFrame:
-    """documents -> (doc_id, html): deterministic pages with real
-    boilerplate around the text (kernels/html.synthesize_html)."""
-
-    def row(d, text):
-        from ..kernels.html import synthesize_html
-
-        return [(str(d), synthesize_html(d, text or ""))]
-
-    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
-                      "doc_id string, html string")
-
-
 def extract_html_main(pages: DataFrame) -> DataFrame:
     """(doc_id, html) -> (doc_id, title, main_text): boilerplate strip
     via the DOM-walk heuristics in kernels/html.py. Poison inputs
@@ -382,95 +359,6 @@ WEB_FEATURES_SCHEMA = (
     "sections array<struct<heading:string,level:int,text:string>>, "
     "error string"
 )
-
-
-def synthesize_web_corpus(documents: DataFrame) -> DataFrame:
-    """documents -> (doc_id, html): the RICH deterministic pages
-    (kernels/html.synthesize_webpage — planted links/meta/headings/
-    tables, all doc_id formulas) for the web-feature queries; the
-    html_main oracle keeps its own unchanged synthesize_html corpus."""
-
-    def row(d, text):
-        from ..kernels.html import synthesize_webpage
-
-        return [(str(d), synthesize_webpage(d, text or ""))]
-
-    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
-                      "doc_id string, html string")
-
-
-def synthesize_warc_corpus(documents: DataFrame) -> DataFrame:
-    """documents -> (doc_id, warc_bytes): one REAL WARC archive per
-    doc — warcinfo + request + response records with the rich webpage
-    as the HTTP payload (kernels/warc.build_warc over
-    kernels/html.synthesize_webpage). Formula-planted for oracles:
-    target URI = https://example.com/doc/{d}, HTTP status = 404 when
-    d%9==0 else 200, and ODD docs use the CommonCrawl
-    per-record-gzip-member layout (even docs plain) so both file
-    forms decode in every corpus."""
-
-    def row(d, text):
-        from ..kernels.html import synthesize_webpage
-        from ..kernels.warc import build_warc
-
-        uri = f"https://example.com/doc/{d}"
-        html = synthesize_webpage(d, text or "")
-        recs = [
-            {"warc_type": "warcinfo",
-             "record_id": f"<urn:warcinfo:{d}>",
-             "body": b"software: sparkpdf-fixture\r\n"},
-            {"warc_type": "request",
-             "record_id": f"<urn:request:{d}>",
-             "target_uri": uri,
-             "body": (f"GET /doc/{d} HTTP/1.1\r\n"
-                      "Host: example.com\r\n\r\n").encode("latin-1")},
-            {"warc_type": "response",
-             "record_id": f"<urn:response:{d}>",
-             "target_uri": uri,
-             "http_status": 404 if d % 9 == 0 else 200,
-             "body": html.encode("latin-1")},
-        ]
-        return [(str(d), build_warc(recs, gzip_members=(d % 2 == 1)))]
-
-    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
-                      "doc_id string, warc_bytes binary")
-
-
-def synthesize_warc_mixed_corpus(documents: DataFrame) -> DataFrame:
-    """documents -> (doc_id, warc_bytes): one archive per doc whose
-    response record carries a MIXED payload — even docs an
-    application/pdf body (testing/pdfgen.doc_to_pdf), odd docs a
-    text/html body (kernels/html.synthesize_interleaved_html) — the
-    real CommonCrawl shape where crawls interleave document formats.
-    Odd docs use the per-record-gzip-member layout. Feeds
-    sources/warc_source.warc_documents -> extract_interleaved."""
-
-    def row(d, text):
-        from ..kernels.html import synthesize_interleaved_html
-        from ..kernels.warc import build_warc
-        from ..testing.pdfgen import doc_to_pdf
-
-        if d % 2 == 0:
-            body = doc_to_pdf(text or "", title=f"doc-{d}")
-            ctype = "application/pdf"
-        else:
-            body = synthesize_interleaved_html(d, text or "").encode("latin-1")
-            ctype = "text/html; charset=utf-8"
-        recs = [
-            {"warc_type": "warcinfo",
-             "record_id": f"<urn:warcinfo:{d}>",
-             "body": b"software: sparkpdf-fixture\r\n"},
-            {"warc_type": "response",
-             "record_id": f"<urn:response:{d}>",
-             "target_uri": f"https://example.com/doc/{d}",
-             "http_status": 200,
-             "http_content_type": ctype,
-             "body": body},
-        ]
-        return [(str(d), build_warc(recs, gzip_members=(d % 2 == 1)))]
-
-    return map_kernel(_by_doc(documents, "text"), ["doc_id", "text"], row,
-                      "doc_id string, warc_bytes binary")
 
 
 def extract_web_features(pages: DataFrame) -> DataFrame:
@@ -579,7 +467,7 @@ def extract_robots_rules(documents: DataFrame,
                  *(int(is_allowed(r, agent, p)) for p in probe_paths),
                  int(is_allowed(r, "otherbot", "/tmp/x")))]
 
-    return map_kernel(_by_doc(documents), ["doc_id"], row, schema)
+    return map_docs(documents, [], row, schema)
 
 
 def extract_sitemap_entries(documents: DataFrame) -> DataFrame:
@@ -597,7 +485,7 @@ def extract_sitemap_entries(documents: DataFrame) -> DataFrame:
         return [(d, i, r["kind"], e.get("loc"), e.get("lastmod"),
                  e.get("priority")) for i, e in enumerate(r["entries"])]
 
-    return map_kernel(_by_doc(documents), ["doc_id"], row, schema)
+    return map_docs(documents, [], row, schema)
 
 
 def canonical_url(col) -> "F.Column":

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Callable, List, Optional
+from typing import Callable, List
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,11 +122,9 @@ class CheckpointedExtraction:
         self,
         pdf_raw: DataFrame,
         extract_fn: Callable[[DataFrame], DataFrame],
-        fail_on_parts: Optional[set] = None,
-        fail_after_write: Optional[set] = None,
     ) -> List[int]:
         """Process every not-yet-done slice; returns part_ids done this
-        run. `fail_on_parts` lets tests simulate a mid-run crash."""
+        run."""
         done = self.completed_parts()
         processed = []
         salted = pdf_raw.withColumn(
@@ -135,16 +133,11 @@ class CheckpointedExtraction:
         for part in range(self.n_batches):
             if part in done:
                 continue
-            if fail_on_parts and part in fail_on_parts:
-                raise RuntimeError(f"simulated failure at part {part}")
             t0 = time.time()
             part_df = salted.filter(F.col("_part") == part).drop("_part")
             out = extract_fn(part_df)
             dest = os.path.join(self.out_dir, f"part={part}")
             out.write.mode("overwrite").parquet(dest)
-            if fail_after_write and part in fail_after_write:
-                # simulated torn commit: data written, manifest row NOT
-                raise RuntimeError(f"simulated post-write crash at {part}")
             stats = (
                 SparkSession.getActiveSession()
                 .read.parquet(dest)

@@ -56,12 +56,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARKPDF_DRIVER_MEM", "8g"))
-        # local-mode JVM tuning experiments (e.g. GC choice at 32
-        # threads); harmless empty default
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARKPDF_DRIVER_JAVA_OPTS", ""),
-        )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
     )

@@ -5,9 +5,8 @@ queries ride on this)."""
 import pytest
 from pyspark.sql import functions as F
 
-from sparkpdf.operators.extract import (
-    extract_spans,
-    extract_stats,
+from sparkpdf.operators.extract import extract_spans, extract_stats
+from sparkpdf.testing.corpora import (
     synthesize_and_extract_spans,
     synthesize_and_extract_stats,
     synthesize_pdf_corpus,

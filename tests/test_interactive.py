@@ -228,6 +228,45 @@ def test_single_python_boundary():
     assert offenders == [("operators/_kernel.py", ".mapInArrow(")]
 
 
+def test_production_code_holds_no_corpus_builders():
+    """Production modules hold only production code: no module under
+    sparkpdf/ outside sparkpdf/testing/, and nothing in jobs/, imports
+    sparkpdf.testing, and sparkpdf/operators/ defines no corpus builder
+    (synthesize_* / write_pdfs_with_* live in
+    sparkpdf/testing/corpora.py)."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    pkg = repo / "sparkpdf"
+    files = [py for py in pkg.rglob("*.py")
+             if pkg / "testing" not in py.parents]
+    files += (repo / "jobs").rglob("*.py")
+    imports, builders = [], []
+    for py in files:
+        rel = py.relative_to(repo)
+        package = list(rel.parent.parts)
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = package[:len(package) - node.level + 1] if node.level else []
+                mod = ".".join(base + ([node.module] if node.module else []))
+                mods = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                if (isinstance(node, ast.FunctionDef)
+                        and rel.parts[:2] == ("sparkpdf", "operators")
+                        and node.name.startswith(
+                            ("synthesize_", "write_pdfs_with_"))):
+                    builders.append((str(rel), node.name))
+                continue
+            if any(m == "sparkpdf.testing" or m.startswith("sparkpdf.testing.")
+                   for m in mods):
+                imports.append((str(rel), node.lineno))
+    assert imports == []
+    assert builders == []
+
+
 def test_paper_sizes_parity():
     from sparkpdf.kernels.geometry import PAPER_SIZES, scale_mediabox
 

@@ -17,7 +17,7 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def corpus(spark, docs):
-    from sparkpdf.operators.extract import synthesize_pdf_corpus
+    from sparkpdf.testing.corpora import synthesize_pdf_corpus
 
     return synthesize_pdf_corpus(docs).cache()
 
@@ -170,8 +170,16 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
 
     out = str(tmp_path / "ckpt")
     ck = CheckpointedExtraction(out, n_batches=4)
+    calls = []
+
+    def crash_on_third_slice(part_df):
+        calls.append(part_df)
+        if len(calls) == 3:
+            raise RuntimeError("simulated failure at part 2")
+        return extract_spans(part_df)
+
     with pytest.raises(RuntimeError):
-        ck.run(corpus, extract_spans, fail_on_parts={2})
+        ck.run(corpus, crash_on_third_slice)
     done_first = ck.completed_parts()
     assert done_first == {0, 1}
     ck2 = CheckpointedExtraction(out, n_batches=4)
@@ -209,8 +217,8 @@ def test_filter_pushdown(spark):
 def test_media_features_real_decode(spark, docs):
     """md5-hex payloads are not images -> no dims (honest decode);
     real PNG/JPEG payloads -> true header dimensions (VERDICT r1 #5)."""
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import (
         synthesize_image_media,
         synthesize_media,
     )
@@ -235,10 +243,8 @@ def test_av_media_features_and_quarantine(spark, docs):
     7-way); foreign/corrupt payloads quarantine to empty features
     (NotImplementedError inside the kernel, never a dead task)."""
     from pyspark.sql import Row
-    from sparkpdf.operators.multimodal import (
-        extract_media_features,
-        synthesize_av_media,
-    )
+    from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.corpora import synthesize_av_media
 
     feats = extract_media_features(synthesize_av_media(docs)).collect()
     assert len(feats) == 60
@@ -313,8 +319,8 @@ def test_pixel_stats_policy(spark, docs, tmp_path):
         extract_media_features,
         pixel_stats_policy,
         record_pixel_policy,
-        synthesize_image_media,
     )
+    from sparkpdf.testing.corpora import synthesize_image_media
 
     media = synthesize_image_media(docs).cache()
     # decode-everything: min throughput 0, no budget
@@ -388,8 +394,8 @@ def test_streaming_warc_ingest_exactly_once(spark, docs, tmp_path):
     parquet, drain with availableNow, more land, drain again — each
     status-200 HTML response extracted exactly once through the full
     demux -> DOM pipeline; 404 responses never appear."""
-    from sparkpdf.operators.text import synthesize_warc_corpus
     from sparkpdf.streaming.ingest import stream_web_extract
+    from sparkpdf.testing.corpora import synthesize_warc_corpus
 
     in_dir = str(tmp_path / "win")
     out_dir = str(tmp_path / "wout")
@@ -447,8 +453,9 @@ def test_whale_doc_private_partition(spark, docs):
     """A multi-MB whale among 4 KB docs gets its own partition after
     byte-size-aware salting, and still extracts correctly."""
     from pyspark.sql import Row
-    from sparkpdf.operators.extract import PDF_RAW_SCHEMA, extract_spans, synthesize_pdf_corpus
+    from sparkpdf.operators.extract import PDF_RAW_SCHEMA, extract_spans
     from sparkpdf.plans.salting import plan_salted_partitions
+    from sparkpdf.testing.corpora import synthesize_pdf_corpus
     from sparkpdf.testing.pdfgen import doc_to_pdf
 
     import hashlib
@@ -599,7 +606,7 @@ def test_streaming_stateful_dedup(spark, tmp_path):
     assert len(keepers) == 3
 
 
-def test_checkpoint_torn_commit(spark, corpus, tmp_path):
+def test_checkpoint_torn_commit(spark, corpus, tmp_path, monkeypatch):
     """Crash AFTER a slice's data write but BEFORE its manifest row:
     the rerun reprocesses that slice with mode=overwrite — manifest is
     the source of truth, no duplicate or missing docs."""
@@ -608,8 +615,17 @@ def test_checkpoint_torn_commit(spark, corpus, tmp_path):
 
     out = str(tmp_path / "torn")
     ck = CheckpointedExtraction(out, n_batches=3)
+    log = ck._log
+
+    def crash_before_logging_part_1(rec):
+        # runs after the slice's data write: data on disk, no manifest row
+        if rec["part_id"] == 1:
+            raise RuntimeError("simulated post-write crash at 1")
+        log(rec)
+
+    monkeypatch.setattr(ck, "_log", crash_before_logging_part_1)
     with pytest.raises(RuntimeError):
-        ck.run(corpus, extract_spans, fail_after_write={1})
+        ck.run(corpus, extract_spans)
     assert ck.completed_parts() == {0}  # part 1 wrote data but no log
     processed = CheckpointedExtraction(out, n_batches=3).run(
         corpus, extract_spans
@@ -924,9 +940,8 @@ def test_interleaved_extract_mixed_corpus(spark, docs):
     binary payload with neither PDF magic nor textual structure
     quarantines via the error column without killing the task."""
     from pyspark.sql import Row
-    from sparkpdf.operators.extract import (
-        extract_interleaved,
-        extract_spans,
+    from sparkpdf.operators.extract import extract_interleaved, extract_spans
+    from sparkpdf.testing.corpora import (
         synthesize_interleaved_corpus,
         synthesize_pdf_corpus,
     )
@@ -1540,8 +1555,8 @@ def test_ivfpq_residual_recall_clustered(spark):
         brute_force_topk,
         ivfpq_residual_topk,
         kmeans_ivf_assignments,
-        synthesize_clustered_embeddings,
     )
+    from sparkpdf.testing.corpora import synthesize_clustered_embeddings
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cl = synthesize_clustered_embeddings(emb)
@@ -1693,9 +1708,12 @@ def test_web_lane_plan_shape(spark, docs):
     corpus synthesizer's own repartition: synth -> extract_web_docs
     (and the warc demux chain) are pure mapInPandas stages, so at
     10^12 docs the lane rides the scan partitioning end to end."""
-    from sparkpdf.operators.text import (
-        extract_web_docs, synthesize_warc_corpus, synthesize_web_corpus)
+    from sparkpdf.operators.text import extract_web_docs
     from sparkpdf.sources.warc_source import warc_pages
+    from sparkpdf.testing.corpora import (
+        synthesize_warc_corpus,
+        synthesize_web_corpus,
+    )
 
     plan = extract_web_docs(
         synthesize_web_corpus(docs)
@@ -1747,8 +1765,8 @@ def test_link_host_degree(spark):
     before every exchange (a head host arrives pre-combined, never as
     raw link rows)."""
     from pyspark.sql import Row
-    from sparkpdf.operators.text import (
-        extract_web_features, link_host_degree, synthesize_web_corpus)
+    from sparkpdf.operators.text import extract_web_features, link_host_degree
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     docs = spark.createDataFrame(
         [Row(doc_id=str(d), text=f"doc {d}") for d in range(8)])
@@ -2201,10 +2219,8 @@ def test_audio_pcm_features_quarantine(spark, docs):
     WAVs decode, poison/non-WAV payloads quarantine via the error
     column with null stats."""
     from pyspark.sql import Row
-    from sparkpdf.operators.multimodal import (
-        extract_audio_pcm_features,
-        synthesize_wav_pcm_media,
-    )
+    from sparkpdf.operators.multimodal import extract_audio_pcm_features
+    from sparkpdf.testing.corpora import synthesize_wav_pcm_media
 
     good = synthesize_wav_pcm_media(docs.limit(8))
     poison = spark.createDataFrame(
@@ -2231,10 +2247,8 @@ def test_video_frame_features_quarantine(spark, docs):
     stats null) for poison payloads — never a raise, never a dropped
     doc."""
     from pyspark.sql import Row
-    from sparkpdf.operators.multimodal import (
-        extract_video_frame_features,
-        synthesize_mjpeg_media,
-    )
+    from sparkpdf.operators.multimodal import extract_video_frame_features
+    from sparkpdf.testing.corpora import synthesize_mjpeg_media
 
     good = synthesize_mjpeg_media(docs.limit(6))
     poison = spark.createDataFrame(
@@ -2280,8 +2294,8 @@ def test_attachment_media_bridge(spark, docs):
         extract_attachment_media,
         extract_audio_pcm_features,
         extract_video_frame_features,
-        synthesize_attachment_pdf_media,
     )
+    from sparkpdf.testing.corpora import synthesize_attachment_pdf_media
     from sparkpdf.testing.imagegen import make_avi, make_wav
 
     # end-to-end WAV: written PDF -> name tree -> sample decode
@@ -2333,8 +2347,8 @@ def test_audio_segments_and_silence_spans(spark, docs):
     from sparkpdf.operators.multimodal import (
         detect_silence_spans,
         extract_audio_segments,
-        synthesize_segmented_wav_media,
     )
+    from sparkpdf.testing.corpora import synthesize_segmented_wav_media
 
     segs = extract_audio_segments(
         synthesize_segmented_wav_media(docs.limit(6)),
@@ -2446,7 +2460,7 @@ def test_web_job_end_to_end(spark, docs, tmp_path, capsys):
     wj = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(wj)
 
-    from sparkpdf.operators.text import synthesize_web_corpus
+    from sparkpdf.testing.corpora import synthesize_web_corpus
 
     in_dir = str(tmp_path / "wj_in")
     out_dir = str(tmp_path / "wj_out")
@@ -2514,7 +2528,7 @@ def test_web_job_warc_mode(spark, docs, tmp_path, capsys):
     wj = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(wj)
 
-    from sparkpdf.operators.text import synthesize_warc_corpus
+    from sparkpdf.testing.corpora import synthesize_warc_corpus
 
     warc_dir = tmp_path / "wj_warc_in"
     warc_dir.mkdir()
@@ -2560,7 +2574,7 @@ def test_media_job_budget_forces_header_only(spark, docs, tmp_path, capsys):
     mj = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mj)
 
-    from sparkpdf.operators.multimodal import write_pdfs_with_jpeg_media
+    from sparkpdf.testing.corpora import write_pdfs_with_jpeg_media
 
     in_dir = str(tmp_path / "mj_in")
     out_dir = str(tmp_path / "mj_out")
@@ -2620,7 +2634,7 @@ def test_media_job_attachments_lane(spark, docs, tmp_path, capsys):
 
     from sparkpdf.kernels.jpeg import encode_jpeg
     from sparkpdf.kernels.write import spans_to_pdf
-    from sparkpdf.operators.multimodal import (
+    from sparkpdf.testing.corpora import (
         synthesize_attachment_pdf_media,
         write_pdfs_with_jpeg_media,
     )
