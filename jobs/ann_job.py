@@ -8,13 +8,17 @@ table, run top-k cosine queries against it, persist both.
         [--exact | --pq | --ivfpq | --ivfpq-residual]
 
 Outputs under --output:
-    index/    (vec_id, centroid_id, unit)  — the inverted lists; at
-              cluster scale this IS the reusable index artifact:
-              downstream query jobs read it and broadcast only their
-              query vectors. With --pq: codes/ (vec_id, sub_id,
-              centroid_id — m_sub small ints per vector, the
-              memory-compressed corpus) and codebooks/ (the tiny
-              per-subspace centroid tables) instead
+    index/    (vec_id, unit, centroid_id) — the inverted lists the IVF
+              search probed (ivf_assignments: the first --n-lists
+              vectors are the codebook). At cluster scale this IS the
+              reusable index artifact: downstream query jobs read it
+              and broadcast only their query vectors. --ivfpq and
+              --ivfpq-residual write it as (vec_id, centroid_id), the
+              k-means lists they route over; --pq writes none.
+    codes/    (--pq, --ivfpq, --ivfpq-residual) (vec_id, sub_id,
+              centroid_id) — m_sub small ints per vector, the
+              memory-compressed corpus; codebooks/ holds the tiny
+              per-subspace centroid tables
     topk/     (query_id, neighbor_id, rank[, score])
 plus ONE summary JSON line on stdout.
 
@@ -31,7 +35,7 @@ import os
 import time
 
 
-def main(argv=None):
+def main(argv=None, spark=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--embeddings", required=True)
     ap.add_argument("--output", required=True)
@@ -62,6 +66,7 @@ def main(argv=None):
 
     from sparkpdf.operators.similarity import (
         brute_force_topk,
+        ivf_assignments,
         ivf_topk,
         ivfpq_residual_topk,
         ivfpq_topk,
@@ -71,8 +76,10 @@ def main(argv=None):
     )
     from sparkpdf.session import get_spark
 
-    spark = get_spark("sparkpdf-ann")
-    spark.sparkContext.setLogLevel("ERROR")
+    owns_spark = spark is None
+    if owns_spark:
+        spark = get_spark("sparkpdf-ann")
+        spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     emb = spark.read.parquet(args.embeddings)
 
@@ -163,9 +170,9 @@ def main(argv=None):
             prebuilt=(assigned, cents, resid, pq_cents, codes),
         )
     else:
-        index = kmeans_ivf_assignments(
-            emb, n_lists=args.n_lists, n_iters=args.n_iters
-        )
+        # the lists ivf_topk routes over, so a reader of index/ probes
+        # exactly what this search probed
+        index = ivf_assignments(emb, n_lists=args.n_lists)
         index.write.mode("overwrite").parquet(
             os.path.join(args.output, "index")
         )
@@ -196,7 +203,9 @@ def main(argv=None):
             }
         )
     )
-    spark.stop()
+    if owns_spark:
+        spark.stop()
+    return 0
 
 
 if __name__ == "__main__":

@@ -245,65 +245,35 @@ def _pack_votes(first: int, width: int):
 def ngram_jaccard_pairs(
     documents: DataFrame,
     threshold: float = 0.5,
-    block: str = "lsh",
     n_hashes: int = 4,
     bands: int = 2,
     bucket_cap: int = 10000,
 ) -> DataFrame:
-    """Pairwise token-set Jaccard over a BLOCKED candidate set.
-
-    block="lsh" (default): candidates come from minhash_lsh_pairs —
-    bucket-bounded fan-out whose cardinality (n_hashes, bands) controls;
-    this is the exact-verify stage of dup_clusters and the only shape
-    that survives 100 TB (r2 verdict item 5: the scale-safe block key
-    is the LSH bucket, in code, not in a docstring).
-
-    block="metadata": legacy (lang, source) self-join — QUADRATIC
-    within a block (one big language is O(n^2)); debugging/small-corpus
-    use only."""
+    """Pairwise token-set Jaccard over an LSH-BLOCKED candidate set:
+    candidates come from minhash_lsh_pairs — bucket-bounded fan-out
+    whose cardinality (n_hashes, bands) controls; this is the
+    exact-verify stage of dup_clusters and the only shape that
+    survives 100 TB (r2 verdict item 5: the scale-safe block key is
+    the LSH bucket, never a metadata self-join, which is quadratic
+    within one big language)."""
     toks = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang"),
-        F.col("source"),
         F.array_sort(F.array_distinct(_norm_tokens("text"))).alias("toks"),
     )
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
-    jac = (inter.cast("double") / union.cast("double"))
-    if block == "lsh":
-        cand = minhash_lsh_pairs(documents, n_hashes, bands, bucket_cap)
-        pairs = cand.join(
-            toks.select(
-                F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta")
-            ),
-            "doc_a",
-        ).join(
-            toks.select(
-                F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb")
-            ),
-            "doc_b",
-        ).select(
-            "doc_a",
-            "doc_b",
-            F.struct(F.col("ta").alias("toks")).alias("a"),
-            F.struct(F.col("tb").alias("toks")).alias("b"),
-        )
-        return pairs.select(
-            "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-        ).filter(F.col("jaccard") >= threshold)
-    if block != "metadata":
-        raise ValueError(f"unknown block strategy {block!r}")
-    a, b = toks.alias("a"), toks.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.source") == F.col("b.source"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    cand = minhash_lsh_pairs(documents, n_hashes, bands, bucket_cap)
+    pairs = cand.join(
+        toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta")),
+        "doc_a",
+    ).join(
+        toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb")),
+        "doc_b",
     )
+    inter = F.size(F.array_intersect("ta", "tb"))
+    union = F.size(F.array_union("ta", "tb"))
     return pairs.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(jac, 6).alias("jaccard"),
+        "doc_a",
+        "doc_b",
+        F.round(inter.cast("double") / union.cast("double"), 6).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
 
 

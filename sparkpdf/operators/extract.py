@@ -579,22 +579,24 @@ def write_pdfs_navigation(interleaved: DataFrame) -> DataFrame:
     return _write(interleaved, pdf)
 
 
-def _write_paged_group(key, pdf):
-    import pandas as pd
-
+def _paged_pdf_row(doc_id, pages):
     from ..kernels.write import spans_to_pdf
 
-    pages = [_page(spans) for spans in pdf.sort_values("page_no")["spans"]]
-    return pd.DataFrame({"doc_id": [key[0]], "pdf_bytes": [spans_to_pdf(pages)]})
+    ordered = sorted(pages, key=lambda p: p["page_no"])
+    return [(doc_id, spans_to_pdf([_page(p["spans"]) for p in ordered]))]
 
 
 def write_paged_pdfs(page_df: DataFrame) -> DataFrame:
-    """Page-level span table -> multi-page PDFs (one per doc_id) via
-    applyInPandas — the grouped write that makes merge/split physically
-    round-trippable (full PdfFileMerger/Writer replacement)."""
-    return page_df.select("doc_id", "page_no", "spans").groupBy("doc_id").applyInPandas(
-        _write_paged_group, schema=PDF_RAW_SCHEMA
+    """Page-level span table -> multi-page PDFs (one per doc_id): pages
+    are grouped per doc_id JVM-side, then one row kernel writes each
+    document in page_no order — the grouped write that makes
+    merge/split physically round-trippable (full PdfFileMerger/Writer
+    replacement)."""
+    docs = page_df.groupBy("doc_id").agg(
+        F.collect_list(F.struct("page_no", "spans")).alias("pages")
     )
+    return map_kernel(docs, [doc_id_str(), "pages"], _paged_pdf_row,
+                      PDF_RAW_SCHEMA)
 
 
 # --- transfer-lean stats kernel (metadata-only pipelines at scale) -----------

@@ -4,6 +4,10 @@ Brute-force cosine top-k is the exactness baseline; the LSH-bucketed
 variant is the 100 TB path (random-hyperplane signs computed from
 deterministic per-dimension weights so the oracle can reproduce them).
 Dot products run JVM-side via zip_with/aggregate — no Python.
+
+Each rule the DuckDB replays depend on lives in one helper: _top_k
+(ranking), _means (Lloyd update), _adc_lut/_adc_topk (ADC scoring),
+_probe (inverted-list join), _first (query sets and seed codebooks).
 """
 
 from __future__ import annotations
@@ -20,8 +24,55 @@ def _dot(a, b):
     )
 
 
+def _sq_l2(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, c: (x - c) * (x - c)),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
+
+
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+
+
+def _top_k(scored: DataFrame, by, score: str, tie: str, k: int,
+           ascending: bool = False) -> DataFrame:
+    """The ranking rule every search and assignment shares: within each
+    `by` group order by `score` (descending unless `ascending`), ties
+    to the lower `tie`, keep the rows whose 1-based `rank` is <= k."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(by).orderBy(order, F.col(tie).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _neighbors(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim) -> the rank-only top-k of the
+    exact/LSH/IVF searches (no floats, so oracle hashes are stable)."""
+    return _top_k(scored, "query_id", "sim", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank"
+    )
+
+
+def _first(df: DataFrame, n: int, **cols: str) -> DataFrame:
+    """The rows with vec_id < n — the deterministic query set or seed
+    codebook — projected as new_name=source_column."""
+    return df.filter(F.col("vec_id") < n).select(
+        *[F.col(src).alias(dst) for dst, src in cols.items()]
+    )
+
+
+def _probe(queries: DataFrame, assigned: DataFrame) -> DataFrame:
+    """Inverted-list scan: each broadcast query row (routed to list
+    `qlist`) meets every member of that list except itself."""
+    return (
+        F.broadcast(queries)
+        .join(assigned, F.col("qlist") == F.col("centroid_id"))
+        .filter(F.col("query_id") != F.col("vec_id"))
+    )
 
 
 def with_unit_vectors(embeddings: DataFrame) -> DataFrame:
@@ -54,9 +105,7 @@ def brute_force_topk(
     per-query top-k via window rank — the shuffle is on n_queries keys
     only. Output is rank-only (no floats) so the oracle hash is stable."""
     unit = with_unit_vectors(embeddings)
-    queries = unit.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("unit").alias("qunit")
-    )
+    queries = _first(unit, n_queries, query_id="vec_id", qunit="unit")
     scored = F.broadcast(queries).crossJoin(unit.alias("corpus")).filter(
         F.col("query_id") != F.col("vec_id")
     ).select(
@@ -64,14 +113,7 @@ def brute_force_topk(
         F.col("vec_id").alias("neighbor_id"),
         _dot(F.col("qunit"), F.col("unit")).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _neighbors(scored, k)
 
 
 def _plane_weight(j, d):
@@ -111,11 +153,8 @@ def lsh_bucket_topk(
         sum([_bucket_bit(j, j, dim) for j in range(n_planes)],
             F.lit(0)).cast("int"),
     )
-    queries = bucketed.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("unit").alias("qunit"),
-        F.col("bucket").alias("qbucket"),
-    )
+    queries = _first(bucketed, n_queries, query_id="vec_id",
+                     qunit="unit", qbucket="bucket")
     scored = (
         F.broadcast(queries)
         .join(bucketed, F.col("qbucket") == F.col("bucket"))
@@ -126,14 +165,7 @@ def lsh_bucket_topk(
             _dot(F.col("qunit"), F.col("unit")).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _neighbors(scored, k)
 
 
 def banded_lsh_buckets(
@@ -237,50 +269,56 @@ def near_dup_overflow(
     )
 
 
+def _seed_centroids(unit: DataFrame, n_lists: int) -> DataFrame:
+    """The first n_lists unit vectors as the (centroid_id, cunit)
+    codebook — IVF's deterministic stand-in and k-means' seed."""
+    return _first(unit, n_lists, centroid_id="vec_id", cunit="unit")
+
+
 def ivf_assignments(embeddings: DataFrame, n_lists: int = 8) -> DataFrame:
     """IVF coarse quantizer: the first n_lists unit vectors act as the
     (deterministic) centroid codebook — a seeded k-means stand-in so
     the oracle can replay it — and every vector joins its nearest
     centroid's inverted list. Assignment = broadcast centroids ->
     per-pair cosine -> rank-1 by (sim desc, centroid_id asc)."""
-    from pyspark.sql import Window
-
     unit = with_unit_vectors(embeddings)
-    centroids = unit.filter(F.col("vec_id") < n_lists).select(
-        F.col("vec_id").alias("centroid_id"), F.col("unit").alias("cunit")
-    )
-    scored = unit.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "unit",
-        "centroid_id",
-        _dot(F.col("unit"), F.col("cunit")).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "unit", "centroid_id")
-    )
+    return _assign_to_centroids(
+        unit, _seed_centroids(unit, n_lists), rounded=False)
 
 
-def _assign_to_centroids(unit: DataFrame, cents: DataFrame) -> DataFrame:
-    """vec -> nearest centroid by cosine (rounded 6dp for engine-stable
-    ranking), rank-1 by (sim desc, centroid_id asc)."""
+def _assign_to_centroids(unit: DataFrame, cents: DataFrame,
+                         rounded: bool = True) -> DataFrame:
+    """vec -> nearest centroid by cosine, rank-1 by (sim desc,
+    centroid_id asc). The k-means lists rank sims rounded 6dp for
+    engine-stable ranking; ivf_assignments ranks the raw dot (the two
+    differ on near-ties, and each oracle replays its own)."""
+    sim = _dot(F.col("unit"), F.col("cunit"))
     scored = unit.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "unit",
         "centroid_id",
-        F.round(_dot(F.col("unit"), F.col("cunit")), 6).alias("sim"),
+        (F.round(sim, 6) if rounded else sim).alias("sim"),
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
+    return _top_k(scored, "vec_id", "sim", "centroid_id", 1).select(
+        "vec_id", "unit", "centroid_id"
+    )
+
+
+def _means(assigned: DataFrame, keys: "list[str]", vec: str,
+           out: str) -> DataFrame:
+    """One Lloyd update: per `keys` group, the per-dimension mean of
+    the array column `vec`, rounded 6dp (so Spark's partial-agg
+    summation order and DuckDB's agree), packed back in dim order as
+    `out`. The shuffle is on (keys, dim) — codebook-sized."""
+    means = (
+        assigned.select(*keys, F.posexplode(vec).alias("dim", "val"))
+        .groupBy(*keys, "dim")
+        .agg(F.round(F.avg("val"), 6).alias("m"))
     )
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "unit", "centroid_id")
+        means.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("a"))
+        .select(*keys, F.transform("a", lambda s: s["m"]).alias(out))
     )
 
 
@@ -310,28 +348,10 @@ def _kmeans_centroids(
     centroid table (centroid_id, cunit) — exposed so the residual
     IVFPQ path can subtract the coarse centroid each vector was
     assigned against (the assignment uses exactly these centroids)."""
-    cents = unit.filter(F.col("vec_id") < n_lists).select(
-        F.col("vec_id").alias("centroid_id"), F.col("unit").alias("cunit")
-    )
+    cents = _seed_centroids(unit, n_lists)
     for _ in range(n_iters):
-        assigned = _assign_to_centroids(unit, cents)
-        means = (
-            assigned.select(
-                "centroid_id", F.posexplode("unit").alias("dim", "val")
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-        )
-        packed = (
-            means.groupBy("centroid_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("a")
-            )
-            .select(
-                "centroid_id",
-                F.transform("a", lambda s: s["m"]).alias("cvec"),
-            )
-        )
+        packed = _means(_assign_to_centroids(unit, cents),
+                        ["centroid_id"], "unit", "cvec")
         cents = packed.select(
             "centroid_id",
             F.transform(
@@ -352,29 +372,14 @@ def ivf_kmeans_topk(
     """IVF search (nprobe=1) over the k-means codebook: same inverted-
     list join shape as ivf_topk, real centroids."""
     assigned = kmeans_ivf_assignments(embeddings, n_lists, n_iters)
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("unit").alias("qunit"),
-        F.col("centroid_id").alias("qlist"),
+    queries = _first(assigned, n_queries, query_id="vec_id",
+                     qunit="unit", qlist="centroid_id")
+    scored = _probe(queries, assigned).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(_dot(F.col("qunit"), F.col("unit")), 6).alias("sim"),
     )
-    scored = (
-        F.broadcast(queries)
-        .join(assigned, F.col("qlist") == F.col("centroid_id"))
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(_dot(F.col("qunit"), F.col("unit")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _neighbors(scored, k)
 
 
 def ivf_topk(
@@ -388,19 +393,11 @@ def ivf_topk(
     lists — the join is on centroid_id, so at 100 TB the fan-in per
     query is nprobe * corpus/n_lists instead of the whole corpus
     (nprobe tunes the recall/cost knob exactly as in FAISS-style IVF)."""
-    from pyspark.sql import Window
-
-    assigned = ivf_assignments(embeddings, n_lists)
     unit = with_unit_vectors(embeddings)
-    centroids = unit.filter(F.col("vec_id") < n_lists).select(
-        F.col("vec_id").alias("centroid_id"), F.col("unit").alias("cunit")
-    )
-    qw = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("centroid_id").asc()
-    )
-    queries = (
-        unit.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), F.col("unit").alias("qunit"))
+    centroids = _seed_centroids(unit, n_lists)
+    assigned = _assign_to_centroids(unit, centroids, rounded=False)
+    routed = (
+        _first(unit, n_queries, query_id="vec_id", qunit="unit")
         .crossJoin(F.broadcast(centroids))
         .select(
             "query_id",
@@ -408,28 +405,15 @@ def ivf_topk(
             "centroid_id",
             _dot(F.col("qunit"), F.col("cunit")).alias("csim"),
         )
-        .withColumn("crk", F.row_number().over(qw))
-        .filter(F.col("crk") <= nprobe)
-        .select("query_id", "qunit", F.col("centroid_id").alias("qlist"))
     )
-    scored = (
-        F.broadcast(queries)
-        .join(assigned, F.col("qlist") == F.col("centroid_id"))
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qunit"), F.col("unit")).alias("sim"),
-        )
+    queries = _top_k(routed, "query_id", "csim", "centroid_id",
+                     nprobe).withColumnRenamed("centroid_id", "qlist")
+    scored = _probe(queries, assigned).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _dot(F.col("qunit"), F.col("unit")).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _neighbors(scored, k)
 
 
 def pq_codes(
@@ -460,11 +444,11 @@ def pq_codes(
 
 
 def _pq_subvectors(vecs: DataFrame, col: str, m_sub: int,
-                   sub_len: int) -> DataFrame:
-    """(vec_id, <col>) -> (vec_id, sub_id, sub): each vector split
-    into m_sub contiguous subspaces."""
+                   sub_len: int, id_col: str = "vec_id") -> DataFrame:
+    """(<id_col>, <col>) -> (<id_col>, sub_id, sub): each vector split
+    into m_sub contiguous subspaces (corpus and query side alike)."""
     return vecs.select(
-        "vec_id",
+        id_col,
         F.posexplode(
             F.array(*[
                 F.slice(col, s * sub_len + 1, sub_len)
@@ -491,14 +475,8 @@ def _pq_assign(subs: DataFrame, cbooks: DataFrame) -> DataFrame:
         "vec_id", "sub_id", "sub", "centroid_id",
         F.round(_dot(F.col("sub"), F.col("cvec")), 6).alias("sim"),
     )
-    w = Window.partitionBy("vec_id", "sub_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "sub_id", "sub", "centroid_id")
-    )
+    return _top_k(scored, ["vec_id", "sub_id"], "sim", "centroid_id", 1
+                  ).select("vec_id", "sub_id", "sub", "centroid_id")
 
 
 def _pq_train(subs: DataFrame, n_centroids: int,
@@ -507,33 +485,72 @@ def _pq_train(subs: DataFrame, n_centroids: int,
     (vec_id, sub_id, sub) frame (unit subvectors for flat PQ,
     residual subvectors for IVFADC) and encode it. Seeds = the first
     n_centroids vectors' subvectors; every float rounded 6dp."""
-    cents = subs.filter(F.col("vec_id") < n_centroids).select(
-        "sub_id",
-        F.col("vec_id").alias("centroid_id"),
-        F.col("sub").alias("cvec"),
-    )
+    cents = _first(subs, n_centroids, sub_id="sub_id",
+                   centroid_id="vec_id", cvec="sub")
     for _ in range(n_iters):
-        assigned = _pq_assign(subs, cents)
-        means = (
-            assigned.select(
-                "sub_id", "centroid_id",
-                F.posexplode("sub").alias("dim", "val"),
-            )
-            .groupBy("sub_id", "centroid_id", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-        )
-        cents = (
-            means.groupBy("sub_id", "centroid_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("dim", "m"))).alias("a"))
-            .select(
-                "sub_id", "centroid_id",
-                F.transform("a", lambda s: s["m"]).alias("cvec"),
-            )
-        )
+        cents = _means(_pq_assign(subs, cents),
+                       ["sub_id", "centroid_id"], "sub", "cvec")
     codes = _pq_assign(subs, cents).select(
         "vec_id", "sub_id", "centroid_id")
     return cents, codes
+
+
+def _adc_lut(queries: DataFrame, col: str, cbooks: DataFrame, part,
+             m_sub: int, sub_len: int) -> DataFrame:
+    """The ADC lookup table (query_id, sub_id, centroid_id, part):
+    `part` (_dot, or _sq_l2 for the residual L2 form) of each query
+    subvector against every codeword of its subspace, rounded 6dp — a
+    tiny q x m x k table that is broadcast to the codes."""
+    qsubs = _pq_subvectors(queries, col, m_sub, sub_len, "query_id")
+    return qsubs.join(F.broadcast(cbooks), "sub_id").select(
+        "query_id", "sub_id", "centroid_id",
+        F.round(part(F.col("sub"), F.col("cvec")), 6).alias("part"),
+    )
+
+
+def _adc_topk(parts: DataFrame, m_sub: int, k: int,
+              ascending: bool = False) -> DataFrame:
+    """(query_id, vec_id, sub_id, part) lookups -> top-k (query_id,
+    neighbor_id, rank, score). The score is the FIXED-ORDER sum
+    p0 + ... + p{m-1}: one conditional agg per subspace, added 0..m-1,
+    never a SUM whose accumulation order the engine picks — so Spark
+    and DuckDB agree bit-for-bit."""
+    per_sub = [
+        F.first(F.when(F.col("sub_id") == s, F.col("part")),
+                ignorenulls=True).alias(f"p{s}")
+        for s in range(m_sub)
+    ]
+    score = F.col("p0")
+    for s in range(1, m_sub):
+        score = score + F.col(f"p{s}")
+    scored = parts.groupBy("query_id", "vec_id").agg(*per_sub).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(score, 6).alias("score"),
+    )
+    return _top_k(scored, "query_id", "score", "neighbor_id", k,
+                  ascending).select("query_id", "neighbor_id", "rank",
+                                    "score")
+
+
+def _probed_adc_topk(assigned: DataFrame, queries: DataFrame, col: str,
+                     cbooks: DataFrame, codes: DataFrame, part,
+                     m_sub: int, sub_len: int, k: int,
+                     ascending: bool = False) -> DataFrame:
+    """IVF-routed ADC: candidates are the members of each query's list
+    `qlist` (the corpus side contributes only (vec_id, list) pairs and
+    its codes; queries broadcast), scored from the query vector `col`
+    through the codebook LUT."""
+    cand = _probe(
+        queries.select("query_id", "qlist"),
+        assigned.select("vec_id", "centroid_id"),
+    ).select("query_id", "vec_id")
+    lut = _adc_lut(queries, col, cbooks, part, m_sub, sub_len)
+    parts = (
+        cand.join(codes, "vec_id")
+        .join(F.broadcast(lut), ["query_id", "sub_id", "centroid_id"])
+    )
+    return _adc_topk(parts, m_sub, k, ascending)
 
 
 def pq_topk(
@@ -559,48 +576,13 @@ def pq_topk(
     groupBy. Exact subvectors never leave the codebook training."""
     cents, codes = pq_codes(embeddings, m_sub, n_centroids,
                             n_iters, dim)
-    sub_len = dim // m_sub
-    unit = with_unit_vectors(embeddings)
-    qsubs = unit.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.posexplode(
-            F.array(*[
-                F.slice("unit", s * sub_len + 1, sub_len)
-                for s in range(m_sub)
-            ])
-        ).alias("sub_id", "qsub"),
-    )
-    tab = qsubs.join(F.broadcast(cents), "sub_id").select(
-        "query_id", "sub_id", "centroid_id",
-        F.round(_dot(F.col("qsub"), F.col("cvec")), 6).alias("part"),
-    )
+    queries = _first(with_unit_vectors(embeddings), n_queries,
+                     query_id="vec_id", qunit="unit")
+    lut = _adc_lut(queries, "qunit", cents, _dot, m_sub, dim // m_sub)
     parts = codes.join(
-        F.broadcast(tab), ["sub_id", "centroid_id"]
+        F.broadcast(lut), ["sub_id", "centroid_id"]
     ).filter(F.col("query_id") != F.col("vec_id"))
-    # fixed-order reduction: one conditional agg per subspace, added
-    # 0..m-1 — never a SUM whose accumulation order the engine picks
-    per_sub = [
-        F.first(F.when(F.col("sub_id") == s, F.col("part")),
-                ignorenulls=True).alias(f"p{s}")
-        for s in range(m_sub)
-    ]
-    scored = parts.groupBy("query_id", "vec_id").agg(*per_sub)
-    score = F.col("p0")
-    for s in range(1, m_sub):
-        score = score + F.col(f"p{s}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(score, 6).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _adc_topk(parts, m_sub, k)
 
 
 def ivfpq_residual_build(
@@ -678,65 +660,13 @@ def ivfpq_residual_topk(
         prebuilt = ivfpq_residual_build(
             embeddings, n_lists, n_iters, m_sub, n_centroids, dim)
     assigned, _cents, resid, pq_cents, codes = prebuilt
-    sub_len = dim // m_sub
-    # query residual w.r.t. its own probed list — q - c_L exactly
-    queries = resid.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("centroid_id").alias("qlist"),
-        F.col("rvec").alias("qres"),
-    )
-    cand = (
-        F.broadcast(queries.select("query_id", "qlist"))
-        .join(assigned.select("vec_id", "centroid_id"),
-              F.col("qlist") == F.col("centroid_id"))
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
-    )
-    qsubs = _pq_subvectors(
-        queries.select(F.col("query_id").alias("vec_id"), "qres"),
-        "qres", m_sub, sub_len,
-    ).select(
-        F.col("vec_id").alias("query_id"), "sub_id",
-        F.col("sub").alias("qsub"),
-    )
+    # query residual w.r.t. its own probed list — q - c_L exactly;
     # LUT entry: ||r_q_sub - cw||^2, rounded 6dp
-    tab = qsubs.join(F.broadcast(pq_cents), "sub_id").select(
-        "query_id", "sub_id", "centroid_id",
-        F.round(
-            F.aggregate(
-                F.zip_with("qsub", "cvec", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-            6,
-        ).alias("part"),
-    )
-    parts = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(tab), ["query_id", "sub_id", "centroid_id"])
-    )
-    per_sub = [
-        F.first(F.when(F.col("sub_id") == s, F.col("part")),
-                ignorenulls=True).alias(f"p{s}")
-        for s in range(m_sub)
-    ]
-    scored = parts.groupBy("query_id", "vec_id").agg(*per_sub)
-    score = F.col("p0")
-    for s in range(1, m_sub):
-        score = score + F.col(f"p{s}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(score, 6).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    queries = _first(resid, n_queries, query_id="vec_id",
+                     qlist="centroid_id", qres="rvec")
+    return _probed_adc_topk(assigned, queries, "qres", pq_cents, codes,
+                            _sq_l2, m_sub, dim // m_sub, k,
+                            ascending=True)
 
 
 def ivfpq_topk(
@@ -764,57 +694,7 @@ def ivfpq_topk(
     assigned = kmeans_ivf_assignments(embeddings, n_lists, n_iters)
     cents, codes = pq_codes(embeddings, m_sub, n_centroids,
                             n_iters, dim)
-    sub_len = dim // m_sub
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("unit").alias("qunit"),
-        F.col("centroid_id").alias("qlist"),
-    )
-    # candidate set: the probed list's members (corpus touches only
-    # its (vec_id, list) pairs; queries broadcast)
-    cand = (
-        F.broadcast(queries.select("query_id", "qlist"))
-        .join(assigned.select("vec_id", "centroid_id"),
-              F.col("qlist") == F.col("centroid_id"))
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
-    )
-    qsubs = queries.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[
-                F.slice("qunit", s * sub_len + 1, sub_len)
-                for s in range(m_sub)
-            ])
-        ).alias("sub_id", "qsub"),
-    )
-    tab = qsubs.join(F.broadcast(cents), "sub_id").select(
-        "query_id", "sub_id", "centroid_id",
-        F.round(_dot(F.col("qsub"), F.col("cvec")), 6).alias("part"),
-    )
-    parts = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(tab), ["query_id", "sub_id", "centroid_id"])
-    )
-    per_sub = [
-        F.first(F.when(F.col("sub_id") == s, F.col("part")),
-                ignorenulls=True).alias(f"p{s}")
-        for s in range(m_sub)
-    ]
-    scored = parts.groupBy("query_id", "vec_id").agg(*per_sub)
-    score = F.col("p0")
-    for s in range(1, m_sub):
-        score = score + F.col(f"p{s}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(score, 6).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    queries = _first(assigned, n_queries, query_id="vec_id",
+                     qunit="unit", qlist="centroid_id")
+    return _probed_adc_topk(assigned, queries, "qunit", cents, codes,
+                            _dot, m_sub, dim // m_sub, k)

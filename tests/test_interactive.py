@@ -214,18 +214,30 @@ def test_no_per_row_python_udfs():
 
 def test_single_python_boundary():
     """Every Python lane crosses the JVM<->Python boundary through the
-    one row-kernel adapter: mapInPandas/mapInArrow appear only in
-    operators/_kernel.py (grouped applyInPandas* are other APIs)."""
+    one row-kernel adapter: mapInPandas/mapInArrow/applyInPandas
+    appear only in operators/_kernel.py (the streaming operators'
+    applyInPandasWithState is another API)."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent / "sparkpdf"
     offenders = [
         (str(py.relative_to(root)), needle)
         for py in root.rglob("*.py")
-        for needle in (".mapInPandas(", ".mapInArrow(")
+        for needle in (".mapInPandas(", ".mapInArrow(", ".applyInPandas(")
         if needle in py.read_text()
     ]
     assert offenders == [("operators/_kernel.py", ".mapInArrow(")]
+
+
+def test_similarity_has_one_ranking_window():
+    """Every ANN search and assignment ranks through the one window in
+    operators/similarity.py (_top_k), so no query can order or break
+    ties differently from the others."""
+    import pathlib
+
+    src = (pathlib.Path(__file__).resolve().parent.parent / "sparkpdf"
+           / "operators" / "similarity.py").read_text()
+    assert src.count("Window.partitionBy") == 1
 
 
 def test_production_code_holds_no_corpus_builders():
