@@ -1,5 +1,5 @@
-"""Production ANN batch job: build an IVF index over an embedding
-table, run top-k cosine queries against it, persist both.
+"""Production ANN batch job: build an index over an embedding table,
+persist it, and run top-k cosine queries against the persisted index.
 
     spark-submit --py-files sparkpdf.zip jobs/ann_job.py \
         --embeddings /data/embeddings    (parquet: vec_id, embedding) \
@@ -7,24 +7,37 @@ table, run top-k cosine queries against it, persist both.
         [--n-lists 8] [--n-iters 2] [--nprobe 1] [--k 3] [--queries 4] \
         [--exact | --pq | --ivfpq | --ivfpq-residual]
 
-Outputs under --output:
-    index/    (vec_id, unit, centroid_id) — the inverted lists the IVF
-              search probed (ivf_assignments: the first --n-lists
-              vectors are the codebook). At cluster scale this IS the
-              reusable index artifact: downstream query jobs read it
-              and broadcast only their query vectors. --ivfpq and
-              --ivfpq-residual write it as (vec_id, centroid_id), the
-              k-means lists they route over; --pq writes none.
-    codes/    (--pq, --ivfpq, --ivfpq-residual) (vec_id, sub_id,
-              centroid_id) — m_sub small ints per vector, the
-              memory-compressed corpus; codebooks/ holds the tiny
-              per-subspace centroid tables
-    topk/     (query_id, neighbor_id, rank[, score])
-plus ONE summary JSON line on stdout.
+Each mode is one operators/similarity.INDEXES entry: build steps, then
+one search. Every step writes its artifact under --output and hands
+the read-back copy to the later steps and to the search, so the
+searched index IS the persisted one, no quantizer is trained twice,
+and nothing is left cached.
+
+Artifacts under --output, by mode:
+    (default)          index/ — IVF over the first --n-lists vectors
+    --exact            none (brute-force baseline for recall audits)
+    --pq               codebooks/, codes/
+    --ivfpq            centroids/, index/, codebooks/, codes/
+    --ivfpq-residual   centroids/, index/, codebooks/, codes/ — the
+                       codebooks and codes quantize the residual
+                       (unit - coarse centroid)
+    every mode         topk/ (query_id, neighbor_id, rank[, score])
+
+    centroids/  (centroid_id, cunit) — the Lloyd-trained coarse
+                codebook the k-means lists and residuals are cut by
+    index/      the inverted lists the search probes: (vec_id, unit,
+                centroid_id) for IVF, (vec_id, centroid_id) for the
+                k-means lists. At cluster scale this IS the reusable
+                index: query jobs read it and broadcast only their
+                query vectors
+    codebooks/  (sub_id, centroid_id, cvec) — per-subspace PQ tables
+    codes/      (vec_id, sub_id, centroid_id) — --m-sub small ints per
+                vector, the memory-compressed corpus
+plus ONE summary JSON line on stdout (index_rows: rows of the last
+artifact built, 0 for --exact).
 
 Scale shape (SURVEY §4.3): centroids broadcast; the search join fans
-in nprobe * corpus/n_lists rows per query, never the whole corpus;
---exact switches to the brute-force baseline for recall audits.
+in nprobe * corpus/n_lists rows per query, never the whole corpus.
 """
 
 from __future__ import annotations
@@ -33,6 +46,8 @@ import argparse
 import json
 import os
 import time
+
+MODES = ("exact", "pq", "ivfpq", "ivfpq_residual")
 
 
 def main(argv=None, spark=None):
@@ -65,14 +80,9 @@ def main(argv=None, spark=None):
     args = ap.parse_args(argv)
 
     from sparkpdf.operators.similarity import (
-        brute_force_topk,
-        ivf_assignments,
-        ivf_topk,
-        ivfpq_residual_topk,
-        ivfpq_topk,
-        kmeans_ivf_assignments,
-        pq_codes,
-        pq_topk,
+        INDEXES,
+        AnnParams,
+        with_unit_vectors,
     )
     from sparkpdf.session import get_spark
 
@@ -81,120 +91,25 @@ def main(argv=None, spark=None):
         spark = get_spark("sparkpdf-ann")
         spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
-    emb = spark.read.parquet(args.embeddings)
-
-    if args.exact:
-        topk = brute_force_topk(
-            emb, n_queries=args.queries, k=args.k
-        )
-        index_rows = 0
-    elif args.pq:
-        codebooks, codes = pq_codes(
-            emb, m_sub=args.m_sub, n_centroids=args.n_lists,
-            n_iters=args.n_iters,
-        )
-        codebooks.write.mode("overwrite").parquet(
-            os.path.join(args.output, "codebooks")
-        )
-        codes.write.mode("overwrite").parquet(
-            os.path.join(args.output, "codes")
-        )
-        index_rows = spark.read.parquet(
-            os.path.join(args.output, "codes")
-        ).count()
-        topk = pq_topk(
-            emb, m_sub=args.m_sub, n_centroids=args.n_lists,
-            n_iters=args.n_iters, n_queries=args.queries, k=args.k,
-        )
-    elif args.ivfpq:
-        index = kmeans_ivf_assignments(
-            emb, n_lists=args.n_lists, n_iters=args.n_iters
-        ).select("vec_id", "centroid_id")
-        codebooks, codes = pq_codes(
-            emb, m_sub=args.m_sub, n_centroids=args.n_lists,
-            n_iters=args.n_iters,
-        )
-        for name, df in (("index", index), ("codebooks", codebooks),
-                         ("codes", codes)):
-            df.write.mode("overwrite").parquet(
-                os.path.join(args.output, name))
-        index_rows = spark.read.parquet(
-            os.path.join(args.output, "codes")
-        ).count()
-        topk = ivfpq_topk(
-            emb, n_lists=args.n_lists, n_iters=args.n_iters,
-            m_sub=args.m_sub, n_centroids=args.n_lists,
-            n_queries=args.queries, k=args.k,
-        )
-    elif args.ivfpq_residual:
-        # ONE build: the persisted index/codebooks/codes come from the
-        # same trained quantizer the search runs against (r8 review:
-        # the first cut trained k-means twice and discarded the
-        # residual codebooks)
-        from sparkpdf.operators.similarity import ivfpq_residual_build
-
-        from pyspark import StorageLevel
-
-        built = ivfpq_residual_build(
-            emb, n_lists=args.n_lists, n_iters=args.n_iters,
-            m_sub=args.m_sub, n_centroids=args.n_lists,
-        )
-        assigned, cents, resid, pq_cents, codes = built
-        # pin the training intermediates: three artifact writes plus
-        # the search all consume this lazy build — without the
-        # persists each action re-runs the Lloyd pipelines (the
-        # cache manager matches the persisted plan fragments)
-        # the two centroid frames are tiny but their LINEAGE is the
-        # whole Lloyd training — without their persists the coarse
-        # pipeline re-runs when resid fills and the PQ pipeline
-        # re-runs for the codebooks write, the codes fill AND the
-        # search's broadcast LUT (r8 review, second pass)
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
-        resid = resid.persist(StorageLevel.MEMORY_AND_DISK)
-        pq_cents = pq_cents.persist(StorageLevel.MEMORY_AND_DISK)
-        codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
-        for name, df in (
-                ("index", assigned.select("vec_id", "centroid_id")),
-                ("codebooks", pq_cents),
-                ("codes", codes)):
-            df.write.mode("overwrite").parquet(
-                os.path.join(args.output, name))
-        index_rows = spark.read.parquet(
-            os.path.join(args.output, "codes")
-        ).count()
-        topk = ivfpq_residual_topk(
-            emb, n_lists=args.n_lists, n_iters=args.n_iters,
-            m_sub=args.m_sub, n_centroids=args.n_lists,
-            n_queries=args.queries, k=args.k,
-            prebuilt=(assigned, cents, resid, pq_cents, codes),
-        )
-    else:
-        # the lists ivf_topk routes over, so a reader of index/ probes
-        # exactly what this search probed
-        index = ivf_assignments(emb, n_lists=args.n_lists)
-        index.write.mode("overwrite").parquet(
-            os.path.join(args.output, "index")
-        )
-        index_rows = spark.read.parquet(
-            os.path.join(args.output, "index")
-        ).count()
-        topk = ivf_topk(
-            emb,
-            n_lists=args.n_lists,
-            n_queries=args.queries,
-            k=args.k,
-            nprobe=args.nprobe,
-        )
-    topk.write.mode("overwrite").parquet(os.path.join(args.output, "topk"))
+    mode = next((m for m in MODES if getattr(args, m)), "ivf")
+    p = AnnParams(n_lists=args.n_lists, n_iters=args.n_iters,
+                  m_sub=args.m_sub, n_centroids=args.n_lists,
+                  n_queries=args.queries, k=args.k, nprobe=args.nprobe)
+    steps, search = INDEXES[mode]
+    unit = with_unit_vectors(spark.read.parquet(args.embeddings))
+    built = {}
+    for name, step in steps:
+        path = os.path.join(args.output, name)
+        step(unit, built, p).write.mode("overwrite").parquet(path)
+        built[name] = spark.read.parquet(path)
+    index_rows = built[steps[-1][0]].count() if steps else 0
+    search(unit, built, p).write.mode("overwrite").parquet(
+        os.path.join(args.output, "topk"))
     n_results = spark.read.parquet(os.path.join(args.output, "topk")).count()
     print(
         json.dumps(
             {
-                "mode": ("exact" if args.exact else "pq" if args.pq
-                         else "ivfpq" if args.ivfpq
-                         else "ivfpq_residual" if args.ivfpq_residual
-                         else "ivf"),
+                "mode": mode,
                 "index_rows": index_rows,
                 "queries": args.queries,
                 "k": args.k,

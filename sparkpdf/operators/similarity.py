@@ -8,9 +8,21 @@ Dot products run JVM-side via zip_with/aggregate — no Python.
 Each rule the DuckDB replays depend on lives in one helper: _top_k
 (ranking), _means (Lloyd update), _adc_lut/_adc_topk (ADC scoring),
 _probe (inverted-list join), _first (query sets and seed codebooks).
+
+The exact/IVF/PQ/IVFPQ/IVFADC searches are each an INDEXES entry:
+build steps (unit, built, p) -> one index artifact (IVF lists, coarse
+centroids, PQ codebooks, codes), where `built` maps the earlier steps'
+names to their artifacts, then one search (unit, built, p) -> top-k.
+Both read earlier artifacts only from `built`, so the *_topk functions
+compose them lazily, while jobs/ann_job.py stores each artifact and
+passes on the stored frame: it searches exactly the stored index and
+never trains a quantizer twice.
 """
 
 from __future__ import annotations
+
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,9 +61,17 @@ def _top_k(scored: DataFrame, by, score: str, tie: str, k: int,
     )
 
 
-def _neighbors(scored: DataFrame, k: int) -> DataFrame:
-    """(query_id, neighbor_id, sim) -> the rank-only top-k of the
+def _neighbors(pairs: DataFrame, k: int, rounded: bool = False
+               ) -> DataFrame:
+    """(query_id, qunit) x (vec_id, unit) candidate pairs -> the
+    rank-only top-k by cosine (rounded 6dp when `rounded`) of the
     exact/LSH/IVF searches (no floats, so oracle hashes are stable)."""
+    sim = _dot(F.col("qunit"), F.col("unit"))
+    scored = pairs.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        (F.round(sim, 6) if rounded else sim).alias("sim"),
+    )
     return _top_k(scored, "query_id", "sim", "neighbor_id", k).select(
         "query_id", "neighbor_id", "rank"
     )
@@ -104,16 +124,8 @@ def brute_force_topk(
     (the only scalable orientation), dot products in codegen, then a
     per-query top-k via window rank — the shuffle is on n_queries keys
     only. Output is rank-only (no floats) so the oracle hash is stable."""
-    unit = with_unit_vectors(embeddings)
-    queries = _first(unit, n_queries, query_id="vec_id", qunit="unit")
-    scored = F.broadcast(queries).crossJoin(unit.alias("corpus")).filter(
-        F.col("query_id") != F.col("vec_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _dot(F.col("qunit"), F.col("unit")).alias("sim"),
-    )
-    return _neighbors(scored, k)
+    return _compose("exact", embeddings,
+                    AnnParams(n_queries=n_queries, k=k))
 
 
 def _plane_weight(j, d):
@@ -155,17 +167,12 @@ def lsh_bucket_topk(
     )
     queries = _first(bucketed, n_queries, query_id="vec_id",
                      qunit="unit", qbucket="bucket")
-    scored = (
+    pairs = (
         F.broadcast(queries)
         .join(bucketed, F.col("qbucket") == F.col("bucket"))
         .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qunit"), F.col("unit")).alias("sim"),
-        )
     )
-    return _neighbors(scored, k)
+    return _neighbors(pairs, k)
 
 
 def banded_lsh_buckets(
@@ -275,22 +282,11 @@ def _seed_centroids(unit: DataFrame, n_lists: int) -> DataFrame:
     return _first(unit, n_lists, centroid_id="vec_id", cunit="unit")
 
 
-def ivf_assignments(embeddings: DataFrame, n_lists: int = 8) -> DataFrame:
-    """IVF coarse quantizer: the first n_lists unit vectors act as the
-    (deterministic) centroid codebook — a seeded k-means stand-in so
-    the oracle can replay it — and every vector joins its nearest
-    centroid's inverted list. Assignment = broadcast centroids ->
-    per-pair cosine -> rank-1 by (sim desc, centroid_id asc)."""
-    unit = with_unit_vectors(embeddings)
-    return _assign_to_centroids(
-        unit, _seed_centroids(unit, n_lists), rounded=False)
-
-
 def _assign_to_centroids(unit: DataFrame, cents: DataFrame,
                          rounded: bool = True) -> DataFrame:
     """vec -> nearest centroid by cosine, rank-1 by (sim desc,
     centroid_id asc). The k-means lists rank sims rounded 6dp for
-    engine-stable ranking; ivf_assignments ranks the raw dot (the two
+    engine-stable ranking; the IVF seed lists rank the raw dot (the two
     differ on near-ties, and each oracle replays its own)."""
     sim = _dot(F.col("unit"), F.col("cunit"))
     scored = unit.crossJoin(F.broadcast(cents)).select(
@@ -325,31 +321,27 @@ def _means(assigned: DataFrame, keys: "list[str]", vec: str,
 def kmeans_ivf_assignments(
     embeddings: DataFrame, n_lists: int = 8, n_iters: int = 2
 ) -> DataFrame:
-    """IVF coarse quantizer with REAL Lloyd iterations (replaces the
-    round-1 first-N stand-in): seed = first n_lists unit vectors, then
-    n_iters rounds of (assign by cosine -> per-dimension mean ->
-    L2-normalize). Deterministic and oracle-replayable: every float
-    product (assignment sims, means, normalized centroids) is rounded
-    to 6dp so Spark's partial-agg summation order and DuckDB's agree.
+    """(vec_id, unit, centroid_id): every vector's inverted list under
+    the Lloyd-trained coarse centroids (_kmeans_centroids)."""
+    unit = with_unit_vectors(embeddings)
+    p = AnnParams(n_lists=n_lists, n_iters=n_iters)
+    return _assign_to_centroids(unit, _kmeans_centroids(unit, {}, p))
+
+
+def _kmeans_centroids(unit, built, p):
+    """Coarse centroids (centroid_id, cunit) with REAL Lloyd
+    iterations: seed = first n_lists unit vectors, then n_iters rounds
+    of (assign by cosine -> per-dimension mean -> L2-normalize).
+    Deterministic and oracle-replayable: every float product
+    (assignment sims, means, normalized centroids) is rounded to 6dp
+    so Spark's partial-agg summation order and DuckDB's agree.
 
     Scale shape: centroids are a tiny broadcast table; each iteration
     costs one posexplode shuffle on (centroid_id, dim) — cardinality
     n_lists*dim, trivially small — plus the broadcast assignment pass.
     The classic distributed k-means plan."""
-    unit = with_unit_vectors(embeddings)
-    cents = _kmeans_centroids(unit, n_lists, n_iters)
-    return _assign_to_centroids(unit, cents)
-
-
-def _kmeans_centroids(
-    unit: DataFrame, n_lists: int, n_iters: int
-) -> DataFrame:
-    """The Lloyd loop of kmeans_ivf_assignments, returning the FINAL
-    centroid table (centroid_id, cunit) — exposed so the residual
-    IVFPQ path can subtract the coarse centroid each vector was
-    assigned against (the assignment uses exactly these centroids)."""
-    cents = _seed_centroids(unit, n_lists)
-    for _ in range(n_iters):
+    cents = _seed_centroids(unit, p.n_lists)
+    for _ in range(p.n_iters):
         packed = _means(_assign_to_centroids(unit, cents),
                         ["centroid_id"], "unit", "cvec")
         cents = packed.select(
@@ -374,73 +366,7 @@ def ivf_kmeans_topk(
     assigned = kmeans_ivf_assignments(embeddings, n_lists, n_iters)
     queries = _first(assigned, n_queries, query_id="vec_id",
                      qunit="unit", qlist="centroid_id")
-    scored = _probe(queries, assigned).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(_dot(F.col("qunit"), F.col("unit")), 6).alias("sim"),
-    )
-    return _neighbors(scored, k)
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    n_lists: int = 8,
-    n_queries: int = 4,
-    k: int = 3,
-    nprobe: int = 1,
-) -> DataFrame:
-    """IVF search: each query scans its `nprobe` nearest inverted
-    lists — the join is on centroid_id, so at 100 TB the fan-in per
-    query is nprobe * corpus/n_lists instead of the whole corpus
-    (nprobe tunes the recall/cost knob exactly as in FAISS-style IVF)."""
-    unit = with_unit_vectors(embeddings)
-    centroids = _seed_centroids(unit, n_lists)
-    assigned = _assign_to_centroids(unit, centroids, rounded=False)
-    routed = (
-        _first(unit, n_queries, query_id="vec_id", qunit="unit")
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "qunit",
-            "centroid_id",
-            _dot(F.col("qunit"), F.col("cunit")).alias("csim"),
-        )
-    )
-    queries = _top_k(routed, "query_id", "csim", "centroid_id",
-                     nprobe).withColumnRenamed("centroid_id", "qlist")
-    scored = _probe(queries, assigned).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _dot(F.col("qunit"), F.col("unit")).alias("sim"),
-    )
-    return _neighbors(scored, k)
-
-
-def pq_codes(
-    embeddings: DataFrame,
-    m_sub: int = 4,
-    n_centroids: int = 8,
-    n_iters: int = 2,
-    dim: int = 64,
-) -> "tuple[DataFrame, DataFrame]":
-    """Product quantization (the memory-at-scale ANN compressor):
-    split each unit vector into m_sub subspaces, train an independent
-    codebook per subspace (seed = first n_centroids subvectors, then
-    n_iters Lloyd rounds: assign by dot, update by per-dim mean — the
-    kmeans_ivf discipline, every float rounded 6dp so Spark and the
-    oracle agree), and encode the corpus as m_sub small centroid ids
-    per vector. Returns (codebooks, codes): codebooks =
-    (sub_id, centroid_id, cvec) — tiny, broadcastable (m*k*dim/m
-    doubles); codes = (vec_id, sub_id, centroid_id) — the 64-dim
-    float vector compressed to m_sub bytes at 10^12 scale.
-
-    Scale shape: training assignment is a broadcast join + one
-    (vec, sub)-keyed window; the centroid update is a partial-agg
-    groupBy of cardinality m*k*subdim. The corpus never self-joins."""
-    sub_len = dim // m_sub
-    unit = with_unit_vectors(embeddings)
-    subs = _pq_subvectors(unit, "unit", m_sub, sub_len)
-    return _pq_train(subs, n_centroids, n_iters)
+    return _neighbors(_probe(queries, assigned), k, rounded=True)
 
 
 def _pq_subvectors(vecs: DataFrame, col: str, m_sub: int,
@@ -479,29 +405,14 @@ def _pq_assign(subs: DataFrame, cbooks: DataFrame) -> DataFrame:
                   ).select("vec_id", "sub_id", "sub", "centroid_id")
 
 
-def _pq_train(subs: DataFrame, n_centroids: int,
-              n_iters: int) -> "tuple[DataFrame, DataFrame]":
-    """Lloyd-train per-subspace codebooks over an arbitrary
-    (vec_id, sub_id, sub) frame (unit subvectors for flat PQ,
-    residual subvectors for IVFADC) and encode it. Seeds = the first
-    n_centroids vectors' subvectors; every float rounded 6dp."""
-    cents = _first(subs, n_centroids, sub_id="sub_id",
-                   centroid_id="vec_id", cvec="sub")
-    for _ in range(n_iters):
-        cents = _means(_pq_assign(subs, cents),
-                       ["sub_id", "centroid_id"], "sub", "cvec")
-    codes = _pq_assign(subs, cents).select(
-        "vec_id", "sub_id", "centroid_id")
-    return cents, codes
-
-
 def _adc_lut(queries: DataFrame, col: str, cbooks: DataFrame, part,
-             m_sub: int, sub_len: int) -> DataFrame:
+             p: AnnParams) -> DataFrame:
     """The ADC lookup table (query_id, sub_id, centroid_id, part):
     `part` (_dot, or _sq_l2 for the residual L2 form) of each query
     subvector against every codeword of its subspace, rounded 6dp — a
     tiny q x m x k table that is broadcast to the codes."""
-    qsubs = _pq_subvectors(queries, col, m_sub, sub_len, "query_id")
+    qsubs = _pq_subvectors(queries, col, p.m_sub, p.dim // p.m_sub,
+                           "query_id")
     return qsubs.join(F.broadcast(cbooks), "sub_id").select(
         "query_id", "sub_id", "centroid_id",
         F.round(part(F.col("sub"), F.col("cvec")), 6).alias("part"),
@@ -533,24 +444,189 @@ def _adc_topk(parts: DataFrame, m_sub: int, k: int,
                                     "score")
 
 
-def _probed_adc_topk(assigned: DataFrame, queries: DataFrame, col: str,
-                     cbooks: DataFrame, codes: DataFrame, part,
-                     m_sub: int, sub_len: int, k: int,
-                     ascending: bool = False) -> DataFrame:
+class AnnParams(NamedTuple):
+    """Every knob an index build step or search reads; the defaults
+    are the *_topk keyword defaults."""
+
+    n_lists: int = 8
+    n_iters: int = 2
+    m_sub: int = 4
+    n_centroids: int = 8
+    n_queries: int = 4
+    k: int = 3
+    dim: int = 64
+    nprobe: int = 1
+
+
+def _seed_lists(unit, built, p):
+    """IVF lists (vec_id, unit, centroid_id) over the seed codebook,
+    ranked on the raw dot."""
+    return _assign_to_centroids(
+        unit, _seed_centroids(unit, p.n_lists), rounded=False)
+
+
+def _coarse_lists(unit, built, p):
+    """(vec_id, centroid_id) under the built k-means centroids."""
+    return _assign_to_centroids(unit, built["centroids"]).select(
+        "vec_id", "centroid_id")
+
+
+def _residuals(unit, built):
+    """(vec_id, centroid_id, rvec): each unit vector minus the coarse
+    centroid of its list, rounded 6dp."""
+    return unit.join(built["index"], "vec_id").join(
+        F.broadcast(built["centroids"]), "centroid_id"
+    ).select("vec_id", "centroid_id", F.zip_with(
+        "unit", "cunit", lambda x, c: F.round(x - c, 6)).alias("rvec"))
+
+
+def _pq_input(residual, unit, built, p):
+    """(vec_id, sub_id, sub): the unit vectors' or residuals' m_sub
+    subvectors — what the PQ codebooks train on and encode."""
+    vecs, col = (_residuals(unit, built), "rvec") if residual else (
+        unit, "unit")
+    return _pq_subvectors(vecs, col, p.m_sub, p.dim // p.m_sub)
+
+
+def _codebooks(residual, unit, built, p):
+    """Product quantization (the memory-at-scale ANN compressor):
+    Lloyd-trained per-subspace codebooks (sub_id, centroid_id, cvec)
+    over _pq_input (unit subvectors for flat PQ, residuals for
+    IVFADC). Seeds = the first n_centroids vectors' subvectors, then
+    n_iters rounds of (assign by dot, per-dim mean), every float
+    rounded 6dp. The codebooks are tiny and broadcast (m*k*dim/m
+    doubles); training assignment is a broadcast join + one
+    (vec, sub)-keyed window, the update a partial-agg groupBy of
+    cardinality m*k*subdim — the corpus never self-joins."""
+    vecs = _pq_input(residual, unit, built, p)
+    cents = _first(vecs, p.n_centroids, sub_id="sub_id",
+                   centroid_id="vec_id", cvec="sub")
+    for _ in range(p.n_iters):
+        cents = _means(_pq_assign(vecs, cents),
+                       ["sub_id", "centroid_id"], "sub", "cvec")
+    return cents
+
+
+def _codes(residual, unit, built, p):
+    """(vec_id, sub_id, centroid_id): each vector encoded as m_sub small
+    codeword ids — the 64-dim float vector in m_sub bytes."""
+    return _pq_assign(_pq_input(residual, unit, built, p),
+                      built["codebooks"]).select(
+        "vec_id", "sub_id", "centroid_id")
+
+
+def _pq_steps(residual: bool):
+    return (("codebooks", partial(_codebooks, residual)),
+            ("codes", partial(_codes, residual)))
+
+
+def _exact_search(unit, built, p):
+    queries = _first(unit, p.n_queries, query_id="vec_id", qunit="unit")
+    pairs = F.broadcast(queries).crossJoin(unit).filter(
+        F.col("query_id") != F.col("vec_id"))
+    return _neighbors(pairs, p.k)
+
+
+def _ivf_search(unit, built, p):
+    """Each query scans the lists of its nprobe nearest seed
+    centroids."""
+    routed = (
+        _first(unit, p.n_queries, query_id="vec_id", qunit="unit")
+        .crossJoin(F.broadcast(_seed_centroids(unit, p.n_lists)))
+        .select(
+            "query_id",
+            "qunit",
+            "centroid_id",
+            _dot(F.col("qunit"), F.col("cunit")).alias("csim"),
+        )
+    )
+    queries = _top_k(routed, "query_id", "csim", "centroid_id",
+                     p.nprobe).withColumnRenamed("centroid_id", "qlist")
+    return _neighbors(_probe(queries, built["index"]), p.k)
+
+
+def _pq_search(unit, built, p):
+    queries = _first(unit, p.n_queries, query_id="vec_id", qunit="unit")
+    lut = _adc_lut(queries, "qunit", built["codebooks"], _dot, p)
+    parts = built["codes"].join(
+        F.broadcast(lut), ["sub_id", "centroid_id"]
+    ).filter(F.col("query_id") != F.col("vec_id"))
+    return _adc_topk(parts, p.m_sub, p.k)
+
+
+def _probed_adc_topk(built, queries, col, part, p, ascending=False):
     """IVF-routed ADC: candidates are the members of each query's list
-    `qlist` (the corpus side contributes only (vec_id, list) pairs and
-    its codes; queries broadcast), scored from the query vector `col`
-    through the codebook LUT."""
-    cand = _probe(
-        queries.select("query_id", "qlist"),
-        assigned.select("vec_id", "centroid_id"),
-    ).select("query_id", "vec_id")
-    lut = _adc_lut(queries, col, cbooks, part, m_sub, sub_len)
+    `qlist` in the built index (the corpus side contributes only
+    (vec_id, list) pairs and its codes; queries broadcast), scored
+    from the query vector `col` through the codebook LUT."""
+    cand = _probe(queries.select("query_id", "qlist"),
+                  built["index"]).select("query_id", "vec_id")
+    lut = _adc_lut(queries, col, built["codebooks"], part, p)
     parts = (
-        cand.join(codes, "vec_id")
+        cand.join(built["codes"], "vec_id")
         .join(F.broadcast(lut), ["query_id", "sub_id", "centroid_id"])
     )
-    return _adc_topk(parts, m_sub, k, ascending)
+    return _adc_topk(parts, p.m_sub, p.k, ascending)
+
+
+def _ivfpq_search(unit, built, p):
+    queries = _first(unit.join(built["index"], "vec_id"), p.n_queries,
+                     query_id="vec_id", qunit="unit", qlist="centroid_id")
+    return _probed_adc_topk(built, queries, "qunit", _dot, p)
+
+
+def _residual_search(unit, built, p):
+    # query residual w.r.t. its own probed list — q - c_L exactly;
+    # LUT entry: ||r_q_sub - cw||^2, rounded 6dp
+    queries = _first(_residuals(unit, built), p.n_queries,
+                     query_id="vec_id", qlist="centroid_id", qres="rvec")
+    return _probed_adc_topk(built, queries, "qres", _sq_l2, p,
+                            ascending=True)
+
+
+_COARSE = (("centroids", _kmeans_centroids), ("index", _coarse_lists))
+
+# kind -> (build steps in order as (artifact name, step), search)
+INDEXES = {
+    "exact": ((), _exact_search),
+    "ivf": ((("index", _seed_lists),), _ivf_search),
+    "pq": (_pq_steps(residual=False), _pq_search),
+    "ivfpq": (_COARSE + _pq_steps(residual=False), _ivfpq_search),
+    "ivfpq_residual": (_COARSE + _pq_steps(residual=True), _residual_search),
+}
+
+
+def _build(steps, unit: DataFrame, p: AnnParams) -> dict:
+    built = {}
+    for name, step in steps:
+        built[name] = step(unit, built, p)
+    return built
+
+
+def _compose(kind: str, embeddings: DataFrame, p: AnnParams) -> DataFrame:
+    """The lazy search of index `kind` over its lazily built artifacts."""
+    steps, search = INDEXES[kind]
+    unit = with_unit_vectors(embeddings)
+    return search(unit, _build(steps, unit, p), p)
+
+
+def ivf_topk(
+    embeddings: DataFrame,
+    n_lists: int = 8,
+    n_queries: int = 4,
+    k: int = 3,
+    nprobe: int = 1,
+) -> DataFrame:
+    """IVF search: the first n_lists unit vectors act as the
+    (deterministic) centroid codebook — a seeded k-means stand-in so
+    the oracle can replay it — every vector joins its nearest
+    centroid's inverted list (rank-1 by raw sim desc, centroid_id asc),
+    and each query scans its `nprobe` nearest lists. The join is on
+    centroid_id, so at 100 TB the fan-in per query is
+    nprobe * corpus/n_lists instead of the whole corpus (nprobe tunes
+    the recall/cost knob exactly as in FAISS-style IVF)."""
+    return _compose("ivf", embeddings, AnnParams(
+        n_lists=n_lists, n_queries=n_queries, k=k, nprobe=nprobe))
 
 
 def pq_topk(
@@ -574,47 +650,9 @@ def pq_topk(
     per vector — the point of PQ at 100 TB); the lookup join is
     broadcast; the per-(query, vector) reduce is a partial-agg
     groupBy. Exact subvectors never leave the codebook training."""
-    cents, codes = pq_codes(embeddings, m_sub, n_centroids,
-                            n_iters, dim)
-    queries = _first(with_unit_vectors(embeddings), n_queries,
-                     query_id="vec_id", qunit="unit")
-    lut = _adc_lut(queries, "qunit", cents, _dot, m_sub, dim // m_sub)
-    parts = codes.join(
-        F.broadcast(lut), ["sub_id", "centroid_id"]
-    ).filter(F.col("query_id") != F.col("vec_id"))
-    return _adc_topk(parts, m_sub, k)
-
-
-def ivfpq_residual_build(
-    embeddings: DataFrame,
-    n_lists: int = 8,
-    n_iters: int = 2,
-    m_sub: int = 4,
-    n_centroids: int = 8,
-    dim: int = 64,
-) -> "tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]":
-    """Train the IVFADC index once: coarse k-means, assignments,
-    6dp residuals, residual PQ codebooks and codes. Returns
-    (assigned, coarse_cents, resid, pq_cents, codes) — the reusable
-    index artifacts (ann_job --ivfpq-residual persists assigned /
-    pq_cents / codes) and the input ivfpq_residual_topk searches
-    with, so a job never trains the quantizer twice."""
-    sub_len = dim // m_sub
-    unit = with_unit_vectors(embeddings)
-    cents = _kmeans_centroids(unit, n_lists, n_iters)
-    assigned = _assign_to_centroids(unit, cents)
-    resid = assigned.join(F.broadcast(cents), "centroid_id").select(
-        "vec_id",
-        "centroid_id",
-        F.zip_with(
-            "unit", "cunit", lambda x, c: F.round(x - c, 6)
-        ).alias("rvec"),
-    )
-    pq_cents, codes = _pq_train(
-        _pq_subvectors(resid, "rvec", m_sub, sub_len),
-        n_centroids, n_iters,
-    )
-    return assigned, cents, resid, pq_cents, codes
+    return _compose("pq", embeddings, AnnParams(
+        m_sub=m_sub, n_centroids=n_centroids, n_iters=n_iters,
+        n_queries=n_queries, k=k, dim=dim))
 
 
 def ivfpq_residual_topk(
@@ -626,7 +664,6 @@ def ivfpq_residual_topk(
     n_queries: int = 4,
     k: int = 3,
     dim: int = 64,
-    prebuilt: "tuple | None" = None,
 ) -> DataFrame:
     """Residual IVFPQ — the standard public IVFADC layout (Jegou,
     Douze, Schmid 2011): PQ codebooks are trained on and encode the
@@ -651,22 +688,10 @@ def ivfpq_residual_topk(
     reads m_sub ints per candidate plus the broadcast q x m x k LUT;
     full-precision vectors never join the corpus side. Determinism:
     6dp Lloyd rounding, 6dp residuals, fixed-order LUT sums. Returns
-    rank by (adc_dist2 asc, neighbor_id asc); score = adc_dist2.
-
-    `prebuilt`: the ivfpq_residual_build artifact tuple — pass it to
-    search against a quantizer trained once (ann_job persists the
-    index/codebooks/codes from the same build it searches with)."""
-    if prebuilt is None:
-        prebuilt = ivfpq_residual_build(
-            embeddings, n_lists, n_iters, m_sub, n_centroids, dim)
-    assigned, _cents, resid, pq_cents, codes = prebuilt
-    # query residual w.r.t. its own probed list — q - c_L exactly;
-    # LUT entry: ||r_q_sub - cw||^2, rounded 6dp
-    queries = _first(resid, n_queries, query_id="vec_id",
-                     qlist="centroid_id", qres="rvec")
-    return _probed_adc_topk(assigned, queries, "qres", pq_cents, codes,
-                            _sq_l2, m_sub, dim // m_sub, k,
-                            ascending=True)
+    rank by (adc_dist2 asc, neighbor_id asc); score = adc_dist2."""
+    return _compose("ivfpq_residual", embeddings, AnnParams(
+        n_lists=n_lists, n_iters=n_iters, m_sub=m_sub,
+        n_centroids=n_centroids, n_queries=n_queries, k=k, dim=dim))
 
 
 def ivfpq_topk(
@@ -691,10 +716,6 @@ def ivfpq_topk(
 
     Determinism discipline: coarse centroids and codebooks share the
     6dp Lloyd rounding; ADC scores are fixed-order subspace sums."""
-    assigned = kmeans_ivf_assignments(embeddings, n_lists, n_iters)
-    cents, codes = pq_codes(embeddings, m_sub, n_centroids,
-                            n_iters, dim)
-    queries = _first(assigned, n_queries, query_id="vec_id",
-                     qunit="unit", qlist="centroid_id")
-    return _probed_adc_topk(assigned, queries, "qunit", cents, codes,
-                            _dot, m_sub, dim // m_sub, k)
+    return _compose("ivfpq", embeddings, AnnParams(
+        n_lists=n_lists, n_iters=n_iters, m_sub=m_sub,
+        n_centroids=n_centroids, n_queries=n_queries, k=k, dim=dim))

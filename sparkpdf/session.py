@@ -69,8 +69,5 @@ def get_spark(
             .config("spark.python.daemon.module", "sparkpdf.worker_daemon")
             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         )
-    wh = os.environ.get("SPARKPDF_WAREHOUSE")
-    if wh:  # static conf: only effective before the first session
-        builder = builder.config("spark.sql.warehouse.dir", wh)
     return builder.getOrCreate()
 

@@ -1,7 +1,7 @@
 """Watermarked time-window aggregation over a streaming events source.
 
-Complements ingest.py (stateless extraction) and stateful.py (custom
-dedup state): this is the declarative windowed-agg path — tumbling
+Complements ingest.py (stateless extraction): this is the declarative
+windowed-agg path — tumbling
 windows + watermark, the standard Structured Streaming shape for
 event-rate rollups on a 10^12-row event stream.
 

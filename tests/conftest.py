@@ -15,15 +15,8 @@ def fixture_pdfs():
 
 @pytest.fixture(scope="session")
 def spark():
-    import tempfile
-
     from sparkpdf.session import get_spark
 
-    # warehouse is a static conf: point it at a temp dir BEFORE the
-    # session exists (bucketed-table tests use saveAsTable)
-    os.environ.setdefault(
-        "SPARKPDF_WAREHOUSE", tempfile.mkdtemp(prefix="sparkpdf_wh_")
-    )
     s = get_spark(app_name="sparkpdf-tests", cpus=4, shuffle_partitions=8)
     yield s
     s.stop()

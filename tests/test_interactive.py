@@ -214,16 +214,16 @@ def test_no_per_row_python_udfs():
 
 def test_single_python_boundary():
     """Every Python lane crosses the JVM<->Python boundary through the
-    one row-kernel adapter: mapInPandas/mapInArrow/applyInPandas
-    appear only in operators/_kernel.py (the streaming operators'
-    applyInPandasWithState is another API)."""
+    one row-kernel adapter: mapInPandas/mapInArrow/applyInPandas/
+    applyInPandasWithState appear only in operators/_kernel.py."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent / "sparkpdf"
     offenders = [
         (str(py.relative_to(root)), needle)
         for py in root.rglob("*.py")
-        for needle in (".mapInPandas(", ".mapInArrow(", ".applyInPandas(")
+        for needle in (".mapInPandas(", ".mapInArrow(", ".applyInPandas(",
+                       ".applyInPandasWithState(")
         if needle in py.read_text()
     ]
     assert offenders == [("operators/_kernel.py", ".mapInArrow(")]

@@ -555,57 +555,6 @@ def test_binaryfile_source(spark, tmp_path):
     assert len(rows["a.pdf"].spans) == 2
 
 
-def test_streaming_stateful_dedup(spark, tmp_path):
-    """applyInPandasWithState dedup: duplicates arriving in LATER
-    micro-batch runs are still flagged (state survives via the
-    streaming checkpoint)."""
-    from pyspark.sql import Row
-    from sparkpdf.streaming.stateful import streaming_exact_dedup
-
-    in_dir = str(tmp_path / "docs_in")
-    out_dir = str(tmp_path / "docs_out")
-    ck_dir = str(tmp_path / "docs_ck")
-    schema = "doc_id string, text string"
-    batch1 = spark.createDataFrame(
-        [Row(doc_id="a", text="alpha"), Row(doc_id="b", text="beta"),
-         Row(doc_id="a2", text="alpha")],
-        schema=schema,
-    )
-    batch1.write.mode("append").parquet(in_dir)
-
-    def drain():
-        src = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            streaming_exact_dedup(src)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # second run, new files: one repeat of "alpha", one new text
-    spark.createDataFrame(
-        [Row(doc_id="a3", text="alpha"), Row(doc_id="c", text="gamma")],
-        schema=schema,
-    ).write.mode("append").parquet(in_dir)
-    drain()
-    rows = spark.read.parquet(out_dir).collect()
-    ranks = {r.doc_id: r.dup_rank for r in rows}
-    assert len(rows) == 5
-    # "alpha" docs rank 0,1,2 in arrival order batches; a3 (second run)
-    # must see state from the first run -> rank 2
-    alpha_ranks = sorted(ranks[d] for d in ("a", "a2", "a3"))
-    assert alpha_ranks == [0, 1, 2]
-    assert ranks["a3"] == 2  # cross-run state carried by the checkpoint
-    assert ranks["b"] == 0 and ranks["c"] == 0
-    keepers = {r.doc_id for r in rows if r.dup_rank == 0}
-    assert len(keepers) == 3
-
-
 def test_checkpoint_torn_commit(spark, corpus, tmp_path, monkeypatch):
     """Crash AFTER a slice's data write but BEFORE its manifest row:
     the rerun reprocesses that slice with mode=overwrite — manifest is
@@ -1145,13 +1094,11 @@ def test_ivf_nprobe_recall_monotone(spark):
     assert h8 == len(truth)  # nprobe = n_lists scans everything: exact
 
 
-def test_ann_job_index_is_the_searched_lists(spark, tmp_path, capsys):
-    """jobs/ann_job.py (default IVF mode) persists the inverted lists
-    its search probed: with --nprobe 1 every top-k neighbour sits in
-    its query's index/ list."""
+def _run_ann_job(spark, capsys, out_dir, *flags):
+    """jobs/ann_job.py main() over the sf0.001 embeddings; returns its
+    summary JSON line."""
     import importlib.util
     import json
-    import os
 
     spec = importlib.util.spec_from_file_location(
         "ann_job", os.path.join(os.path.dirname(__file__),
@@ -1159,21 +1106,89 @@ def test_ann_job_index_is_the_searched_lists(spark, tmp_path, capsys):
     )
     aj = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(aj)
-
-    out_dir = str(tmp_path / "ann_out")
     rc = aj.main(["--embeddings", f"{SF}/embeddings.parquet",
-                  "--output", out_dir, "--nprobe", "1"], spark=spark)
+                  "--output", out_dir, *flags], spark=spark)
     assert rc == 0
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["mode"] == "ivf" and summary["results"] > 0
-    lists = {r.vec_id: r.centroid_id for r in
-             spark.read.parquet(os.path.join(out_dir, "index")).collect()}
-    assert len(lists) == summary["index_rows"]
-    topk = spark.read.parquet(os.path.join(out_dir, "topk")).collect()
-    assert len(topk) == summary["results"]
-    for r in topk:
-        assert lists[r.neighbor_id] == lists[r.query_id], r
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
+
+@pytest.mark.parametrize(
+    "mode", ["ivf", "--exact", "--pq", "--ivfpq", "--ivfpq-residual"])
+def test_ann_job_index_is_the_searched_lists(spark, tmp_path, capsys, mode):
+    """jobs/ann_job.py searches exactly the index it persists, in every
+    mode: topk/ equals the library search with the same parameters;
+    with --nprobe 1 every top-k neighbour of an IVF-routed mode sits in
+    its query's index/ list; codes/ holds m_sub rows per vector; and
+    the job leaves no persisted RDD behind."""
+    from collections import Counter
+
+    from sparkpdf.operators import similarity as sim
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    kw = dict(n_iters=2, m_sub=4, n_centroids=8, n_queries=4, k=3)
+    library = {
+        "ivf": lambda: sim.ivf_topk(emb, n_lists=8, n_queries=4, k=3,
+                                    nprobe=1),
+        "--exact": lambda: sim.brute_force_topk(emb, n_queries=4, k=3),
+        "--pq": lambda: sim.pq_topk(emb, **kw),
+        "--ivfpq": lambda: sim.ivfpq_topk(emb, n_lists=8, **kw),
+        "--ivfpq-residual": lambda: sim.ivfpq_residual_topk(
+            emb, n_lists=8, **kw),
+    }[mode]
+    def persisted():
+        # ids, not a count: the shared session's cleaner may unpersist
+        # other tests' cached frames while the job runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    out_dir = str(tmp_path / "ann_out")
+    summary = _run_ann_job(
+        spark, capsys, out_dir, "--n-lists", "8", "--n-iters", "2",
+        "--nprobe", "1", "--k", "3", "--queries", "4", "--m-sub", "4",
+        *([] if mode == "ivf" else [mode]))
+    assert persisted() <= before
+    assert summary["mode"] == mode.lstrip("-").replace("-", "_")
+
+    def read(name):
+        return spark.read.parquet(os.path.join(out_dir, name)).collect()
+
+    topk = read("topk")
+    assert 0 < len(topk) == summary["results"]
+    assert sorted(map(tuple, topk)) == sorted(
+        map(tuple, library().collect()))
+    if mode in ("ivf", "--ivfpq", "--ivfpq-residual"):
+        lists = {r.vec_id: r.centroid_id for r in read("index")}
+        for r in topk:
+            assert lists[r.neighbor_id] == lists[r.query_id], r
+    if mode in ("--pq", "--ivfpq", "--ivfpq-residual"):
+        per_vec = Counter(r.vec_id for r in read("codes"))
+        assert len(per_vec) == emb.count()
+        assert set(per_vec.values()) == {4}
+        assert summary["index_rows"] == 4 * len(per_vec)
+
+
+@pytest.mark.parametrize("mode,quantizers",
+                         [("--pq", 1), ("--ivfpq", 2),
+                          ("--ivfpq-residual", 2)])
+def test_ann_job_trains_each_quantizer_once(spark, tmp_path, capsys,
+                                            monkeypatch, mode, quantizers):
+    """ann_job builds each Lloyd-trained quantizer (the PQ codebooks,
+    plus the coarse centroids of the IVF-routed modes) once: one Lloyd
+    update (_means) per iteration per quantizer, none inside the
+    search."""
+    from sparkpdf.operators import similarity as sim
+
+    calls = []
+    means = sim._means
+
+    def counted(*args):
+        calls.append(args)
+        return means(*args)
+
+    monkeypatch.setattr(sim, "_means", counted)
+    _run_ann_job(spark, capsys, str(tmp_path / "ann_out"),
+                 "--n-iters", "2", mode)
+    assert len(calls) == 2 * quantizers
 
 def test_media_features_corrupt_g4_quarantines(spark):
     """A G4 TIFF with a garbled bitstream must yield empty features,
@@ -1199,38 +1214,6 @@ def test_media_features_corrupt_g4_quarantines(spark):
     )
     r = extract_media_features(df).collect()[0]
     assert r.ink_ratio is None and r.n_bytes == len(bad)
-
-
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Co-bucketed tables join with ZERO shuffle: the physical plan has
-    no Exchange (the 100 TB co-located-join contract), while the same
-    join on plain parquet shuffles both sides."""
-    from sparkpdf.sources.bucketed import bucketed_join, write_bucketed
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "lang"
-    )
-    quality = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", F.length("text").alias("n_chars")
-    )
-    spark.sql("CREATE DATABASE IF NOT EXISTS buck")
-    write_bucketed(docs, "buck.docs", n_buckets=8)
-    write_bucketed(quality, "buck.quality", n_buckets=8)
-    # the 100 TB condition: neither side broadcast-able
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "buck.docs", "buck.quality")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert joined.count() == docs.count()
-        # control: the identical join over non-bucketed scans shuffles
-        plain = docs.join(quality, "doc_id")
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_media_payload_extraction_never_drops_docs(spark):
@@ -1696,10 +1679,11 @@ def test_pq_topk(spark):
     subspace sum); ranks are dense 1..k per query with self excluded;
     the lookup join is broadcast (corpus codes never shuffle wide)."""
     from sparkpdf.operators.similarity import (
-        pq_codes, pq_topk, with_unit_vectors)
+        INDEXES, AnnParams, _build, pq_topk, with_unit_vectors)
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(64)
-    cents, codes = pq_codes(emb)
+    built = _build(INDEXES["pq"][0], with_unit_vectors(emb), AnnParams())
+    cents, codes = built["codebooks"], built["codes"]
     rows = codes.collect()
     per_vec = {}
     for r in rows:
@@ -1845,141 +1829,6 @@ def test_remove_duplicate_lines(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "partial_min" in final, plan
-
-
-def test_streaming_stateful_sessionize(spark, tmp_path):
-    """applyInPandasWithState sessionizer with ProcessingTimeTimeout:
-    a large event-time gap closes a session (closed_by='gap') and the
-    trailing open session flushes out of state on the processing-time
-    timeout (closed_by='timeout'). One long-lived query; output polled
-    with a deadline (timeout batches fire on the trigger cadence)."""
-    import time
-
-    from pyspark.sql import Row
-    from sparkpdf.streaming.stateful import streaming_sessionize
-
-    in_dir = str(tmp_path / "ev_in")
-    out_dir = str(tmp_path / "ev_out")
-    ck_dir = str(tmp_path / "ev_ck")
-    schema = "user_id string, ts long"
-    # one batch, one user: [1000, 2000] -- gap --> [10_000_000]
-    # closes session 1 in-batch; session 2 stays open in state until
-    # the 2 s idle timeout flushes it
-    spark.createDataFrame(
-        [Row(user_id="u1", ts=1000), Row(user_id="u1", ts=2000),
-         Row(user_id="u1", ts=10_000_000)],
-        schema=schema,
-    ).write.mode("append").parquet(in_dir)
-    src = spark.readStream.schema(schema).parquet(in_dir)
-    q = (
-        streaming_sessionize(src, gap_ms=10_000, idle_timeout_ms=2_000)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck_dir)
-        .outputMode("append")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        got = []
-        while time.time() < deadline:
-            try:
-                got = sorted(
-                    (r.user_id, r.session_start, r.session_end,
-                     r.n_events, r.closed_by)
-                    for r in spark.read.parquet(out_dir).collect()
-                )
-            except Exception:
-                got = []
-            if len(got) >= 2:
-                break
-            time.sleep(2)
-    finally:
-        q.stop()
-    assert ("u1", 1000, 2000, 2, "gap") in got, got
-    assert ("u1", 10_000_000, 10_000_000, 1, "timeout") in got, got
-    assert len(got) == 2  # no duplicate emissions
-
-
-def test_streaming_sessionize_kill_and_resume(spark, tmp_path):
-    """Round-6 verdict item 7: the stateful sessionizer must survive a
-    query kill + restart on the same checkpoint with no duplicate and
-    no lost sessions. An OPEN session's state (started before the
-    kill) must be restored on restart and merge with post-restart
-    events into ONE session. The idle timeout is set far beyond the
-    test horizon so every close is deterministic ('gap')."""
-    import time
-
-    from pyspark.sql import Row
-    from sparkpdf.streaming.stateful import streaming_sessionize
-
-    in_dir = str(tmp_path / "kr_in")
-    out_dir = str(tmp_path / "kr_out")
-    ck_dir = str(tmp_path / "kr_ck")
-    schema = "user_id string, ts long"
-
-    def start_query():
-        src = spark.readStream.schema(schema).parquet(in_dir)
-        return (
-            streaming_sessionize(src, gap_ms=10_000,
-                                 idle_timeout_ms=600_000)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(processingTime="1 second")
-            .start()
-        )
-
-    def poll_rows(n, deadline_s=120):
-        deadline = time.time() + deadline_s
-        got = []
-        while time.time() < deadline:
-            try:
-                got = sorted(
-                    (r.user_id, r.session_start, r.session_end,
-                     r.n_events, r.closed_by)
-                    for r in spark.read.parquet(out_dir).collect()
-                )
-            except Exception:
-                got = []
-            if len(got) >= n:
-                break
-            time.sleep(2)
-        return got
-
-    # phase 1: session A closes by gap; session B opens (stays in state)
-    spark.createDataFrame(
-        [Row(user_id="u1", ts=1000), Row(user_id="u1", ts=2000),
-         Row(user_id="u1", ts=10_000_000)],
-        schema=schema,
-    ).write.mode("append").parquet(in_dir)
-    q = start_query()
-    try:
-        got = poll_rows(1)
-    finally:
-        q.stop()  # the kill
-    assert ("u1", 1000, 2000, 2, "gap") in got, got
-
-    # phase 2 (written while the query is DOWN): continues session B,
-    # then a gap event closes it
-    spark.createDataFrame(
-        [Row(user_id="u1", ts=10_000_500),
-         Row(user_id="u1", ts=20_000_000)],
-        schema=schema,
-    ).write.mode("append").parquet(in_dir)
-    q2 = start_query()
-    try:
-        got = poll_rows(2)
-    finally:
-        q2.stop()
-    # exactly two sessions: A once (no batch-1 reprocessing), and B
-    # spanning the restart (state restored: n_events=2 across the kill)
-    assert got == [
-        ("u1", 1000, 2000, 2, "gap"),
-        ("u1", 10_000_000, 10_000_500, 2, "gap"),
-    ], got
 
 
 def test_remove_duplicate_lines_large_doc_ids(spark):
