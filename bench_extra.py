@@ -33,6 +33,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.probes import _stage_list, last_stage_id  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 MULT = int(os.environ.get("SPARKPDF_BENCH_MULT", "16"))
@@ -47,31 +49,11 @@ def _spark(cpus: int = CPUS, **kw):
 
 
 # --- stage metrics from the status store ---------------------------------
-
-
-def _stages(spark):
-    """(status store, every stage it knows), once the listener bus has
-    delivered the events of the jobs that already returned."""
-    jvm = spark._jvm
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(30_000)
-    store = sc.statusStore()
-    stages = store.stageList(
-        jvm.java.util.ArrayList(), False, False,
-        spark.sparkContext._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList())
-    return store, [stages.apply(i) for i in range(stages.size())]
-
-
-def last_stage_id(spark) -> int:
-    """The newest stage id so far (-1 before any job): pass it to
-    `stage_report` after an action to get that action's stages."""
-    _, stages = _stages(spark)
-    return max((s.stageId() for s in stages), default=-1)
+# The status-store reads (`_stage_list`, `last_stage_id`) are perfbench's.
 
 
 def _completed_after(spark, after_id: int):
-    store, stages = _stages(spark)
+    store, stages = _stage_list(spark)
     return store, [s for s in stages if s.stageId() > after_id
                    and s.status().toString() == "COMPLETE"]
 

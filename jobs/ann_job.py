@@ -84,6 +84,7 @@ def main(argv=None, spark=None):
         AnnParams,
         with_unit_vectors,
     )
+    from sparkpdf.plans.checkpoint import write_observed
     from sparkpdf.session import get_spark
 
     owns_spark = spark is None
@@ -97,15 +98,13 @@ def main(argv=None, spark=None):
                   n_queries=args.queries, k=args.k, nprobe=args.nprobe)
     steps, search = INDEXES[mode]
     unit = with_unit_vectors(spark.read.parquet(args.embeddings))
-    built = {}
+    built, index_rows = {}, 0
     for name, step in steps:
         path = os.path.join(args.output, name)
-        step(unit, built, p).write.mode("overwrite").parquet(path)
+        index_rows = write_observed(step(unit, built, p), path)["rows"]
         built[name] = spark.read.parquet(path)
-    index_rows = built[steps[-1][0]].count() if steps else 0
-    search(unit, built, p).write.mode("overwrite").parquet(
-        os.path.join(args.output, "topk"))
-    n_results = spark.read.parquet(os.path.join(args.output, "topk")).count()
+    n_results = write_observed(search(unit, built, p),
+                               os.path.join(args.output, "topk"))["rows"]
     print(
         json.dumps(
             {

@@ -25,7 +25,8 @@ Stages (each output lands under --output for auditability):
 
 Every stage is DataFrame-native (Python row kernels only inside extraction);
 at cluster scale the shuffles are: extraction none, dedup's LSH band
-join + label propagation, chunking none.
+join + label propagation, chunking none. Only the counts of unwritten
+intermediate frames run a pass of their own.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ import json
 import sys
 
 
-def main(argv=None):
+def main(argv=None, spark=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
@@ -79,13 +80,15 @@ def main(argv=None):
     from sparkpdf.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = get_spark("sparkpdf-curate")
+    owns_spark = spark is None
+    if owns_spark:
+        spark = get_spark("sparkpdf-curate")
 
     from sparkpdf.operators.dedup import dup_clusters
     from sparkpdf.operators.extract import extract_spans
     from sparkpdf.operators.spans import doc_full_text
     from sparkpdf.operators.text import chunk_documents, pii_scrub, quality_score
-    from sparkpdf.plans.checkpoint import CheckpointedExtraction
+    from sparkpdf.plans.checkpoint import CheckpointedExtraction, write_observed
 
     out = args.output.rstrip("/")
 
@@ -93,8 +96,7 @@ def main(argv=None):
     ck = CheckpointedExtraction(f"{out}/spans", n_batches=args.batches)
     ck.run(spark.read.parquet(args.input), extract_spans)
     spans = ck.result(spark)
-    n_extracted = spans.count()
-    n_errors = spans.filter("error IS NOT NULL").count()
+    extracted = ck.totals()
 
     # 2. quality gate over assembled text
     docs = doc_full_text(spans.filter("error IS NULL")).select(
@@ -230,12 +232,11 @@ def main(argv=None):
     chunks = chunk_documents(
         unique_docs, chunk_chars=args.chunk_chars, overlap=args.overlap
     )
-    chunks.write.mode("overwrite").parquet(f"{out}/chunks")
-    n_chunks = spark.read.parquet(f"{out}/chunks").count()
+    n_chunks = write_observed(chunks, f"{out}/chunks")["rows"]
 
     summary = {
-        "extracted": n_extracted,
-        "errored": n_errors,
+        "extracted": extracted["n_docs"],
+        "errored": extracted["n_errors"],
         "quality_kept": n_quality,
         "unique_after_dedup": n_unique,
         "lsh_overflow_buckets": n_overflow_buckets,
@@ -245,7 +246,8 @@ def main(argv=None):
         "chunks": n_chunks,
     }
     print(json.dumps(summary))
-    spark.stop()
+    if owns_spark:
+        spark.stop()
     return 0
 
 

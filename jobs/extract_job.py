@@ -20,7 +20,7 @@ import json
 import sys
 
 
-def main(argv=None):
+def main(argv=None, spark=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
@@ -66,7 +66,9 @@ def main(argv=None):
 
     from sparkpdf.session import get_spark
 
-    spark = get_spark("sparkpdf-extract")
+    owns_spark = spark is None
+    if owns_spark:
+        spark = get_spark("sparkpdf-extract")
 
     from sparkpdf.operators.extract import (
         extract_interleaved,
@@ -101,14 +103,15 @@ def main(argv=None):
 
     ck = CheckpointedExtraction(args.output, n_batches=args.batches)
     done = ck.run(pdf_raw, workload)
-    result = ck.result(spark)
+    totals = ck.totals()
     summary = {
         "slices_processed": done,
-        "total_docs": result.count(),
-        "errored_docs": result.filter("error IS NOT NULL").count(),
+        "total_docs": totals["n_docs"],
+        "errored_docs": totals["n_errors"],
     }
     print(json.dumps(summary))
-    spark.stop()
+    if owns_spark:
+        spark.stop()
     return 0
 
 

@@ -71,7 +71,29 @@ def main(argv=None, spark=None):
         pixel_stats_policy,
         record_pixel_policy,
     )
-    from sparkpdf.plans.checkpoint import CheckpointedExtraction
+    from sparkpdf.plans.checkpoint import CheckpointedExtraction, write_observed
+
+    def decide(policy_fn, frame, all_formats):
+        """(formats to decode, manifest/summary policy): forced by
+        --force-decode (`all_formats`) or --force-header-only, else
+        measured on `frame` by `policy_fn`."""
+        if args.force_decode:
+            return all_formats, {"decode_formats": ["*forced*"],
+                                 "formats": {}, "sampled": 0}
+        if args.force_header_only:
+            return set(), {"decode_formats": [], "formats": {},
+                           "sampled": 0}
+        pol = policy_fn(
+            frame,
+            sample_per_format=args.sample_per_format,
+            budget_core_seconds=args.budget_core_seconds,
+            min_mb_per_sec=args.min_mb_per_sec,
+        )
+        return pol["decode_formats"], {
+            "decode_formats": sorted(pol["decode_formats"]),
+            "formats": pol["formats"],
+            "sampled": pol["sampled"],
+        }
 
     out = args.output.rstrip("/")
     pdf_raw = spark.read.parquet(args.input)
@@ -80,56 +102,34 @@ def main(argv=None, spark=None):
         from sparkpdf.operators.multimodal import extract_attachment_media
 
         payloads = payloads.unionByName(extract_attachment_media(pdf_raw))
-    payloads.write.mode("overwrite").parquet(f"{out}/payloads")
+    written = write_observed(
+        payloads, f"{out}/payloads",
+        quarantined=F.count_if(F.col("error").isNotNull()))
     payloads = spark.read.parquet(f"{out}/payloads")
-    n_payloads = payloads.count()
-    n_quarantined = payloads.filter(F.col("error").isNotNull()).count()
     media = payloads.filter(F.col("error").isNull()).drop("error")
     # the pixel policy and image-feature pass only see image payloads;
     # attachment audio/video route to their own sample-decode lanes
     image_media = (media.filter(F.col("modality") == "image")
                    if args.attachments else media)
 
-    if args.force_decode:
-        pixel_formats = None  # every decodable format
-        policy = {"decode_formats": ["*forced*"], "formats": {},
-                  "sampled": 0}
-    elif args.force_header_only:
-        pixel_formats = set()
-        policy = {"decode_formats": [], "formats": {}, "sampled": 0}
-    else:
-        pol = pixel_stats_policy(
-            image_media,
-            sample_per_format=args.sample_per_format,
-            budget_core_seconds=args.budget_core_seconds,
-            min_mb_per_sec=args.min_mb_per_sec,
-        )
-        pixel_formats = pol["decode_formats"]
-        policy = {
-            "decode_formats": sorted(pol["decode_formats"]),
-            "formats": pol["formats"],
-            "sampled": pol["sampled"],
-        }
+    # None: every decodable format
+    pixel_formats, policy = decide(pixel_stats_policy, image_media, None)
     # the manifest rides next to the features so a resumed/downstream
     # run can replay the same decode path
     ck = CheckpointedExtraction(out, n_batches=1)
-    record_pixel_policy(
-        ck,
-        {"decode_formats": set(policy["decode_formats"]),
-         "formats": policy["formats"], "sampled": policy["sampled"]},
-    )
+    record_pixel_policy(ck, policy)
 
-    feats = extract_media_features(image_media,
-                                   pixel_formats=pixel_formats)
-    feats.write.mode("overwrite").parquet(f"{out}/features")
-    feats = spark.read.parquet(f"{out}/features")
+    feats = write_observed(
+        extract_media_features(image_media, pixel_formats=pixel_formats),
+        f"{out}/features",
+        decoded=F.count_if(F.col("mean_luma").isNotNull()
+                           | F.col("ink_ratio").isNotNull()),
+    )
     summary = {
-        "payload_rows": n_payloads,
-        "quarantined": n_quarantined,
-        "features": feats.count(),
-        "decoded_stats": feats.filter(
-            F.col("mean_luma").isNotNull() | F.col("ink_ratio").isNotNull()
-        ).count(),
+        "payload_rows": written["rows"],
+        "quarantined": written["quarantined"],
+        "features": feats["rows"],
+        "decoded_stats": feats["decoded"],
         "policy": policy,
     }
     if args.attachments:
@@ -146,51 +146,27 @@ def main(argv=None, spark=None):
         )
 
         av_media = media.filter(F.col("modality").isin("audio", "video"))
-        if args.force_decode:
-            av_formats = {"wav", "flac", "aiff", "au", "avi", "mp4"}
-            av_policy = {"decode_formats": ["*forced*"], "formats": {},
-                         "sampled": 0}
-        elif args.force_header_only:
-            av_formats = set()
-            av_policy = {"decode_formats": [], "formats": {},
-                         "sampled": 0}
-        else:
-            av_pol = av_stats_policy(
-                av_media,
-                sample_per_format=args.sample_per_format,
-                budget_core_seconds=args.budget_core_seconds,
-                min_mb_per_sec=args.min_mb_per_sec,
-            )
-            av_formats = av_pol["decode_formats"]
-            av_policy = {
-                "decode_formats": sorted(av_pol["decode_formats"]),
-                "formats": av_pol["formats"],
-                "sampled": av_pol["sampled"],
-            }
-        record_pixel_policy(
-            ck,
-            {"decode_formats": set(av_policy["decode_formats"]),
-             "formats": av_policy["formats"],
-             "sampled": av_policy["sampled"]},
-            status="av_policy",
-        )
+        av_formats, av_policy = decide(
+            av_stats_policy, av_media,
+            {"wav", "flac", "aiff", "au", "avi", "mp4"})
+        record_pixel_policy(ck, av_policy, status="av_policy")
         summary["av_policy"] = av_policy
         gated = av_media.filter(
             sniff_av_format(F.col("payload")).isin(*av_formats)
             if av_formats else F.lit(False))
-        audio = extract_audio_pcm_features(
-            gated.filter(F.col("modality") == "audio"))
-        audio.write.mode("overwrite").parquet(f"{out}/audio_features")
-        vid = extract_video_frame_features(
-            gated.filter(F.col("modality") == "video"))
-        vid.write.mode("overwrite").parquet(f"{out}/video_frames")
-        audio = spark.read.parquet(f"{out}/audio_features")
-        vid = spark.read.parquet(f"{out}/video_frames")
-        summary["audio_rows"] = audio.count()
-        summary["audio_decoded"] = audio.filter(
-            F.col("error").isNull()).count()
-        summary["video_frame_rows"] = vid.filter(
-            F.col("error").isNull()).count()
+        audio = write_observed(
+            extract_audio_pcm_features(
+                gated.filter(F.col("modality") == "audio")),
+            f"{out}/audio_features",
+            decoded=F.count_if(F.col("error").isNull()))
+        vid = write_observed(
+            extract_video_frame_features(
+                gated.filter(F.col("modality") == "video")),
+            f"{out}/video_frames",
+            decoded=F.count_if(F.col("error").isNull()))
+        summary["audio_rows"] = audio["rows"]
+        summary["audio_decoded"] = audio["decoded"]
+        summary["video_frame_rows"] = vid["decoded"]
     print(json.dumps(summary))
     if own_session:
         spark.stop()

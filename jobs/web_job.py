@@ -72,7 +72,7 @@ def main(argv=None, spark=None):
         spark = get_spark("sparkpdf-web")
 
     from sparkpdf.operators.text import extract_web_docs, link_host_degree
-    from sparkpdf.plans.checkpoint import CheckpointedExtraction
+    from sparkpdf.plans.checkpoint import CheckpointedExtraction, write_observed
 
     n_warc_quarantined = None
     if args.warc:
@@ -140,37 +140,37 @@ def main(argv=None, spark=None):
         staged_dir = args.output.rstrip("/") + "/pages_staged"
         keep = ("error IS NULL AND http_status = 200 "
                 "AND html IS NOT NULL")
-        demuxed.select(
-            "doc_id", "http_status", "content_type", "error",
-            F.when(F.expr(keep), F.col("html")).alias("html"),
-        ).write.mode("overwrite").parquet(staged_dir)
-        staged = spark.read.parquet(staged_dir)
-        n_warc_quarantined = staged.filter(
-            "error IS NOT NULL").count()
-        pages = staged.filter("html IS NOT NULL").select(
-            "doc_id", "html")
+        n_warc_quarantined = write_observed(
+            demuxed.select(
+                "doc_id", "http_status", "content_type", "error",
+                F.when(F.expr(keep), F.col("html")).alias("html"),
+            ),
+            staged_dir,
+            quarantined=F.count_if(F.col("error").isNotNull()),
+        )["quarantined"]
+        pages = spark.read.parquet(staged_dir).filter(
+            "html IS NOT NULL").select("doc_id", "html")
     else:
         pages = spark.read.parquet(args.input)
     ck = CheckpointedExtraction(args.output, n_batches=args.batches)
     done = ck.run(pages, extract_web_docs)
     result = ck.result(spark)
 
-    hosts = link_host_degree(result)
-    hosts_dir = args.output.rstrip("/") + "/link_hosts"
-    hosts.write.mode("overwrite").parquet(hosts_dir)
-    hosts_out = spark.read.parquet(hosts_dir)
+    n_hosts = write_observed(link_host_degree(result),
+                             args.output.rstrip("/") + "/link_hosts")["rows"]
+    totals = ck.totals()
 
     summary = {
         "slices_processed": done,
-        "total_docs": result.count(),
-        "errored_docs": result.filter("error IS NOT NULL").count(),
+        "total_docs": totals["n_docs"],
+        "errored_docs": totals["n_errors"],
         # filter quarantined rows first: under legacy sizeOfNull
         # configs size(NULL) is -1 and would silently subtract from
         # the stat — filtering makes it config-independent
         "total_links": result.filter("error IS NULL").agg(
             F.coalesce(F.sum(F.size("links")), F.lit(0))
         ).collect()[0][0],
-        "hosts": hosts_out.count(),
+        "hosts": n_hosts,
     }
     if n_warc_quarantined is not None:
         summary["warc_quarantined"] = n_warc_quarantined
@@ -178,8 +178,7 @@ def main(argv=None, spark=None):
         # drop it so the output dataset doesn't carry the page corpus
         # twice — Hadoop FS API so non-local outputs work too
         jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(
-            args.output.rstrip("/") + "/pages_staged")
+        p = jvm.org.apache.hadoop.fs.Path(staged_dir)
         p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
     print(json.dumps(summary))
     if owns_spark:

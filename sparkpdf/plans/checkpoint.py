@@ -1,7 +1,7 @@
 """Resumable batch runs: per-partition progress manifest + metrics.
 
 North-rule requirement: "resumable from checkpoint with per-partition
-lineage + metrics" — implemented as an append-only parquet manifest
+lineage + metrics" — implemented as an append-only JSON-lines manifest
 (stand-in for an Iceberg snapshot log, which needs a catalog this
 sandbox doesn't ship):
 
@@ -14,6 +14,11 @@ completed part_ids, so finished slices are never recomputed and no
 duplicate spans are written (each slice writes to its own subdirectory,
 committed before the manifest row — write-then-log ordering makes the
 manifest the source of truth).
+
+`n_docs`, `n_bytes` and `n_errors` are observed on the slice's own
+write (`write_observed`: partial aggregates inside the write tasks,
+merged on the driver), so a slice is one Spark job and is never read
+back. Job summaries sum the manifest (`totals()`).
 """
 
 from __future__ import annotations
@@ -23,8 +28,18 @@ import os
 import time
 from typing import Callable, List
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+def write_observed(df: DataFrame, path: str, **aggs: Column) -> dict:
+    """Write `df` to `path` as parquet (overwrite); return the rows
+    written under "rows" plus the named aggregates over them. Spark
+    computes them inside the write's own tasks: no second pass."""
+    obs = Observation()  # one per write: an Observation observes once
+    df.observe(obs, F.count("*").alias("rows"),
+               *(agg.alias(name) for name, agg in aggs.items())) \
+        .write.mode("overwrite").parquet(path)
+    return obs.get  # only after the write returned: get blocks until then
 
 
 class CheckpointedExtraction:
@@ -32,30 +47,22 @@ class CheckpointedExtraction:
         self.out_dir = out_dir
         self.n_batches = n_batches
         self.manifest_path = out_dir.rstrip("/") + "/_progress.jsonl"
+        self._spark = None  # the session of the frame `run` was given
 
     # -- manifest I/O via the Hadoop FileSystem API -----------------------
     # The manifest must live next to the data on whatever filesystem
     # out_dir names (s3a://, hdfs://, file:) — a driver-local open() would
-    # silently diverge from the data location on a real cluster.
+    # silently diverge from the data location on a real cluster. So there
+    # is no fallback: without a session, SparkSession.active() raises.
 
     def _hadoop_fs(self):
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return None, None
+        spark = self._spark or SparkSession.active()
         jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         path = jvm.org.apache.hadoop.fs.Path(self.manifest_path)
-        fs = path.getFileSystem(hconf)
-        return fs, path
+        return jvm, path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
     def _read_manifest(self) -> str:
-        fs, path = self._hadoop_fs()
-        if fs is None:  # no active session: local-path fallback
-            if not os.path.exists(self.manifest_path):
-                return ""
-            with open(self.manifest_path) as f:
-                return f.read()
-        jvm = SparkSession.getActiveSession()._jvm
+        jvm, fs, path = self._hadoop_fs()
         # a crash between delete and rename (in _append_manifest) leaves
         # only the .tmp — fall back to it so no completed part is lost
         for cand in (
@@ -75,12 +82,6 @@ class CheckpointedExtraction:
         return ""
 
     def _append_manifest(self, line: str):
-        fs, path = self._hadoop_fs()
-        if fs is None:
-            os.makedirs(self.out_dir, exist_ok=True)
-            with open(self.manifest_path, "a") as f:
-                f.write(line)
-            return
         # Object stores lack append; read-modify-write the (small)
         # manifest. Single-driver writer, so no concurrent-append race.
         # Torn-commit safety: write the WHOLE new manifest to a temp
@@ -89,7 +90,11 @@ class CheckpointedExtraction:
         # completed parts (rename is atomic on HDFS; the .tmp fallback
         # in _read_manifest covers the delete->rename window).
         prev = self._read_manifest()
-        jvm = SparkSession.getActiveSession()._jvm
+        # every line is written whole with its newline, so an
+        # unterminated tail is a torn write: drop it, or the new line
+        # would glue onto it and be unparseable too
+        prev = prev[: prev.rfind("\n") + 1]
+        jvm, fs, path = self._hadoop_fs()
         tmp = jvm.org.apache.hadoop.fs.Path(self.manifest_path + ".tmp")
         stream = fs.create(tmp, True)
         try:
@@ -100,8 +105,9 @@ class CheckpointedExtraction:
             fs.delete(path, False)
         fs.rename(tmp, path)
 
-    def completed_parts(self) -> set:
-        done = set()
+    def _ok_rows(self) -> dict:
+        """part_id -> that part's latest status='ok' manifest row."""
+        rows = {}
         for raw in self._read_manifest().splitlines():
             if not raw.strip():
                 continue
@@ -112,8 +118,19 @@ class CheckpointedExtraction:
                 # part re-runs (idempotent overwrite), resume proceeds
                 continue
             if rec.get("status") == "ok":
-                done.add(rec["part_id"])
-        return done
+                rows[rec["part_id"]] = rec
+        return rows
+
+    def completed_parts(self) -> set:
+        return set(self._ok_rows())
+
+    def totals(self) -> dict:
+        """n_docs, n_bytes and n_errors over every completed part (this
+        run's and earlier, resumed runs'), summed from the manifest —
+        no pass over the data."""
+        rows = self._ok_rows().values()
+        return {k: sum(r[k] for r in rows)
+                for k in ("n_docs", "n_bytes", "n_errors")}
 
     def _log(self, rec: dict):
         self._append_manifest(json.dumps(rec) + "\n")
@@ -125,6 +142,7 @@ class CheckpointedExtraction:
     ) -> List[int]:
         """Process every not-yet-done slice; returns part_ids done this
         run."""
+        self._spark = pdf_raw.sparkSession
         done = self.completed_parts()
         processed = []
         salted = pdf_raw.withColumn(
@@ -135,31 +153,22 @@ class CheckpointedExtraction:
                 continue
             t0 = time.time()
             part_df = salted.filter(F.col("_part") == part).drop("_part")
-            out = extract_fn(part_df)
-            dest = os.path.join(self.out_dir, f"part={part}")
-            out.write.mode("overwrite").parquet(dest)
-            stats = (
-                SparkSession.getActiveSession()
-                .read.parquet(dest)
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("n_bytes"),
-                    F.coalesce(
-                        F.sum((F.col("error").isNotNull()).cast("int")), F.lit(0)
-                    ).alias("n_errors"),
-                )
-                .collect()[0]
+            stats = write_observed(
+                extract_fn(part_df),
+                os.path.join(self.out_dir, f"part={part}"),
+                n_bytes=F.coalesce(F.sum("n_bytes"), F.lit(0)),
+                n_errors=F.count_if(F.col("error").isNotNull()),
             )
             t1 = time.time()
             self._log(
                 {
                     "part_id": part,
-                    "n_docs": int(stats.n_docs),
-                    "n_bytes": int(stats.n_bytes),
-                    "n_errors": int(stats.n_errors),
+                    "n_docs": stats["rows"],
+                    "n_bytes": stats["n_bytes"],
+                    "n_errors": stats["n_errors"],
                     "t_start": t0,
                     "t_end": t1,
-                    "docs_per_sec": int(stats.n_docs) / max(t1 - t0, 1e-9),
+                    "docs_per_sec": stats["rows"] / max(t1 - t0, 1e-9),
                     "status": "ok",
                 }
             )

@@ -636,6 +636,147 @@ def test_checkpoint_hadoop_fs_atomic_swap(spark, corpus, tmp_path):
     assert CheckpointedExtraction(out, n_batches=2).completed_parts() == {0, 1}
 
 
+def _poisoned(spark, frame, col="pdf_bytes"):
+    """`frame` plus three poison PDFs that must quarantine (the PDF
+    magic keeps the interleaved sniff from reading them as HTML)."""
+    return frame.unionByName(spark.createDataFrame(
+        [("bad-header", b"%PDF-"), ("bad-garbage", b"%PDF-1.4\n\x00\xff"),
+         ("bad-truncated", b"%PDF-1.4\n1 0 obj\n<< /T")],
+        f"doc_id string, {col} binary"))
+
+
+def _part_counts(spark, out, part):
+    """(n_docs, n_bytes, n_errors) re-read from one slice's output."""
+    return tuple(spark.read.parquet(f"{out}/part={part}").agg(
+        F.count("*"), F.coalesce(F.sum("n_bytes"), F.lit(0)),
+        F.count_if(F.col("error").isNotNull())).first())
+
+
+def test_checkpoint_runs_one_spark_job_per_slice(spark, corpus, tmp_path):
+    """A slice is ONE Spark job: its manifest stats are observed on the
+    slice's own write, never counted by reading the output back."""
+    from sparkpdf.operators.extract import extract_spans
+    from sparkpdf.plans.checkpoint import CheckpointedExtraction
+
+    corpus.count()  # materialize the cached input outside the group
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-slices", "one job per slice")
+    try:
+        CheckpointedExtraction(str(tmp_path / "jobs"), n_batches=4).run(
+            corpus, extract_spans)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-slices")) == 4
+
+
+def test_checkpoint_manifest_stats_equal_the_written_slices(
+        spark, corpus, tmp_path):
+    """Each manifest row's n_docs/n_bytes/n_errors equals a re-read
+    count of its part=N/ output, poison docs included, and totals()
+    sums them."""
+    import json
+
+    from sparkpdf.operators.extract import extract_spans
+    from sparkpdf.plans.checkpoint import CheckpointedExtraction
+
+    out = str(tmp_path / "stats")
+    ck = CheckpointedExtraction(out, n_batches=3)
+    assert sorted(ck.run(_poisoned(spark, corpus), extract_spans)) == [0, 1, 2]
+    with open(ck.manifest_path) as f:
+        rows = {r["part_id"]: r for r in map(json.loads, f)}
+    assert sorted(rows) == [0, 1, 2]
+    for part, rec in rows.items():
+        assert (rec["n_docs"], rec["n_bytes"], rec["n_errors"]) == \
+            _part_counts(spark, out, part)
+    assert ck.totals() == {"n_docs": corpus.count() + 3,
+                           "n_bytes": sum(r["n_bytes"] for r in rows.values()),
+                           "n_errors": 3}
+
+
+def test_checkpoint_rerun_after_torn_line_is_recorded(spark, corpus, tmp_path):
+    """The row a resumed run appends after a torn trailing line is
+    itself parseable: the re-run part counts as done, so a third run
+    does nothing and the totals match the output."""
+    from sparkpdf.operators.extract import extract_spans
+    from sparkpdf.plans.checkpoint import CheckpointedExtraction
+
+    out = str(tmp_path / "torn2")
+    CheckpointedExtraction(out, n_batches=3).run(corpus, extract_spans)
+    path = os.path.join(out, "_progress.jsonl")
+    with open(path) as f:
+        lines = f.readlines()
+    with open(path, "w") as f:
+        f.writelines(lines[:-1])
+        f.write(lines[-1][: len(lines[-1]) // 2])
+    os.remove(os.path.join(out, "._progress.jsonl.crc"))
+    ck = CheckpointedExtraction(out, n_batches=3)
+    assert len(ck.run(corpus, extract_spans)) == 1
+    assert ck.completed_parts() == {0, 1, 2}
+    assert CheckpointedExtraction(out, n_batches=3).run(
+        corpus, extract_spans) == []
+    assert ck.totals()["n_docs"] == corpus.count()
+
+
+def _run_job(spark, capsys, job, *argv):
+    """jobs/<job>.py main() in this session; returns its summary line
+    and checks the job left the session it was given running."""
+    import importlib.util
+    import json
+
+    spec = importlib.util.spec_from_file_location(
+        job, os.path.join(os.path.dirname(__file__), "..", "jobs",
+                          f"{job}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.main(list(argv), spark=spark) == 0
+    assert spark.range(1).count() == 1  # not stopped
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+@pytest.mark.parametrize("interleaved", [False, True])
+def test_extract_job_summary_equals_output(spark, docs, tmp_path, capsys,
+                                           interleaved):
+    """jobs/extract_job.py end to end, PDF and --interleaved input with
+    poison docs: the summary (summed from the manifest) equals a count
+    over the written output, and re-running the same command processes
+    no slice and reports the same totals."""
+    from sparkpdf.testing.corpora import (
+        synthesize_interleaved_corpus,
+        synthesize_pdf_corpus,
+    )
+
+    in_dir, out_dir = str(tmp_path / "ej_in"), str(tmp_path / "ej_out")
+    if interleaved:
+        raw = _poisoned(spark, synthesize_interleaved_corpus(docs), "payload")
+    else:
+        raw = _poisoned(spark, synthesize_pdf_corpus(docs))
+    raw.write.parquet(in_dir)
+    argv = ["--input", in_dir, "--output", out_dir, "--batches", "3"]
+    argv += ["--interleaved"] * interleaved
+    first = _run_job(spark, capsys, "extract_job", *argv)
+    written = spark.read.parquet(f"{out_dir}/part=*")
+    assert first["slices_processed"] == [0, 1, 2]
+    assert first["total_docs"] == written.count() == docs.count() + 3
+    assert first["errored_docs"] == written.filter(
+        "error IS NOT NULL").count() == 3
+    again = _run_job(spark, capsys, "extract_job", *argv)
+    assert again == {**first, "slices_processed": []}
+
+
+def test_curate_job_counts_equal_outputs(spark, corpus, tmp_path, capsys):
+    """jobs/curate_job.py end to end: extracted/errored equal a count
+    over the checkpointed spans, chunks a count over chunks/."""
+    in_dir, out_dir = str(tmp_path / "cj_in"), str(tmp_path / "cj_out")
+    _poisoned(spark, corpus).write.parquet(in_dir)
+    summary = _run_job(spark, capsys, "curate_job", "--input", in_dir,
+                       "--output", out_dir, "--batches", "2")
+    spans = spark.read.parquet(f"{out_dir}/spans/part=*")
+    assert summary["extracted"] == spans.count() == corpus.count() + 3
+    assert summary["errored"] == spans.filter("error IS NOT NULL").count() == 3
+    assert summary["chunks"] == spark.read.parquet(f"{out_dir}/chunks").count()
+    assert summary["chunks"] > 0
+
+
 def test_dedup_partial_aggregation_plan(spark):
     """dedup_exact must partial-aggregate before its single shuffle
     (map-side combine; SURVEY §4.3 'push aggregation partial')."""
@@ -1097,19 +1238,8 @@ def test_ivf_nprobe_recall_monotone(spark):
 def _run_ann_job(spark, capsys, out_dir, *flags):
     """jobs/ann_job.py main() over the sf0.001 embeddings; returns its
     summary JSON line."""
-    import importlib.util
-    import json
-
-    spec = importlib.util.spec_from_file_location(
-        "ann_job", os.path.join(os.path.dirname(__file__),
-                                "..", "jobs", "ann_job.py")
-    )
-    aj = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(aj)
-    rc = aj.main(["--embeddings", f"{SF}/embeddings.parquet",
-                  "--output", out_dir, *flags], spark=spark)
-    assert rc == 0
-    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    return _run_job(spark, capsys, "ann_job", "--embeddings",
+                    f"{SF}/embeddings.parquet", "--output", out_dir, *flags)
 
 
 @pytest.mark.parametrize(
