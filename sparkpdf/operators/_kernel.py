@@ -22,6 +22,11 @@ pyspark.zip, py4j and the spark-core jar) re-read its whole archive
 directory, 0.1-0.2 s per task even in a reused worker. Every task runs
 `install_zip_hook` first, so from a worker's second task on an archive
 is re-read only when it changed on disk.
+
+No worker imports pandas either: the first `pa.array` on Python values
+imports it (~0.35 s, ~38 MB RSS) to probe for pandas objects, so every
+task runs `settle_pandas_probe` first, which runs that one-time probe
+with pandas hidden. `from_pandas=True`'s NaN->null rule still holds.
 """
 
 from __future__ import annotations
@@ -89,6 +94,30 @@ def install_zip_hook() -> bool:
     return True
 
 
+class _HidePandas:
+    def find_spec(self, name, path=None, target=None):
+        if name == "pandas":
+            raise ImportError("pandas is hidden from pyarrow's probe")
+
+
+def settle_pandas_probe() -> None:
+    """Let pyarrow's one-time pandas probe run with pandas hidden, so
+    this process never imports it (idempotent; a no-op if pandas is
+    already imported). Until a pyarrow call that needs pandas, such as
+    `to_pandas()`, imports it, `pa.array(pandas_object)` takes it as a
+    plain sequence (datetime64[ns] -> timestamp[us]); no lane passes
+    pandas objects to pyarrow."""
+    if "pandas" not in sys.modules:
+        import pyarrow as pa
+
+        hide = _HidePandas()
+        sys.meta_path.insert(0, hide)
+        try:
+            pa.array([], pa.null())
+        finally:
+            sys.meta_path.remove(hide)
+
+
 def arrow_batches(row_fn, out_schema: StructType):
     """The mapInArrow function behind `map_kernel`: RecordBatches of
     the input columns in, RecordBatches of `out_schema` out."""
@@ -101,6 +130,7 @@ def arrow_batches(row_fn, out_schema: StructType):
 
     def run(batches):
         install_zip_hook()
+        settle_pandas_probe()
         for rb in batches:
             cols = [[] for _ in names]
             shared = [(names.index(n), i) for i, n in

@@ -6,11 +6,15 @@
   trailing partial row and rejects unknown filter types;
 * LZW round-trips across its width bumps and clear codes;
 * a document's pages share one compiled ToUnicode CMap;
-* the worker's zip-directory hook re-reads only changed archives.
+* the worker's zip-directory hook re-reads only changed archives;
+* no worker imports pandas, and pyarrow's conversions are unchanged.
 """
 
 import importlib
+import json
+import os
 import random
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -418,3 +422,78 @@ def test_worker_reports_zip_hook_installed(spark):
                               "id long, hooked boolean").collect()
     assert len(rows) == 2
     assert all(r.hooked == (sys.version_info < (3, 13)) for r in rows)
+
+
+def test_workers_never_import_pandas(spark):
+    def pandas_loaded(i):
+        import sys
+
+        yield i, "pandas" in sys.modules
+
+    # the first job builds an output batch in each worker; the second
+    # asks the same (reused) workers
+    for _ in range(2):
+        rows = _kernel.map_kernel(spark.range(0, 8, 1, 4), ["id"],
+                                  pandas_loaded,
+                                  "id long, pandas boolean").collect()
+    assert len(rows) == 8
+    assert [r.pandas for r in rows] == [False] * 8
+
+
+# --- pyarrow's pandas probe ---------------------------------------------------
+
+# run in a fresh interpreter, since the test process may hold pandas;
+# argv[1] "hidden" settles the probe first, "imported" imports pandas
+# first, which is what pyarrow sees without the helper
+_PROBE = r"""
+import json, sys
+import pyarrow as pa
+from sparkpdf.operators._kernel import settle_pandas_probe
+
+if sys.argv[1] == "hidden":
+    settle_pandas_probe()
+else:
+    import pandas
+hooks = list(sys.meta_path)
+settle_pandas_probe()
+span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                  ("media_ref", pa.string()), ("offset", pa.int32())])
+spans = [[{"kind": "text", "text": "Hello\n", "media_ref": None, "offset": 0},
+          {"kind": "image", "text": float("nan"), "media_ref": "img/0",
+           "offset": 6}],
+         [], None]
+out = {
+    "second_call_inert": sys.meta_path == hooks,
+    "nan_nulls": pa.array([1.0, float("nan"), None], pa.float64(),
+                          from_pandas=True).null_count,
+    "spans": pa.array(spans, pa.list_(span), from_pandas=True).to_pylist(),
+}
+out["pandas"] = "pandas" in sys.modules  # after the conversions
+import pandas as pd
+stamps = pd.Series(pd.to_datetime(["2024-01-02"]))
+out["before_to_pandas"] = str(pa.array(stamps).type)
+pa.table({"x": [1]}).to_pandas()
+out["after_to_pandas"] = str(pa.array(stamps).type)
+print(json.dumps(out))
+"""
+
+
+def _probe(mode: str) -> dict:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "-c", _PROBE, mode], cwd=root,
+                          capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    return json.loads(proc.stdout)
+
+
+def test_settled_probe_keeps_pandas_out_and_conversions_unchanged():
+    hidden, imported = _probe("hidden"), _probe("imported")
+    assert hidden["pandas"] is False and imported["pandas"] is True
+    assert hidden["second_call_inert"] and imported["second_call_inert"]
+    assert hidden["nan_nulls"] == imported["nan_nulls"] == 2
+    assert hidden["spans"] == imported["spans"]
+    assert hidden["spans"][0][1]["text"] is None  # NaN -> null, nested
+    # the documented side effect, and its end at the first to_pandas()
+    assert hidden["before_to_pandas"] == "timestamp[us]"
+    assert hidden["after_to_pandas"] == "timestamp[ns]"
+    assert imported["before_to_pandas"] == "timestamp[ns]"

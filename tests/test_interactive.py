@@ -215,8 +215,10 @@ def test_no_per_row_python_udfs():
 def test_single_python_boundary():
     """Every Python lane crosses the JVM<->Python boundary through the
     one row-kernel adapter: mapInPandas/mapInArrow/applyInPandas/
-    applyInPandasWithState appear only in operators/_kernel.py."""
+    applyInPandasWithState appear only in operators/_kernel.py, and
+    nothing under sparkpdf/ or jobs/ imports pandas."""
     import pathlib
+    import re
 
     root = pathlib.Path(__file__).resolve().parent.parent / "sparkpdf"
     offenders = [
@@ -227,6 +229,11 @@ def test_single_python_boundary():
         if needle in py.read_text()
     ]
     assert offenders == [("operators/_kernel.py", ".mapInArrow(")]
+    # and no production module imports pandas: no worker loads it
+    # (operators/_kernel.settle_pandas_probe keeps pyarrow from doing so)
+    imports = re.compile(r"^\s*(import|from)\s+pandas\b", re.M)
+    files = [*root.rglob("*.py"), *(root.parent / "jobs").rglob("*.py")]
+    assert [str(py) for py in files if imports.search(py.read_text())] == []
 
 
 def test_similarity_has_one_ranking_window():

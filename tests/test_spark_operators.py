@@ -1848,8 +1848,9 @@ def test_pq_topk(spark):
 def test_web_lane_plan_shape(spark, docs):
     """The one-pass web pipeline adds ZERO exchanges beyond the
     corpus synthesizer's own repartition: synth -> extract_web_docs
-    (and the warc demux chain) are pure mapInPandas stages, so at
-    10^12 docs the lane rides the scan partitioning end to end."""
+    (and the warc demux chain) are pure map_kernel (mapInArrow)
+    stages, so at 10^12 docs the lane rides the scan partitioning end
+    to end."""
     from sparkpdf.operators.text import extract_web_docs
     from sparkpdf.sources.warc_source import warc_pages
     from sparkpdf.testing.corpora import (
