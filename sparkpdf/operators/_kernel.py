@@ -15,13 +15,11 @@ input columns whose names the output shares, nulls the rest, and sets
 `error` to `quarantine_message(exc)`. Without an `error` column the
 exception propagates, so a write lane never silently drops a document.
 
-The adapter also removes a fixed cost from every Python task: PySpark
-calls `importlib.invalidate_caches()` before each task, and before
-Python 3.13 that makes every `zipimporter` (one per package dir in
-pyspark.zip, py4j and the spark-core jar) re-read its whole archive
-directory, 0.1-0.2 s per task even in a reused worker. Every task runs
-`install_zip_hook` first, so from a worker's second task on an archive
-is re-read only when it changed on disk.
+Every task first runs `worker_daemon.install_zip_hook`, so PySpark's
+per-task `importlib.invalidate_caches()` re-reads an archive on
+`sys.path` only when it changed on disk (0.1-0.2 s per task otherwise,
+before Python 3.13). Local sessions' daemon installs the hook before it
+forks; the call here is for the stock daemon of spark-submit sessions.
 
 No worker imports pandas either: the first `pa.array` on Python values
 imports it (~0.35 s, ~38 MB RSS) to probe for pandas objects, so every
@@ -31,13 +29,13 @@ with pandas hidden. `from_pandas=True`'s NaN->null rule still holds.
 
 from __future__ import annotations
 
-import os
 import sys
-import zipimport
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
+
+from sparkpdf.worker_daemon import install_zip_hook
 
 
 def quarantine_message(exc: BaseException) -> str:
@@ -50,48 +48,6 @@ def doc_id_str():
     """doc_id as a string column (free on string input): the key of
     every lane whose output doc_id is a string."""
     return F.col("doc_id").cast("string").alias("doc_id")
-
-
-# Python 3.13's zipimporter.invalidate_caches only drops the cached
-# directory and re-reads it on the next lookup
-_LAZY_ZIP_INVALIDATION = sys.version_info >= (3, 13)
-_eager_invalidate = zipimport.zipimporter.invalidate_caches
-# archive path -> (st_mtime_ns, st_size) taken just before the hook
-# last read its directory
-_zip_stamps: dict = {}
-
-
-def _zip_stamp(path: str):
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return st.st_mtime_ns, st.st_size
-
-
-def _invalidate_if_changed(self) -> None:
-    """zipimporter.invalidate_caches that re-reads the archive directory
-    only when the file's (mtime, size) differs from the last re-read;
-    otherwise the importer picks up the shared cached directory."""
-    stamp = _zip_stamp(self.archive)
-    files = zipimport._zip_directory_cache.get(self.archive)
-    if stamp is None or files is None or _zip_stamps.get(self.archive) != stamp:
-        _zip_stamps.pop(self.archive, None)
-        _eager_invalidate(self)
-        if stamp is not None and self.archive in zipimport._zip_directory_cache:
-            _zip_stamps[self.archive] = stamp
-    else:
-        self._files = files
-
-
-def install_zip_hook() -> bool:
-    """Install `_invalidate_if_changed` for every zipimporter in this
-    process (idempotent). A no-op on Python >= 3.13. Returns whether the
-    hook is active."""
-    if _LAZY_ZIP_INVALIDATION:
-        return False
-    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
-    return True
 
 
 class _HidePandas:

@@ -15,7 +15,16 @@ module moves the zip behind it and runs `pyspark.daemon` unchanged,
 otherwise it keeps the stock order. spark-submit sessions keep the stock
 daemon: `--py-files` reach a worker only per task, after the daemon has
 started, so the module would not be importable there. The module must
-write nothing to stdout: the JVM reads the daemon's port from it.
+write nothing to stdout: the JVM reads the daemon's port from it. It
+also installs the zip-directory hook (`worker_daemon.install_zip_hook`)
+before it forks.
+
+Spark starts one worker daemon per distinct worker env. SQL Python
+runners add SPARK_SIMPLIFIED_TRACEBACK=1 to theirs (Spark's default) and
+RDD-path ones, such as `createDataFrame(<local rows>)`, do not, so a
+session running both would boot two daemons. Every session sets it in
+`spark.executorEnv`, which all runners see, so they share one daemon;
+RDD-path task errors carry simplified tracebacks too.
 """
 
 from __future__ import annotations
@@ -58,6 +67,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARKPDF_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
+        # one worker env, so one daemon, for every runner (docstring)
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     # spark-submit starts the driver JVM first, with the master it was
     # given (its own default is local[*]), and hands Python the gateway

@@ -14,6 +14,13 @@ installed file's. Members the wheel leaves out are tolerated only under
 `tests/` and `benchmark/` package directories (PySpark's wheel ships
 neither); any other missing or different file keeps the stock order.
 
+Before Python 3.13, PySpark's per-task `importlib.invalidate_caches()`
+makes every `zipimporter` (pyspark.zip, py4j, the spark-core jar)
+re-read its whole directory, 0.1-0.2 s per task. `install_zip_hook`
+re-reads an archive only when its (mtime, size) changed; the daemon
+installs it and stamps every archive before it forks, so every worker,
+RDD-path ones included, inherits the stamps.
+
 Stdlib only, and nothing here may write to stdout: the JVM reads the
 daemon's port from it. The work sits behind `__name__ == "__main__"`, so
 importing this module starts nothing.
@@ -21,14 +28,57 @@ importing this module starts nothing.
 
 from __future__ import annotations
 
+import importlib
 import os
 import runpy
 import sys
 import zipfile
+import zipimport
 import zlib
 
 ARCHIVE = "pyspark.zip"
 _OPTIONAL_DIRS = frozenset(("tests", "benchmark"))
+
+# Python 3.13's zipimporter.invalidate_caches only drops the cached
+# directory and re-reads it on the next lookup
+_LAZY_ZIP_INVALIDATION = sys.version_info >= (3, 13)
+_eager_invalidate = zipimport.zipimporter.invalidate_caches
+# archive path -> (st_mtime_ns, st_size) taken just before the hook
+# last read its directory
+_zip_stamps: dict = {}
+
+
+def _zip_stamp(path: str):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _invalidate_if_changed(self) -> None:
+    """zipimporter.invalidate_caches that re-reads the archive directory
+    only when the file's (mtime, size) differs from the last re-read;
+    otherwise the importer picks up the shared cached directory."""
+    stamp = _zip_stamp(self.archive)
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is None or files is None or _zip_stamps.get(self.archive) != stamp:
+        _zip_stamps.pop(self.archive, None)
+        _eager_invalidate(self)
+        if stamp is not None and self.archive in zipimport._zip_directory_cache:
+            _zip_stamps[self.archive] = stamp
+    else:
+        self._files = files
+
+
+def install_zip_hook() -> bool:
+    """Install `_invalidate_if_changed` for every zipimporter in this
+    process (idempotent). A no-op on Python >= 3.13. Returns whether the
+    hook is active."""
+    if _LAZY_ZIP_INVALIDATION:
+        return False
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    return True
 
 
 def same_bytes(archive: str, root: str) -> bool:
@@ -75,4 +125,8 @@ def prefer_installed(path: list) -> bool:
 
 if __name__ == "__main__":
     prefer_installed(sys.path)
+    # the hook of the module workers import by name, not of __main__
+    from sparkpdf import worker_daemon
+    if worker_daemon.install_zip_hook():
+        importlib.invalidate_caches()
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)

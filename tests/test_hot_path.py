@@ -6,7 +6,8 @@
   trailing partial row and rejects unknown filter types;
 * LZW round-trips across its width bumps and clear codes;
 * a document's pages share one compiled ToUnicode CMap;
-* the worker's zip-directory hook re-reads only changed archives;
+* the worker's zip-directory hook re-reads only changed archives, and
+  every worker has it, RDD-path ones included;
 * no worker imports pandas, and pyarrow's conversions are unchanged.
 """
 
@@ -26,9 +27,10 @@ from sparkpdf.kernels import cos, filters, fonts
 from sparkpdf.kernels.cmap import _shift_be, parse_cmap
 from sparkpdf.kernels.content import _SCAN, tokenize
 from sparkpdf.kernels.extract import doc_text, extract_doc
+from sparkpdf import worker_daemon
 from sparkpdf.operators import _kernel
-from sparkpdf.operators._kernel import _invalidate_if_changed
 from sparkpdf.testing import pdfgen
+from sparkpdf.worker_daemon import _invalidate_if_changed
 
 
 # --- CMap: memoised code2text == rule-by-rule matcher -------------------------
@@ -364,7 +366,7 @@ def _write_zip(path, modules: dict):
             z.writestr(name, src)
 
 
-@pytest.mark.skipif(_kernel._LAZY_ZIP_INVALIDATION,
+@pytest.mark.skipif(worker_daemon._LAZY_ZIP_INVALIDATION,
                     reason="Python >= 3.13 re-reads zip directories lazily")
 def test_zip_hook_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     archive = tmp_path / "hookmods.zip"
@@ -379,7 +381,7 @@ def test_zip_hook_rereads_only_a_changed_archive(tmp_path, monkeypatch):
                         lambda p: reads.append(p) or real(p))
     try:
         assert importlib.import_module("hookmod_a").X == 1
-        assert _kernel.install_zip_hook()
+        assert worker_daemon.install_zip_hook()
         assert zipimport.zipimporter.invalidate_caches is _invalidate_if_changed
 
         def ours():
@@ -404,17 +406,18 @@ def test_zip_hook_rereads_only_a_changed_archive(tmp_path, monkeypatch):
 
 def test_zip_hook_is_a_no_op_with_lazy_invalidation(monkeypatch):
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
-                        _kernel._eager_invalidate)
-    monkeypatch.setattr(_kernel, "_LAZY_ZIP_INVALIDATION", True)
-    assert _kernel.install_zip_hook() is False
-    assert zipimport.zipimporter.invalidate_caches is _kernel._eager_invalidate
+                        worker_daemon._eager_invalidate)
+    monkeypatch.setattr(worker_daemon, "_LAZY_ZIP_INVALIDATION", True)
+    assert worker_daemon.install_zip_hook() is False
+    assert (zipimport.zipimporter.invalidate_caches
+            is worker_daemon._eager_invalidate)
 
 
 def test_worker_reports_zip_hook_installed(spark):
     def hooked(i):
         import zipimport
 
-        from sparkpdf.operators._kernel import _invalidate_if_changed
+        from sparkpdf.worker_daemon import _invalidate_if_changed
 
         yield i, zipimport.zipimporter.invalidate_caches is _invalidate_if_changed
 
@@ -422,6 +425,21 @@ def test_worker_reports_zip_hook_installed(spark):
                               "id long, hooked boolean").collect()
     assert len(rows) == 2
     assert all(r.hooked == (sys.version_info < (3, 13)) for r in rows)
+
+
+def test_rdd_path_worker_reports_zip_hook_installed(spark):
+    """Workers that never run an Arrow batch (plain RDD tasks) have the
+    hook too: the session's worker daemon installs it before it forks."""
+    def hooked(i):
+        import zipimport
+
+        from sparkpdf.worker_daemon import _invalidate_if_changed
+
+        return i, zipimport.zipimporter.invalidate_caches is _invalidate_if_changed
+
+    got = spark.sparkContext.parallelize(range(4), 4).map(hooked).collect()
+    assert sorted(i for i, _ in got) == [0, 1, 2, 3]
+    assert [h for _, h in got] == [sys.version_info < (3, 13)] * 4
 
 
 def test_workers_never_import_pandas(spark):

@@ -1,6 +1,7 @@
 """The session factory under spark-submit: the submitted master wins,
 the factory's Arrow batch cap still applies and the stock worker daemon
-stays; a local session boots its workers from any working directory."""
+stays; a local session boots its workers from any working directory,
+through one worker daemon."""
 
 import json
 import os
@@ -48,7 +49,7 @@ def test_get_spark_keeps_the_spark_submit_master(tmp_path):
 
 
 LOCAL_PROBE = """
-import json, sys
+import json, os, sys
 sys.path.insert(0, {root!r})
 from sparkpdf.operators import _kernel
 from sparkpdf.session import get_spark
@@ -56,12 +57,30 @@ from sparkpdf.session import get_spark
 def square(i):
     yield i, i * i
 
+def daemons(jvm_pid):
+    # the JVM's direct children only: forked workers share the
+    # daemon's command line
+    n = 0
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{{pid}}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{{pid}}/cmdline", "rb") as f:
+                cmd = f.read()
+        except (OSError, IndexError, ValueError):
+            continue
+        n += ppid == jvm_pid and b"sparkpdf.worker_daemon" in cmd
+    return n
+
 spark = get_spark("sparkpdf-daemon-probe", cpus=1)
+local = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+assert len(local.collect()) == 2
 rows = _kernel.map_kernel(spark.range(3), ["id"], square,
                           "id long, sq long").collect()
 print(json.dumps({{
     "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module"),
     "rows": sorted(r.sq for r in rows),
+    "daemons": daemons(spark._jvm.ProcessHandle.current().pid()),
 }}))
 spark.stop()
 """
@@ -71,7 +90,8 @@ def test_local_session_workers_boot_outside_the_package_root(tmp_path):
     """A caller that puts sparkpdf on sys.path by hand, from another
     working directory and with no PYTHONPATH, still completes a Python
     task: the daemon module is found through the session's
-    spark.executorEnv.PYTHONPATH."""
+    spark.executorEnv.PYTHONPATH. An RDD-path job (createDataFrame from
+    local rows) and a SQL Arrow job share one worker daemon."""
     probe = tmp_path / "probe.py"
     probe.write_text(LOCAL_PROBE.format(root=ROOT))
     env = {k: v for k, v in os.environ.items()
@@ -83,7 +103,8 @@ def test_local_session_workers_boot_outside_the_package_root(tmp_path):
                           timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert got == {"daemon": "sparkpdf.worker_daemon", "rows": [0, 1, 4]}
+    assert got == {"daemon": "sparkpdf.worker_daemon", "rows": [0, 1, 4],
+                   "daemons": 1}
 
 
 def test_one_session_builder():
