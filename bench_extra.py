@@ -502,8 +502,7 @@ def exp_whale100x(argv):
 def build_archive(doc_id: int, n_pages: int, page_mb: float) -> bytes:
     """One gzip-member WARC of n_pages synthetic pages, each carrying
     ~page_mb MB of incompressible text."""
-    from sparkpdf.kernels.html import synthesize_webpage
-    from sparkpdf.kernels.warc import build_warc
+    from sparkpdf.testing.corpora import build_warc, synthesize_webpage
 
     records = []
     for p in range(n_pages):

@@ -31,6 +31,8 @@ def main(argv=None):
     ap.add_argument("--continuous", action="store_true")
     args = ap.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from sparkpdf.session import get_spark
     from sparkpdf.streaming.ingest import stream_extract
 
@@ -49,12 +51,15 @@ def main(argv=None):
         q.awaitTermination()
         return
     q.awaitTermination()
-    out = spark.read.parquet(args.output)
+    counts = spark.read.parquet(args.output).agg(
+        F.count("*").alias("docs_total"),
+        F.count_if(F.col("error").isNotNull()).alias("errored"),
+    ).first()
     print(
         json.dumps(
             {
-                "docs_total": out.count(),
-                "errored": out.filter("error IS NOT NULL").count(),
+                "docs_total": counts["docs_total"],
+                "errored": counts["errored"],
                 "wall_sec": round(time.time() - t0, 2),
             }
         )

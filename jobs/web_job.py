@@ -65,6 +65,7 @@ def main(argv=None, spark=None):
     args = ap.parse_args(argv)
 
     from sparkpdf.session import get_spark
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     owns_spark = spark is None
@@ -156,7 +157,15 @@ def main(argv=None, spark=None):
     done = ck.run(pages, extract_web_docs)
     result = ck.result(spark)
 
-    n_hosts = write_observed(link_host_degree(result),
+    # total_links rides on the link_hosts write, which reads every
+    # output row anyway. Sum over unquarantined rows only: under legacy
+    # sizeOfNull configs size(NULL) is -1 and would silently subtract
+    # from the stat, so the stat stays config-independent
+    links = Observation()
+    observed = result.observe(links, F.coalesce(
+        F.sum(F.when(F.col("error").isNull(), F.size("links"))), F.lit(0)
+    ).alias("total_links"))
+    n_hosts = write_observed(link_host_degree(observed),
                              args.output.rstrip("/") + "/link_hosts")["rows"]
     totals = ck.totals()
 
@@ -164,12 +173,7 @@ def main(argv=None, spark=None):
         "slices_processed": done,
         "total_docs": totals["n_docs"],
         "errored_docs": totals["n_errors"],
-        # filter quarantined rows first: under legacy sizeOfNull
-        # configs size(NULL) is -1 and would silently subtract from
-        # the stat — filtering makes it config-independent
-        "total_links": result.filter("error IS NULL").agg(
-            F.coalesce(F.sum(F.size("links")), F.lit(0))
-        ).collect()[0][0],
+        "total_links": links.get["total_links"],
         "hosts": n_hosts,
     }
     if n_warc_quarantined is not None:

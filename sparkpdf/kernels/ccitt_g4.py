@@ -1,4 +1,6 @@
-"""CCITT Group 4 (ITU-T T.6, MMR) bitonal codec — closes SURVEY §2 F8.
+"""CCITT Group 4 (ITU-T T.6, MMR) and Group 3 (T.4) bitonal decoders —
+closes SURVEY §2 F8. The matching encoders, which build test data
+only, are in sparkpdf/testing/imagegen.py and share the tables below.
 
 Clean-room implementation from the public T.4/T.6 specification (the
 run-length code tables below are ITU-T T.4 Tables 2/3 constants; the 2-D
@@ -14,7 +16,7 @@ to a byte boundary (EncodedByteAlign output framing).
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import List
 
 from .cos import PdfError
 
@@ -152,27 +154,6 @@ class _BitReader:
         return self.pos >= self.nbits
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, nbits: int, value: int):
-        for k in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> k) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.n = 0
-
-    def bytes(self) -> bytes:
-        if self.n:
-            return bytes(self.buf) + bytes([self.acc << (8 - self.n)])
-        return bytes(self.buf)
-
-
 def _read_run(br: _BitReader, decode_map) -> int:
     """One T.4 run: zero or more make-up codes then a terminating code."""
     total = 0
@@ -217,36 +198,6 @@ def g4_decode(data: bytes, columns: int, rows: int = 0) -> List[List[int]]:
         out.append(cur)
         ref = cur
     return out
-
-
-def g4_encode(bitmap: List[List[int]], columns: int) -> bytes:
-    """T.6 MMR encode of 0/1 pixel rows (1=black); appends EOFB."""
-    bw = _BitWriter()
-    ref = [0] * columns
-    for line in bitmap:
-        _encode_2d_line(bw, ref, line, columns)
-        ref = line
-    bw.write(12, 0b000000000001)  # EOFB
-    bw.write(12, 0b000000000001)
-    return bw.bytes()
-
-
-def _write_run(bw: _BitWriter, run: int, color: int):
-    term = _BLACK_TERM if color else _WHITE_TERM
-    makeup = _BLACK_MAKEUP if color else _WHITE_MAKEUP
-    while run >= 64:
-        step = min((run // 64) * 64, 2560)
-        if step > 1728:
-            ln, code = _EXT_MAKEUP[step]
-        else:
-            ln, code = makeup[step]
-        bw.write(ln, code)
-        run -= step
-    ln, code = term[run]
-    bw.write(ln, code)
-
-
-_EOL = (12, 0b000000000001)
 
 
 def g3_decode_1d(data: bytes, columns: int, rows: int = 0) -> List[List[int]]:
@@ -295,25 +246,6 @@ def g3_decode_1d(data: bytes, columns: int, rows: int = 0) -> List[List[int]]:
             color = 1 - color
         out.append(line)
     return out
-
-
-def g3_encode_1d(bitmap: List[List[int]], columns: int) -> bytes:
-    """T.4 1-D encode: EOL before every line, then alternating runs
-    (white first; a leading black pixel gets a zero-length white run)."""
-    bw = _BitWriter()
-    for line in bitmap:
-        bw.write(*_EOL)
-        pos = 0
-        color = 0
-        while pos < columns:
-            run = 0
-            while pos + run < columns and line[pos + run] == color:
-                run += 1
-            _write_run(bw, run, color)
-            pos += run
-            color = 1 - color
-    bw.write(*_EOL)
-    return bw.bytes()
 
 
 def g3_decode_2d(data: bytes, columns: int, rows: int = 0) -> List[List[int]]:
@@ -410,93 +342,3 @@ def _decode_2d_line(br: _BitReader, ref: List[int], columns: int) -> List[int]:
         else:
             raise PdfError("CCITT 2-D: bad mode code")
     return cur
-
-
-def g3_encode_2d(bitmap: List[List[int]], columns: int, k: int = 4) -> bytes:
-    """T.4 2-D encode: a 1-D line every k lines, 2-D lines between
-    (the standard K-parameter error-containment cadence)."""
-    bw = _BitWriter()
-    ref = [0] * columns
-    for i, line in enumerate(bitmap):
-        bw.write(*_EOL)
-        if i % k == 0:  # 1-D anchor line
-            bw.write(1, 1)
-            pos = 0
-            color = 0
-            while pos < columns:
-                run = 0
-                while pos + run < columns and line[pos + run] == color:
-                    run += 1
-                _write_run(bw, run, color)
-                pos += run
-                color = 1 - color
-        else:
-            bw.write(1, 0)
-            _encode_2d_line(bw, ref, line, columns)
-        ref = line
-    bw.write(*_EOL)
-    return bw.bytes()
-
-
-def _encode_2d_line(bw: _BitWriter, ref: List[int], line: List[int], columns: int):
-    ref_tr = _transitions(ref, columns)
-    cur_tr = _transitions(line, columns)
-    a0 = -1
-    color = 0
-    while a0 < columns:
-        a1 = columns
-        for t in cur_tr:
-            if t > a0:
-                a1 = t
-                break
-        b1 = columns
-        b2 = columns
-        for idx, t in enumerate(ref_tr):
-            if t <= a0:
-                continue
-            t_color = 1 if idx % 2 == 0 else 0
-            if t_color != color:
-                b1 = t
-                b2 = ref_tr[idx + 1] if idx + 1 < len(ref_tr) else columns
-                break
-        if b2 < a1:
-            bw.write(_MODE_PASS[0], _MODE_PASS[1])
-            a0 = b2
-            continue
-        if abs(a1 - b1) <= 3:
-            ln, code = _MODE_V[a1 - b1]
-            bw.write(ln, code)
-            a0 = a1
-            color = 1 - color
-            continue
-        a2 = columns
-        for t in cur_tr:
-            if t > a1:
-                a2 = t
-                break
-        start = max(a0, 0)
-        bw.write(_MODE_HORIZ[0], _MODE_HORIZ[1])
-        _write_run(bw, a1 - start, color)
-        _write_run(bw, a2 - a1, 1 - color)
-        a0 = a2
-
-
-def pack_rows(bitmap: List[List[int]], columns: int, black_is_1: bool = False) -> bytes:
-    """Pixel rows -> packed 1-bit raster, each row byte-aligned. PDF
-    default (BlackIs1=false): 0 bits are black."""
-    out = bytearray()
-    for line in bitmap:
-        acc = 0
-        n = 0
-        row = bytearray()
-        for px in line[:columns]:
-            bit = px if black_is_1 else 1 - px
-            acc = (acc << 1) | bit
-            n += 1
-            if n == 8:
-                row.append(acc)
-                acc = n = 0
-        if n:
-            row.append(acc << (8 - n))
-        out += row
-    return bytes(out)

@@ -86,16 +86,9 @@ class StreamObj:
 
 
 # --- lexical classes (PDF 32000-1:2008 §7.2) ---------------------------------
-WHITESPACE = b"\x00\t\n\x0c\r "
-DELIMITERS = b"()<>[]{}/%"
-
 # whitespace and %-comments are interchangeable between tokens
 # (reference skips comments in readObject, generic.py:176-198)
 _WS_COMMENT = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
-
-# "N G R" guarded so bare numbers aren't swallowed
-# (reference IndirectPattern, generic.py:90)
-_INDIRECT = re.compile(rb"(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+R(?![0-9A-Za-z])")
 
 # a name runs to the next whitespace or delimiter (generic.py:731-734);
 # '#' escapes are kept RAW for parity with the reference fork, which does

@@ -586,30 +586,6 @@ def parse_web_doc(html_text: str) -> "tuple[dict, dict]":
     return {"main_text": main_text, "title": title}, feats.result()
 
 
-def synthesize_html(doc_id: int, text: str) -> str:
-    """Deterministic page around `text` (sanitized like doc_to_pdf):
-    real boilerplate (nav with links, header/footer, script/style, a
-    link-dense related-articles div) that the extractor must strip,
-    leaving exactly the planted paragraphs."""
-    printable = NONPRINTABLE.sub("?", text)
-    body = _htmlmod.escape(printable)
-    return (
-        "<!DOCTYPE html><html><head>"
-        f"<title>doc-{doc_id}</title>"
-        "<style>body{font:16px serif}</style>"
-        "<script>var tracking='pixel';</script>"
-        "</head><body>"
-        "<header><h1>Site Name</h1></header>"
-        '<nav><a href="/">Home</a> <a href="/about">About</a>'
-        ' <a href="/contact">Contact</a></nav>'
-        f"<article><p>{body}</p></article>"
-        '<div class="related"><a href="/a">Read more stuff here</a>'
-        ' <a href="/b">Another related article link</a> also</div>'
-        "<footer>(c) 2024 Site Name - all rights reserved</footer>"
-        "</body></html>"
-    )
-
-
 def synthesize_interleaved_html(doc_id: int, text: str) -> str:
     """Deterministic page for the MIXED-corpus extractor (the odd-id
     lane of synthesize_interleaved_corpus): the doc text as the lead
@@ -632,77 +608,3 @@ def synthesize_interleaved_html(doc_id: int, text: str) -> str:
         "<footer>(c) 2024 Site Name - all rights reserved</footer>"
         "</body></html>"
     )
-
-
-def synthesize_webpage(doc_id: int, text: str) -> str:
-    """Rich deterministic page for the web-feature queries (links /
-    meta / headings / tables), leaving synthesize_html (the html_main
-    oracle's corpus) untouched. Every planted feature is a pure
-    doc_id formula so DuckDB closed-form oracles exist:
-
-      lang     = (en de fr es it)[d%5]
-      robots   = noindex,nofollow when d%7==0 else index,follow
-      canonical= https://example.com/doc/{d};  og:title = OG Doc {d}
-      headings = h1 'Site Name' (boilerplate header), h1 'Doc {d}',
-                 then 1+d%3 x h2 'Section {i} of doc {d}', each h2
-                 followed by 'Body of section {i} in doc {d}.' (the
-                 section stream: h1 section carries the doc text)
-      links    = 3 nav (boiler) + d%4 body refs in the pre-heading
-                 article preamble
-                 (https://site{(d+i)%5}.example.com/ref/{d}/{i} —
-                 the rotating host feeds the link-graph degree
-                 oracle — rel=nofollow on odd i) + 2 related
-                 -> 5 + d%4 total, document order
-      table    = only when d%3==0: (2+d%5) x (1+d%3) cells 'c{r}.{c}'
-    """
-    d = int(doc_id)
-    lang = ("en", "de", "fr", "es", "it")[d % 5]
-    robots = "noindex,nofollow" if d % 7 == 0 else "index,follow"
-    printable = NONPRINTABLE.sub("?", text)
-    body = _htmlmod.escape(printable)
-    parts = [
-        f'<!DOCTYPE html><html lang="{lang}"><head>',
-        '<meta charset="utf-8">',
-        f"<title>doc-{d}</title>",
-        f'<link rel="canonical" href="https://example.com/doc/{d}">',
-        f'<meta name="description" content="Summary of document {d}">',
-        f'<meta name="robots" content="{robots}">',
-        f'<meta property="og:title" content="OG Doc {d}">',
-        "<style>body{font:16px serif}</style>",
-        "<script>var tracking='pixel';</script>",
-        "</head><body>",
-        "<header><h1>Site Name</h1></header>",
-        '<nav><a href="/">Home</a> <a href="/about">About</a>'
-        ' <a href="/contact">Contact</a></nav>',
-        "<article>",
-    ]
-    # links + table live in the pre-heading preamble so the SECTION
-    # stream (heading -> following text) stays a pure formula
-    for i in range(d % 4):
-        rel = ' rel="nofollow"' if i % 2 == 1 else ""
-        parts.append(
-            f'<a href="https://site{(d + i) % 5}.example.com'
-            f'/ref/{d}/{i}"{rel}>ref {d}-{i}</a>'
-        )
-    if d % 3 == 0:
-        rows = []
-        for r in range(2 + d % 5):
-            cells = "".join(
-                f"<td>c{r}.{c}</td>" for c in range(1 + d % 3)
-            )
-            rows.append(f"<tr>{cells}</tr>")
-        parts.append(f"<table>{''.join(rows)}</table>")
-    parts.append(f"<h1>Doc {d}</h1><p>{body}</p>")
-    for i in range(1 + d % 3):
-        parts.append(
-            f"<h2>Section {i} of doc {d}</h2>"
-            f"<p>Body of section {i} in doc {d}.</p>"
-        )
-    parts += [
-        "</article>",
-        '<div class="related"><a href="/a">Read more stuff here</a>'
-        ' <a href="/b">Another related article link</a></div>',
-        "<footer>(c) 2024 Site Name - all rights reserved</footer>",
-        "</body></html>",
-    ]
-    return "".join(parts)

@@ -19,8 +19,10 @@ per BIT), coefficients are scattered sparsely into one (nblocks, 64)
 array per component, and dezigzag + dequant + IDCT + chroma upsample
 + color convert all run as batched numpy ops.
 
-The encoder exists so fixtures and the oracle corpus are self-made:
-both directions share only the constant tables, and the decoder is
+The baseline encoder (`encode_jpeg`) exists so fixtures and the
+oracle corpus are self-made; the progressive and lossless encoders
+are test-data builders in sparkpdf/testing/imagegen.py. Both
+directions share only the constant tables, and the decoder is
 additionally pinned against hand-derived DC-only vectors and an
 independent per-test numpy reference (tests/test_jpeg.py).
 
@@ -535,295 +537,6 @@ def encode_jpeg(pixels: np.ndarray, subsampling: str = "444",
     sos += bytes([0, 63, 0])
     out += seg(0xDA, sos)
     out += bwr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _raster_zigzag_blocks(plane: np.ndarray, bw_i: int, bh_i: int,
-                          q: np.ndarray, shift: float = 128.0) -> list:
-    """Component plane -> quantized zigzag blocks in RASTER order over
-    the padded (bh_i x bw_i)-block grid (the progressive encoder's
-    per-component addressing)."""
-    padded = _pad_edge(plane, bh_i * 8, bw_i * 8)
-    blocks = (
-        padded.reshape(bh_i, 8, bw_i, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    )
-    coeff = np.matmul(np.matmul(_T, blocks - shift), _T.T)
-    quant = np.round(coeff / q).astype(np.int64).reshape(-1, 64)
-    return quant[:, _ZZ].tolist()
-
-
-# progressive-encoder AC tables: Annex K + the single free 16-bit code
-# slot spent on EOB1 (symbol 0x10; runs of 2-3 blocks with one ext bit)
-# — sequential tables define only EOB0/ZRL, and the Kraft sum leaves
-# exactly one unused 16-bit code in each
-PROG_AC_LUMA = (
-    AC_LUMA[0][:15] + [AC_LUMA[0][15] + 1],
-    AC_LUMA[1] + [0x10],
-)
-PROG_AC_CHROMA = (
-    AC_CHROMA[0][:15] + [AC_CHROMA[0][15] + 1],
-    AC_CHROMA[1] + [0x10],
-)
-
-
-class _RefineState:
-    """Encoder-side EOB-run bookkeeping for progressive AC scans: the
-    pending EOB run plus the correction bits each covered block owns
-    (T.81 G.1.2.3 — every EOBn code must be followed by exactly the
-    correction bits of the blocks it covers, in block order)."""
-
-    __slots__ = ("eobrun", "be")
-
-    def __init__(self):
-        self.eobrun = 0
-        self.be: list = []  # one bit-list per covered block
-
-    def add_block(self, bits_for_block: list):
-        self.eobrun += 1
-        self.be.append(bits_for_block)
-
-    def flush(self, bwr, ac_enc):
-        i = 0
-        while self.eobrun:
-            if self.eobrun >= 2:
-                n = 2 + min(self.eobrun - 2, 1)
-                c, ln = ac_enc[0x10]  # EOB1: run 2-3, one ext bit
-                bwr.put(c, ln)
-                bwr.put(n - 2, 1)
-            else:
-                n = 1
-                c, ln = ac_enc[0x00]  # EOB0
-                bwr.put(c, ln)
-            for blk in self.be[i:i + n]:
-                for b in blk:
-                    bwr.put(b, 1)
-            i += n
-            self.eobrun -= n
-        self.be = []
-
-
-def _enc_ac_first_block(bwr, st, zz, ac_enc, ss, se, al):
-    """One block of a first AC scan (Ah=0): zero-run/size coding of
-    the magnitude-shifted band, trailing zeros folded into the EOB
-    run."""
-    vs = []
-    for k in range(ss, se + 1):
-        v = zz[k]
-        vs.append((v >> al) if v >= 0 else -((-v) >> al))
-    last_nz = -1
-    for j in range(len(vs) - 1, -1, -1):
-        if vs[j]:
-            last_nz = j
-            break
-    if last_nz < 0:
-        st.add_block([])
-        return
-    st.flush(bwr, ac_enc)
-    run = 0
-    for j in range(last_nz + 1):
-        v = vs[j]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            c, ln = ac_enc[0xF0]
-            bwr.put(c, ln)
-            run -= 16
-        t, codebits = _magnitude(v)
-        c, ln = ac_enc[(run << 4) | t]
-        bwr.put(c, ln)
-        bwr.put(codebits, t)
-        run = 0
-    if last_nz < se - ss:
-        st.add_block([])
-
-
-def _enc_ac_refine_block(bwr, st, zz, ac_enc, ss, se, al):
-    """One block of a refinement AC scan (Ah=Al+1): newly-nonzero
-    coefficients as (run, 1) codes with sign bits; one correction bit
-    per already-nonzero coefficient, routed through the proper buffer
-    (after the owning code, or after the EOB run that covers it)."""
-    absv = []
-    for k in range(ss, se + 1):
-        v = zz[k]
-        absv.append(((-v) if v < 0 else v) >> al)
-    last_new = -1
-    for j in range(len(absv) - 1, -1, -1):
-        if absv[j] == 1:
-            last_new = j
-            break
-    r = 0
-    br: list = []
-    for j, a in enumerate(absv):
-        if a == 0:
-            r += 1
-            continue
-        while r > 15 and j <= last_new:
-            st.flush(bwr, ac_enc)
-            c, ln = ac_enc[0xF0]
-            bwr.put(c, ln)
-            r -= 16
-            for b in br:
-                bwr.put(b, 1)
-            br = []
-        if a > 1:  # nonzero history: correction bit only
-            br.append(a & 1)
-            continue
-        st.flush(bwr, ac_enc)
-        c, ln = ac_enc[(r << 4) | 1]
-        bwr.put(c, ln)
-        bwr.put(1 if zz[ss + j] > 0 else 0, 1)
-        for b in br:
-            bwr.put(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        st.add_block(br)
-
-
-def encode_jpeg_progressive(pixels: np.ndarray, subsampling: str = "444",
-                            restart_interval: int = 0,
-                            precision: int = 8) -> bytes:
-    """8-bit (or, with precision=12, 12-bit) image -> PROGRESSIVE JPEG
-    (SOF2). Scan script exercises every Annex G decode path:
-    interleaved DC first (Al=1), per-component AC first (Ss=1..63,
-    Al=1), DC refinement (raw bits), and per-component AC refinement
-    (Ah=1 -> Al=0, correction bits). The decoded pixels are
-    bit-identical to the sequential encoding of the same image (same
-    quantized coefficients — tests pin this)."""
-    if precision not in (8, 12):
-        raise ValueError("precision must be 8 or 12")
-    shift = float(1 << (precision - 1))
-    planes, factors, color, h, w, mcux, mcuy = _prepare_components(
-        pixels, subsampling, center=shift)
-    if precision == 12:
-        qts = [QUANT_LUMA * 16] + ([QUANT_CHROMA * 16] if color else [])
-    else:
-        qts = [QUANT_LUMA] + ([QUANT_CHROMA] if color else [])
-    _, dc_enc0 = _canonical_codes(*DC_LUMA)
-    _, ac_enc0 = _canonical_codes(*PROG_AC_LUMA)
-    dc_enc = [dc_enc0]
-    ac_enc = [ac_enc0]
-    if color:
-        _, dc_enc1 = _canonical_codes(*DC_CHROMA)
-        _, ac_enc1 = _canonical_codes(*PROG_AC_CHROMA)
-        dc_enc += [dc_enc1, dc_enc1]
-        ac_enc += [ac_enc1, ac_enc1]
-    grids = []
-    zz_blocks = []
-    for ci, (hi_f, vi_f) in enumerate(factors):
-        bw_i, bh_i = mcux * hi_f, mcuy * vi_f
-        grids.append((bw_i, bh_i))
-        zz_blocks.append(_raster_zigzag_blocks(
-            planes[ci], bw_i, bh_i, qts[min(ci, len(qts) - 1)],
-            shift=shift))
-
-    out, seg = _jpeg_headers(h, w, planes, factors, qts, color, 0xC2,
-                             restart_interval,
-                             ac_pair=(PROG_AC_LUMA, PROG_AC_CHROMA),
-                             prec=precision)
-    nc = len(planes)
-    n_mcus = mcux * mcuy
-
-    def sos(sel_tables, ss, se, ah, al):
-        body = bytes([len(sel_tables)])
-        for cid, tdta in sel_tables:
-            body += bytes([cid, tdta])
-        return seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
-
-    def rst_boundary(bwr, idx, rst_counter):
-        bwr.flush()
-        bwr.out += bytes([0xFF, 0xD0 + (rst_counter & 7)])
-
-    # --- scan 1: DC first, all components interleaved, Al=1
-    out += sos([(ci + 1, (0 if ci == 0 else 1) << 4) for ci in range(nc)],
-               0, 0, 0, 1)
-    bwr = _BitWriter()
-    pred = [0] * nc
-    rst = 0
-    for m in range(n_mcus):
-        if restart_interval and m and m % restart_interval == 0:
-            rst_boundary(bwr, m, rst)
-            rst += 1
-            pred = [0] * nc
-        my, mx = divmod(m, mcux)
-        for ci in range(nc):
-            hi_f, vi_f = factors[ci]
-            for bi in _mcu_block_indices(my, mx, hi_f, vi_f, grids[ci][0]):
-                val = zz_blocks[ci][bi][0] >> 1  # arithmetic shift, Al=1
-                diff = val - pred[ci]
-                pred[ci] = val
-                t, codebits = _magnitude(diff)
-                c, ln = dc_enc[ci][t]
-                bwr.put(c, ln)
-                if t:
-                    bwr.put(codebits, t)
-    bwr.flush()
-    out += bwr.out
-
-    # --- scans 2..: AC first per component, Ss=1..63, Al=1
-    for ci in range(nc):
-        out += sos([(ci + 1, 0 if ci == 0 else 1)], 1, 63, 0, 1)
-        bwr = _BitWriter()
-        st = _RefineState()
-        bw_i, bh_i = grids[ci]
-        hi_f, vi_f = factors[ci]
-        cw = -(-w * hi_f // factors[0][0])
-        chh = -(-h * vi_f // factors[0][1])
-        bis = [r_ * bw_i + c_
-               for r_ in range(-(-chh // 8)) for c_ in range(-(-cw // 8))]
-        rst = 0
-        for idx, bi in enumerate(bis):
-            if restart_interval and idx and idx % restart_interval == 0:
-                st.flush(bwr, ac_enc[ci])
-                rst_boundary(bwr, idx, rst)
-                rst += 1
-            _enc_ac_first_block(bwr, st, zz_blocks[ci][bi], ac_enc[ci],
-                                1, 63, 1)
-        st.flush(bwr, ac_enc[ci])
-        bwr.flush()
-        out += bwr.out
-
-    # --- DC refinement: one raw bit per block (Ah=1, Al=0)
-    out += sos([(ci + 1, 0) for ci in range(nc)], 0, 0, 1, 0)
-    bwr = _BitWriter()
-    rst = 0
-    for m in range(n_mcus):
-        if restart_interval and m and m % restart_interval == 0:
-            rst_boundary(bwr, m, rst)
-            rst += 1
-        my, mx = divmod(m, mcux)
-        for ci in range(nc):
-            hi_f, vi_f = factors[ci]
-            for bi in _mcu_block_indices(my, mx, hi_f, vi_f, grids[ci][0]):
-                bwr.put(zz_blocks[ci][bi][0] & 1, 1)
-    bwr.flush()
-    out += bwr.out
-
-    # --- AC refinement per component (Ah=1 -> Al=0)
-    for ci in range(nc):
-        out += sos([(ci + 1, 0 if ci == 0 else 1)], 1, 63, 1, 0)
-        bwr = _BitWriter()
-        st = _RefineState()
-        bw_i, bh_i = grids[ci]
-        hi_f, vi_f = factors[ci]
-        cw = -(-w * hi_f // factors[0][0])
-        chh = -(-h * vi_f // factors[0][1])
-        bis = [r_ * bw_i + c_
-               for r_ in range(-(-chh // 8)) for c_ in range(-(-cw // 8))]
-        rst = 0
-        for idx, bi in enumerate(bis):
-            if restart_interval and idx and idx % restart_interval == 0:
-                st.flush(bwr, ac_enc[ci])
-                rst_boundary(bwr, idx, rst)
-                rst += 1
-            _enc_ac_refine_block(bwr, st, zz_blocks[ci][bi], ac_enc[ci],
-                                 1, 63, 0)
-        st.flush(bwr, ac_enc[ci])
-        bwr.flush()
-        out += bwr.out
-
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1421,89 +1134,6 @@ def _decode_lossless(comps, scan, h, w, prec):
     if nc == 1:
         return out[0]
     return np.stack(out, axis=-1)
-
-
-# 17 diff categories at a uniform 5-bit code length — a legal DHT that
-# covers the full 16-bit lossless diff range (Annex K's DC table stops
-# at category 11, which 16-bit content overflows)
-LOSSLESS_DC_TABLE = ([0, 0, 0, 0, 17] + [0] * 11, list(range(17)))
-
-
-def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 1,
-                         precision: "int | None" = None,
-                         point_transform: int = 0) -> bytes:
-    """Image -> LOSSLESS JPEG (SOF3). pixels: (h, w) or (h, w, c<=4)
-    integer array; precision defaults to 8 for uint8 input, 16
-    otherwise. decode_jpeg() recovers the input exactly."""
-    arr = np.asarray(pixels)
-    if arr.ndim == 2:
-        arr = arr[..., None]
-    h, w, nc = arr.shape
-    if not (1 <= nc <= 4):
-        raise ValueError("1-4 components")
-    if not (1 <= predictor <= 7):
-        raise ValueError("predictor 1-7")
-    if precision is None:
-        precision = 8 if arr.dtype == np.uint8 else 16
-    if not (2 <= precision <= 16):
-        raise ValueError("precision 2-16")
-    pt = point_transform
-    samples = (arr.astype(np.int64) >> pt)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (bytes([0xFF, marker])
-                + (len(payload) + 2).to_bytes(2, "big") + payload)
-
-    out = bytearray(b"\xff\xd8")
-    bits, vals = LOSSLESS_DC_TABLE
-    out += seg(0xC4, bytes([0x00]) + bytes(bits) + bytes(vals))
-    sof = (bytes([precision]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-           + bytes([nc]))
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC3, sof)
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    out += seg(0xDA, sos)
-    _, enc = _canonical_codes(*LOSSLESS_DC_TABLE)
-    bwr = _BitWriter()
-    default = 1 << (precision - pt - 1)
-    for y in range(h):
-        for x in range(w):
-            for ci in range(nc):
-                p = samples[..., ci]
-                if y == 0 and x == 0:
-                    pred = default
-                elif y == 0:
-                    pred = int(p[0, x - 1])
-                elif x == 0:
-                    pred = int(p[y - 1, 0])
-                else:
-                    a = int(p[y, x - 1])
-                    b = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    pred = (
-                        a, b, c, a + b - c,
-                        a + ((b - c) >> 1),
-                        b + ((a - c) >> 1),
-                        (a + b) >> 1,
-                    )[predictor - 1]
-                diff = ((int(p[y, x]) - pred + 32768) & 0xFFFF) - 32768
-                if diff == -32768:
-                    c_, ln = enc[16]  # category 16: no appended bits
-                    bwr.put(c_, ln)
-                    continue
-                t, codebits = _magnitude(diff)
-                c_, ln = enc[t]
-                bwr.put(c_, ln)
-                if t:
-                    bwr.put(codebits, t)
-    bwr.flush()
-    out += bwr.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def jpeg_mean_luma(data: bytes):

@@ -1341,10 +1341,6 @@ _MS_COEF = ((256, 0), (512, -256), (0, 0), (192, 64), (240, 0),
             (460, -208), (392, -232))
 
 
-def _clamp16(v: int) -> int:
-    return -32768 if v < -32768 else (32767 if v > 32767 else v)
-
-
 def _ima_adpcm_decode(data: bytes, channels: int, block_align: int):
     """IMA ADPCM (WAV format 17) -> list of int16 samples. Block layout
     per the IMA spec: a 4-byte header per channel (int16 predictor,
@@ -1434,13 +1430,6 @@ def _ima_adpcm_decode(data: bytes, channels: int, block_align: int):
     return out
 
 
-def _trunc_div(a: int, b: int) -> int:
-    """C-style integer division (truncate toward zero) — the MS ADPCM
-    spec's /256 is C integer division, not floor."""
-    q = abs(a) // b
-    return -q if a < 0 else q
-
-
 def _ms_adpcm_decode(data: bytes, channels: int, block_align: int):
     """Microsoft ADPCM (WAV format 2) -> list of int16 samples. Block
     header per channel: predictor-coefficient index (1 byte), initial
@@ -1490,8 +1479,8 @@ def _ms_adpcm_decode(data: bytes, channels: int, block_align: int):
                 signed = nib - 16 if nib & 8 else nib
                 c1, c2 = coef[c]
                 q = s1[c] * c1 + s2[c] * c2
-                # C-style /256 truncates toward zero (spec); inline
-                # of _trunc_div — this loop is the measured hot path
+                # C-style /256 truncates toward zero (spec), not
+                # floor; inlined — this loop is the measured hot path
                 smp = (q >> 8 if q >= 0 else -((-q) >> 8)) \
                     + signed * delta[c]
                 if smp < -32768:
@@ -1871,136 +1860,6 @@ def gif_frames_info(b: bytes) -> Optional[dict]:
     if loop is not None:
         out["loop"] = loop
     return out
-
-
-def gif_frames(b: bytes, max_frames: int = 64):
-    """Decode and COMPOSITE every frame of a GIF87a/89a animation
-    (round 5; gif_pixels stays the cheap first-frame path): frames
-    draw at their (left, top) offsets onto the logical screen with
-    GCE transparency (the flagged index is not drawn) and disposal
-    methods 0/1 (keep), 2 (restore background) and 3 (restore
-    previous). Returns (width, height, [frame_rgb_bytes...]) capped at
-    `max_frames`, or None for malformed input."""
-    try:
-        return _gif_decode_frames(b, max_frames)
-    except Exception:
-        return None
-
-
-def _gif_decode_frames(b: bytes, max_frames: int):
-    import numpy as _np
-
-    d = gif_dims(b)
-    if d is None or len(b) < 13:
-        return None
-    W, H = d["width"], d["height"]
-    if W == 0 or H == 0:
-        return None
-    packed = b[10]
-    bg_index = b[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        sz = 3 * (2 << (packed & 7))
-        gct = b[pos:pos + sz]
-        pos += sz
-    if gct is not None:
-        pal0 = _np.frombuffer(gct[: len(gct) // 3 * 3], _np.uint8)
-        pal0 = pal0.reshape(-1, 3)
-        bg = pal0[bg_index] if bg_index < len(pal0) else _np.zeros(3, _np.uint8)
-    else:
-        bg = _np.zeros(3, _np.uint8)
-    canvas = _np.tile(bg, (H, W, 1)).astype(_np.uint8)
-    frames = []
-    n = len(b)
-    transparent = None
-    disposal = 0
-    while pos < n and len(frames) < max_frames:
-        intro = b[pos]
-        if intro == 0x21:
-            if pos + 2 > n:
-                break
-            label = b[pos + 1]
-            pos += 2
-            if label == 0xF9 and pos + 4 < n and b[pos] >= 4:
-                flags = b[pos + 1]
-                disposal = (flags >> 2) & 7
-                transparent = b[pos + 4] if flags & 1 else None
-            while pos < n and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-        elif intro == 0x2C:
-            if pos + 10 > n:
-                break
-            left = int.from_bytes(b[pos + 1:pos + 3], "little")
-            top = int.from_bytes(b[pos + 3:pos + 5], "little")
-            iw = int.from_bytes(b[pos + 5:pos + 7], "little")
-            ih = int.from_bytes(b[pos + 7:pos + 9], "little")
-            ipacked = b[pos + 9]
-            pos += 10
-            lct = None
-            if ipacked & 0x80:
-                sz = 3 * (2 << (ipacked & 7))
-                lct = b[pos:pos + sz]
-                pos += sz
-            interlaced = bool(ipacked & 0x40)
-            if pos >= n or iw == 0 or ih == 0 \
-                    or left + iw > W or top + ih > H:
-                return None
-            mcs = b[pos]
-            pos += 1
-            if not (2 <= mcs <= 11):
-                return None
-            data = bytearray()
-            while pos < n:
-                bl = b[pos]
-                pos += 1
-                if bl == 0:
-                    break
-                data += b[pos:pos + bl]
-                pos += bl
-            idx = _np.frombuffer(
-                _gif_lzw(bytes(data), mcs, iw * ih), _np.uint8)
-            if len(idx) < iw * ih:
-                return None
-            idx = idx[:iw * ih].reshape(ih, iw)
-            if interlaced:
-                out = _np.zeros_like(idx)
-                r = 0
-                for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-                    nrows = len(range(start, ih, step))
-                    out[start::step] = idx[r:r + nrows]
-                    r += nrows
-                idx = out
-            pal = lct if lct is not None else gct
-            if pal is None:
-                return None
-            pal_arr = _np.frombuffer(
-                pal[: len(pal) // 3 * 3], _np.uint8).reshape(-1, 3)
-            if int(idx.max(initial=0)) >= len(pal_arr):
-                return None
-            prev = canvas.copy() if disposal == 3 else None
-            region = canvas[top:top + ih, left:left + iw]
-            rgb = pal_arr[idx]
-            if transparent is not None:
-                mask = idx != transparent
-                region[mask] = rgb[mask]
-            else:
-                region[:] = rgb
-            frames.append(canvas.tobytes())
-            if disposal == 2:  # restore background in the frame rect
-                canvas[top:top + ih, left:left + iw] = bg
-            elif disposal == 3 and prev is not None:
-                canvas = prev
-            transparent = None
-            disposal = 0
-        elif intro == 0x3B:
-            break
-        else:
-            return None
-    if not frames:
-        return None
-    return W, H, frames
 
 
 def gif_pixels(b: bytes):

@@ -110,45 +110,3 @@ def parse_warc(b: bytes) -> Optional[List[dict]]:
         records.append(rec)
         i = body_start + length
     return records
-
-
-def build_warc(records: List[dict], gzip_members: bool = False) -> bytes:
-    """Deterministic WARC builder (fixtures + tests): records are
-    {warc_type, record_id, target_uri, body(bytes), http_status,
-    http_content_type} — response records get a full HTTP response
-    envelope; others write their body as the raw block. With
-    `gzip_members`, each record becomes its own gzip member (the
-    CommonCrawl layout), mtime pinned to 0 for determinism."""
-    out = []
-    for rec in records:
-        body = rec.get("body", b"")
-        if rec.get("warc_type") == "response":
-            status = rec.get("http_status", 200)
-            reason = {200: "OK", 404: "Not Found"}.get(status, "X")
-            ctype = rec.get("http_content_type",
-                            "text/html; charset=utf-8")
-            body = (
-                f"HTTP/1.1 {status} {reason}\r\n"
-                f"Content-Type: {ctype}\r\n"
-                f"Content-Length: {len(body)}\r\n\r\n"
-            ).encode("latin-1") + body
-        hdr = [
-            "WARC/1.0",
-            f"WARC-Type: {rec.get('warc_type', 'resource')}",
-            f"WARC-Record-ID: {rec.get('record_id', '<urn:x:0>')}",
-            "WARC-Date: 2024-01-01T00:00:00Z",
-        ]
-        if rec.get("target_uri"):
-            hdr.append(f"WARC-Target-URI: {rec['target_uri']}")
-        if rec.get("warc_type") == "response":
-            hdr.append("Content-Type: application/http;msgtype=response")
-        else:
-            hdr.append("Content-Type: application/octet-stream")
-        hdr.append(f"Content-Length: {len(body)}")
-        raw = ("\r\n".join(hdr) + "\r\n\r\n").encode("latin-1") \
-            + body + b"\r\n\r\n"
-        if gzip_members:
-            co = zlib.compressobj(9, zlib.DEFLATED, 31)
-            raw = co.compress(raw) + co.flush()
-        out.append(raw)
-    return b"".join(out)

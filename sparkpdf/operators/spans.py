@@ -103,11 +103,6 @@ def page_range(page_df: DataFrame, start: int, stop: int, step: int = 1) -> Data
     return page_df.filter(cond)
 
 
-def page_count(df: DataFrame) -> DataFrame:
-    """getNumPages analog (parity: _reader.py:294-327)."""
-    return df.select("doc_id", F.col("n_pages").alias("page_count"))
-
-
 def media_catalog(df: DataFrame) -> DataFrame:
     """Distinct media refs per doc with first-use offset — the
     'resource dictionary' projection of the span table."""

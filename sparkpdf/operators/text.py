@@ -529,11 +529,6 @@ def canonical_url(col) -> "F.Column":
     ).otherwise(F.concat(scheme, F.lit("://"), host, norm_path, query))
 
 
-def url_canonicalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """(.., url) -> + canonical column; dedup key for the frontier."""
-    return pages.withColumn("canonical", canonical_url(F.col(url_col)))
-
-
 def link_host_degree(features: DataFrame) -> DataFrame:
     """Host-level link-graph degree from extracted outlinks: explode
     each doc's links map-side, pull the host out of absolute hrefs

@@ -1,15 +1,12 @@
 """pdf_raw sources — SURVEY.md §2.1 S1.
 
-Two ways documents enter the engine:
-
-* `read_pdf_dir`: a directory tree of *.pdf files via Spark's
-  binaryFile source (path pruning + modifiedAfter predicates push into
-  the file index; content arrives as one binary column, no Python I/O).
-* `read_pdf_raw`: a parquet/Iceberg-style table already shaped
-  (doc_id, pdf_bytes).
-
-Both normalize to the pdf_raw contract consumed by
-operators/extract.extract_spans.
+`read_pdf_dir` reads a directory tree of *.pdf files via Spark's
+binaryFile source (path pruning + modifiedAfter predicates push into
+the file index; content arrives as one binary column, no Python I/O)
+and normalizes it to the pdf_raw contract consumed by
+operators/extract.extract_spans. A table already shaped
+(doc_id, pdf_bytes) is read with `spark.read.parquet`, as every job
+does.
 """
 
 from __future__ import annotations
@@ -34,10 +31,3 @@ def read_pdf_dir(
     return df.select(
         F.col("path").alias("doc_id"), F.col("content").alias("pdf_bytes")
     )
-
-
-def read_pdf_raw(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet table with (doc_id, pdf_bytes) columns (extra columns
-    pass through untouched; extract_spans selects what it needs)."""
-    df = spark.read.parquet(path)
-    return df.withColumn("doc_id", F.col("doc_id").cast("string"))

@@ -9,32 +9,28 @@ half of this module; a Spark builder only picks which variant each
 doc_id gets. Every builder runs its per-document Python work through
 `operators._kernel.map_docs`.
 
-The kernel-level string builders (`kernels.html.synthesize_*`,
+The HTML page builders (`synthesize_html`, `synthesize_webpage`) and
+the WARC archive builder (`build_warc`) open the module. The string
+builders that production code also calls
+(`kernels.html.synthesize_interleaved_html`,
 `kernels.robots.synthesize_robots`, `kernels.sitemap.synthesize_sitemap`)
 stay beside their parsers; this module composes them.
 """
 
 from __future__ import annotations
 
+import html as _htmlmod
 import struct
+import zlib
+from typing import List
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.ccitt_g4 import g4_encode
 from ..kernels.filters import ccitt_fax_wrap
-from ..kernels.html import (
-    synthesize_html,
-    synthesize_interleaved_html,
-    synthesize_webpage,
-)
-from ..kernels.jpeg import (
-    encode_jpeg,
-    encode_jpeg_lossless,
-    encode_jpeg_progressive,
-)
-from ..kernels.warc import build_warc
+from ..kernels.html import NONPRINTABLE, synthesize_interleaved_html
+from ..kernels.jpeg import encode_jpeg
 from ..kernels.write import spans_to_pdf
 from ..operators._kernel import map_docs
 from ..operators.extract import (
@@ -46,7 +42,151 @@ from ..operators.extract import (
 )
 from ..operators.multimodal import MEDIA_SCHEMA
 from . import imagegen
+from .imagegen import encode_jpeg_lossless, encode_jpeg_progressive, g4_encode
 from .pdfgen import doc_to_pdf, doc_to_pdf_paged
+
+# --- HTML pages and WARC archives ------------------------------------------
+
+
+def synthesize_html(doc_id: int, text: str) -> str:
+    """Deterministic page around `text` (sanitized like doc_to_pdf):
+    real boilerplate (nav with links, header/footer, script/style, a
+    link-dense related-articles div) that the extractor must strip,
+    leaving exactly the planted paragraphs."""
+    printable = NONPRINTABLE.sub("?", text)
+    body = _htmlmod.escape(printable)
+    return (
+        "<!DOCTYPE html><html><head>"
+        f"<title>doc-{doc_id}</title>"
+        "<style>body{font:16px serif}</style>"
+        "<script>var tracking='pixel';</script>"
+        "</head><body>"
+        "<header><h1>Site Name</h1></header>"
+        '<nav><a href="/">Home</a> <a href="/about">About</a>'
+        ' <a href="/contact">Contact</a></nav>'
+        f"<article><p>{body}</p></article>"
+        '<div class="related"><a href="/a">Read more stuff here</a>'
+        ' <a href="/b">Another related article link</a> also</div>'
+        "<footer>(c) 2024 Site Name - all rights reserved</footer>"
+        "</body></html>"
+    )
+
+
+def synthesize_webpage(doc_id: int, text: str) -> str:
+    """Rich deterministic page for the web-feature queries (links /
+    meta / headings / tables), leaving synthesize_html (the html_main
+    oracle's corpus) untouched. Every planted feature is a pure
+    doc_id formula so DuckDB closed-form oracles exist:
+
+      lang     = (en de fr es it)[d%5]
+      robots   = noindex,nofollow when d%7==0 else index,follow
+      canonical= https://example.com/doc/{d};  og:title = OG Doc {d}
+      headings = h1 'Site Name' (boilerplate header), h1 'Doc {d}',
+                 then 1+d%3 x h2 'Section {i} of doc {d}', each h2
+                 followed by 'Body of section {i} in doc {d}.' (the
+                 section stream: h1 section carries the doc text)
+      links    = 3 nav (boiler) + d%4 body refs in the pre-heading
+                 article preamble
+                 (https://site{(d+i)%5}.example.com/ref/{d}/{i} —
+                 the rotating host feeds the link-graph degree
+                 oracle — rel=nofollow on odd i) + 2 related
+                 -> 5 + d%4 total, document order
+      table    = only when d%3==0: (2+d%5) x (1+d%3) cells 'c{r}.{c}'
+    """
+    d = int(doc_id)
+    lang = ("en", "de", "fr", "es", "it")[d % 5]
+    robots = "noindex,nofollow" if d % 7 == 0 else "index,follow"
+    printable = NONPRINTABLE.sub("?", text)
+    body = _htmlmod.escape(printable)
+    parts = [
+        f'<!DOCTYPE html><html lang="{lang}"><head>',
+        '<meta charset="utf-8">',
+        f"<title>doc-{d}</title>",
+        f'<link rel="canonical" href="https://example.com/doc/{d}">',
+        f'<meta name="description" content="Summary of document {d}">',
+        f'<meta name="robots" content="{robots}">',
+        f'<meta property="og:title" content="OG Doc {d}">',
+        "<style>body{font:16px serif}</style>",
+        "<script>var tracking='pixel';</script>",
+        "</head><body>",
+        "<header><h1>Site Name</h1></header>",
+        '<nav><a href="/">Home</a> <a href="/about">About</a>'
+        ' <a href="/contact">Contact</a></nav>',
+        "<article>",
+    ]
+    # links + table live in the pre-heading preamble so the SECTION
+    # stream (heading -> following text) stays a pure formula
+    for i in range(d % 4):
+        rel = ' rel="nofollow"' if i % 2 == 1 else ""
+        parts.append(
+            f'<a href="https://site{(d + i) % 5}.example.com'
+            f'/ref/{d}/{i}"{rel}>ref {d}-{i}</a>'
+        )
+    if d % 3 == 0:
+        rows = []
+        for r in range(2 + d % 5):
+            cells = "".join(
+                f"<td>c{r}.{c}</td>" for c in range(1 + d % 3)
+            )
+            rows.append(f"<tr>{cells}</tr>")
+        parts.append(f"<table>{''.join(rows)}</table>")
+    parts.append(f"<h1>Doc {d}</h1><p>{body}</p>")
+    for i in range(1 + d % 3):
+        parts.append(
+            f"<h2>Section {i} of doc {d}</h2>"
+            f"<p>Body of section {i} in doc {d}.</p>"
+        )
+    parts += [
+        "</article>",
+        '<div class="related"><a href="/a">Read more stuff here</a>'
+        ' <a href="/b">Another related article link</a></div>',
+        "<footer>(c) 2024 Site Name - all rights reserved</footer>",
+        "</body></html>",
+    ]
+    return "".join(parts)
+
+
+def build_warc(records: List[dict], gzip_members: bool = False) -> bytes:
+    """Deterministic WARC builder (fixtures + tests): records are
+    {warc_type, record_id, target_uri, body(bytes), http_status,
+    http_content_type} — response records get a full HTTP response
+    envelope; others write their body as the raw block. With
+    `gzip_members`, each record becomes its own gzip member (the
+    CommonCrawl layout), mtime pinned to 0 for determinism."""
+    out = []
+    for rec in records:
+        body = rec.get("body", b"")
+        if rec.get("warc_type") == "response":
+            status = rec.get("http_status", 200)
+            reason = {200: "OK", 404: "Not Found"}.get(status, "X")
+            ctype = rec.get("http_content_type",
+                            "text/html; charset=utf-8")
+            body = (
+                f"HTTP/1.1 {status} {reason}\r\n"
+                f"Content-Type: {ctype}\r\n"
+                f"Content-Length: {len(body)}\r\n\r\n"
+            ).encode("latin-1") + body
+        hdr = [
+            "WARC/1.0",
+            f"WARC-Type: {rec.get('warc_type', 'resource')}",
+            f"WARC-Record-ID: {rec.get('record_id', '<urn:x:0>')}",
+            "WARC-Date: 2024-01-01T00:00:00Z",
+        ]
+        if rec.get("target_uri"):
+            hdr.append(f"WARC-Target-URI: {rec['target_uri']}")
+        if rec.get("warc_type") == "response":
+            hdr.append("Content-Type: application/http;msgtype=response")
+        else:
+            hdr.append("Content-Type: application/octet-stream")
+        hdr.append(f"Content-Length: {len(body)}")
+        raw = ("\r\n".join(hdr) + "\r\n\r\n").encode("latin-1") \
+            + body + b"\r\n\r\n"
+        if gzip_members:
+            co = zlib.compressobj(9, zlib.DEFLATED, 31)
+            raw = co.compress(raw) + co.flush()
+        out.append(raw)
+    return b"".join(out)
+
 
 # --- planted signals: one builder each --------------------------------------
 

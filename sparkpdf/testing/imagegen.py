@@ -1,12 +1,51 @@
 """Deterministic tiny image builders for the media_dims oracle and
 header-parser tests. make_png emits a fully valid file; make_jpeg emits
 a structurally valid header chain (SOI/APP0/DQT/SOF0/EOI — pixel data
-out of scope, matching the reference's undecoded DCT passthrough)."""
+out of scope, matching the reference's undecoded DCT passthrough).
+
+The end of the module holds the test-data encoders for the kernels'
+decoders: progressive and lossless JPEG (`encode_jpeg_progressive`,
+`encode_jpeg_lossless`) and CCITT fax (`g4_encode`, `g3_encode_1d`,
+`g3_encode_2d`, `pack_rows`). They import the shared tables and
+bit-level helpers from kernels/jpeg.py and kernels/ccitt_g4.py."""
 
 from __future__ import annotations
 
 import struct
 import zlib
+from typing import List
+
+import numpy as np
+
+from ..kernels.ccitt_g4 import (
+    _BLACK_MAKEUP,
+    _BLACK_TERM,
+    _EXT_MAKEUP,
+    _MODE_HORIZ,
+    _MODE_PASS,
+    _MODE_V,
+    _WHITE_MAKEUP,
+    _WHITE_TERM,
+    _transitions,
+)
+from ..kernels.jpeg import (
+    AC_CHROMA,
+    AC_LUMA,
+    DC_CHROMA,
+    DC_LUMA,
+    QUANT_CHROMA,
+    QUANT_LUMA,
+    _BitWriter,
+    _canonical_codes,
+    _jpeg_headers,
+    _magnitude,
+    _mcu_block_indices,
+    _pad_edge,
+    _prepare_components,
+    _T,
+    _ZZ,
+    encode_jpeg,
+)
 
 
 def _png_chunk(tag: bytes, payload: bytes) -> bytes:
@@ -130,8 +169,6 @@ def make_png_gray(pixels) -> bytes:
     """8-bit grayscale PNG from an (h, w) uint8 array (filter-0 rows,
     one IDAT) — planted values decode losslessly, unlike make_png's
     fixed gradient."""
-    import numpy as np
-
     a = np.asarray(pixels, dtype=np.uint8)
     h, w = a.shape
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)  # 8-bit gray
@@ -152,8 +189,6 @@ def make_tga(pixels, img_type: int = 2, rle: bool = False,
     gray-identity), (h, w, 3) RGB -> type 2 as BGR. `rle` writes the
     run-length forms (9/10/11) with a run packet per homogeneous row
     span (max 128) — real packets, not raw-only."""
-    import numpy as np
-
     a = np.asarray(pixels, dtype=np.uint8)
     h, w = a.shape[:2]
     if a.ndim == 3:
@@ -209,8 +244,6 @@ def make_ico(pixels, png: bool = False) -> bytes:
     PNG (make_png_gray); otherwise a classic DIB entry — 24-bit BGR
     XOR plane (bottom-up, doubled biHeight) followed by an all-zero
     (fully opaque) 1-bit AND mask, rows padded to 4 bytes."""
-    import numpy as np
-
     a = np.asarray(pixels, dtype=np.uint8)
     h, w = a.shape[:2]
     if png:
@@ -245,8 +278,6 @@ def make_bmp(pixels, bits: int = 24, topdown: bool = False,
     bottom-up rows emit 3..255-length spans in ABSOLUTE mode (with
     its word-alignment pad) so both packet kinds really occur,
     end-of-line after every row, end-of-bitmap at the end."""
-    import numpy as np
-
     a = np.asarray(pixels, dtype=np.uint8)
     h, w = a.shape[:2]
     rowbytes = (w * bits + 31) // 32 * 4
@@ -304,8 +335,6 @@ def make_pnm(pixels, maxval: int = 255) -> bytes:
     """Binary netpbm: (h, w) -> P5 graymap, (h, w, 3) -> P6 pixmap;
     samples are 1 byte at maxval < 256, else 2 bytes big-endian. A
     comment line in the header exercises the tolerant parse."""
-    import numpy as np
-
     a = np.asarray(pixels)
     h, w = a.shape[:2]
     kind = b"P6" if a.ndim == 3 else b"P5"
@@ -863,8 +892,6 @@ def make_tiff(pixels, compression: int = 1, rows_per_strip: int = 0,
     rows_per_strip rows (0 = single strip). `planar=2` writes
     PlanarConfiguration 2 (TIFF 6.0 §14: all plane-0 strips, then
     plane 1, ...; the predictor differences within each plane)."""
-    import numpy as np
-
     from .pdfgen import lzw_encode
 
     arr = np.asarray(pixels, dtype=np.uint8)
@@ -1391,8 +1418,6 @@ def make_avi(width: int, height: int, duration_ms: int,
     rows padded to 4 bytes, or with dib_bits=8 palettized rows over a
     256-entry gray-identity BGRA palette; `topdown` writes the
     negative-biHeight top-down variant."""
-    import numpy as np
-
     usec = 1000000 // fps
     if dib_frames is not None:
         rowbytes = (width * dib_bits + 31) // 32 * 4
@@ -1549,8 +1574,6 @@ def make_tiff_tiled(pixels, tile_w: int, tile_h: int,
     independently; tags 322/323/324/325 instead of strips. `planar=2`
     writes plane-major tile order (all of plane 0's tiles, then plane
     1's...) with tag 284=2 — the §14 x §15 combination."""
-    import numpy as np
-
     from .pdfgen import lzw_encode
 
     arr = np.asarray(pixels, dtype=np.uint8)
@@ -1581,8 +1604,6 @@ def make_tiff_tiled(pixels, tile_w: int, tile_h: int,
                 elif compression == 32773:
                     raw = _packbits_encode(raw)
                 elif compression == 7:
-                    from ..kernels.jpeg import encode_jpeg_lossless
-
                     raw = encode_jpeg_lossless(np.squeeze(t))
                 tiles.append(raw)
 
@@ -1647,10 +1668,6 @@ def make_tiff_ojpeg(pixels, per_strip: int = 0,
     encoder (lossy — only exact for per-MCU-uniform even grays).
     `fragment=True` emulates the broken tables-in-tags form (515-521,
     no SOI anywhere) that decoders are expected to QUARANTINE."""
-    import numpy as np
-
-    from ..kernels.jpeg import encode_jpeg, encode_jpeg_lossless
-
     arr = np.asarray(pixels, dtype=np.uint8)
     if arr.ndim == 2:
         arr = arr[..., None]
@@ -1729,10 +1746,6 @@ def make_tiff_jpeg(pixels, rows_per_strip: int = 0,
     `planar=2` writes plane-major strip order (tag 284=2) with each
     strip a single-plane GRAYSCALE JPEG — the §14 x compression-7
     combination."""
-    import numpy as np
-
-    from ..kernels.jpeg import encode_jpeg_lossless
-
     arr = np.asarray(pixels, dtype=np.uint8)
     if arr.ndim == 2:
         arr = arr[..., None]
@@ -1810,3 +1823,541 @@ def make_tiff_jpeg(pixels, rows_per_strip: int = 0,
             ext_off += cnt * size
     return (b"II" + _e(42, 2) + _e(ifd_off, 4) + bytes(data)
             + _e(len(tags), 2) + entries + _e(0, 4) + bytes(ext))
+
+
+# --- JPEG progressive + lossless encoders (decoded by kernels/jpeg.py) ---
+
+
+def _raster_zigzag_blocks(plane: np.ndarray, bw_i: int, bh_i: int,
+                          q: np.ndarray, shift: float = 128.0) -> list:
+    """Component plane -> quantized zigzag blocks in RASTER order over
+    the padded (bh_i x bw_i)-block grid (the progressive encoder's
+    per-component addressing)."""
+    padded = _pad_edge(plane, bh_i * 8, bw_i * 8)
+    blocks = (
+        padded.reshape(bh_i, 8, bw_i, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
+    )
+    coeff = np.matmul(np.matmul(_T, blocks - shift), _T.T)
+    quant = np.round(coeff / q).astype(np.int64).reshape(-1, 64)
+    return quant[:, _ZZ].tolist()
+
+
+# progressive-encoder AC tables: Annex K + the single free 16-bit code
+# slot spent on EOB1 (symbol 0x10; runs of 2-3 blocks with one ext bit)
+# — sequential tables define only EOB0/ZRL, and the Kraft sum leaves
+# exactly one unused 16-bit code in each
+PROG_AC_LUMA = (
+    AC_LUMA[0][:15] + [AC_LUMA[0][15] + 1],
+    AC_LUMA[1] + [0x10],
+)
+PROG_AC_CHROMA = (
+    AC_CHROMA[0][:15] + [AC_CHROMA[0][15] + 1],
+    AC_CHROMA[1] + [0x10],
+)
+
+
+class _RefineState:
+    """Encoder-side EOB-run bookkeeping for progressive AC scans: the
+    pending EOB run plus the correction bits each covered block owns
+    (T.81 G.1.2.3 — every EOBn code must be followed by exactly the
+    correction bits of the blocks it covers, in block order)."""
+
+    __slots__ = ("eobrun", "be")
+
+    def __init__(self):
+        self.eobrun = 0
+        self.be: list = []  # one bit-list per covered block
+
+    def add_block(self, bits_for_block: list):
+        self.eobrun += 1
+        self.be.append(bits_for_block)
+
+    def flush(self, bwr, ac_enc):
+        i = 0
+        while self.eobrun:
+            if self.eobrun >= 2:
+                n = 2 + min(self.eobrun - 2, 1)
+                c, ln = ac_enc[0x10]  # EOB1: run 2-3, one ext bit
+                bwr.put(c, ln)
+                bwr.put(n - 2, 1)
+            else:
+                n = 1
+                c, ln = ac_enc[0x00]  # EOB0
+                bwr.put(c, ln)
+            for blk in self.be[i:i + n]:
+                for b in blk:
+                    bwr.put(b, 1)
+            i += n
+            self.eobrun -= n
+        self.be = []
+
+
+def _enc_ac_first_block(bwr, st, zz, ac_enc, ss, se, al):
+    """One block of a first AC scan (Ah=0): zero-run/size coding of
+    the magnitude-shifted band, trailing zeros folded into the EOB
+    run."""
+    vs = []
+    for k in range(ss, se + 1):
+        v = zz[k]
+        vs.append((v >> al) if v >= 0 else -((-v) >> al))
+    last_nz = -1
+    for j in range(len(vs) - 1, -1, -1):
+        if vs[j]:
+            last_nz = j
+            break
+    if last_nz < 0:
+        st.add_block([])
+        return
+    st.flush(bwr, ac_enc)
+    run = 0
+    for j in range(last_nz + 1):
+        v = vs[j]
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            c, ln = ac_enc[0xF0]
+            bwr.put(c, ln)
+            run -= 16
+        t, codebits = _magnitude(v)
+        c, ln = ac_enc[(run << 4) | t]
+        bwr.put(c, ln)
+        bwr.put(codebits, t)
+        run = 0
+    if last_nz < se - ss:
+        st.add_block([])
+
+
+def _enc_ac_refine_block(bwr, st, zz, ac_enc, ss, se, al):
+    """One block of a refinement AC scan (Ah=Al+1): newly-nonzero
+    coefficients as (run, 1) codes with sign bits; one correction bit
+    per already-nonzero coefficient, routed through the proper buffer
+    (after the owning code, or after the EOB run that covers it)."""
+    absv = []
+    for k in range(ss, se + 1):
+        v = zz[k]
+        absv.append(((-v) if v < 0 else v) >> al)
+    last_new = -1
+    for j in range(len(absv) - 1, -1, -1):
+        if absv[j] == 1:
+            last_new = j
+            break
+    r = 0
+    br: list = []
+    for j, a in enumerate(absv):
+        if a == 0:
+            r += 1
+            continue
+        while r > 15 and j <= last_new:
+            st.flush(bwr, ac_enc)
+            c, ln = ac_enc[0xF0]
+            bwr.put(c, ln)
+            r -= 16
+            for b in br:
+                bwr.put(b, 1)
+            br = []
+        if a > 1:  # nonzero history: correction bit only
+            br.append(a & 1)
+            continue
+        st.flush(bwr, ac_enc)
+        c, ln = ac_enc[(r << 4) | 1]
+        bwr.put(c, ln)
+        bwr.put(1 if zz[ss + j] > 0 else 0, 1)
+        for b in br:
+            bwr.put(b, 1)
+        br = []
+        r = 0
+    if r > 0 or br:
+        st.add_block(br)
+
+
+def encode_jpeg_progressive(pixels: np.ndarray, subsampling: str = "444",
+                            restart_interval: int = 0,
+                            precision: int = 8) -> bytes:
+    """8-bit (or, with precision=12, 12-bit) image -> PROGRESSIVE JPEG
+    (SOF2). Scan script exercises every Annex G decode path:
+    interleaved DC first (Al=1), per-component AC first (Ss=1..63,
+    Al=1), DC refinement (raw bits), and per-component AC refinement
+    (Ah=1 -> Al=0, correction bits). The decoded pixels are
+    bit-identical to the sequential encoding of the same image (same
+    quantized coefficients — tests pin this)."""
+    if precision not in (8, 12):
+        raise ValueError("precision must be 8 or 12")
+    shift = float(1 << (precision - 1))
+    planes, factors, color, h, w, mcux, mcuy = _prepare_components(
+        pixels, subsampling, center=shift)
+    if precision == 12:
+        qts = [QUANT_LUMA * 16] + ([QUANT_CHROMA * 16] if color else [])
+    else:
+        qts = [QUANT_LUMA] + ([QUANT_CHROMA] if color else [])
+    _, dc_enc0 = _canonical_codes(*DC_LUMA)
+    _, ac_enc0 = _canonical_codes(*PROG_AC_LUMA)
+    dc_enc = [dc_enc0]
+    ac_enc = [ac_enc0]
+    if color:
+        _, dc_enc1 = _canonical_codes(*DC_CHROMA)
+        _, ac_enc1 = _canonical_codes(*PROG_AC_CHROMA)
+        dc_enc += [dc_enc1, dc_enc1]
+        ac_enc += [ac_enc1, ac_enc1]
+    grids = []
+    zz_blocks = []
+    for ci, (hi_f, vi_f) in enumerate(factors):
+        bw_i, bh_i = mcux * hi_f, mcuy * vi_f
+        grids.append((bw_i, bh_i))
+        zz_blocks.append(_raster_zigzag_blocks(
+            planes[ci], bw_i, bh_i, qts[min(ci, len(qts) - 1)],
+            shift=shift))
+
+    out, seg = _jpeg_headers(h, w, planes, factors, qts, color, 0xC2,
+                             restart_interval,
+                             ac_pair=(PROG_AC_LUMA, PROG_AC_CHROMA),
+                             prec=precision)
+    nc = len(planes)
+    n_mcus = mcux * mcuy
+
+    def sos(sel_tables, ss, se, ah, al):
+        body = bytes([len(sel_tables)])
+        for cid, tdta in sel_tables:
+            body += bytes([cid, tdta])
+        return seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
+
+    def rst_boundary(bwr, idx, rst_counter):
+        bwr.flush()
+        bwr.out += bytes([0xFF, 0xD0 + (rst_counter & 7)])
+
+    # --- scan 1: DC first, all components interleaved, Al=1
+    out += sos([(ci + 1, (0 if ci == 0 else 1) << 4) for ci in range(nc)],
+               0, 0, 0, 1)
+    bwr = _BitWriter()
+    pred = [0] * nc
+    rst = 0
+    for m in range(n_mcus):
+        if restart_interval and m and m % restart_interval == 0:
+            rst_boundary(bwr, m, rst)
+            rst += 1
+            pred = [0] * nc
+        my, mx = divmod(m, mcux)
+        for ci in range(nc):
+            hi_f, vi_f = factors[ci]
+            for bi in _mcu_block_indices(my, mx, hi_f, vi_f, grids[ci][0]):
+                val = zz_blocks[ci][bi][0] >> 1  # arithmetic shift, Al=1
+                diff = val - pred[ci]
+                pred[ci] = val
+                t, codebits = _magnitude(diff)
+                c, ln = dc_enc[ci][t]
+                bwr.put(c, ln)
+                if t:
+                    bwr.put(codebits, t)
+    bwr.flush()
+    out += bwr.out
+
+    # --- scans 2..: AC first per component, Ss=1..63, Al=1
+    for ci in range(nc):
+        out += sos([(ci + 1, 0 if ci == 0 else 1)], 1, 63, 0, 1)
+        bwr = _BitWriter()
+        st = _RefineState()
+        bw_i, bh_i = grids[ci]
+        hi_f, vi_f = factors[ci]
+        cw = -(-w * hi_f // factors[0][0])
+        chh = -(-h * vi_f // factors[0][1])
+        bis = [r_ * bw_i + c_
+               for r_ in range(-(-chh // 8)) for c_ in range(-(-cw // 8))]
+        rst = 0
+        for idx, bi in enumerate(bis):
+            if restart_interval and idx and idx % restart_interval == 0:
+                st.flush(bwr, ac_enc[ci])
+                rst_boundary(bwr, idx, rst)
+                rst += 1
+            _enc_ac_first_block(bwr, st, zz_blocks[ci][bi], ac_enc[ci],
+                                1, 63, 1)
+        st.flush(bwr, ac_enc[ci])
+        bwr.flush()
+        out += bwr.out
+
+    # --- DC refinement: one raw bit per block (Ah=1, Al=0)
+    out += sos([(ci + 1, 0) for ci in range(nc)], 0, 0, 1, 0)
+    bwr = _BitWriter()
+    rst = 0
+    for m in range(n_mcus):
+        if restart_interval and m and m % restart_interval == 0:
+            rst_boundary(bwr, m, rst)
+            rst += 1
+        my, mx = divmod(m, mcux)
+        for ci in range(nc):
+            hi_f, vi_f = factors[ci]
+            for bi in _mcu_block_indices(my, mx, hi_f, vi_f, grids[ci][0]):
+                bwr.put(zz_blocks[ci][bi][0] & 1, 1)
+    bwr.flush()
+    out += bwr.out
+
+    # --- AC refinement per component (Ah=1 -> Al=0)
+    for ci in range(nc):
+        out += sos([(ci + 1, 0 if ci == 0 else 1)], 1, 63, 1, 0)
+        bwr = _BitWriter()
+        st = _RefineState()
+        bw_i, bh_i = grids[ci]
+        hi_f, vi_f = factors[ci]
+        cw = -(-w * hi_f // factors[0][0])
+        chh = -(-h * vi_f // factors[0][1])
+        bis = [r_ * bw_i + c_
+               for r_ in range(-(-chh // 8)) for c_ in range(-(-cw // 8))]
+        rst = 0
+        for idx, bi in enumerate(bis):
+            if restart_interval and idx and idx % restart_interval == 0:
+                st.flush(bwr, ac_enc[ci])
+                rst_boundary(bwr, idx, rst)
+                rst += 1
+            _enc_ac_refine_block(bwr, st, zz_blocks[ci][bi], ac_enc[ci],
+                                 1, 63, 0)
+        st.flush(bwr, ac_enc[ci])
+        bwr.flush()
+        out += bwr.out
+
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+# 17 diff categories at a uniform 5-bit code length — a legal DHT that
+# covers the full 16-bit lossless diff range (Annex K's DC table stops
+# at category 11, which 16-bit content overflows)
+LOSSLESS_DC_TABLE = ([0, 0, 0, 0, 17] + [0] * 11, list(range(17)))
+
+
+def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 1,
+                         precision: "int | None" = None,
+                         point_transform: int = 0) -> bytes:
+    """Image -> LOSSLESS JPEG (SOF3). pixels: (h, w) or (h, w, c<=4)
+    integer array; precision defaults to 8 for uint8 input, 16
+    otherwise. decode_jpeg() recovers the input exactly."""
+    arr = np.asarray(pixels)
+    if arr.ndim == 2:
+        arr = arr[..., None]
+    h, w, nc = arr.shape
+    if not (1 <= nc <= 4):
+        raise ValueError("1-4 components")
+    if not (1 <= predictor <= 7):
+        raise ValueError("predictor 1-7")
+    if precision is None:
+        precision = 8 if arr.dtype == np.uint8 else 16
+    if not (2 <= precision <= 16):
+        raise ValueError("precision 2-16")
+    pt = point_transform
+    samples = (arr.astype(np.int64) >> pt)
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        return (bytes([0xFF, marker])
+                + (len(payload) + 2).to_bytes(2, "big") + payload)
+
+    out = bytearray(b"\xff\xd8")
+    bits, vals = LOSSLESS_DC_TABLE
+    out += seg(0xC4, bytes([0x00]) + bytes(bits) + bytes(vals))
+    sof = (bytes([precision]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+           + bytes([nc]))
+    for ci in range(nc):
+        sof += bytes([ci + 1, 0x11, 0])
+    out += seg(0xC3, sof)
+    sos = bytes([nc])
+    for ci in range(nc):
+        sos += bytes([ci + 1, 0x00])
+    sos += bytes([predictor, 0, pt])
+    out += seg(0xDA, sos)
+    _, enc = _canonical_codes(*LOSSLESS_DC_TABLE)
+    bwr = _BitWriter()
+    default = 1 << (precision - pt - 1)
+    for y in range(h):
+        for x in range(w):
+            for ci in range(nc):
+                p = samples[..., ci]
+                if y == 0 and x == 0:
+                    pred = default
+                elif y == 0:
+                    pred = int(p[0, x - 1])
+                elif x == 0:
+                    pred = int(p[y - 1, 0])
+                else:
+                    a = int(p[y, x - 1])
+                    b = int(p[y - 1, x])
+                    c = int(p[y - 1, x - 1])
+                    pred = (
+                        a, b, c, a + b - c,
+                        a + ((b - c) >> 1),
+                        b + ((a - c) >> 1),
+                        (a + b) >> 1,
+                    )[predictor - 1]
+                diff = ((int(p[y, x]) - pred + 32768) & 0xFFFF) - 32768
+                if diff == -32768:
+                    c_, ln = enc[16]  # category 16: no appended bits
+                    bwr.put(c_, ln)
+                    continue
+                t, codebits = _magnitude(diff)
+                c_, ln = enc[t]
+                bwr.put(c_, ln)
+                if t:
+                    bwr.put(codebits, t)
+    bwr.flush()
+    out += bwr.out
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+# --- CCITT T.4/T.6 encoders (decoded by kernels/ccitt_g4.py) -----------
+
+
+class _FaxBitWriter:
+    def __init__(self):
+        self.buf = bytearray()
+        self.acc = 0
+        self.n = 0
+
+    def write(self, nbits: int, value: int):
+        for k in range(nbits - 1, -1, -1):
+            self.acc = (self.acc << 1) | ((value >> k) & 1)
+            self.n += 1
+            if self.n == 8:
+                self.buf.append(self.acc)
+                self.acc = 0
+                self.n = 0
+
+    def bytes(self) -> bytes:
+        if self.n:
+            return bytes(self.buf) + bytes([self.acc << (8 - self.n)])
+        return bytes(self.buf)
+
+
+def g4_encode(bitmap: List[List[int]], columns: int) -> bytes:
+    """T.6 MMR encode of 0/1 pixel rows (1=black); appends EOFB."""
+    bw = _FaxBitWriter()
+    ref = [0] * columns
+    for line in bitmap:
+        _encode_2d_line(bw, ref, line, columns)
+        ref = line
+    bw.write(12, 0b000000000001)  # EOFB
+    bw.write(12, 0b000000000001)
+    return bw.bytes()
+
+
+def _write_run(bw: _FaxBitWriter, run: int, color: int):
+    term = _BLACK_TERM if color else _WHITE_TERM
+    makeup = _BLACK_MAKEUP if color else _WHITE_MAKEUP
+    while run >= 64:
+        step = min((run // 64) * 64, 2560)
+        if step > 1728:
+            ln, code = _EXT_MAKEUP[step]
+        else:
+            ln, code = makeup[step]
+        bw.write(ln, code)
+        run -= step
+    ln, code = term[run]
+    bw.write(ln, code)
+
+
+_EOL = (12, 0b000000000001)
+
+
+def g3_encode_1d(bitmap: List[List[int]], columns: int) -> bytes:
+    """T.4 1-D encode: EOL before every line, then alternating runs
+    (white first; a leading black pixel gets a zero-length white run)."""
+    bw = _FaxBitWriter()
+    for line in bitmap:
+        bw.write(*_EOL)
+        pos = 0
+        color = 0
+        while pos < columns:
+            run = 0
+            while pos + run < columns and line[pos + run] == color:
+                run += 1
+            _write_run(bw, run, color)
+            pos += run
+            color = 1 - color
+    bw.write(*_EOL)
+    return bw.bytes()
+
+
+def g3_encode_2d(bitmap: List[List[int]], columns: int, k: int = 4) -> bytes:
+    """T.4 2-D encode: a 1-D line every k lines, 2-D lines between
+    (the standard K-parameter error-containment cadence)."""
+    bw = _FaxBitWriter()
+    ref = [0] * columns
+    for i, line in enumerate(bitmap):
+        bw.write(*_EOL)
+        if i % k == 0:  # 1-D anchor line
+            bw.write(1, 1)
+            pos = 0
+            color = 0
+            while pos < columns:
+                run = 0
+                while pos + run < columns and line[pos + run] == color:
+                    run += 1
+                _write_run(bw, run, color)
+                pos += run
+                color = 1 - color
+        else:
+            bw.write(1, 0)
+            _encode_2d_line(bw, ref, line, columns)
+        ref = line
+    bw.write(*_EOL)
+    return bw.bytes()
+
+
+def _encode_2d_line(bw: _FaxBitWriter, ref: List[int], line: List[int], columns: int):
+    ref_tr = _transitions(ref, columns)
+    cur_tr = _transitions(line, columns)
+    a0 = -1
+    color = 0
+    while a0 < columns:
+        a1 = columns
+        for t in cur_tr:
+            if t > a0:
+                a1 = t
+                break
+        b1 = columns
+        b2 = columns
+        for idx, t in enumerate(ref_tr):
+            if t <= a0:
+                continue
+            t_color = 1 if idx % 2 == 0 else 0
+            if t_color != color:
+                b1 = t
+                b2 = ref_tr[idx + 1] if idx + 1 < len(ref_tr) else columns
+                break
+        if b2 < a1:
+            bw.write(_MODE_PASS[0], _MODE_PASS[1])
+            a0 = b2
+            continue
+        if abs(a1 - b1) <= 3:
+            ln, code = _MODE_V[a1 - b1]
+            bw.write(ln, code)
+            a0 = a1
+            color = 1 - color
+            continue
+        a2 = columns
+        for t in cur_tr:
+            if t > a1:
+                a2 = t
+                break
+        start = max(a0, 0)
+        bw.write(_MODE_HORIZ[0], _MODE_HORIZ[1])
+        _write_run(bw, a1 - start, color)
+        _write_run(bw, a2 - a1, 1 - color)
+        a0 = a2
+
+
+def pack_rows(bitmap: List[List[int]], columns: int, black_is_1: bool = False) -> bytes:
+    """Pixel rows -> packed 1-bit raster, each row byte-aligned. PDF
+    default (BlackIs1=false): 0 bits are black."""
+    out = bytearray()
+    for line in bitmap:
+        acc = 0
+        n = 0
+        row = bytearray()
+        for px in line[:columns]:
+            bit = px if black_is_1 else 1 - px
+            acc = (acc << 1) | bit
+            n += 1
+            if n == 8:
+                row.append(acc)
+                acc = n = 0
+        if n:
+            row.append(acc << (8 - n))
+        out += row
+    return bytes(out)

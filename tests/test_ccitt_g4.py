@@ -15,8 +15,9 @@ import random
 
 import pytest
 
-from sparkpdf.kernels.ccitt_g4 import g4_decode, g4_encode, pack_rows
+from sparkpdf.kernels.ccitt_g4 import g4_decode
 from sparkpdf.kernels.cos import PdfError
+from sparkpdf.testing.imagegen import g4_encode, pack_rows
 
 
 def test_spec_vector_all_white():
@@ -116,9 +117,10 @@ def test_g3_1d_roundtrip_and_tiff():
     streams, and the compression-3 TIFF pixel path."""
     import random
 
-    from sparkpdf.kernels.ccitt_g4 import g3_decode_1d, g3_encode_1d
+    from sparkpdf.kernels.ccitt_g4 import g3_decode_1d
     from sparkpdf.kernels.filters import ccitt_fax_wrap
     from sparkpdf.kernels.media import ink_ratio, tiff_g4_pixels
+    from sparkpdf.testing.imagegen import g3_encode_1d
 
     rng = random.Random(11)
     for _ in range(40):
@@ -139,7 +141,8 @@ def test_g3_2d_mixed_roundtrip():
     every k lines, 2-D lines between — round-trips for several k."""
     import random
 
-    from sparkpdf.kernels.ccitt_g4 import g3_decode_2d, g3_encode_2d
+    from sparkpdf.kernels.ccitt_g4 import g3_decode_2d
+    from sparkpdf.testing.imagegen import g3_encode_2d
 
     rng = random.Random(23)
     for k in (1, 2, 4):

@@ -1,6 +1,7 @@
 """HTML main-content extraction (north rule's boilerplate-strip leg)."""
 
-from sparkpdf.kernels.html import extract_main_html, synthesize_html
+from sparkpdf.kernels.html import extract_main_html
+from sparkpdf.testing.corpora import synthesize_html
 
 
 def test_boilerplate_stripped():
@@ -59,7 +60,8 @@ def test_webpage_features_roundtrip():
     synthesize_webpage comes back exactly through parse_webpage —
     metadata scalars, outlinks in document order (with nofollow +
     boilerplate flags), the heading outline, and table shapes."""
-    from sparkpdf.kernels.html import parse_webpage, synthesize_webpage
+    from sparkpdf.kernels.html import parse_webpage
+    from sparkpdf.testing.corpora import synthesize_webpage
 
     for d in (0, 1, 6, 7, 13, 22):
         r = parse_webpage(synthesize_webpage(d, "body text"))

@@ -8,6 +8,7 @@ from html.parser import HTMLParser
 import pytest
 
 import sparkpdf.kernels.html as H
+from sparkpdf.testing.corpora import synthesize_html, synthesize_webpage
 
 
 class _Recorder(HTMLParser):
@@ -104,8 +105,8 @@ def _corpus_pages():
     pages = []
     for d in range(40):
         t = TEXTS[d % len(TEXTS)]
-        pages.append(H.synthesize_html(d, t))
-        pages.append(H.synthesize_webpage(d, t))
+        pages.append(synthesize_html(d, t))
+        pages.append(synthesize_webpage(d, t))
         pages.append(H.synthesize_interleaved_html(d, t))
     return pages
 

@@ -286,6 +286,109 @@ def test_production_code_holds_no_corpus_builders():
     assert builders == []
 
 
+# Public names under sparkpdf/ (outside testing/) that no production
+# file references, each with the reason it stays.
+UNREFERENCED_ALLOWED = {
+    "decode_permissions": "SURVEY C5 reference capability: permission "
+                          "bit unpack, pinned by a parity test",
+    "page_indices": "SURVEY P11 reference capability: PageRange slice "
+                    "over a page count, pinned by a parity test",
+    "scale_mediabox": "SURVEY G3 reference capability: mediabox under "
+                      "PageObject.scale, pinned by a parity test",
+    "PAPER_SIZES": "SURVEY G6 reference capability: the PaperSize "
+                   "constants, pinned by a parity test",
+    "Transformation": "SURVEY G1 reference capability: the CTM algebra "
+                      "(translate/scale/rotate), pinned by a parity test",
+    "write_paged_pdfs": "SURVEY D4/K1-K4 reference capability: the "
+                        "physical multi-page PdfFileWriter replacement",
+    "parse_filename_page_ranges": "SURVEY P12 reference capability: "
+                                  "the pagerange CLI argument parser",
+    "serialize_ops": "SURVEY C2c reference capability: the inverse of "
+                     "the content tokenizer, property-tested",
+    "read_pdf_dir": "SURVEY S1 source: a directory of *.pdf files as "
+                    "pdf_raw, the library entry point beside parquet",
+    "stream_event_windows_append": "append-mode twin of "
+                                   "stream_event_windows for always-on "
+                                   "deployments",
+    "near_dup_overflow": "overflow accounting for embedding_near_dups: "
+                         "the skipped over-cap buckets a quarantine "
+                         "sweep reads",
+}
+
+
+def test_every_public_name_is_reachable():
+    """Production code is reachable code: every public top-level name
+    defined under sparkpdf/ outside sparkpdf/testing/ is referenced (a
+    Name, Attribute or import node, so docstrings and comments do not
+    count, nor a definition's references to itself) from a production
+    file: sparkpdf/ outside testing/, jobs/, __spark_entry__.py,
+    bench.py, bench_extra.py, perfbench/ or scripts/. Test-data
+    builders belong in sparkpdf/testing/. UNREFERENCED_ALLOWED names
+    the exceptions; one that disappears or gains a production
+    reference fails too, so the list cannot go stale."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    pkg = repo / "sparkpdf"
+    defining = [py for py in pkg.rglob("*.py")
+                if pkg / "testing" not in py.parents]
+    referencing = [*defining, *(repo / "jobs").rglob("*.py"),
+                   repo / "__spark_entry__.py", repo / "bench.py",
+                   repo / "bench_extra.py",
+                   *(repo / "perfbench").rglob("*.py"),
+                   *(repo / "scripts").rglob("*.py")]
+    trees = {py: ast.parse(py.read_text()) for py in referencing}
+
+    defs = {}  # public name -> [(file, its top-level definition)]
+    for py in defining:
+        for node in trees[py].body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for name in names:
+                if not name.startswith("_"):
+                    defs.setdefault(name, []).append(
+                        (str(py.relative_to(repo)), node))
+
+    own = {}  # id(node) -> the public name whose definition holds it
+    for name, sites in defs.items():
+        for _, node in sites:
+            own.update((id(n), name) for n in ast.walk(node))
+    referenced = set()
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                name = n.id
+            elif isinstance(n, ast.Attribute):
+                name = n.attr
+            elif isinstance(n, ast.alias):
+                name = n.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            if own.get(id(n)) != name:
+                referenced.add(name)
+
+    unreferenced = sorted(f"{f}:{name}" for name, sites in defs.items()
+                          if name not in referenced for f, _ in sites)
+    unexpected = [s for s in unreferenced
+                  if s.rsplit(":", 1)[1] not in UNREFERENCED_ALLOWED]
+    assert unexpected == [], (
+        "public names no production code reaches (delete them, move "
+        "test-data builders to sparkpdf/testing/, or allow-list them "
+        f"with a reason): {unexpected}")
+    stale = sorted(set(UNREFERENCED_ALLOWED)
+                   - {s.rsplit(":", 1)[1] for s in unreferenced})
+    assert stale == [], (
+        f"allow-listed names that are gone or now referenced: {stale}")
+
+
 def test_paper_sizes_parity():
     from sparkpdf.kernels.geometry import PAPER_SIZES, scale_mediabox
 

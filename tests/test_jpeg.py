@@ -212,7 +212,7 @@ def test_progressive_decode_matches_baseline():
     coefficients, so any deviation is an entropy-decode bug. The scan
     script covers DC-first, per-component AC-first with EOB0/EOB1 runs,
     raw-bit DC refinement, and correction-bit AC refinement."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_progressive
+    from sparkpdf.testing.imagegen import encode_jpeg_progressive
 
     rng = np.random.default_rng(3)
     gray = rng.integers(0, 256, (16, 24), dtype=np.uint8)
@@ -239,7 +239,7 @@ def test_progressive_decode_matches_baseline():
 def test_progressive_truncation_and_corruption_quarantine():
     """Truncations and bit flips of a progressive file return None or a
     well-formed array — never raise, never hang."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_progressive
+    from sparkpdf.testing.imagegen import encode_jpeg_progressive
 
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, (24, 24, 3), dtype=np.uint8)
@@ -264,7 +264,7 @@ def test_weird_but_valid_marker_structures():
     fill bytes between segments, DQT redefinition between scans of a
     progressive file, and DNL-free streams — decoded pixels must be
     unaffected by cosmetic segment insertion."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_progressive
+    from sparkpdf.testing.imagegen import encode_jpeg_progressive
 
     rng = np.random.default_rng(21)
     img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
@@ -314,7 +314,7 @@ def test_12bit_flat_tiles_decode_exactly():
     """12-bit flat tiles at multiple-of-32 offsets from 2048: DC step
     16*16=256 -> round(delta/32) exact -> LOSSLESS, uint16 output; the
     stream really is SOF1 with a 16-bit (Pq=1) DQT."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_progressive
+    from sparkpdf.testing.imagegen import encode_jpeg_progressive
 
     img = np.zeros((16, 24), dtype=np.uint16)
     vals = [[2048, 2112, 1248], [2848, 1728, 2080]]
@@ -385,7 +385,7 @@ def test_lossless_roundtrip_all_predictors():
     """SOF3 predictive coding is exactly lossless for every predictor
     selector, precision (8/12/16) and component count; dtype follows
     precision."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_lossless
+    from sparkpdf.testing.imagegen import encode_jpeg_lossless
 
     rng = np.random.default_rng(5)
     cases = [
@@ -418,7 +418,7 @@ def test_lossless_hand_built_bitstream():
     """Independent construction: a hand-packed SOF3 stream with the
     uniform 5-bit diff-category table (canonical code for category k
     is k) decodes to the hand-computed prediction chain."""
-    from sparkpdf.kernels.jpeg import LOSSLESS_DC_TABLE
+    from sparkpdf.testing.imagegen import LOSSLESS_DC_TABLE
 
     def seg(marker, payload):
         return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
@@ -444,7 +444,7 @@ def test_lossless_hand_built_bitstream():
     assert dec.tolist() == [[128, 129], [130, 129]]
     # and the encoder reproduces byte-identical entropy data for the
     # same pixel matrix (its (1,1) diff is -1 against Ra = 130)
-    from sparkpdf.kernels.jpeg import encode_jpeg_lossless
+    from sparkpdf.testing.imagegen import encode_jpeg_lossless
 
     assert decode_jpeg(
         encode_jpeg_lossless(np.array(dec, dtype=np.uint8))
@@ -454,7 +454,7 @@ def test_lossless_hand_built_bitstream():
 def test_lossless_rejects():
     """Subsampled SOF3 and restart-interval lossless streams
     quarantine to None; arithmetic/hierarchical frames stay None."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_lossless
+    from sparkpdf.testing.imagegen import encode_jpeg_lossless
 
     g = np.full((4, 4), 7, dtype=np.uint8)
     enc = encode_jpeg_lossless(g)
@@ -473,7 +473,7 @@ def test_two_component_lossless_jpeg_quarantines():
     """SOF3 allows 1-4 components; a 2-component decode is (h, w, 2),
     which has no luma: jpeg_mean_luma and every MJPEG video lane
     quarantine it (None) instead of raising IndexError."""
-    from sparkpdf.kernels.jpeg import encode_jpeg_lossless
+    from sparkpdf.testing.imagegen import encode_jpeg_lossless
     from sparkpdf.kernels.media import video_frames
     from sparkpdf.testing import imagegen
 

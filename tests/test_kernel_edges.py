@@ -657,8 +657,8 @@ def test_tiff_strip_pixel_decode():
         assert out is None or len(out) == 4
     # the G4 fax wrap still routes through ink_ratio, not strip decode
     from sparkpdf.kernels import filters
-    from sparkpdf.kernels.ccitt_g4 import g4_encode
     from sparkpdf.kernels.media import ink_ratio
+    from sparkpdf.testing.imagegen import g4_encode
 
     fax = filters.ccitt_fax_wrap(g4_encode([[1] * 8], 8),
                                  {"/K": -1, "/Columns": 8, "/Rows": 1})
@@ -1161,7 +1161,8 @@ def test_warc_roundtrip():
     surface http_status/content-type and the exact payload; torn
     framing, truncated gzip and garbage quarantine (None), fuzz never
     raises."""
-    from sparkpdf.kernels.warc import build_warc, parse_warc
+    from sparkpdf.kernels.warc import parse_warc
+    from sparkpdf.testing.corpora import build_warc
 
     html = "<html><body>hello</body></html>"
     recs = [
@@ -1651,6 +1652,14 @@ def test_gif_frames_info():
     w, h, ch, pix = gif_pixels(gif)
     assert (w, h, ch) == (2, 2, 3)
     assert pix[0:3] == bytes(pal[0]) and pix[3:6] == bytes(pal[1])
+    # ... also when a later frame is offset and has a transparent index
+    base = [[1] * 4 for _ in range(4)]
+    offset = make_animated_gif(
+        [base, [[0, 2], [2, 0]]], pal, [5, 5],
+        specs=[{}, {"left": 1, "top": 1, "transparent": 0}],
+    )
+    w, h, ch, pix = gif_pixels(offset)
+    assert (w, h, ch) == (4, 4, 3) and pix == bytes(pal[1]) * 16
     single = make_gif_frame(f1, pal)
     assert gif_frames_info(single) == {"n_frames": 1, "duration_ms": 0}
     # loop=5 finite; truncation never raises
@@ -1666,9 +1675,9 @@ def test_mixed_mode_g3_tiff_roundtrip():
     container: ccitt_fax_wrap signals T4Options bit 0 and
     tiff_g4_pixels dispatches the 2-D decoder (round 5; previously a
     documented quarantine)."""
-    from sparkpdf.kernels.ccitt_g4 import g3_encode_1d, g3_encode_2d
     from sparkpdf.kernels.filters import ccitt_fax_wrap
     from sparkpdf.kernels.media import ink_ratio, tiff_g4_pixels
+    from sparkpdf.testing.imagegen import g3_encode_1d, g3_encode_2d
 
     w, h = 40, 12
     bitmap = [
@@ -1685,7 +1694,7 @@ def test_mixed_mode_g3_tiff_roundtrip():
     t1 = ccitt_fax_wrap(enc1d, {"/K": 0, "/Columns": w, "/Rows": h})
     assert tiff_g4_pixels(t1) == bitmap
     # and G4 (/K < 0) is untouched
-    from sparkpdf.kernels.ccitt_g4 import g4_encode
+    from sparkpdf.testing.imagegen import g4_encode
 
     t4 = ccitt_fax_wrap(g4_encode(bitmap, w), {"/K": -1, "/Columns": w,
                                                "/Rows": h})
@@ -1851,58 +1860,6 @@ def test_ojpeg_in_tiff_decode():
         tiff_pixels(full[:n])
 
 
-def test_gif_animation_compositing():
-    """gif_frames (round 5): frames composite at their offsets with
-    GCE transparency and disposal 0 (keep) / 2 (restore background);
-    the first composited frame matches gif_pixels."""
-    import numpy as np
-
-    from sparkpdf.kernels.media import gif_frames, gif_pixels
-    from sparkpdf.testing.imagegen import make_animated_gif
-
-    pal = [(10, 10, 10), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    base = [[1, 1, 1, 1], [1, 1, 1, 1], [1, 1, 1, 1], [1, 1, 1, 1]]
-    # frame 2: 2x2 patch at (1,1), index 0 transparent -> base shows
-    patch = [[0, 2], [2, 0]]
-    gif = make_animated_gif(
-        [base, patch], pal, [5, 5],
-        specs=[{}, {"left": 1, "top": 1, "transparent": 0}],
-    )
-    out = gif_frames(gif)
-    assert out is not None
-    w, h, frames = out
-    assert (w, h, len(frames)) == (4, 4, 2)
-    f1 = np.frombuffer(frames[0], np.uint8).reshape(4, 4, 3)
-    assert (f1 == (255, 0, 0)).all()
-    pw, ph, pch, ppix = gif_pixels(gif)
-    assert frames[0] == ppix and (pw, ph) == (4, 4)
-    f2 = np.frombuffer(frames[1], np.uint8).reshape(4, 4, 3)
-    assert tuple(f2[1, 2]) == (0, 255, 0)   # patch index 2
-    assert tuple(f2[2, 1]) == (0, 255, 0)
-    assert tuple(f2[1, 1]) == (255, 0, 0)   # transparent -> base red
-    assert tuple(f2[2, 2]) == (255, 0, 0)
-    assert tuple(f2[0, 0]) == (255, 0, 0)   # outside the patch rect
-    # disposal 2: after the patch frame, its rect restores background
-    gif2 = make_animated_gif(
-        [base, patch, base], pal, [5, 5, 5],
-        specs=[{}, {"left": 0, "top": 0, "disposal": 2}, {"left": 0,
-               "top": 0, "transparent": 1}],
-    )
-    w2, h2, frames2 = gif_frames(gif2)
-    assert len(frames2) == 3
-    f3 = np.frombuffer(frames2[2], np.uint8).reshape(4, 4, 3)
-    # frame 3 is all-transparent index 1 -> shows the canvas: patch
-    # rect was restored to background color, the rest keeps... the
-    # 2x2 patch covered [0:2,0:2]; restored to bg (10,10,10); outside
-    # stays red from frame 1
-    assert tuple(f3[0, 0]) == (10, 10, 10)
-    assert tuple(f3[1, 1]) == (10, 10, 10)
-    assert tuple(f3[3, 3]) == (255, 0, 0)
-    # truncation sweep: never raises
-    for n in range(0, len(gif), 13):
-        gif_frames(gif[:n])
-
-
 def test_round5_parsers_corruption_fuzz():
     """Deterministic byte-flip fuzz over every round-5 parser (FLAC /
     Ogg vorbis+opus / AVI / animated GIF / tiled + JPEG TIFF /
@@ -1912,8 +1869,9 @@ def test_round5_parsers_corruption_fuzz():
     import numpy as np
 
     from sparkpdf.kernels import media
-    from sparkpdf.kernels.jpeg import decode_jpeg, encode_jpeg_lossless
+    from sparkpdf.kernels.jpeg import decode_jpeg
     from sparkpdf.testing.imagegen import (
+        encode_jpeg_lossless,
         make_animated_gif,
         make_avi,
         make_flac,
@@ -1932,7 +1890,6 @@ def test_round5_parsers_corruption_fuzz():
         (make_ogg(24000, 500), media.ogg_info),
         (make_ogg(16000, 500, codec="opus"), media.ogg_info),
         (make_avi(64, 48, 400), media.avi_info),
-        (anim, media.gif_frames),
         (anim, media.gif_frames_info),
         (make_tiff_tiled(g, 8, 8, compression=5), media.tiff_pixels),
         (make_tiff_jpeg(g, rows_per_strip=4), media.tiff_pixels),

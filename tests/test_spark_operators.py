@@ -1324,9 +1324,9 @@ def test_media_features_corrupt_g4_quarantines(spark):
     """A G4 TIFF with a garbled bitstream must yield empty features,
     not kill the task (PdfError from the MMR decoder is caught)."""
     from pyspark.sql import Row
-    from sparkpdf.kernels.ccitt_g4 import g4_encode
     from sparkpdf.kernels.filters import ccitt_fax_wrap
     from sparkpdf.operators.multimodal import extract_media_features
+    from sparkpdf.testing.imagegen import g4_encode
 
     # all-zero bits: no valid T.6 mode code -> PdfError inside decode
     bad = ccitt_fax_wrap(b"\x00\x00\x00\x00",
@@ -1784,7 +1784,7 @@ def test_canonical_url(spark):
     untouched, query strings and unusual ports survive, fragment-only
     differences collapse to one canonical; plan is shuffle-free."""
     from pyspark.sql import Row
-    from sparkpdf.operators.text import url_canonicalize
+    from sparkpdf.operators.text import canonical_url
 
     cases = {
         "https://example.com/../../x": "https://example.com/x",
@@ -1794,8 +1794,8 @@ def test_canonical_url(spark):
         "http://h.com:8080/a#z": "http://h.com:8080/a",
         "ftp://Files.Example.com:21/a/./b": "ftp://files.example.com:21/a/b",
     }
-    df = url_canonicalize(spark.createDataFrame(
-        [Row(url=u) for u in cases]))
+    df = spark.createDataFrame([Row(url=u) for u in cases]).withColumn(
+        "canonical", canonical_url(F.col("url")))
     got = {r.url: r.canonical for r in df.collect()}
     assert got == cases, got
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -2561,6 +2561,57 @@ def test_web_job_warc_mode(spark, docs, tmp_path, capsys):
     assert summary["warc_quarantined"] == 1
     assert summary["total_links"] == sum(
         5 + d % 4 for d in ids if d % 9 != 0)
+
+
+def test_stream_job_summary_counts_the_output(spark, corpus, tmp_path,
+                                              capsys, monkeypatch):
+    """jobs/stream_job.py: each availableNow drain prints one summary
+    whose docs_total/errored equal counts taken directly over the
+    output parquet; a poison doc lands as an error row, and a second
+    drain after a new file lands reports the cumulative output."""
+    import importlib.util
+    import json
+    import os
+
+    import sparkpdf.session
+
+    spec = importlib.util.spec_from_file_location(
+        "stream_job", os.path.join(os.path.dirname(__file__),
+                                   "..", "jobs", "stream_job.py")
+    )
+    sj = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sj)
+    # the job builds and stops its own session: run it on this one
+    monkeypatch.setattr(sparkpdf.session, "get_spark",
+                        lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    in_dir = str(tmp_path / "sj_in")
+    out_dir = str(tmp_path / "sj_out")
+    argv = ["--input", in_dir, "--output", out_dir,
+            "--checkpoint", str(tmp_path / "sj_ck")]
+
+    def drain():
+        sj.main(argv)
+        summary = json.loads(
+            capsys.readouterr().out.strip().splitlines()[-1])
+        out = spark.read.parquet(out_dir)
+        assert summary["docs_total"] == out.count()
+        assert summary["errored"] == out.filter("error IS NOT NULL").count()
+        return summary
+
+    ids = sorted(r.doc_id for r in corpus.select("doc_id").collect())
+    poison = spark.createDataFrame([("bad-garbage", b"%PDF-1.4\n\x00\xff")],
+                                   "doc_id string, pdf_bytes binary")
+    corpus.filter(F.col("doc_id").isin(ids[:4])).unionByName(poison) \
+        .coalesce(1).write.parquet(in_dir)
+    s1 = drain()
+    assert (s1["docs_total"], s1["errored"]) == (5, 1)
+
+    corpus.filter(F.col("doc_id").isin(ids[4:7])).coalesce(1) \
+        .write.mode("append").parquet(in_dir)
+    s2 = drain()
+    assert (s2["docs_total"], s2["errored"]) == (8, 1)
 
 
 def test_media_job_budget_forces_header_only(spark, docs, tmp_path, capsys):

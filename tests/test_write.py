@@ -557,12 +557,9 @@ def test_deep_bit_jpeg_media_embedding():
 
     from sparkpdf.kernels.document import PdfDocument
     from sparkpdf.kernels.extract import extract_doc
-    from sparkpdf.kernels.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_lossless,
-    )
+    from sparkpdf.kernels.jpeg import decode_jpeg, encode_jpeg
     from sparkpdf.kernels.write import spans_to_pdf
+    from sparkpdf.testing.imagegen import encode_jpeg_lossless
 
     img12 = np.full((8, 16), 2080, dtype=np.uint16)
     img16 = np.arange(8 * 16, dtype=np.uint16).reshape(8, 16) * 512
