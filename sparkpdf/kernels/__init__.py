@@ -7,4 +7,4 @@ UDF invocations on executors.
 
 from .cos import Name, PdfError, Ref, StreamObj, parse_object  # noqa: F401
 from .document import PdfDocument  # noqa: F401
-from .extract import doc_text, extract_doc, page_text  # noqa: F401
+from .extract import extract_doc, page_text  # noqa: F401

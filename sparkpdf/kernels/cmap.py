@@ -15,7 +15,6 @@ toUnicode.py:265-461). Semantics matched to toUnicode.code2text
 from __future__ import annotations
 
 import re
-import struct
 from typing import Dict, List, Optional, Tuple, Union
 
 from .cos import PdfError, parse_object, skip_ws
@@ -26,6 +25,14 @@ _CMD_SECTION_BEGIN = {b"begincodespacerange", b"beginbfchar", b"beginbfrange"}
 
 # bound on one CMap's memo: ~2.5 MB, beyond the glyph count of real fonts
 _MEMO_MAX = 1 << 14
+# whole-string memo: TJ elements are word fragments that repeat across a
+# document's pages. It keeps strings of at most _TEXT_KEY_MAX bytes
+# whose text is at most _TEXT_KEY_MAX characters, and at most
+# _TEXT_MEMO_MAX of them (< 4 MB), so neither a hostile font's long
+# destinations nor a content stream of unique strings grows it
+# without limit
+_TEXT_KEY_MAX = 64
+_TEXT_MEMO_MAX = 1 << 13
 
 
 class CMap:
@@ -34,10 +41,11 @@ class CMap:
     The match at a position depends only on the next `width` bytes
     (the longest codespace or bfrange code), so `code2text` memoises
     `_match` on that window: a font's glyph codes repeat across every
-    string and page that uses it."""
+    string and page that uses it. Short whole strings are memoised
+    too (`_texts`), since the decode is a pure function of the bytes."""
 
     __slots__ = ("fchars", "franges", "codespace", "codelengths",
-                 "_memo", "_width")
+                 "_memo", "_width", "_texts")
 
     def __init__(self):
         self.fchars: Dict[bytes, bytes] = {}
@@ -47,8 +55,19 @@ class CMap:
         self.codelengths: List[int] = []
         self._memo: Optional[Dict[bytes, Tuple[bytes, int]]] = None
         self._width = 0
+        self._texts: Dict[bytes, str] = {}
 
     def code2text(self, code: bytes) -> str:
+        text = self._texts.get(code)
+        if text is not None:
+            return text
+        text = self._decode(code)
+        if (len(code) <= _TEXT_KEY_MAX and len(text) <= _TEXT_KEY_MAX
+                and len(self._texts) < _TEXT_MEMO_MAX):
+            self._texts[code] = text
+        return text
+
+    def _decode(self, code: bytes) -> str:
         memo = self._memo
         if memo is None:  # first use: the CMap is complete by now
             memo = self._memo = {}

@@ -10,10 +10,12 @@ the ordering contract every span derives from (SURVEY §2.6 O1).
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Tuple
+from binascii import unhexlify
+from typing import List, Tuple
 
-from .cos import (Name, PdfError, make_string, parse_dict, parse_hex_string,
-                  parse_literal_string, parse_object, skip_ws)
+from .cos import (Name, PdfError, _make_name, make_string, parse_dict,
+                  parse_hex_string, parse_literal_string, parse_object,
+                  skip_ws)
 
 _OPERATOR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 # the reference ends an inline image only at "EI" + whitespace + "Q"
@@ -26,6 +28,24 @@ _EI_WS = re.compile(rb"[\x00\t\n\x0c\r ]EI(?=[\x00\t\n\x0c\r ]|$)")
 INLINE_IMAGE_OP = "INLINE IMAGE"
 
 
+# A flat array: only non-empty even-length hex strings, numbers and
+# escape-free non-empty literal strings, whitespace between them (the
+# kerned TJ arrays of real text). Each element is atomic and every
+# repeat possessive, so it splits exactly as the per-token scan does;
+# anything else (comments, names, keywords, nesting, escapes, odd or
+# spaced hex) fails the group and takes the per-token path from "[".
+_FLAT = (
+    rb"\[(?:[\x00\t\n\x0c\r ]*+"
+    rb"(?><(?:[0-9A-Fa-f]{2})++>|\([^()\\]++\)"
+    rb"|[+-]?+(?:\d++\.\d*+|\.\d++|\d++)))*+"
+    rb"[\x00\t\n\x0c\r ]*+\]"
+)
+# one flat-array element per match: (hex digits, literal body, real, int)
+_FLAT_ITEM = re.compile(
+    rb"<([0-9A-Fa-f]++)>|\(([^()\\]++)\)"
+    rb"|([+-]?+(?:\d++\.\d*+|\.\d++))|([+-]?+\d++)"
+)
+
 _SCAN = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:"
@@ -35,6 +55,7 @@ _SCAN = re.compile(
     rb"|(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
     rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
     rb"|(?P<op>[A-Za-z'\"][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
+    rb"|(?P<flat>" + _FLAT + rb")"
     rb"|(?P<arr>[\[\]])"
     rb"|(?P<dict><<)"
     rb"|(?P<hex><)"
@@ -50,7 +71,8 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
     """Decoded content bytes -> ordered [(operands, operator)].
 
     Single combined-scanner regex (one C-level match per token, ~1.2-
-    1.4x the dispatch-per-token version); semantics identical to the
+    1.4x the dispatch-per-token version; one match and one findall per
+    flat array, see _FLAT); semantics identical to the
     reference tokenizer (hypothesis-tested): alpha tokens are operators
     at top level, but true/false/null INSIDE an array are values
     (readObject parses whole arrays, generic.py:278-330)."""
@@ -63,7 +85,7 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
     append_op = ops.append
     while pos < n:
         m = scan(data, pos)
-        if m is None or m.end() == pos:
+        if m is None:  # every alternative consumes a byte
             break
         g = m.lastgroup
         pos = m.end()
@@ -79,16 +101,6 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
                     v = int(tok)
                 except ValueError:  # overflow -> 0
                     v = 0
-            operands.append(v)
-        elif g == "hexstr":  # even-length pure hex: parse_hex_string's value
-            operands.append(bytes.fromhex(m.group(g)[1:-1].decode()))
-        elif g == "litstr":  # no nesting or escapes: the bytes verbatim
-            operands.append(make_string(m.group(g)[1:-1]))
-        elif g == "lit":
-            try:
-                v, pos = parse_literal_string(data, m.start("lit"))
-            except PdfError:
-                break  # tolerate trailing garbage
             operands.append(v)
         elif g == "op":
             tok = m.group("op")
@@ -106,10 +118,29 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
             else:
                 append_op((operands, tok.decode("latin-1")))
                 operands = []
+        elif g == "flat":
+            try:
+                operands.append(
+                    [unhexlify(h) if h else make_string(lit) if lit
+                     else float(real) if real else int(i)
+                     for h, lit, real, i in _FLAT_ITEM.findall(
+                         data, m.start("flat") + 1, pos - 1)])
+            except ValueError:  # an int past the digit limit: per token
+                stack.append(operands)
+                operands = []
+                pos = m.start("flat") + 1
         elif g == "name":
-            operands.append(
-                Name(m.group("name").decode("utf-8", "surrogateescape"))
-            )
+            operands.append(_make_name(m.group("name")))
+        elif g == "hexstr":  # even-length pure hex: parse_hex_string's value
+            operands.append(bytes.fromhex(m.group(g)[1:-1].decode()))
+        elif g == "litstr":  # no nesting or escapes: the bytes verbatim
+            operands.append(make_string(m.group(g)[1:-1]))
+        elif g == "lit":
+            try:
+                v, pos = parse_literal_string(data, m.start("lit"))
+            except PdfError:
+                break  # tolerate trailing garbage
+            operands.append(v)
         elif g == "arr":
             if m.group("arr") == b"[":
                 stack.append(operands)

@@ -13,7 +13,7 @@ import hashlib
 import struct
 from typing import Any
 
-from .cos import Name, PdfError, Ref, StreamObj
+from .cos import Name, PdfError, StreamObj
 
 # standard 32-byte padding string, PDF 32000-1:2008 §7.6.3.3
 _PAD = bytes(

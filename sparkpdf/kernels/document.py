@@ -12,7 +12,7 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, List, Optional, Tuple
 
-from .cos import Name, PdfError, Ref, StreamObj, parse_object, skip_ws
+from .cos import PdfError, Ref, StreamObj, parse_object, skip_ws
 from .xref import _OBJ_HEADER, XRef, read_xref, rebuild_xref
 
 # attributes pages inherit from ancestor /Pages nodes

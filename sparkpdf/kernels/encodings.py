@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional
 
-import numpy as np
-
 _R = "\u0000"  # unmapped codes decode to NUL (reference parity:
 # generic.py:1709-1714 uses "\\u0000" table entries for unmapped bytes)
 

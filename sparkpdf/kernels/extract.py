@@ -29,9 +29,9 @@ from __future__ import annotations
 from typing import Any, Dict, List, Optional
 
 from .content import INLINE_IMAGE_OP, tokenize
-from .cos import Name, PdfError
+from .cos import PdfError
 from .document import PdfDocument
-from .fonts import DEFAULT_ENCODING, as_text, resolve_font_encoding
+from .fonts import as_text, resolve_font_encoding
 
 WORD_SPACE_LIMIT = -80  # kerning threshold, _page.py:787
 
@@ -68,13 +68,13 @@ def extract_page_spans(doc: PdfDocument, page: dict, page_no: int) -> List[dict]
         elif operator == "TJ":
             if operands and isinstance(operands[0], list):
                 parts: List[str] = []
+                add = parts.append
                 for el in operands[0]:
-                    if isinstance(el, (bytes, str)) and not isinstance(el, Name):
-                        parts.append(as_text(el, encoding))
-                    elif isinstance(el, bool):
-                        pass
-                    elif isinstance(el, (int, float)) and el < WORD_SPACE_LIMIT:
-                        parts.append(" ")
+                    t = type(el)  # bool, Name, list and dict show nothing
+                    if t is bytes or t is str:  # str: a BOM literal
+                        add(as_text(el, encoding))
+                    elif (t is int or t is float) and el < WORD_SPACE_LIMIT:
+                        add(" ")
                 chunk = "".join(parts) + "\n"
         elif operator == "Do":
             if operands:
@@ -156,7 +156,3 @@ def page_text(spans: List[dict], page_no: int) -> str:
         for s in spans
         if s["kind"] == "text" and s.get("page_no") == page_no
     )
-
-
-def doc_text(spans: List[dict]) -> str:
-    return "".join(s["text"] for s in spans if s["kind"] == "text")

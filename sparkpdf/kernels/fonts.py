@@ -27,7 +27,7 @@ from typing import Optional, Union
 
 from . import encodings
 from .cmap import CMap, parse_cmap
-from .cos import Name, StreamObj
+from .cos import StreamObj
 from .glyphlist import glyph_to_unicode
 
 FOURTEEN_STANDARD_FONTS = frozenset(

@@ -20,7 +20,7 @@ from typing import Dict, Optional, Tuple
 
 import numpy as np
 
-from .cos import Name, PdfError, Ref, StreamObj, parse_dict, parse_object, skip_ws
+from .cos import PdfError, Ref, StreamObj, parse_dict, parse_object, skip_ws
 
 _STARTXREF = re.compile(rb"startxref[\x00\t\n\x0c\r ]+(\d+)")
 _XREF_KW = re.compile(rb"xref[\x00\t\n\x0c\r ]*")

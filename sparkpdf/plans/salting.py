@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 DEFAULT_TARGET_BYTES = 64 << 20  # ~64 MB of raw PDF per task
 DEFAULT_BIG_DOC_BYTES = 16 << 20  # docs above this get private partitions

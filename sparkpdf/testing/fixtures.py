@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Dict
+from typing import Dict, List
 
 from ..kernels import crypto
 from . import pdfgen
@@ -738,3 +738,9 @@ REFERENCE_DIVERGENT = {
 
 def all_fixtures() -> Dict[str, bytes]:
     return {tag: fn() for tag, fn in ALL.items()}
+
+
+def doc_text(spans: List[dict]) -> str:
+    """A whole document's text from extract_doc spans (the engine
+    keeps only the per-page `kernels.extract.page_text`)."""
+    return "".join(s["text"] for s in spans if s["kind"] == "text")

@@ -72,8 +72,9 @@ def test_pdf_aes_roundtrip_full_surface(mode):
     """Write with AES, decrypt-extract EVERYTHING back: text spans,
     attachments, form fields, bookmarks; wrong password rejected."""
     from sparkpdf.kernels.document import PdfDocument
-    from sparkpdf.kernels.extract import doc_text, extract_doc
+    from sparkpdf.kernels.extract import extract_doc
     from sparkpdf.kernels.write import spans_to_pdf
+    from sparkpdf.testing.fixtures import doc_text
 
     pages = [
         [{"kind": "text", "text": "secret one\n", "media_ref": None},
@@ -168,6 +169,6 @@ def test_v5_wrong_everything_quarantines():
     res = extract_doc(bad, password=b"pw")
     # a garbage file key can only yield an error OR salvage-empty
     # output — never the true text, never an uncaught exception
-    from sparkpdf.kernels.extract import doc_text
+    from sparkpdf.testing.fixtures import doc_text
 
     assert res["error"] is not None or doc_text(res["spans"]) != "x\n"

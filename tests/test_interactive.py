@@ -325,7 +325,8 @@ def test_every_public_name_is_reachable():
     bench.py, bench_extra.py, perfbench/ or scripts/. Test-data
     builders belong in sparkpdf/testing/. UNREFERENCED_ALLOWED names
     the exceptions; one that disappears or gains a production
-    reference fails too, so the list cannot go stale."""
+    reference fails too, so the list cannot go stale. A package
+    __init__.py re-export is not a reference."""
     import ast
     import pathlib
 
@@ -362,13 +363,16 @@ def test_every_public_name_is_reachable():
         for _, node in sites:
             own.update((id(n), name) for n in ast.walk(node))
     referenced = set()
-    for tree in trees.values():
+    for py, tree in trees.items():
+        # a package __init__ re-export is not a use: the name is
+        # reached only if some file imports or names it
+        reexports = py.name == "__init__.py"
         for n in ast.walk(tree):
             if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
                 name = n.id
             elif isinstance(n, ast.Attribute):
                 name = n.attr
-            elif isinstance(n, ast.alias):
+            elif isinstance(n, ast.alias) and not reexports:
                 name = n.name.rsplit(".", 1)[-1]
             else:
                 continue
@@ -387,6 +391,44 @@ def test_every_public_name_is_reachable():
                    - {s.rsplit(":", 1)[1] for s in unreferenced})
     assert stale == [], (
         f"allow-listed names that are gone or now referenced: {stale}")
+
+
+def test_no_unused_imports_in_production_modules():
+    """Every name an import binds in a production module (sparkpdf/
+    outside testing/, jobs/, __spark_entry__.py, bench_extra.py,
+    scripts/) is named somewhere in that module. A deliberate
+    re-export says so with `# noqa` on its import line; `__future__`
+    imports bind nothing. No linter is installed, so this AST check
+    stands in for one."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    pkg = repo / "sparkpdf"
+    modules = [*(py for py in pkg.rglob("*.py")
+                 if pkg / "testing" not in py.parents),
+               *(repo / "jobs").rglob("*.py"), repo / "__spark_entry__.py",
+               repo / "bench_extra.py", *(repo / "scripts").rglob("*.py")]
+    unused = []
+    for py in modules:
+        src = py.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        named = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if any("# noqa" in line
+                   for line in lines[node.lineno - 1:node.end_lineno]):
+                continue
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".", 1)[0]
+                if bound not in named:
+                    unused.append(f"{py.relative_to(repo)}:{node.lineno} "
+                                  f"{bound}")
+    assert unused == [], f"imported but never named: {unused}"
 
 
 def test_paper_sizes_parity():

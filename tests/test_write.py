@@ -111,8 +111,9 @@ def test_write_enriched_encrypted_reference_interop():
     import io
 
     from sparkpdf.kernels.document import PdfDocument
-    from sparkpdf.kernels.extract import doc_text, extract_doc
+    from sparkpdf.kernels.extract import extract_doc
     from sparkpdf.kernels.write import spans_to_pdf
+    from sparkpdf.testing.fixtures import doc_text
     from sparkpdf.testing.reference import load_reference
 
     pages = [
