@@ -523,8 +523,10 @@ def q_sitemap_entries(spark, sf_dir):
     # AND sitemapindex children (d%5==0 docs), namespaced/mixed-case
     # tolerant — every field a doc_id formula
     from sparkpdf.operators.text import extract_sitemap_entries
+    from sparkpdf.testing.corpora import synthesize_sitemap_corpus
 
-    return extract_sitemap_entries(_t(spark, sf_dir, "documents"))
+    return extract_sitemap_entries(
+        synthesize_sitemap_corpus(_t(spark, sf_dir, "documents")))
 
 
 def q_robots_rules(spark, sf_dir):
@@ -533,8 +535,10 @@ def q_robots_rules(spark, sf_dir):
     # winning ties, anchored wildcards, crawl-delay + sitemaps —
     # every signal a pure doc_id formula
     from sparkpdf.operators.text import extract_robots_rules
+    from sparkpdf.testing.corpora import synthesize_robots_corpus
 
-    return extract_robots_rules(_t(spark, sf_dir, "documents"))
+    return extract_robots_rules(
+        synthesize_robots_corpus(_t(spark, sf_dir, "documents")))
 
 
 def q_url_canonical(spark, sf_dir):

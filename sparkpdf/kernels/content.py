@@ -13,9 +13,9 @@ import re
 from binascii import unhexlify
 from typing import List, Tuple
 
-from .cos import (Name, PdfError, _make_name, make_string, parse_dict,
-                  parse_hex_string, parse_literal_string, parse_object,
-                  skip_ws)
+from .cos import (Name, PdfError, _make_name, make_string, parse_array,
+                  parse_dict, parse_hex_string, parse_literal_string,
+                  parse_object, skip_ws)
 
 _OPERATOR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 # the reference ends an inline image only at "EI" + whitespace + "Q"
@@ -33,7 +33,7 @@ INLINE_IMAGE_OP = "INLINE IMAGE"
 # kerned TJ arrays of real text). Each element is atomic and every
 # repeat possessive, so it splits exactly as the per-token scan does;
 # anything else (comments, names, keywords, nesting, escapes, odd or
-# spaced hex) fails the group and takes the per-token path from "[".
+# spaced hex) fails the group and goes to cos.parse_array.
 _FLAT = (
     rb"\[(?:[\x00\t\n\x0c\r ]*+"
     rb"(?><(?:[0-9A-Fa-f]{2})++>|\([^()\\]++\)"
@@ -64,8 +64,6 @@ _SCAN = re.compile(
     rb")"
 )
 
-_KEYWORDS = {b"true": True, b"false": False, b"null": None}
-
 
 def tokenize(data: bytes) -> List[Tuple[list, str]]:
     """Decoded content bytes -> ordered [(operands, operator)].
@@ -73,12 +71,11 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
     Single combined-scanner regex (one C-level match per token, ~1.2-
     1.4x the dispatch-per-token version; one match and one findall per
     flat array, see _FLAT); semantics identical to the
-    reference tokenizer (hypothesis-tested): alpha tokens are operators
-    at top level, but true/false/null INSIDE an array are values
-    (readObject parses whole arrays, generic.py:278-330)."""
+    reference tokenizer (hypothesis-tested): alpha tokens are operators,
+    and every other array is read whole by cos.parse_array, as
+    readObject does (generic.py:278-330), so `[1 0 R]` is one Ref."""
     ops: List[Tuple[list, str]] = []
     operands: list = []
-    stack: List[list] = []
     pos = 0
     n = len(data)
     scan = _SCAN.match
@@ -104,9 +101,7 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
             operands.append(v)
         elif g == "op":
             tok = m.group("op")
-            if stack and tok in _KEYWORDS:
-                operands.append(_KEYWORDS[tok])
-            elif tok == b"BI":
+            if tok == b"BI":
                 try:
                     settings, img, pos = _read_inline_image(data, pos)
                 except PdfError:
@@ -120,15 +115,13 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
                 operands = []
         elif g == "flat":
             try:
-                operands.append(
-                    [unhexlify(h) if h else make_string(lit) if lit
+                v = [unhexlify(h) if h else make_string(lit) if lit
                      else float(real) if real else int(i)
                      for h, lit, real, i in _FLAT_ITEM.findall(
-                         data, m.start("flat") + 1, pos - 1)])
-            except ValueError:  # an int past the digit limit: per token
-                stack.append(operands)
-                operands = []
-                pos = m.start("flat") + 1
+                         data, m.start("flat") + 1, pos - 1)]
+            except ValueError:  # an int past the digit limit
+                v, pos = parse_array(data, m.start("flat"))
+            operands.append(v)
         elif g == "name":
             operands.append(_make_name(m.group("name")))
         elif g == "hexstr":  # even-length pure hex: parse_hex_string's value
@@ -142,13 +135,14 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
                 break  # tolerate trailing garbage
             operands.append(v)
         elif g == "arr":
-            if m.group("arr") == b"[":
-                stack.append(operands)
-                operands = []
-            else:
-                arr = operands
-                operands = stack.pop() if stack else []
-                operands.append(arr)
+            if m.group("arr") == b"]":  # stray: wraps the operands so far
+                operands = [operands]
+                continue
+            try:
+                v, pos = parse_array(data, m.start("arr"))
+            except PdfError:
+                break
+            operands.append(v)
         elif g == "dict":
             try:
                 v, pos = parse_dict(data, m.start("dict"))

@@ -20,6 +20,10 @@ Grew from round-1 header introspection (JPEG SOFn / PNG IHDR / GIF LSD
 
 Each media decision lives in one place:
 
+* _tiff_segment turns every raw TIFF strip or tile (chunky, planar,
+  tiled, new- and old-style JPEG) into pixels: the decompress step,
+  the 1-bit unpack and the predictor undo; _tiff_decode pastes the
+  segments of one grid onto one canvas;
 * _iter_chunks walks every RIFF (WAV, AVI) and IFF (AIFF) chunk list
   and owns the even-offset pad advance; LIST children walk with it,
   clipped to the parent's end;
@@ -179,30 +183,13 @@ def tiff_dims(b: bytes) -> Optional[dict]:
     bo = "little" if b[:2] == b"II" else "big"
     if int.from_bytes(b[2:4], bo) != 42:
         return None
-    ifd = int.from_bytes(b[4:8], bo)
-    if ifd + 2 > len(b):
-        return None
-    n = int.from_bytes(b[ifd:ifd + 2], bo)
-    width = height = None
-    for k in range(n):
-        e = ifd + 2 + 12 * k
-        if e + 12 > len(b):
-            break
-        tag = int.from_bytes(b[e:e + 2], bo)
-        typ = int.from_bytes(b[e + 2:e + 4], bo)
-        if typ == 3:  # SHORT: value left-justified in the 4-byte field
-            val = int.from_bytes(b[e + 8:e + 10], bo)
-        elif typ == 4:
-            val = int.from_bytes(b[e + 8:e + 12], bo)
-        else:
-            continue
-        if tag == 256:
-            width = val
-        elif tag == 257:
-            height = val
-    if width is not None and height is not None:
-        return {"format": "tiff", "width": width, "height": height}
-    return None
+    dims = {"format": "tiff"}
+    for key, tag in (("width", 256), ("height", 257)):
+        ent = _tiff_entry(b, tag)
+        if ent is None or ent[1] not in (3, 4):
+            return None
+        dims[key] = _tiff_tag(b, tag)
+    return dims
 
 
 def bmp_dims(b: bytes) -> Optional[dict]:
@@ -704,16 +691,18 @@ def _tiff_tag_bytes(b: bytes, want: int) -> Optional[bytes]:
     return b[base:base + cnt]
 
 
-def _tiff_jpeg_block(b: bytes, raw: bytes):
-    """Decode one JPEG-compressed TIFF strip/tile (compression 7,
-    TIFF-EP 'new-style'): if a JPEGTables (347) abbreviated stream is
+def _tiff_jpeg_block(b: bytes, raw: bytes, comp: int):
+    """Decode one JPEG-compressed TIFF strip/tile, a full interchange
+    stream (None unless it opens with SOI). New-style blocks
+    (compression 7): if a JPEGTables (347) abbreviated stream is
     present, splice its table segments between the block's SOI and
-    body (TIFF-EP §, the standard table-sharing form)."""
+    body (TIFF-EP §, the standard table-sharing form). Old-style
+    (6) streams carry their own tables."""
     from .jpeg import decode_jpeg
 
     if raw[:2] != b"\xff\xd8":
         return None
-    tables = _tiff_tag_bytes(b, 347)
+    tables = _tiff_tag_bytes(b, 347) if comp == 7 else None
     if tables and len(tables) > 4 and tables[:2] == b"\xff\xd8" \
             and tables[-2:] == b"\xff\xd9":
         raw = b"\xff\xd8" + tables[2:-2] + raw[2:]
@@ -790,164 +779,42 @@ def _packbits_decode(data: bytes, expect: int) -> bytes:
     return bytes(out)
 
 
-def _tiff_decode_planar(b, w, h, spp, photometric, predictor, comp):
-    """PlanarConfiguration 2 strip decode (8-bit only): strips ordered
-    plane 0 first (TIFF 6.0 §14), StripsPerImage strips per plane; the
-    horizontal predictor differences within each plane. Compression 7
-    (round 7 — closes the planar x JPEG corner) decodes each strip as
-    a per-plane grayscale JPEG block (JPEGTables splicing included)."""
+def _tiff_segment(b, raw, comp, rows, cols, spp, depth, predictor):
+    """One raw strip or tile -> a (>= rows, >= cols, spp) uint8 array,
+    or None. The one place a TIFF segment is decompressed (none, LZW,
+    PackBits, or a JPEG block), 1-bit rows are unpacked (1 -> 255;
+    WhiteIsZero inverts the whole canvas later) and the horizontal
+    predictor is undone: it restarts on every segment row."""
     import numpy as _np
 
     from .filters import lzw_decode
 
-    offs = _tiff_tag_array(b, 273)
-    sizes = _tiff_tag_array(b, 279)
-    if not offs or not sizes or len(offs) != len(sizes):
-        return None
-    rows_per_strip = _tiff_tag(b, 278) or h
-    strips_per_plane = -(-h // rows_per_strip)
-    if len(offs) != spp * strips_per_plane:
-        return None
-    rowbytes = w  # one 8-bit sample per pixel per plane
-    planes = bytearray()
-    for i, (off, size) in enumerate(zip(offs, sizes)):
-        if off + size > len(b):
-            return None
-        row0 = (i % strips_per_plane) * rows_per_strip
-        nrows = min(rows_per_strip, h - row0)
-        expect = nrows * rowbytes
-        raw = b[off:off + size]
-        if comp == 7:  # per-plane grayscale JPEG strips
-            blk = _tiff_jpeg_block(b, raw)
-            if blk is None or blk.dtype != _np.uint8:
-                return None
-            blk = _np.squeeze(blk)
-            if blk.ndim != 2 or blk.shape[0] < nrows \
-                    or blk.shape[1] < w:
-                return None
-            planes += _np.ascontiguousarray(
-                blk[:nrows, :w]).tobytes()
-            continue
-        if comp == 5:
-            raw = lzw_decode(raw, None)
-        elif comp == 32773:
-            raw = _packbits_decode(raw, expect)
-        if len(raw) < expect:
-            return None
-        planes += raw[:expect]
-    if len(planes) != spp * h * rowbytes:
-        return None
-    arr = _np.frombuffer(bytes(planes), _np.uint8).reshape(spp, h, w)
-    if predictor == 2:  # horizontal differencing, per plane row
-        arr = _np.cumsum(arr.astype(_np.uint32), axis=2).astype(_np.uint8)
-    if photometric == 0:  # WhiteIsZero
-        arr = 255 - arr
-    arr = _np.ascontiguousarray(arr.transpose(1, 2, 0))
-    return w, h, spp, arr.tobytes()
-
-
-def _tiff_decode_planar_tiled(b, w, h, spp, photometric, predictor,
-                              tw, th):
-    """PlanarConfiguration 2 x tiled (round 7 — closes the documented
-    quarantine corner): TileOffsets hold TilesAcross x TilesDown tiles
-    for plane 0, then plane 1... (TIFF 6.0 §15 with §14 plane-major
-    order); each tile is one 8-bit sample per pixel, the horizontal
-    predictor differences within the tile's plane rows."""
-    import numpy as _np
-
-    from .filters import lzw_decode
-
-    comp = _tiff_tag(b, 259) or 1
-    if comp not in (1, 5, 32773):
-        return None
-    offs = _tiff_tag_array(b, 324)
-    sizes = _tiff_tag_array(b, 325)
-    tiles_x = -(-w // tw)
-    tiles_y = -(-h // th)
-    per_plane = tiles_x * tiles_y
-    if not offs or not sizes or len(offs) != len(sizes) \
-            or len(offs) != spp * per_plane:
-        return None
-    expect = th * tw  # one 8-bit sample per pixel per plane
-    canvas = _np.zeros((h, w, spp), dtype=_np.uint8)
-    for i, (off, size) in enumerate(zip(offs, sizes)):
-        if off + size > len(b):
-            return None
-        p, rem = divmod(i, per_plane)
-        ty, tx = divmod(rem, tiles_x)
-        raw = b[off:off + size]
-        if comp == 5:
-            raw = lzw_decode(raw, None)
-        elif comp == 32773:
-            raw = _packbits_decode(raw, expect)
-        if len(raw) < expect:
-            return None
-        tile = _np.frombuffer(raw[:expect], _np.uint8).reshape(th, tw)
-        if predictor == 2:
-            tile = _np.cumsum(
-                tile.astype(_np.uint32), axis=1).astype(_np.uint8)
-        y0, x0 = ty * th, tx * tw
-        ny, nx = min(th, h - y0), min(tw, w - x0)
-        canvas[y0:y0 + ny, x0:x0 + nx, p] = tile[:ny, :nx]
-    if photometric == 0:  # WhiteIsZero
-        canvas = 255 - canvas
-    canvas = _np.ascontiguousarray(canvas)
-    return w, h, spp, canvas.tobytes()
-
-
-def _tiff_decode_ojpeg(b, w, h, spp):
-    """OLD-style JPEG-in-TIFF (compression 6, TIFF 6.0 §22). Two
-    decodable wild shapes (round 7 — closes the VERDICT 'missing #3'
-    OJPEG quarantine): (a) one complete interchange stream located by
-    JPEGInterchangeFormat (513) / -Length (514) — the dominant form;
-    (b) every strip its own full interchange stream under 273/279.
-    The broken tables-in-tags fragment form (515-521, no SOI) stays
-    quarantined: without the writer's private reassembly rules any
-    decode would be a guess, and a wrong pixel is worse than an error
-    column. (The reference has no TIFF decode at all — its only media
-    op is DCT passthrough, /root/reference/filters.py:321-330.)"""
-    import numpy as _np
-
-    from .jpeg import decode_jpeg
-
-    off = _tiff_tag(b, 513)
-    ln = _tiff_tag(b, 514)
-    if off is not None and ln and off + ln <= len(b) \
-            and b[off:off + 2] == b"\xff\xd8":
-        blk = decode_jpeg(bytes(b[off:off + ln]))
+    if comp in (6, 7):
+        blk = _tiff_jpeg_block(b, raw, comp)
         if blk is None or blk.dtype != _np.uint8:
             return None
         if blk.ndim == 2:
             blk = blk[..., None]
-        if blk.shape[0] < h or blk.shape[1] < w or blk.shape[2] != spp:
-            return None
-        arr = _np.ascontiguousarray(blk[:h, :w])
-        return w, h, spp, arr.tobytes()
-    offs = _tiff_tag_array(b, 273)
-    sizes = _tiff_tag_array(b, 279)
-    if not offs or not sizes or len(offs) != len(sizes):
-        return None
-    rows_per_strip = _tiff_tag(b, 278) or h
-    out_rows = bytearray()
-    row0 = 0
-    for off, size in zip(offs, sizes):
-        if off + size > len(b) or b[off:off + 2] != b"\xff\xd8":
-            return None  # fragment form (no SOI) -> quarantine
-        nrows = min(rows_per_strip, h - row0)
-        blk = decode_jpeg(bytes(b[off:off + size]))
-        if blk is None or blk.dtype != _np.uint8:
-            return None
-        if blk.ndim == 2:
-            blk = blk[..., None]
-        if blk.shape[0] < nrows or blk.shape[1] < w \
+        if blk.shape[0] < rows or blk.shape[1] < cols \
                 or blk.shape[2] != spp:
             return None
-        out_rows += _np.ascontiguousarray(
-            blk[:nrows, :w]).tobytes()
-        row0 += nrows
-    if row0 < h:
+        return blk
+    rowbytes = (cols * spp * depth + 7) // 8
+    expect = rows * rowbytes
+    if comp == 5:
+        raw = lzw_decode(raw, None)
+    elif comp == 32773:
+        raw = _packbits_decode(raw, expect)
+    if len(raw) < expect:
         return None
-    return w, h, spp, bytes(out_rows)
+    px = _np.frombuffer(raw[:expect], _np.uint8)
+    if depth == 1:
+        bits = _np.unpackbits(px.reshape(rows, rowbytes), axis=1)
+        return bits[:, :cols, None] * _np.uint8(255)
+    px = px.reshape(rows, cols, spp)
+    if predictor == 2:  # horizontal differencing: cumsum per row
+        px = _np.cumsum(px.astype(_np.uint32), axis=1).astype(_np.uint8)
+    return px
 
 
 def tiff_pixels(b: bytes):
@@ -967,6 +834,16 @@ def tiff_pixels(b: bytes):
 
 
 def _tiff_decode(b: bytes):
+    """Every layout is one segment grid pasted onto one canvas. A strip
+    is a tile as wide as the image (TIFF 6.0 §15); PlanarConfiguration
+    2 (§14) repeats the grid once per plane, plane 0 first, each
+    segment holding one sample per pixel. OLD-style JPEG (compression
+    6, §22) reads its JPEGInterchangeFormat (513/514) stream as one
+    whole-image segment, else every strip as its own full interchange
+    stream, and its pixels are never inverted. Its broken
+    tables-in-tags fragment form (515-521, no SOI) stays quarantined:
+    without the writer's private reassembly rules any decode would be
+    a guess, and a wrong pixel is worse than an error column."""
     import numpy as _np
 
     d = tiff_dims(b)
@@ -983,165 +860,60 @@ def _tiff_decode(b: bytes):
     if len(set(bits)) != 1:
         return None
     depth = bits[0]
-    if comp == 6:  # old-style JPEG (OJPEG) — round 7
-        if depth != 8 or (_tiff_tag(b, 284) or 1) != 1:
-            return None
-        return _tiff_decode_ojpeg(b, w, h, spp)
     photometric = _tiff_tag(b, 262)
     predictor = _tiff_tag(b, 317) or 1
-    if (depth, spp) not in ((8, 1), (8, 3), (1, 1)):
-        return None
-    if predictor not in (1, 2) or (predictor == 2 and depth != 8):
-        return None
-    if comp == 7 and (predictor != 1 or depth != 8):
-        return None  # new-style JPEG blocks carry no TIFF predictor
     planar = _tiff_tag(b, 284) or 1
-    if planar not in (1, 2):
-        return None
-    tw, th = _tiff_tag(b, 322), _tiff_tag(b, 323)
-    if planar == 2 and spp > 1:
-        # PlanarConfiguration 2 (TIFF 6.0 §14, round 6): strips are
-        # grouped plane-major. Ignoring the tag would decode plane-0
-        # bytes as interleaved RGB — a SILENT wrong answer. Round 7
-        # closes the planar x tiled and planar x JPEG-strip corners;
-        # the planar x tiled x JPEG triple stays quarantined.
-        if depth != 8:
+    if comp == 6:  # chunky 8-bit; the tile tags and predictor unused
+        if depth != 8 or planar != 1:
             return None
-        if tw and th:  # planar x tiled (round 7 — corner closed)
-            return _tiff_decode_planar_tiled(
-                b, w, h, spp, photometric, predictor, tw, th
-            )
-        return _tiff_decode_planar(
-            b, w, h, spp, photometric, predictor, comp
-        )
-    if tw and th:  # tiled organization (TIFF 6.0 §15) — round 5
-        return _tiff_decode_tiled(
-            b, w, h, spp, depth, photometric, predictor, tw, th
-        )
-    offs = _tiff_tag_array(b, 273)
-    sizes = _tiff_tag_array(b, 279)
+    elif ((depth, spp) not in ((8, 1), (8, 3), (1, 1))
+          or predictor not in (1, 2) or (predictor == 2 and depth != 8)
+          or planar not in (1, 2)):
+        return None
+    elif comp == 7 and (predictor != 1 or depth != 8):
+        return None  # new-style JPEG blocks carry no TIFF predictor
+    planes = spp if planar == 2 and spp > 1 else 1
+    tw, th = _tiff_tag(b, 322), _tiff_tag(b, 323)
+    tiled = bool(tw and th) and comp != 6
+    if tiled:
+        if planes > 1 and comp == 7:
+            return None  # the planar x tiled x JPEG triple: quarantined
+        offs, sizes = _tiff_tag_array(b, 324), _tiff_tag_array(b, 325)
+    else:
+        tw, th = w, _tiff_tag(b, 278) or h
+        offs, sizes = _tiff_tag_array(b, 273), _tiff_tag_array(b, 279)
+    if comp == 6:
+        off, ln = _tiff_tag(b, 513), _tiff_tag(b, 514)
+        if off is not None and ln and off + ln <= len(b) \
+                and b[off:off + 2] == b"\xff\xd8":
+            offs, sizes, th = [off], [ln], h
     if not offs or not sizes or len(offs) != len(sizes):
         return None
-    rows_per_strip = _tiff_tag(b, 278) or h
-    rowbytes = (w * spp * depth + 7) // 8
-    from .filters import lzw_decode
-
-    out_rows = bytearray()
-    row0 = 0
-    for off, size in zip(offs, sizes):
-        if off + size > len(b):
-            return None
-        nrows = min(rows_per_strip, h - row0)
-        expect = nrows * rowbytes
-        raw = b[off:off + size]
-        if comp == 7:  # each strip is a full JPEG stream (round 5)
-            blk = _tiff_jpeg_block(b, raw)
-            if blk is None or blk.dtype != _np.uint8:
-                return None
-            if blk.ndim == 2:
-                blk = blk[..., None]
-            if blk.shape[0] < nrows or blk.shape[1] != w \
-                    or blk.shape[2] != spp:
-                return None
-            out_rows += blk[:nrows].tobytes()
-            row0 += nrows
-            continue
-        if comp == 5:
-            raw = lzw_decode(raw, None)
-        elif comp == 32773:
-            raw = _packbits_decode(raw, expect)
-        if len(raw) < expect:
-            return None
-        out_rows += raw[:expect]
-        row0 += nrows
-    if row0 < h:
-        return None
-    if depth == 8:
-        arr = _np.frombuffer(bytes(out_rows), _np.uint8).reshape(h, w, spp)
-        if predictor == 2:  # horizontal differencing: cumsum per row
-            arr = _np.cumsum(arr.astype(_np.uint32), axis=1).astype(
-                _np.uint8)
-        if photometric == 0:  # WhiteIsZero
-            arr = 255 - arr
-    else:  # 1-bit bilevel
-        a = _np.frombuffer(bytes(out_rows), _np.uint8).reshape(h, rowbytes)
-        bits_arr = _np.unpackbits(a, axis=1)[:, :w]
-        if photometric == 0:  # 0 = white
-            arr = ((1 - bits_arr) * 255).astype(_np.uint8)
-        else:
-            arr = (bits_arr * 255).astype(_np.uint8)
-        arr = arr.reshape(h, w, 1)
-    arr = _np.ascontiguousarray(arr)
-    return w, h, arr.shape[2], arr.tobytes()
-
-
-def _tiff_decode_tiled(b, w, h, spp, depth, photometric, predictor,
-                       tw, th):
-    """Tiled TIFF (tags 322/323/324/325): every tile is a full tw x th
-    block compressed independently (edge tiles pad); the horizontal-
-    differencing predictor resets per TILE row, so it must be undone
-    per tile before stitching."""
-    import numpy as _np
-
-    from .filters import lzw_decode
-
-    comp = _tiff_tag(b, 259) or 1
-    offs = _tiff_tag_array(b, 324)
-    sizes = _tiff_tag_array(b, 325)
-    tiles_x = -(-w // tw)
-    tiles_y = -(-h // th)
-    if not offs or not sizes or len(offs) != len(sizes) \
-            or len(offs) != tiles_x * tiles_y:
-        return None
-    tile_rowbytes = (tw * spp * depth + 7) // 8
-    expect = th * tile_rowbytes
+    across = -(-w // tw)
+    grid = across * -(-h // th)
+    need = planes * grid
+    if len(offs) < need or (len(offs) > need and (tiled or planes > 1)):
+        return None  # only chunky strips may trail past the last row
+    sub = spp // planes
+    # a chunky new-style JPEG strip must be exactly as wide as the image
+    exact = comp == 7 and not tiled and planes == 1
     canvas = _np.zeros((h, w, spp), dtype=_np.uint8)
-    for t, (off, size) in enumerate(zip(offs, sizes)):
+    for i, (off, size) in enumerate(zip(offs, sizes)):
         if off + size > len(b):
             return None
-        raw = b[off:off + size]
-        ty, tx = divmod(t, tiles_x)
-        if comp == 7:  # JPEG-compressed tiles (round 5)
-            blk = _tiff_jpeg_block(b, raw)
-            if blk is None or blk.dtype != _np.uint8:
-                return None
-            if blk.ndim == 2:
-                blk = blk[..., None]
-            if blk.shape[0] < th or blk.shape[1] < tw \
-                    or blk.shape[2] != spp:
-                return None
-            y0, x0 = ty * th, tx * tw
-            ny, nx = min(th, h - y0), min(tw, w - x0)
-            canvas[y0:y0 + ny, x0:x0 + nx] = blk[:ny, :nx]
-            continue
-        if comp == 5:
-            raw = lzw_decode(raw, None)
-        elif comp == 32773:
-            raw = _packbits_decode(raw, expect)
-        if len(raw) < expect:
+        # a trailing chunky strip covers no rows: decoded, then dropped
+        p, k = divmod(i, grid) if i < need else (0, i)
+        y0, x0 = k // across * th, k % across * tw
+        ny, nx = max(0, min(th, h - y0)), min(tw, w - x0)
+        seg = _tiff_segment(b, b[off:off + size], comp,
+                            th if tiled else ny, tw, sub, depth, predictor)
+        if seg is None or (exact and seg.shape[1] != w):
             return None
-        if depth == 8:
-            tile = _np.frombuffer(
-                raw[:expect], _np.uint8).reshape(th, tw, spp)
-            if predictor == 2:
-                tile = _np.cumsum(
-                    tile.astype(_np.uint32), axis=1).astype(_np.uint8)
-        else:  # 1-bit bilevel tiles
-            rowsb = _np.frombuffer(
-                raw[:expect], _np.uint8).reshape(th, tile_rowbytes)
-            tile = (_np.unpackbits(rowsb, axis=1)[:, :tw] * 255).astype(
-                _np.uint8)[..., None]
-        y0, x0 = ty * th, tx * tw
-        ny, nx = min(th, h - y0), min(tw, w - x0)
-        canvas[y0:y0 + ny, x0:x0 + nx] = tile[:ny, :nx]
-    if depth == 8:
-        if photometric == 0:
-            canvas = 255 - canvas
-    else:
-        if photometric == 0:  # 0 = white for bilevel
-            canvas = 255 - canvas
-    canvas = _np.ascontiguousarray(canvas)
-    return w, h, canvas.shape[2], canvas.tobytes()
+        canvas[y0:y0 + ny, x0:x0 + nx, p * sub:(p + 1) * sub] = \
+            seg[:ny, :nx]
+    if photometric == 0 and comp != 6:  # WhiteIsZero
+        canvas = 255 - canvas
+    return w, h, spp, canvas.tobytes()
 
 
 def tiff_mean_luma(b: bytes):

@@ -99,27 +99,3 @@ def is_allowed(robots: dict, agent: str, path: str) -> bool:
 def crawl_delay(robots: dict, agent: str) -> Optional[float]:
     g = _select_group(robots, agent)
     return g["crawl_delay"] if g else None
-
-
-def synthesize_robots(doc_id: int) -> str:
-    """Deterministic robots.txt for doc d (formula oracle): a
-    'sparkbot' group disallowing /sec{d%4}/ but allowing
-    /sec{d%4}/pub/ with Crawl-delay d%5, a wildcard-anchored pdf ban,
-    a '*' group banning /tmp/, and 1 + d%2 sitemap lines."""
-    d = int(doc_id)
-    k = d % 4
-    lines = [
-        "# synthetic fixture",
-        "User-agent: sparkbot",
-        f"Disallow: /sec{k}/",
-        f"Allow: /sec{k}/pub/",
-        "Disallow: /*.pdf$",
-        f"Crawl-delay: {d % 5}",
-        "",
-        "User-agent: *",
-        "Disallow: /tmp/",
-    ]
-    for i in range(1 + d % 2):
-        lines.append(
-            f"Sitemap: https://example.com/sitemap{i}-{d}.xml")
-    return "\n".join(lines) + "\n"

@@ -63,31 +63,3 @@ def parse_sitemap(text: str) -> dict:
     p.feed(text or "")
     p.close()
     return {"kind": p.kind, "entries": p.entries}
-
-
-def synthesize_sitemap(doc_id: int) -> str:
-    """Deterministic sitemap for doc d (formula oracle): d%5==0 docs
-    get a <sitemapindex> with 1 + d%2 child sitemaps; others a
-    <urlset> with 1 + d%4 urls at loc
-    https://example.com/doc/{d}/{i}, lastmod 2024-01-{1+(d+i)%28},
-    priority (d+i)%10/10."""
-    d = int(doc_id)
-    if d % 5 == 0:
-        items = "".join(
-            f"<sitemap><loc>https://example.com/sm{d}-{i}.xml</loc>"
-            f"<lastmod>2024-02-{1 + (d + i) % 28:02d}</lastmod>"
-            "</sitemap>"
-            for i in range(1 + d % 2)
-        )
-        return ('<?xml version="1.0" encoding="UTF-8"?>'
-                '<sitemapindex xmlns="http://www.sitemaps.org/'
-                f'schemas/sitemap/0.9">{items}</sitemapindex>')
-    items = "".join(
-        f"<url><loc>https://example.com/doc/{d}/{i}</loc>"
-        f"<lastmod>2024-01-{1 + (d + i) % 28:02d}</lastmod>"
-        f"<priority>{(d + i) % 10 / 10:.1f}</priority></url>"
-        for i in range(1 + d % 4)
-    )
-    return ('<?xml version="1.0" encoding="UTF-8"?>'
-            '<urlset xmlns="http://www.sitemaps.org/schemas/'
-            f'sitemap/0.9">{items}</urlset>')

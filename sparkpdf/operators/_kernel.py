@@ -126,17 +126,3 @@ def map_kernel(df: DataFrame, in_cols, row_fn,
         arrow_batches(row_fn, out_schema), schema=out_schema
     )
 
-
-def map_docs(documents: DataFrame, cols, row_fn,
-             out_schema: "StructType | str") -> DataFrame:
-    """`map_kernel` over documents(doc_id, *cols) for per-document
-    work: `row_fn(d, *values)` gets doc_id as a Python int. The input
-    is hash-partitioned by doc_id at defaultParallelism first, since a
-    small scan arrives as 1-2 tasks, which would serialize the
-    per-document Python work. One partition per core: every (task x
-    python-runner) pays a fixed worker cost, so more tasks only add
-    that cost on a uniform per-document workload."""
-    n_parts = documents.sparkSession.sparkContext.defaultParallelism
-    docs = documents.select(F.col("doc_id").cast("long").alias("doc_id"), *cols)
-    return map_kernel(docs.repartition(n_parts, "doc_id"), ["doc_id", *cols],
-                      row_fn, out_schema)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._kernel import doc_id_str, map_docs, map_kernel, quarantine_message
+from ._kernel import doc_id_str, map_kernel, quarantine_message
 
 # small public stopword lists (enough for a deterministic heuristic)
 STOPWORDS = {
@@ -442,12 +442,12 @@ def extract_web_docs(pages: DataFrame) -> DataFrame:
     return map_kernel(pages, [doc_id_str(), "html"], row, WEB_DOC_SCHEMA)
 
 
-def extract_robots_rules(documents: DataFrame,
+def extract_robots_rules(robots: DataFrame,
                          agent: str = "sparkbot",
                          probe_paths: "tuple[str, ...]" = (
                              "/sec1/page", "/tmp/x")) -> DataFrame:
     """Per-doc robots.txt gate (kernels/robots.py, RFC 9309): parse
-    the synthesized per-doc robots.txt and emit the crawl-policy
+    each robots(doc_id, robots_txt) file and emit the crawl-policy
     signals a frontier needs — crawl delay, sitemap count, and the
     allow/deny decision for each probe path under `agent` plus the
     '*'-group decision an unknown agent would get. One Python
@@ -458,34 +458,36 @@ def extract_robots_rules(documents: DataFrame,
               + ", ".join(f"{c} int" for c in probe_cols)
               + ", other_agent_tmp int")
 
-    def row(d):
-        from ..kernels.robots import (
-            crawl_delay, is_allowed, parse_robots, synthesize_robots)
+    def row(d, text):
+        from ..kernels.robots import crawl_delay, is_allowed, parse_robots
 
-        r = parse_robots(synthesize_robots(d))
+        r = parse_robots(text or "")
         return [(d, crawl_delay(r, agent), len(r["sitemaps"]),
                  *(int(is_allowed(r, agent, p)) for p in probe_paths),
                  int(is_allowed(r, "otherbot", "/tmp/x")))]
 
-    return map_docs(documents, [], row, schema)
+    return map_kernel(robots, [F.col("doc_id").cast("long").alias("doc_id"),
+                               "robots_txt"], row, schema)
 
 
-def extract_sitemap_entries(documents: DataFrame) -> DataFrame:
-    """Per-doc sitemap parse (kernels/sitemap.py): one row per
-    <url>/<sitemap> entry with the container kind — the crawl
-    frontier's seed stream. One Python pass, entry explode
-    Python-side (entries per sitemap are tiny); no shuffle."""
+def extract_sitemap_entries(sitemaps: DataFrame) -> DataFrame:
+    """Per-doc sitemap parse (kernels/sitemap.py) of each
+    sitemaps(doc_id, sitemap_xml) file: one row per <url>/<sitemap>
+    entry with the container kind — the crawl frontier's seed stream.
+    One Python pass, entry explode Python-side (entries per sitemap
+    are tiny); no shuffle."""
     schema = ("doc_id long, entry_idx int, kind string, loc string, "
               "lastmod string, priority string")
 
-    def row(d):
-        from ..kernels.sitemap import parse_sitemap, synthesize_sitemap
+    def row(d, text):
+        from ..kernels.sitemap import parse_sitemap
 
-        r = parse_sitemap(synthesize_sitemap(d))
+        r = parse_sitemap(text)
         return [(d, i, r["kind"], e.get("loc"), e.get("lastmod"),
                  e.get("priority")) for i, e in enumerate(r["entries"])]
 
-    return map_docs(documents, [], row, schema)
+    return map_kernel(sitemaps, [F.col("doc_id").cast("long").alias("doc_id"),
+                                 "sitemap_xml"], row, schema)
 
 
 def canonical_url(col) -> "F.Column":

@@ -7,14 +7,14 @@ such as an amplitude, a gray level or a sample rate, which the DuckDB
 oracle restates in SQL) is built by exactly one helper in the first
 half of this module; a Spark builder only picks which variant each
 doc_id gets. Every builder runs its per-document Python work through
-`operators._kernel.map_docs`.
+`map_docs`, which repartitions a small scan before `map_kernel`.
 
-The HTML page builders (`synthesize_html`, `synthesize_webpage`) and
-the WARC archive builder (`build_warc`) open the module. The string
-builders that production code also calls
-(`kernels.html.synthesize_interleaved_html`,
-`kernels.robots.synthesize_robots`, `kernels.sitemap.synthesize_sitemap`)
-stay beside their parsers; this module composes them.
+The HTML page builders (`synthesize_html`, `synthesize_webpage`), the
+WARC archive builder (`build_warc`) and the robots.txt / sitemap
+builders (`synthesize_robots`, `synthesize_sitemap`) open the module.
+The one string builder that the benchmark inputs also call,
+`kernels.html.synthesize_interleaved_html`, stays beside its parser;
+this module composes it.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from ..kernels.filters import ccitt_fax_wrap
 from ..kernels.html import NONPRINTABLE, synthesize_interleaved_html
 from ..kernels.jpeg import encode_jpeg
 from ..kernels.write import spans_to_pdf
-from ..operators._kernel import map_docs
+from ..operators._kernel import map_kernel
 from ..operators.extract import (
     INTERLEAVED_SCHEMA,
     PDF_RAW_SCHEMA,
@@ -44,6 +44,22 @@ from ..operators.multimodal import MEDIA_SCHEMA
 from . import imagegen
 from .imagegen import encode_jpeg_lossless, encode_jpeg_progressive, g4_encode
 from .pdfgen import doc_to_pdf, doc_to_pdf_paged
+
+
+def map_docs(documents: DataFrame, cols, row_fn,
+             out_schema: "StructType | str") -> DataFrame:
+    """`map_kernel` over documents(doc_id, *cols) for per-document
+    work: `row_fn(d, *values)` gets doc_id as a Python int. The input
+    is hash-partitioned by doc_id at defaultParallelism first, since a
+    small scan arrives as 1-2 tasks, which would serialize the
+    per-document Python work. One partition per core: every (task x
+    python-runner) pays a fixed worker cost, so more tasks only add
+    that cost on a uniform per-document workload."""
+    n_parts = documents.sparkSession.sparkContext.defaultParallelism
+    docs = documents.select(F.col("doc_id").cast("long").alias("doc_id"), *cols)
+    return map_kernel(docs.repartition(n_parts, "doc_id"), ["doc_id", *cols],
+                      row_fn, out_schema)
+
 
 # --- HTML pages and WARC archives ------------------------------------------
 
@@ -186,6 +202,61 @@ def build_warc(records: List[dict], gzip_members: bool = False) -> bytes:
             raw = co.compress(raw) + co.flush()
         out.append(raw)
     return b"".join(out)
+
+
+# --- robots.txt files and sitemaps -------------------------------------------
+
+
+def synthesize_robots(doc_id: int) -> str:
+    """Deterministic robots.txt for doc d (formula oracle): a
+    'sparkbot' group disallowing /sec{d%4}/ but allowing
+    /sec{d%4}/pub/ with Crawl-delay d%5, a wildcard-anchored pdf ban,
+    a '*' group banning /tmp/, and 1 + d%2 sitemap lines."""
+    d = int(doc_id)
+    k = d % 4
+    lines = [
+        "# synthetic fixture",
+        "User-agent: sparkbot",
+        f"Disallow: /sec{k}/",
+        f"Allow: /sec{k}/pub/",
+        "Disallow: /*.pdf$",
+        f"Crawl-delay: {d % 5}",
+        "",
+        "User-agent: *",
+        "Disallow: /tmp/",
+    ]
+    for i in range(1 + d % 2):
+        lines.append(
+            f"Sitemap: https://example.com/sitemap{i}-{d}.xml")
+    return "\n".join(lines) + "\n"
+
+
+def synthesize_sitemap(doc_id: int) -> str:
+    """Deterministic sitemap for doc d (formula oracle): d%5==0 docs
+    get a <sitemapindex> with 1 + d%2 child sitemaps; others a
+    <urlset> with 1 + d%4 urls at loc
+    https://example.com/doc/{d}/{i}, lastmod 2024-01-{1+(d+i)%28},
+    priority (d+i)%10/10."""
+    d = int(doc_id)
+    if d % 5 == 0:
+        items = "".join(
+            f"<sitemap><loc>https://example.com/sm{d}-{i}.xml</loc>"
+            f"<lastmod>2024-02-{1 + (d + i) % 28:02d}</lastmod>"
+            "</sitemap>"
+            for i in range(1 + d % 2)
+        )
+        return ('<?xml version="1.0" encoding="UTF-8"?>'
+                '<sitemapindex xmlns="http://www.sitemaps.org/'
+                f'schemas/sitemap/0.9">{items}</sitemapindex>')
+    items = "".join(
+        f"<url><loc>https://example.com/doc/{d}/{i}</loc>"
+        f"<lastmod>2024-01-{1 + (d + i) % 28:02d}</lastmod>"
+        f"<priority>{(d + i) % 10 / 10:.1f}</priority></url>"
+        for i in range(1 + d % 4)
+    )
+    return ('<?xml version="1.0" encoding="UTF-8"?>'
+            '<urlset xmlns="http://www.sitemaps.org/schemas/'
+            f'sitemap/0.9">{items}</urlset>')
 
 
 # --- planted signals: one builder each --------------------------------------
@@ -563,6 +634,20 @@ def synthesize_warc_mixed_corpus(documents: DataFrame) -> DataFrame:
         return [(str(d), build_warc(recs, gzip_members=(d % 2 == 1)))]
 
     return map_docs(documents, ["text"], row, "doc_id string, warc_bytes binary")
+
+
+def synthesize_robots_corpus(documents: DataFrame) -> DataFrame:
+    """documents -> (doc_id, robots_txt): one synthesize_robots file per
+    doc, the input of operators/text.extract_robots_rules."""
+    return map_docs(documents, [], lambda d: [(d, synthesize_robots(d))],
+                    "doc_id long, robots_txt string")
+
+
+def synthesize_sitemap_corpus(documents: DataFrame) -> DataFrame:
+    """documents -> (doc_id, sitemap_xml): one synthesize_sitemap file
+    per doc, the input of operators/text.extract_sitemap_entries."""
+    return map_docs(documents, [], lambda d: [(d, synthesize_sitemap(d))],
+                    "doc_id long, sitemap_xml string")
 
 
 # --- image corpora ------------------------------------------------------------

@@ -341,11 +341,6 @@ def test_array_with_a_ref_takes_the_per_token_path():
     assert _SCAN.match(b"[1 0 R]").lastgroup == "arr"
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="tokenize reads `R` inside an array as an operator and splits "
-    "the TJ in two (CHANGES.md FOUND line on content.tokenize)",
-)
 def test_array_with_a_ref_tokenizes_like_parse_array():
     want, _ = cos.parse_array(b"[1 0 R]", 0)
     assert tokenize(b"[1 0 R] TJ") == [([want], "TJ")]

@@ -247,12 +247,22 @@ def test_similarity_has_one_ranking_window():
     assert src.count("Window.partitionBy") == 1
 
 
+# Corpus builders (synthesize_* / write_pdfs_with_*) that production
+# modules may define, each with the reason it stays.
+BUILDERS_ALLOWED = {
+    "sparkpdf/kernels/html.py:synthesize_interleaved_html":
+        "perfbench/inputs.py imports it from kernels.html to build the "
+        "benchmark's documents, and the benchmark is left as it is",
+}
+
+
 def test_production_code_holds_no_corpus_builders():
     """Production modules hold only production code: no module under
     sparkpdf/ outside sparkpdf/testing/, and nothing in jobs/, imports
-    sparkpdf.testing, and sparkpdf/operators/ defines no corpus builder
-    (synthesize_* / write_pdfs_with_* live in
-    sparkpdf/testing/corpora.py)."""
+    sparkpdf.testing, and no module under sparkpdf/ outside
+    sparkpdf/testing/ defines a corpus builder (synthesize_* /
+    write_pdfs_with_* live in sparkpdf/testing/corpora.py) except
+    those BUILDERS_ALLOWED names."""
     import ast
     import pathlib
 
@@ -274,16 +284,16 @@ def test_production_code_holds_no_corpus_builders():
                 mods = [mod] + [f"{mod}.{a.name}" for a in node.names]
             else:
                 if (isinstance(node, ast.FunctionDef)
-                        and rel.parts[:2] == ("sparkpdf", "operators")
+                        and rel.parts[0] == "sparkpdf"
                         and node.name.startswith(
                             ("synthesize_", "write_pdfs_with_"))):
-                    builders.append((str(rel), node.name))
+                    builders.append(f"{rel.as_posix()}:{node.name}")
                 continue
             if any(m == "sparkpdf.testing" or m.startswith("sparkpdf.testing.")
                    for m in mods):
                 imports.append((str(rel), node.lineno))
     assert imports == []
-    assert builders == []
+    assert sorted(builders) == sorted(BUILDERS_ALLOWED)
 
 
 # Public names under sparkpdf/ (outside testing/) that no production

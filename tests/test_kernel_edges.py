@@ -1031,7 +1031,8 @@ def test_sitemap_parse():
     """sitemaps.org kernel: urlset + sitemapindex round-trip the
     planted formulas; namespaced/mixed-case tags tolerated; entries
     without loc dropped; garbage yields kind None, never raises."""
-    from sparkpdf.kernels.sitemap import parse_sitemap, synthesize_sitemap
+    from sparkpdf.kernels.sitemap import parse_sitemap
+    from sparkpdf.testing.corpora import synthesize_sitemap
 
     for d in (0, 1, 3, 5, 7):
         r = parse_sitemap(synthesize_sitemap(d))
@@ -1061,8 +1062,8 @@ def test_robots_rfc9309():
     from the '*' group, longest-match rules with allow winning
     length ties, '$'-anchored wildcards, crawl-delay + sitemaps;
     empty/garbage inputs default to allowed and never raise."""
-    from sparkpdf.kernels.robots import (
-        crawl_delay, is_allowed, parse_robots, synthesize_robots)
+    from sparkpdf.kernels.robots import crawl_delay, is_allowed, parse_robots
+    from sparkpdf.testing.corpora import synthesize_robots
 
     for d in (0, 1, 5, 7):
         r = parse_robots(synthesize_robots(d))
@@ -1770,14 +1771,15 @@ def test_planar_tiff_decode():
                                  predictor=pred, planar=2)
             assert tiff_pixels(pt) == chunky, (comp, pred)
     # round 7: planar x JPEG strips (per-plane grayscale SOF3,
-    # with and without shared JPEGTables); the planar x tiled x JPEG
-    # triple stays quarantined
+    # with and without shared JPEGTables), one-row strips included;
+    # the planar x tiled x JPEG triple stays quarantined
     from sparkpdf.testing.imagegen import make_tiff_jpeg
 
-    for st in (False, True):
-        pj = make_tiff_jpeg(rgb, rows_per_strip=6, planar=2,
-                            shared_tables=st)
-        assert tiff_pixels(pj) == chunky, st
+    for rps in (6, 1):
+        for st in (False, True):
+            pj = make_tiff_jpeg(rgb, rows_per_strip=rps, planar=2,
+                                shared_tables=st)
+            assert tiff_pixels(pj) == chunky, (rps, st)
     assert tiff_pixels(make_tiff_tiled(rgb, 16, 16, compression=7,
                                        planar=2)) is None
     # truncation sweep must never raise
