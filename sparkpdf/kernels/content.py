@@ -13,8 +13,7 @@ import re
 from binascii import unhexlify
 from typing import List, Tuple
 
-from .cos import (Name, PdfError, _make_name, make_string, parse_array,
-                  parse_dict, parse_hex_string, parse_literal_string,
+from .cos import (Name, PdfError, _make_name, _number, make_string,
                   parse_object, skip_ws)
 
 _OPERATOR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
@@ -33,7 +32,7 @@ INLINE_IMAGE_OP = "INLINE IMAGE"
 # kerned TJ arrays of real text). Each element is atomic and every
 # repeat possessive, so it splits exactly as the per-token scan does;
 # anything else (comments, names, keywords, nesting, escapes, odd or
-# spaced hex) fails the group and goes to cos.parse_array.
+# spaced hex) fails the group and goes to cos.parse_object.
 _FLAT = (
     rb"\[(?:[\x00\t\n\x0c\r ]*+"
     rb"(?><(?:[0-9A-Fa-f]{2})++>|\([^()\\]++\)"
@@ -51,14 +50,12 @@ _SCAN = re.compile(
     rb"(?:"
     rb"(?P<hexstr><(?:[0-9A-Fa-f]{2})*>)"
     rb"|(?P<litstr>\([^()\\]*\))"
-    rb"|(?P<lit>\()"
     rb"|(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
     rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
     rb"|(?P<op>[A-Za-z'\"][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
     rb"|(?P<flat>" + _FLAT + rb")"
-    rb"|(?P<arr>[\[\]])"
-    rb"|(?P<dict><<)"
-    rb"|(?P<hex><)"
+    rb"|(?P<obj>[(\[<])"
+    rb"|(?P<close>\])"
     rb"|(?P<nul>\x00)"
     rb"|(?P<bad>.)"
     rb")"
@@ -72,8 +69,9 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
     1.4x the dispatch-per-token version; one match and one findall per
     flat array, see _FLAT); semantics identical to the
     reference tokenizer (hypothesis-tested): alpha tokens are operators,
-    and every other array is read whole by cos.parse_array, as
-    readObject does (generic.py:278-330), so `[1 0 R]` is one Ref."""
+    and every other string, array and dict is read whole by
+    cos.parse_object, as readObject does (generic.py:278-330), so
+    `[1 0 R]` is one Ref."""
     ops: List[Tuple[list, str]] = []
     operands: list = []
     pos = 0
@@ -87,18 +85,7 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
         g = m.lastgroup
         pos = m.end()
         if g == "num":
-            tok = m.group("num")
-            if b"." in tok:
-                try:
-                    v = float(tok)
-                except ValueError:  # malformed real -> 0
-                    v = 0.0
-            else:
-                try:
-                    v = int(tok)
-                except ValueError:  # overflow -> 0
-                    v = 0
-            operands.append(v)
+            operands.append(_number(m.group("num")))
         elif g == "op":
             tok = m.group("op")
             if tok == b"BI":
@@ -120,7 +107,7 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
                      for h, lit, real, i in _FLAT_ITEM.findall(
                          data, m.start("flat") + 1, pos - 1)]
             except ValueError:  # an int past the digit limit
-                v, pos = parse_array(data, m.start("flat"))
+                v, pos = parse_object(data, m.start("flat"))
             operands.append(v)
         elif g == "name":
             operands.append(_make_name(m.group("name")))
@@ -128,33 +115,14 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
             operands.append(bytes.fromhex(m.group(g)[1:-1].decode()))
         elif g == "litstr":  # no nesting or escapes: the bytes verbatim
             operands.append(make_string(m.group(g)[1:-1]))
-        elif g == "lit":
+        elif g == "obj":  # any other string, array or dict
             try:
-                v, pos = parse_literal_string(data, m.start("lit"))
+                v, pos = parse_object(data, m.start("obj"))
             except PdfError:
                 break  # tolerate trailing garbage
             operands.append(v)
-        elif g == "arr":
-            if m.group("arr") == b"]":  # stray: wraps the operands so far
-                operands = [operands]
-                continue
-            try:
-                v, pos = parse_array(data, m.start("arr"))
-            except PdfError:
-                break
-            operands.append(v)
-        elif g == "dict":
-            try:
-                v, pos = parse_dict(data, m.start("dict"))
-            except PdfError:
-                break
-            operands.append(v)
-        elif g == "hex":
-            try:
-                v, pos = parse_hex_string(data, m.start("hex"))
-            except PdfError:
-                break
-            operands.append(v)
+        elif g == "close":  # stray ']': wraps the operands so far
+            operands = [operands]
         else:  # NUL terminates (generic.py:1196); "bad" bytes stop too
             break
     return ops

@@ -1,12 +1,18 @@
 """COS (Carousel Object System) object model + lexer.
 
-From-scratch, regex-over-buffer tokenizer for the PDF object syntax.
+From-scratch, regex-over-buffer reader for the PDF object syntax.
 Behavioral parity targets (see SURVEY.md §1.2) are cited against the
-reference implementation at /root/reference (johns1c/PyPDF2), but the
-implementation here is new: the reference reads byte-at-a-time from a
-stream (its own author calls `readWord` "appallingly slow",
-generic.py:137); we scan a whole in-memory buffer with compiled
-regexes and return (value, next_pos) pairs.
+reference implementation (johns1c/PyPDF2), but the implementation here
+is new: the reference reads byte-at-a-time from a stream (its own
+author calls `readWord` "appallingly slow", generic.py:137); we scan a
+whole in-memory buffer with compiled regexes and return
+(value, next_pos) pairs.
+
+One reader, `parse_object`, reads every value, as the reference's
+readObject does (generic.py:143-227). Arrays and dictionaries nest on
+an explicit stack inside its one loop, so nesting depth costs memory,
+not Python frames, and a deeply nested input never raises
+RecursionError.
 
 Object model (reference generic.py:33-51 → plain Python):
   null                -> None
@@ -26,7 +32,7 @@ from __future__ import annotations
 
 import re
 import sys
-from typing import Callable, NamedTuple, Optional, Tuple
+from typing import Callable, NamedTuple, Optional
 
 if sys.version_info < (3, 11):  # pragma: no cover
     # the lexer's possessive quantifiers (*+/++, PEP 9049-era re syntax)
@@ -90,44 +96,35 @@ class StreamObj:
 # (reference skips comments in readObject, generic.py:176-198)
 _WS_COMMENT = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
 
-# a name runs to the next whitespace or delimiter (generic.py:731-734);
-# '#' escapes are kept RAW for parity with the reference fork, which does
-# not decode them (generic.py:751-757)
-_NAME = re.compile(rb"/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
-
-# fused hot-loop scanners (parse_dict / parse_object):
-# one C-level match replaces ws-skip + name + ws-skip per dict key, and
-# one match resolves the Ref-vs-number ambiguity for numeric operands
-# one C-level match per dict-loop iteration: ws/comments then EITHER
-# the closing >> or the next /key (with its trailing ws folded in).
+# parse_object's scanners: one C-level match per token consumes the
+# whitespace before it and reads it whole when it is a simple value.
 # NB the ws runs are POSSESSIVE (`*+`, Python 3.11): a greedy
 # `(?:[ws]+|%...)*` before a required token backtracks exponentially
 # when that token is absent (hypothesis found the hang); possessive
 # quantifiers keep C-speed run matching with zero backtracking.
 _WS_RUN = rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
-# round 9: the dict/array scanners fold the COMMON simple values
-# (ref, number, name, bool/null) into the same C-level match that
-# already consumed the whitespace — one regex call replaces
-# ws-skip + dispatch + token match per value. The sub-patterns are
-# byte-for-byte the _REF_OR_NUMBER / _NAME / keyword forms, so a
-# fused match yields exactly what parse_object would; anything the
-# optional value group does not match (strings, nested dicts/arrays,
-# malformed input) falls through to parse_object at the same offset
-# with identical semantics, including error behavior.
+# the simple values: ref "N G R" (tried before the number it starts
+# with), number, name, and true/false/null. A name runs to the next
+# whitespace or delimiter (generic.py:731-734); '#' escapes are kept
+# RAW for parity with the reference fork, which does not decode them
+# (generic.py:751-757). Anything else (strings, arrays, dicts,
+# malformed input) leaves the value groups empty, and parse_object
+# dispatches on the token's first byte.
 _SIMPLE_VAL = (
     rb"(?:(\d++)[\x00\t\n\x0c\r ]++(\d++)[\x00\t\n\x0c\r ]++R(?![0-9A-Za-z])"
     rb"|([+-]?+(?:\d++\.\d*+|\.\d++|\d++))"
     rb"|(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
     rb"|(true|false|null))"
 )
+# a dict entry: the closing >> OR the next /key together with its
+# value when that value is simple, in one fused match
 _DICT_NEXT = re.compile(
     _WS_RUN
     + rb"(?:(>>)|(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
     + _WS_RUN + _SIMPLE_VAL + rb"?+)"
 )
-# array-loop iteration: ws/comments then the closing ] OR a fused
-# simple value if present
-_ARR_NEXT = re.compile(_WS_RUN + rb"(?:(\])|" + _SIMPLE_VAL + rb")?+")
+# an array element or a lone value: the closing ] OR a simple value
+_NEXT = re.compile(_WS_RUN + rb"(?:(\])|" + _SIMPLE_VAL + rb")?+")
 
 _KEYWORD_VALUES = {b"true": True, b"false": False, b"null": None}
 
@@ -148,10 +145,20 @@ def _make_name(raw: bytes) -> "Name":
             _NAME_CACHE.clear()
         _NAME_CACHE[raw] = n
     return n
-_REF_OR_NUMBER = re.compile(
-    rb"(?:(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+R(?![0-9A-Za-z]))"
-    rb"|([+-]?(?:\d+\.\d*|\.\d+|\d+))"
-)
+
+
+def _number(tok: bytes):
+    """The number rule: a real has a '.', anything else is an int."""
+    if b"." in tok:
+        try:
+            return float(tok)
+        except ValueError:  # malformed real -> 0 (generic.py:396-399)
+            return 0.0
+    try:
+        return int(tok)
+    except ValueError:  # past int()'s digit limit -> 0 (generic.py:423-428)
+        return 0
+
 
 _HEX_BODY = re.compile(rb"[^>]*")
 _NONHEX = re.compile(rb"[^0-9a-fA-F]")
@@ -161,7 +168,8 @@ _LIT_SPECIAL = re.compile(rb"[()\\]")
 
 _OCTAL = re.compile(rb"[0-7]{1,3}")
 
-_STREAM_KW = re.compile(rb"stream(?:\r\n|\n|\r)?")
+# after a closed dict: the stream keyword and its EOL (generic.py:878)
+_STREAM_KW = re.compile(_WS_RUN + rb"stream(?:\r\n|\n|\r)?")
 _ENDSTREAM_NEAR = re.compile(rb"[\x00\t\n\x0c\r ]*endstream")
 
 _SIMPLE_ESCAPES = {
@@ -213,13 +221,6 @@ def make_string(raw: bytes):
         except UnicodeDecodeError:
             return raw
     return raw
-
-
-def parse_name(buf: bytes, pos: int) -> Tuple[Name, int]:
-    m = _NAME.match(buf, pos)
-    if not m:
-        raise PdfError(f"expected name at {pos}")
-    return _make_name(m.group()), m.end()
 
 
 def parse_literal_string(buf: bytes, pos: int):
@@ -283,174 +284,107 @@ def parse_hex_string(buf: bytes, pos: int):
     return bytes.fromhex(hexs.decode("ascii")), end + 1
 
 
+def _stream(buf: bytes, d: dict, data_start: int,
+            resolve: Optional[Callable]):
+    """The stream whose body starts at data_start, d its dict
+    (generic.py:878-949)."""
+    length = d.get("/Length")
+    if isinstance(length, Ref):
+        length = resolve(length) if resolve else None
+    data_end = (data_start + length
+                if isinstance(length, int) and length >= 0 else -1)
+    if data_end < 0 or not _ENDSTREAM_NEAR.match(buf, data_end):
+        # no /Length, or a wrong one: recover by scanning for endstream
+        # (tolerant-endstream parity: generic.py:920-945)
+        data_end = buf.find(b"endstream", data_start)
+        if data_end < 0:
+            raise PdfError("stream without endstream")
+        while data_end > data_start and buf[data_end - 1] in b"\r\n":
+            data_end -= 1
+    em = _ENDSTREAM_NEAR.match(buf, data_end)
+    return (StreamObj(d, buf[data_start:data_end]),
+            em.end() if em else data_end + len(b"endstream"))
+
+
 def parse_dict(buf: bytes, pos: int, resolve: Optional[Callable] = None):
     """<< /K v ... >> , optionally followed by a stream body."""
     if buf[pos : pos + 2] != b"<<":
         raise PdfError(f"expected '<<' at {pos}")
-    pos += 2
-    d: dict = {}
-    nxt = _DICT_NEXT.match
-    n_buf = len(buf)
-    while True:
-        m = nxt(buf, pos)
-        if not m:  # neither '>>' nor a '/key' after the whitespace
-            if skip_ws(buf, pos) >= n_buf:
-                raise PdfError("unterminated dictionary")
-            raise PdfError(f"expected name at {pos}")
-        closing, rawkey, r1, r2, tok, nm, kw = m.group(
-            1, 2, 3, 4, 5, 6, 7)
-        if closing:  # '>>'
-            pos = m.end()
-            break
-        key = _make_name(rawkey)
-        # fused simple value (ref/number/name/keyword) from the same
-        # match; composite values fall through to parse_object
-        if r1 is not None:
-            val = Ref(int(r1), int(r2))
-            pos = m.end()
-        elif tok is not None:
-            if b"." in tok:
-                try:
-                    val = float(tok)
-                except ValueError:  # malformed real -> 0
-                    val = 0.0
-            else:
-                try:
-                    val = int(tok)
-                except ValueError:  # overflow -> 0
-                    val = 0
-            pos = m.end()
-        elif nm is not None:
-            val = _make_name(nm)
-            pos = m.end()
-        elif kw is not None:
-            val = _KEYWORD_VALUES[kw]
-            pos = m.end()
-        else:
-            val, pos = parse_object(buf, m.end(), resolve)
-        d.setdefault(key, val)  # duplicate keys: first wins, tolerated
-    # stream body? (generic.py:878-949)
-    save = pos
-    pos = skip_ws(buf, pos)
-    m = _STREAM_KW.match(buf, pos)
-    if not m:
-        return d, save
-    data_start = m.end()
-    length = d.get("/Length")
-    if isinstance(length, Ref):
-        length = resolve(length) if resolve else None
-    if isinstance(length, int) and length >= 0:
-        data_end = data_start + length
-        if not _ENDSTREAM_NEAR.match(buf, data_end):
-            # /Length is wrong: recover by scanning for endstream
-            # (tolerant-endstream parity: generic.py:920-945)
-            idx = buf.find(b"endstream", data_start)
-            if idx < 0:
-                raise PdfError("stream without endstream")
-            data_end = idx
-            while data_end > data_start and buf[data_end - 1] in b"\r\n":
-                data_end -= 1
-    else:
-        idx = buf.find(b"endstream", data_start)
-        if idx < 0:
-            raise PdfError("stream without endstream")
-        data_end = idx
-        while data_end > data_start and buf[data_end - 1] in b"\r\n":
-            data_end -= 1
-    raw = buf[data_start:data_end]
-    em = _ENDSTREAM_NEAR.match(buf, data_end)
-    return StreamObj(d, raw), (em.end() if em else data_end + len(b"endstream"))
-
-
-def parse_array(buf: bytes, pos: int, resolve: Optional[Callable] = None):
-    if buf[pos : pos + 1] != b"[":
-        raise PdfError(f"expected '[' at {pos}")
-    pos += 1
-    arr = []
-    nxt = _ARR_NEXT.match
-    n_buf = len(buf)
-    append = arr.append
-    while True:
-        m = nxt(buf, pos)  # always matches (possibly empty)
-        closing, r1, r2, tok, nm, kw = m.group(1, 2, 3, 4, 5, 6)
-        if closing:  # ']'
-            return arr, m.end()
-        # fused simple element from the same match (see _SIMPLE_VAL)
-        if r1 is not None:
-            append(Ref(int(r1), int(r2)))
-            pos = m.end()
-            continue
-        if tok is not None:
-            if b"." in tok:
-                try:
-                    v = float(tok)
-                except ValueError:  # malformed real -> 0
-                    v = 0.0
-            else:
-                try:
-                    v = int(tok)
-                except ValueError:  # overflow -> 0
-                    v = 0
-            append(v)
-            pos = m.end()
-            continue
-        if nm is not None:
-            append(_make_name(nm))
-            pos = m.end()
-            continue
-        if kw is not None:
-            append(_KEYWORD_VALUES[kw])
-            pos = m.end()
-            continue
-        pos = m.end()
-        if pos >= n_buf:
-            raise PdfError("unterminated array")
-        val, pos = parse_object(buf, pos, resolve)
-        append(val)
+    return parse_object(buf, pos, resolve)
 
 
 def parse_object(buf: bytes, pos: int, resolve: Optional[Callable] = None):
-    """The readObject dispatcher (parity: generic.py:143-227)."""
-    pos = skip_ws(buf, pos)
-    if pos >= len(buf):
-        raise PdfError("unexpected EOF")
-    c = buf[pos]
-    if c == 0x2F:  # /
-        return parse_name(buf, pos)
-    if c == 0x28:  # (
-        return parse_literal_string(buf, pos)
-    if c == 0x3C:  # <
-        if buf[pos : pos + 2] == b"<<":
-            return parse_dict(buf, pos, resolve)
-        return parse_hex_string(buf, pos)
-    if c == 0x5B:  # [
-        return parse_array(buf, pos, resolve)
-    if c == 0x74:  # t
-        if buf[pos : pos + 4] == b"true":
-            return True, pos + 4
-        raise PdfError(f"bad keyword at {pos}")
-    if c == 0x66:  # f
-        if buf[pos : pos + 5] == b"false":
-            return False, pos + 5
-        raise PdfError(f"bad keyword at {pos}")
-    if c == 0x6E:  # n
-        if buf[pos : pos + 4] == b"null":
-            return None, pos + 4
-        raise PdfError(f"bad keyword at {pos}")
-    if c in b"+-.0123456789":
-        m = _REF_OR_NUMBER.match(buf, pos)
-        if not m:
-            raise PdfError(f"expected number at {pos}")
-        if m.group(1) is not None:
-            return Ref(int(m.group(1)), int(m.group(2))), m.end()
-        tok = m.group(3)
-        if b"." in tok:
+    """The readObject dispatcher (parity: generic.py:143-227): the value
+    at pos and the offset after it. One loop reads every value; an
+    array or dict being read sits on an explicit stack with its pending
+    key, so nesting costs no Python frames."""
+    stack: list = []  # (container, pending key) of each enclosing one
+    cur = key = None  # the open container (None: a lone value), its key
+    in_dict = False
+    while True:
+        if in_dict:
+            m = _DICT_NEXT.match(buf, pos)
+            if not m:  # neither '>>' nor a '/key' after the whitespace
+                if skip_ws(buf, pos) >= len(buf):
+                    raise PdfError("unterminated dictionary")
+                raise PdfError(f"expected name at {pos}")
+            closing, rawkey, r1, r2, tok, nm, kw = m.group(
+                1, 2, 3, 4, 5, 6, 7)
+            if rawkey is not None:
+                key = _make_name(rawkey)
+        else:
+            m = _NEXT.match(buf, pos)  # always matches (possibly empty)
+            closing, r1, r2, tok, nm, kw = m.group(1, 2, 3, 4, 5, 6)
+        pos = m.end()
+        if nm is not None:
+            val = _make_name(nm)
+        elif r1 is not None:
             try:
-                return float(tok), m.end()
-            except ValueError:  # malformed real -> 0 (generic.py:396-399)
-                return 0.0, m.end()
-        try:
-            return int(tok), m.end()
-        except ValueError:  # overflow -> 0 (generic.py:423-428)
-            return 0, m.end()
-    raise PdfError(f"cannot dispatch byte {bytes([c])!r} at {pos}")
+                val = Ref(int(r1), int(r2))
+            except ValueError:  # past int()'s digit limit
+                raise PdfError("indirect reference number too long") from None
+        elif tok is not None:
+            val = _number(tok)
+        elif kw is not None:
+            val = _KEYWORD_VALUES[kw]
+        elif closing is not None:  # '>>' or ']'
+            if in_dict:  # a dict, or the stream whose body follows it
+                sm = _STREAM_KW.match(buf, pos)
+                if sm is None:
+                    val = cur
+                else:
+                    val, pos = _stream(buf, cur, sm.end(), resolve)
+            elif cur is None:
+                raise PdfError(f"cannot dispatch byte b']' at {pos - 1}")
+            else:
+                val = cur
+            cur, key = stack.pop()
+            in_dict = key is not None
+        else:  # not a simple value: dispatch on the first byte
+            c = buf[pos : pos + 1]
+            if c == b"(":
+                val, pos = parse_literal_string(buf, pos)
+            elif c == b"<" and buf[pos + 1 : pos + 2] != b"<":
+                val, pos = parse_hex_string(buf, pos)
+            elif c == b"<" or c == b"[":  # open a dict or an array
+                stack.append((cur, key))
+                in_dict = c == b"<"
+                cur = {} if in_dict else []
+                key = None
+                pos += 2 if in_dict else 1
+                continue
+            elif not c:
+                raise PdfError("unterminated array" if cur is not None
+                               and not in_dict else "unexpected EOF")
+            elif c in b"tfn":
+                raise PdfError(f"bad keyword at {pos}")
+            elif c in b"+-.0123456789":
+                raise PdfError(f"expected number at {pos}")
+            else:
+                raise PdfError(f"cannot dispatch byte {c!r} at {pos}")
+        if in_dict:
+            cur.setdefault(key, val)  # duplicate keys: first wins, tolerated
+        elif cur is not None:
+            cur.append(val)
+        else:
+            return val, pos

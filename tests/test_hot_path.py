@@ -250,9 +250,9 @@ def test_tokenize_literal_string_equals_parser(tok):
 def test_simple_strings_take_the_inline_tokens():
     assert _SCAN.match(b" <00410042>").lastgroup == "hexstr"
     assert _SCAN.match(b" (plain)").lastgroup == "litstr"
-    assert _SCAN.match(b" <0041 0042>").lastgroup == "hex"
-    assert _SCAN.match(b" (a\\)b)").lastgroup == "lit"
-    assert _SCAN.match(b" <<").lastgroup == "dict"
+    assert _SCAN.match(b" <0041 0042>").lastgroup == "obj"
+    assert _SCAN.match(b" (a\\)b)").lastgroup == "obj"
+    assert _SCAN.match(b" <<").lastgroup == "obj"
 
 
 # --- tokenizer: one-match flat arrays == the COS array parser -----------------
@@ -329,7 +329,7 @@ def _typed(v):
 @settings(max_examples=400, deadline=None)
 def test_flat_array_equals_parse_array(case):
     arr, flat = case
-    want, end = cos.parse_array(arr, 0)
+    want, end = cos.parse_object(arr, 0)
     assert end == len(arr)
     ops = tokenize(arr + b" TJ")
     assert ops == [([want], "TJ")]
@@ -338,11 +338,11 @@ def test_flat_array_equals_parse_array(case):
 
 
 def test_array_with_a_ref_takes_the_per_token_path():
-    assert _SCAN.match(b"[1 0 R]").lastgroup == "arr"
+    assert _SCAN.match(b"[1 0 R]").lastgroup == "obj"
 
 
 def test_array_with_a_ref_tokenizes_like_parse_array():
-    want, _ = cos.parse_array(b"[1 0 R]", 0)
+    want, _ = cos.parse_object(b"[1 0 R]", 0)
     assert tokenize(b"[1 0 R] TJ") == [([want], "TJ")]
 
 
@@ -409,7 +409,7 @@ def test_tj_chunk_equals_per_element_as_text_join(elements, font):
     assert res["error"] is None
     encoding = parse_cmap(_TJ_CMAP) if font == b"/F2" else "/WinAnsiEncoding"
     parts = []
-    for el in cos.parse_array(arr, 0)[0]:
+    for el in cos.parse_object(arr, 0)[0]:
         if isinstance(el, (bytes, str)) and not isinstance(el, cos.Name):
             parts.append(fonts.as_text(el, encoding))
         elif (isinstance(el, (int, float)) and not isinstance(el, bool)

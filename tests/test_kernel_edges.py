@@ -322,8 +322,59 @@ def test_dict_scanner_linear_on_ws_bomb():
         cos.parse_dict(bomb, 0)
     arr_bomb = b"[" + b" " * 4000 + b"\x07]"
     with pytest.raises(cos.PdfError):
-        cos.parse_array(arr_bomb, 0)
+        cos.parse_object(arr_bomb, 0)
     assert time.time() - t0 < 1.0  # exponential blowup would hang
+
+
+def test_deep_nesting_reads_without_recursion():
+    """parse_object nests on an explicit stack: 100,000 levels of
+    arrays or of dicts read under the default recursion limit."""
+    depth = 100_000
+    arr = b"[" * depth + b"]" * depth
+    v, end = cos.parse_object(arr, 0)
+    assert end == len(arr)
+    for _ in range(depth - 1):
+        (v,) = v
+    assert v == []
+    dct = b"<< /a " * depth + b"1" + b" >>" * depth
+    v, end = cos.parse_object(dct, 0)
+    assert end == len(dct)
+    for _ in range(depth):
+        v = v["/a"]
+    assert v == 1
+
+
+def test_deeply_nested_content_keeps_every_page():
+    """5,000 nested arrays in page 2's content are one TJ operand; the
+    document is not quarantined and pages 1 and 3 keep their text."""
+    pdf = pdfgen.simple_pdf([
+        b"BT /F1 12 Tf (one) Tj ET",
+        b"BT /F1 12 Tf " + b"[" * 5000 + b"]" * 5000 + b" TJ ET",
+        b"BT /F1 12 Tf (three) Tj ET",
+    ], fonts={b"/F1": pdfgen.FONT_WINANSI})
+    res = extract_doc(pdf)
+    assert res["error"] is None and res["n_pages"] == 3
+    assert page_text(res["spans"], 0) == "one\n"
+    assert page_text(res["spans"], 2) == "three\n"
+
+
+def test_deeply_nested_font_dict_extracts():
+    deep = b"<< /a " * 3000 + b"1" + b" >>" * 3000
+    font = pdfgen.FONT_WINANSI[:-2] + b" /Deep " + deep + b" >>"
+    res = extract_doc(pdfgen.simple_pdf([b"BT /F1 12 Tf (deep font) Tj ET"],
+                                        fonts={b"/F1": font}))
+    assert res["error"] is None
+    assert page_text(res["spans"], 0) == "deep font\n"
+
+
+def test_ref_past_the_digit_limit_is_a_pdf_error():
+    """int() refuses more than 4,300 digits; a Ref that long is a
+    PdfError, so the tokenizer stops there like at any bad operand."""
+    from sparkpdf.kernels.content import tokenize
+
+    with pytest.raises(cos.PdfError):
+        cos.parse_object(b"9" * 5000 + b" 0 R", 0)
+    assert tokenize(b"(a) Tj [" + b"9" * 5000 + b" 0 R] TJ") == [([b"a"], "Tj")]
 
 
 def test_png_pixel_decode_all_filters():
