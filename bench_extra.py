@@ -20,6 +20,7 @@ Usage: python bench_extra.py <experiment> [args]   (--help for flags)
   line_shuffle       line-dedup join-back shuffle bytes per line
   verify_shuffle     dup_clusters verify: full arrays vs bounded signature
   dedup_volume       minhash_lsh_pairs + overflow at replicated volumes
+  kernel_ab <rev>    extract_doc in-process A/B: this tree vs <rev>'s sparkpdf/
 """
 
 from __future__ import annotations
@@ -1349,6 +1350,96 @@ def exp_dedup_volume(argv):
         }), flush=True)
     spark.stop()
 
+# docs per timed chunk: a chunk takes ~20-50 ms of kernel time
+KERNEL_AB_CHUNK = {"pdf_paged": 4, "pdf_text": 100}
+
+
+def _kernel_ab_rounds(trees: dict, docs: list, size: int, rounds: int):
+    """Per-chunk new/parent ratios and per-side ms/doc (see kernel_ab)."""
+
+    def run(fn, chunk):
+        best = None
+        for _ in range(3):
+            t0 = time.process_time()
+            for payload in chunk:
+                fn(payload)
+            dt = time.process_time() - t0
+            best = dt if best is None else min(best, dt)
+        return best
+
+    for fn in trees.values():  # warm: imports, caches
+        for payload in docs:
+            fn(payload)
+    chunks = [docs[i:i + size] for i in range(0, len(docs), size)]
+    ratios = []
+    ms_doc = {name: [] for name in trees}
+    for r in range(rounds):
+        for c, chunk in enumerate(chunks):
+            order = ["new", "parent"] if (r + c) % 2 == 0 else ["parent", "new"]
+            t = {name: run(trees[name], chunk) for name in order}
+            ratios.append(t["new"] / t["parent"])
+            for name in t:
+                ms_doc[name].append(1000 * t[name] / len(chunk))
+    return ratios, ms_doc
+
+
+def exp_kernel_ab(argv):
+    """In-process kernel A/B: extract_doc of this tree against the
+    sparkpdf/ of a git revision, exported to a scratch directory under
+    another package name so one process imports both trees. Runs
+    perfbench's cached inputs in chunks; each round interleaves the
+    trees chunk by chunk, alternating which runs first, and a chunk's
+    time is the min of 3 process_time runs. Prints the new/parent
+    median and quartiles over the chunk ratios, and ms/doc per side."""
+    import importlib
+    import io
+    import statistics
+    import subprocess
+    import tarfile
+    import tempfile
+
+    from perfbench.inputs import Inputs
+    from sparkpdf.kernels.extract import extract_doc
+
+    ap = argparse.ArgumentParser(prog="bench_extra.py kernel_ab")
+    ap.add_argument("rev", help="the parent revision, e.g. HEAD~1")
+    ap.add_argument("--workload", default="pdf_paged",
+                    choices=sorted(KERNEL_AB_CHUNK))
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--rounds", type=int, default=5)
+    args = ap.parse_args(argv)
+
+    root = os.path.dirname(os.path.abspath(__file__))
+    docs = [payload for _, payload, _ in Inputs(
+        args.workload, args.seed, os.path.join(root, ".bench_work")
+    ).ensure().payloads()]
+    size = KERNEL_AB_CHUNK[args.workload]
+    archive = subprocess.run(["git", "archive", args.rev, "sparkpdf"],
+                             cwd=root, capture_output=True, check=True).stdout
+    # the parent tree imports lazily, so its directory stays for the run
+    with tempfile.TemporaryDirectory() as tmp:
+        with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+            tar.extractall(tmp, filter="data")
+        os.rename(os.path.join(tmp, "sparkpdf"),
+                  os.path.join(tmp, "sparkpdf_ab_parent"))
+        sys.path.insert(0, tmp)
+        trees = {"new": extract_doc, "parent": importlib.import_module(
+            "sparkpdf_ab_parent.kernels.extract").extract_doc}
+        ratios, ms_doc = _kernel_ab_rounds(trees, docs, size, args.rounds)
+        sys.path.remove(tmp)
+    q1, med, q3 = statistics.quantiles(ratios, n=4)
+    out = {"workload": args.workload, "seed": args.seed, "rev": args.rev,
+           "chunks": len(ratios), "docs_per_chunk": size,
+           "new_over_parent": round(med, 3),
+           "quartiles": [round(q1, 3), round(q3, 3)],
+           "ms_per_doc": {k: round(statistics.median(v), 3)
+                          for k, v in ms_doc.items()}}
+    print(f"kernel_ab {args.workload} seed {args.seed} vs {args.rev}: "
+          f"new/parent {med:.3f} (quartiles {q1:.3f}-{q3:.3f}) over "
+          f"{len(ratios)} chunks of {size}; ms/doc parent "
+          f"{out['ms_per_doc']['parent']} new {out['ms_per_doc']['new']}")
+    print(json.dumps(out))
+
 
 EXPERIMENTS = {
     "pdf": exp_pdf, "web": exp_web, "queries": exp_queries,
@@ -1357,7 +1448,7 @@ EXPERIMENTS = {
     "token_shuffle": exp_token_shuffle,
     "substring_shuffle": exp_substring_shuffle,
     "line_shuffle": exp_line_shuffle, "verify_shuffle": exp_verify_shuffle,
-    "dedup_volume": exp_dedup_volume,
+    "dedup_volume": exp_dedup_volume, "kernel_ab": exp_kernel_ab,
 }
 
 

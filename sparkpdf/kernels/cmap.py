@@ -15,6 +15,7 @@ toUnicode.py:265-461). Semantics matched to toUnicode.code2text
 from __future__ import annotations
 
 import re
+from binascii import unhexlify
 from typing import Dict, List, Optional, Tuple, Union
 
 from .cos import PdfError, parse_object, skip_ws
@@ -33,6 +34,11 @@ _MEMO_MAX = 1 << 14
 # without limit
 _TEXT_KEY_MAX = 64
 _TEXT_MEMO_MAX = 1 << 13
+# the hex-digit memo of content-stream hex strings (`hex2text`) has the
+# same bounds: keys of at most 2 * _TEXT_KEY_MAX digits (the same
+# strings), texts of at most _TEXT_KEY_MAX characters, at most
+# _TEXT_MEMO_MAX entries (< 5 MB)
+_HEX_KEY_MAX = 2 * _TEXT_KEY_MAX
 
 
 class CMap:
@@ -42,10 +48,13 @@ class CMap:
     (the longest codespace or bfrange code), so `code2text` memoises
     `_match` on that window: a font's glyph codes repeat across every
     string and page that uses it. Short whole strings are memoised
-    too (`_texts`), since the decode is a pure function of the bytes."""
+    too (`_texts`), since the decode is a pure function of the bytes,
+    and so are the hex digits of a content stream's hex strings
+    (`_hex_texts`), which the span extractor reads without unhexlifying
+    them first."""
 
     __slots__ = ("fchars", "franges", "codespace", "codelengths",
-                 "_memo", "_width", "_texts")
+                 "_memo", "_width", "_texts", "_hex_texts")
 
     def __init__(self):
         self.fchars: Dict[bytes, bytes] = {}
@@ -56,6 +65,19 @@ class CMap:
         self._memo: Optional[Dict[bytes, Tuple[bytes, int]]] = None
         self._width = 0
         self._texts: Dict[bytes, str] = {}
+        self._hex_texts: Dict[bytes, str] = {}
+
+    def hex2text(self, digits: bytes) -> str:
+        """code2text of the bytes an even-length run of hex digits
+        spells, memoised under the digits."""
+        text = self._hex_texts.get(digits)
+        if text is not None:
+            return text
+        text = self._decode(unhexlify(digits))
+        if (len(digits) <= _HEX_KEY_MAX and len(text) <= _TEXT_KEY_MAX
+                and len(self._hex_texts) < _TEXT_MEMO_MAX):
+            self._hex_texts[digits] = text
+        return text
 
     def code2text(self, code: bytes) -> str:
         text = self._texts.get(code)

@@ -13,10 +13,9 @@ import re
 from binascii import unhexlify
 from typing import List, Tuple
 
-from .cos import (Name, PdfError, _make_name, _number, make_string,
-                  parse_object, skip_ws)
+from .cos import (_WS_RUN, Name, PdfError, _make_name, _number,
+                  make_string, parse_object, skip_ws)
 
-_OPERATOR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 # the reference ends an inline image only at "EI" + whitespace + "Q"
 # (generic.py:1262-1276); raw "EI" bytes inside the data are skipped
 # unless that exact pattern follows. Fallback for images not wrapped in
@@ -27,6 +26,17 @@ _EI_WS = re.compile(rb"[\x00\t\n\x0c\r ]EI(?=[\x00\t\n\x0c\r ]|$)")
 INLINE_IMAGE_OP = "INLINE IMAGE"
 
 
+# The token rules, one copy each. Every piece is possessive: a token
+# either matches whole or not at all, so it splits the bytes exactly as
+# the per-token scan does wherever it is used.
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"  # neither whitespace nor delimiter
+_NUM = rb"[+-]?+(?:\d++\.\d*+|\.\d++|\d++)"
+_NAME = rb"/" + _REGULAR + rb"*+"
+_OP = rb"[A-Za-z'\"]" + _REGULAR + rb"*+"
+_HEX_DIGITS = rb"(?:[0-9A-Fa-f]{2})*+"  # even length: parse_hex_string's value
+_LIT_BODY = rb"[^()\\]*+"  # no nesting or escapes: the bytes verbatim
+_OPERATOR = re.compile(_REGULAR + rb"+")  # any token of regular bytes
+
 # A flat array: only non-empty even-length hex strings, numbers and
 # escape-free non-empty literal strings, whitespace between them (the
 # kerned TJ arrays of real text). Each element is atomic and every
@@ -35,8 +45,7 @@ INLINE_IMAGE_OP = "INLINE IMAGE"
 # spaced hex) fails the group and goes to cos.parse_object.
 _FLAT = (
     rb"\[(?:[\x00\t\n\x0c\r ]*+"
-    rb"(?><(?:[0-9A-Fa-f]{2})++>|\([^()\\]++\)"
-    rb"|[+-]?+(?:\d++\.\d*+|\.\d++|\d++)))*+"
+    rb"(?><(?:[0-9A-Fa-f]{2})++>|\([^()\\]++\)|" + _NUM + rb"))*+"
     rb"[\x00\t\n\x0c\r ]*+\]"
 )
 # one flat-array element per match: (hex digits, literal body, real, int)
@@ -45,14 +54,19 @@ _FLAT_ITEM = re.compile(
     rb"|([+-]?+(?:\d++\.\d*+|\.\d++))|([+-]?+\d++)"
 )
 
+# NB the leading whitespace/comment run BACKTRACKS (unlike cos._WS_RUN):
+# at the end of the data, a trailing comment gives its last byte back
+# as one more token (`% end` ends in an operator `d`). tokenize has
+# always read it so, and the span extractor's scanner leaves such input
+# to this one.
 _SCAN = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:"
-    rb"(?P<hexstr><(?:[0-9A-Fa-f]{2})*>)"
-    rb"|(?P<litstr>\([^()\\]*\))"
-    rb"|(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
-    rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<op>[A-Za-z'\"][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
+    rb"(?P<hexstr><" + _HEX_DIGITS + rb">)"
+    rb"|(?P<litstr>\(" + _LIT_BODY + rb"\))"
+    rb"|(?P<num>" + _NUM + rb")"
+    rb"|(?P<name>" + _NAME + rb")"
+    rb"|(?P<op>" + _OP + rb")"
     rb"|(?P<flat>" + _FLAT + rb")"
     rb"|(?P<obj>[(\[<])"
     rb"|(?P<close>\])"
@@ -61,17 +75,64 @@ _SCAN = re.compile(
     rb")"
 )
 
+# The span extractor's whole-operation scanner, tried only where no
+# operand is pending. One match takes an operation of a common shape:
+#   skip   numbers, then any operator but the eight the extractor reads
+#          (Tf Tj TJ T* ' " Do BI): it builds no operands
+#   tf     /name <number> Tf
+#   tjhex  <even hex> Tj        tjlit  (escape-free literal) Tj
+#   tjarr  <flat array> TJ      tstar  T*
+# Any other shape fails the match and goes to _SCAN token by token.
+_READ = rb"(?:T[fjJ*]|['\"]|Do|BI)(?!" + _REGULAR + rb")"
+_OPERATION = re.compile(
+    _WS_RUN + rb"(?:"
+    rb"(?P<skip>(?:(?>" + _NUM + rb")" + _WS_RUN + rb")*+(?!" + _READ + rb")"
+    + _OP + rb")"
+    rb"|(?P<tjarr>" + _FLAT + rb")" + _WS_RUN + rb"TJ"
+    rb"|(?P<tf>" + _NAME + rb")" + _WS_RUN + rb"(?>" + _NUM + rb")" + _WS_RUN
+    + rb"Tf"
+    rb"|<(?P<tjhex>" + _HEX_DIGITS + rb")>" + _WS_RUN + rb"Tj"
+    rb"|\((?P<tjlit>" + _LIT_BODY + rb")\)" + _WS_RUN + rb"Tj"
+    rb"|(?P<tstar>T\*)"
+    rb")(?!" + _REGULAR + rb")"
+)
+
+
+def _operand(data: bytes, m):
+    """The operand that the _SCAN match `m` of an operand group reads,
+    and the offset after it: tokenize's conversions, which the span
+    extractor's per-token path shares. Raises PdfError where the
+    tokenizer stops (an unreadable string, array or dict)."""
+    g = m.lastgroup
+    if g == "num":
+        return _number(m.group(g)), m.end()
+    if g == "flat":
+        start, end = m.span(g)
+        try:
+            return [unhexlify(h) if h else make_string(lit) if lit
+                    else float(real) if real else int(i)
+                    for h, lit, real, i in _FLAT_ITEM.findall(
+                        data, start + 1, end - 1)], end
+        except ValueError:  # an int past the digit limit
+            return parse_object(data, start)
+    if g == "name":
+        return _make_name(m.group(g)), m.end()
+    if g == "hexstr":
+        return bytes.fromhex(m.group(g)[1:-1].decode()), m.end()
+    if g == "litstr":
+        return make_string(m.group(g)[1:-1]), m.end()
+    return parse_object(data, m.start(g))  # any other string, array or dict
+
 
 def tokenize(data: bytes) -> List[Tuple[list, str]]:
     """Decoded content bytes -> ordered [(operands, operator)].
 
-    Single combined-scanner regex (one C-level match per token, ~1.2-
-    1.4x the dispatch-per-token version; one match and one findall per
-    flat array, see _FLAT); semantics identical to the
-    reference tokenizer (hypothesis-tested): alpha tokens are operators,
-    and every other string, array and dict is read whole by
-    cos.parse_object, as readObject does (generic.py:278-330), so
-    `[1 0 R]` is one Ref."""
+    Single combined-scanner regex (one C-level match per token; one
+    match and one findall per flat array, see _FLAT); semantics
+    identical to the reference tokenizer (hypothesis-tested): alpha
+    tokens are operators, and every other string, array and dict is
+    read whole by cos.parse_object, as readObject does
+    (generic.py:278-330), so `[1 0 R]` is one Ref."""
     ops: List[Tuple[list, str]] = []
     operands: list = []
     pos = 0
@@ -83,11 +144,9 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
         if m is None:  # every alternative consumes a byte
             break
         g = m.lastgroup
-        pos = m.end()
-        if g == "num":
-            operands.append(_number(m.group("num")))
-        elif g == "op":
-            tok = m.group("op")
+        if g == "op":
+            tok = m.group(g)
+            pos = m.end()
             if tok == b"BI":
                 try:
                     settings, img, pos = _read_inline_image(data, pos)
@@ -96,35 +155,20 @@ def tokenize(data: bytes) -> List[Tuple[list, str]]:
                 append_op(
                     ([{"settings": settings, "data": img}], INLINE_IMAGE_OP)
                 )
-                operands = []
             else:
                 append_op((operands, tok.decode("latin-1")))
-                operands = []
-        elif g == "flat":
+            operands = []
+        elif g == "close":  # stray ']': wraps the operands so far
+            operands = [operands]
+            pos = m.end()
+        elif g == "nul" or g == "bad":
+            break  # NUL terminates (generic.py:1196); "bad" bytes stop too
+        else:
             try:
-                v = [unhexlify(h) if h else make_string(lit) if lit
-                     else float(real) if real else int(i)
-                     for h, lit, real, i in _FLAT_ITEM.findall(
-                         data, m.start("flat") + 1, pos - 1)]
-            except ValueError:  # an int past the digit limit
-                v, pos = parse_object(data, m.start("flat"))
-            operands.append(v)
-        elif g == "name":
-            operands.append(_make_name(m.group("name")))
-        elif g == "hexstr":  # even-length pure hex: parse_hex_string's value
-            operands.append(bytes.fromhex(m.group(g)[1:-1].decode()))
-        elif g == "litstr":  # no nesting or escapes: the bytes verbatim
-            operands.append(make_string(m.group(g)[1:-1]))
-        elif g == "obj":  # any other string, array or dict
-            try:
-                v, pos = parse_object(data, m.start("obj"))
+                v, pos = _operand(data, m)
             except PdfError:
                 break  # tolerate trailing garbage
             operands.append(v)
-        elif g == "close":  # stray ']': wraps the operands so far
-            operands = [operands]
-        else:  # NUL terminates (generic.py:1196); "bad" bytes stop too
-            break
     return ops
 
 

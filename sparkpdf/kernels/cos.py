@@ -321,6 +321,11 @@ def parse_object(buf: bytes, pos: int, resolve: Optional[Callable] = None):
     stack: list = []  # (container, pending key) of each enclosing one
     cur = key = None  # the open container (None: a lone value), its key
     in_dict = False
+    if buf.startswith((b"<<", b"["), pos):  # open a top-level container
+        stack.append((None, None))
+        in_dict = buf[pos] == 0x3C
+        cur = {} if in_dict else []
+        pos += 2 if in_dict else 1
     while True:
         if in_dict:
             m = _DICT_NEXT.match(buf, pos)

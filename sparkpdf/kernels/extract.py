@@ -26,10 +26,15 @@ reference ignores Do). Each span carries the op index within the page
 
 from __future__ import annotations
 
+from binascii import unhexlify
 from typing import Any, Dict, List, Optional
 
-from .content import INLINE_IMAGE_OP, tokenize
-from .cos import PdfError
+from .cmap import CMap
+# tokenize is re-exported: perfbench's kernel replay wraps the name here
+from .content import tokenize  # noqa: F401
+from .content import (_FLAT_ITEM, _OPERATION, _SCAN, _operand,
+                      _read_inline_image)
+from .cos import PdfError, make_string
 from .document import PdfDocument
 from .fonts import as_text, resolve_font_encoding
 
@@ -38,34 +43,126 @@ WORD_SPACE_LIMIT = -80  # kerning threshold, _page.py:787
 INLINE_MEDIA_REF = "__inline__"
 
 
+def _hex_text(encoding):
+    """hex digits -> their string's text under `encoding`: the CMap's
+    hex-digit memo when the font has one, else as_text."""
+    if type(encoding) is CMap:
+        return encoding.hex2text
+    return lambda digits: as_text(unhexlify(digits), encoding)
+
+
+def _flat_tj(data: bytes, start: int, end: int, encoding, hex_text) -> \
+        Optional[str]:
+    """The TJ chunk of the flat array whose elements lie in
+    data[start:end], straight from the _FLAT_ITEM matches. None when an
+    int is past int()'s digit limit; the per-token path then reads the
+    array as tokenize does."""
+    parts: List[str] = []
+    add = parts.append
+    try:
+        for h, lit, real, i in _FLAT_ITEM.findall(data, start, end):
+            if h:
+                add(hex_text(h))
+            elif lit:
+                add(as_text(make_string(lit), encoding))
+            elif (float(real) if real else int(i)) < WORD_SPACE_LIMIT:
+                add(" ")
+    except ValueError:
+        return None
+    return "".join(parts) + "\n"
+
+
 def extract_page_spans(doc: PdfDocument, page: dict, page_no: int) -> List[dict]:
-    """One page -> ordered span dicts (kind, text, media_ref, op_idx)."""
+    """One page -> ordered span dicts (kind, text, media_ref, op_idx).
+
+    Reads the content stream itself, in tokenize's order. Where no
+    operand is pending, one content._OPERATION match takes a whole
+    operation of a common shape: an operator the extractor ignores
+    costs that match and one op_idx step, and a flat TJ array is shown
+    straight from its element matches. Every other token goes through
+    tokenize's own scanner and operand conversions (content._SCAN,
+    content._operand), so the spans, op_idx included, equal the
+    tokenize-based loop (testing.oracles.tokenize_page_spans,
+    differential-tested)."""
     data = doc.page_contents(page)
     spans: List[dict] = []
     if not data:
         return spans
     encoding = None  # Tj-before-Tf falls back to StandardEncoding
-    enc_cache: Dict[str, Any] = {}
-    for op_idx, (operands, operator) in enumerate(tokenize(data)):
+    hex_text = _hex_text(encoding)
+    enc_cache: Dict[str, Any] = {}  # font name -> (encoding, hex_text)
+    operands: list = []
+    op_idx = 0
+    pos = 0
+    n = len(data)
+    operation = _OPERATION.match
+    scan = _SCAN.match
+    while pos < n:
+        op = None  # an operator left to the dispatch below
         chunk: Optional[str] = None
-        if operator == "Tf":
+        m = None if operands else operation(data, pos)
+        if m is not None:
+            g = m.lastgroup
+            if g == "skip":
+                op_idx += 1
+                pos = m.end()
+                continue
+            if g == "tjarr":
+                start, end = m.span(g)
+                chunk = _flat_tj(data, start + 1, end - 1, encoding, hex_text)
+                if chunk is None:
+                    m = None  # read it token by token
+            elif g == "tf":
+                op = b"Tf"
+                operands = [m.group(g).decode("utf-8", "surrogateescape")]
+            elif g == "tjhex":
+                chunk = hex_text(m.group(g)) + "\n"
+            elif g == "tjlit":
+                chunk = as_text(make_string(m.group(g)), encoding) + "\n"
+            else:  # T*
+                chunk = "\n"
+        if m is None:
+            m = scan(data, pos)
+            if m is None:  # every alternative consumes a byte
+                break
+            g = m.lastgroup
+            if g == "op":
+                op = m.group(g)
+            elif g == "close":  # stray ']': wraps the operands so far
+                operands = [operands]
+                pos = m.end()
+                continue
+            elif g == "nul" or g == "bad":
+                break
+            else:
+                try:
+                    v, pos = _operand(data, m)
+                except PdfError:
+                    break
+                operands.append(v)
+                continue
+        pos = m.end()
+        if op is None:
+            pass
+        elif op == b"Tf":
             if operands:
                 fname = str(operands[0])
                 if fname not in enc_cache:
-                    enc_cache[fname] = resolve_font_encoding(doc, page, fname)
-                encoding = enc_cache[fname]
-        elif operator == "Tj":
+                    enc = resolve_font_encoding(doc, page, fname)
+                    enc_cache[fname] = enc, _hex_text(enc)
+                encoding, hex_text = enc_cache[fname]
+        elif op == b"Tj":
             if operands:
                 chunk = as_text(operands[0], encoding) + "\n"
-        elif operator == "T*":
+        elif op == b"T*":
             chunk = "\n"
-        elif operator == "'":
+        elif op == b"'":
             if operands:
                 chunk = "\n" + as_text(operands[0], encoding)
-        elif operator == '"':
+        elif op == b'"':
             if len(operands) >= 3:
                 chunk = "\n" + as_text(operands[2], encoding)
-        elif operator == "TJ":
+        elif op == b"TJ":
             if operands and isinstance(operands[0], list):
                 parts: List[str] = []
                 add = parts.append
@@ -76,7 +173,7 @@ def extract_page_spans(doc: PdfDocument, page: dict, page_no: int) -> List[dict]
                     elif (t is int or t is float) and el < WORD_SPACE_LIMIT:
                         add(" ")
                 chunk = "".join(parts) + "\n"
-        elif operator == "Do":
+        elif op == b"Do":
             if operands:
                 name = str(operands[0])
                 spans.append(
@@ -87,7 +184,11 @@ def extract_page_spans(doc: PdfDocument, page: dict, page_no: int) -> List[dict]
                         "op_idx": op_idx,
                     }
                 )
-        elif operator == INLINE_IMAGE_OP:
+        elif op == b"BI":
+            try:
+                _, _, pos = _read_inline_image(data, pos)
+            except PdfError:
+                break
             spans.append(
                 {
                     "kind": "media_ref",
@@ -100,6 +201,8 @@ def extract_page_spans(doc: PdfDocument, page: dict, page_no: int) -> List[dict]
             spans.append(
                 {"kind": "text", "text": chunk, "media_ref": None, "op_idx": op_idx}
             )
+        operands = []
+        op_idx += 1
     return spans
 
 

@@ -102,41 +102,69 @@ def _apply_predictor(data: bytes, parms: Optional[dict]) -> bytes:
     return rows.astype(np.uint8).tobytes()
 
 
+# codes extracted per numpy step at most: bounds the temporaries of a
+# run at 12 bits, which lasts until a CLEAR or the end of the data
+_LZW_RUN_MAX = 4096
+
+
 def lzw_decode(data: bytes, parms: Optional[dict]) -> bytes:
     """Variable-width LZW, 9->12-bit codes, CLEAR=256 STOP=257
     (parity: filters.py:204-293); fresh implementation. A code never
     spans more than 3 bytes, so each is one shift and mask of the
-    24-bit big-endian window starting at its first byte."""
-    d = np.frombuffer(data + b"\0\0", dtype=np.uint8).astype(np.uint32)
-    windows = memoryview((d[:-2] << 16) | (d[1:-1] << 8) | d[2:])
+    24-bit big-endian window starting at its first byte. The width
+    changes only at a known table size, so each run of same-width codes
+    is extracted in one numpy step; a run ends at the next width bump,
+    CLEAR or STOP, whichever comes first, and the table loop walks it."""
+    buf = np.frombuffer(data + b"\0\0", dtype=np.uint8)
     nbits = 8 * len(data)
     table = [bytes([i]) for i in range(256)] + [b"", b""]
+    grow = table.append
     out = []
+    add = out.append
     width = 9
     prev: Optional[bytes] = None
     pos = 0  # bit offset of the next code
-    while pos + width <= nbits:
-        code = (windows[pos >> 3] >> (24 - width - (pos & 7))) & (
-            (1 << width) - 1)
-        pos += width
-        if code == 256:  # CLEARDICT
-            table = table[:258]
+    while True:
+        # codes left at this width: the first after a start or CLEAR
+        # adds no table entry, every later one adds one
+        count = min((nbits - pos) // width, _LZW_RUN_MAX)
+        if width < 12:
+            count = min(count, (1 << width) - 1 - len(table) + (prev is None))
+        if count <= 0:
+            break
+        bit = pos & 7
+        run = buf[pos >> 3:((pos + count * width - 1) >> 3) + 3].astype(np.int64)
+        at = np.arange(bit, bit + count * width, width)
+        first = at >> 3  # each code's first byte in `run`
+        codes = (((run[first] << 16) | (run[first + 1] << 8) | run[first + 2])
+                 >> (24 - width - (at & 7))) & ((1 << width) - 1)
+        control = np.flatnonzero((codes >> 1) == 128)  # CLEAR or STOP
+        stop = int(control[0]) if control.size else count
+        walk = iter(codes[:stop].tolist())
+        if prev is None and stop:
+            code = next(walk)
+            if code >= 258:
+                raise PdfError(f"LZW code {code} before any table entry")
+            prev = table[code]
+            add(prev)
+        for code in walk:
+            if code < len(table):
+                entry = table[code]
+                grow(prev + entry[:1])
+            else:
+                entry = prev + prev[:1]
+                grow(entry)
+            add(entry)
+            prev = entry
+        pos += stop * width
+        if stop < count:
+            if codes[stop] == 257:  # STOP
+                break
+            del table[258:]  # CLEARDICT
+            pos += width
             width = 9
             prev = None
-            continue
-        if code == 257:  # STOP
-            break
-        if prev is None:
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        else:
-            entry = prev + prev[:1]
-            table.append(entry)
-        out.append(entry)
-        prev = entry
-        if len(table) >= (1 << width) - 1 and width < 12:
+        elif len(table) >= (1 << width) - 1 and width < 12:
             width += 1
     return _apply_predictor(b"".join(out), parms)
 

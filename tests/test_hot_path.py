@@ -5,10 +5,15 @@
 * the tokenizer's inline string tokens equal the string parsers, and
   its one-match flat arrays equal the COS array parser;
 * a TJ chunk equals the per-element as_text join;
+* the span extractor's own page loop equals the tokenize-based loop
+  (testing.oracles) on spans and errors, in one pass over the page;
+  its hex-digit CMap memo is bounded;
 * every fixture's extract_doc output matches its golden digest;
 * the run-wise Up predictor equals a per-row PNG unfilter, drops a
   trailing partial row and rejects unknown filter types;
-* LZW round-trips across its width bumps and clear codes;
+* LZW round-trips across its width bumps and clear codes, its run-wise
+  code extraction equals the per-code decoder, and a bad first code is
+  a page-level error;
 * a document's pages share one compiled ToUnicode CMap;
 * the worker's zip-directory hook re-reads only changed archives, and
   every worker has it, RDD-path ones included;
@@ -21,19 +26,22 @@ import os
 import random
 import subprocess
 import sys
+import time
 import zipfile
 import zipimport
+from unittest import mock
 
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from sparkpdf.kernels import cmap, cos, filters, fonts
 from sparkpdf.kernels.cmap import _shift_be, parse_cmap
-from sparkpdf.kernels.content import _SCAN, tokenize
+from sparkpdf.kernels import extract
+from sparkpdf.kernels.content import _OPERATION, _SCAN, tokenize
 from sparkpdf.kernels.extract import WORD_SPACE_LIMIT, extract_doc
 from sparkpdf import worker_daemon
 from sparkpdf.operators import _kernel
-from sparkpdf.testing import pdfgen
+from sparkpdf.testing import oracles, pdfgen
 from sparkpdf.testing.fixtures import doc_text
 from sparkpdf.worker_daemon import _invalidate_if_changed
 
@@ -418,6 +426,112 @@ def test_tj_chunk_equals_per_element_as_text_join(elements, font):
     assert [s["text"] for s in res["spans"]] == ["".join(parts) + "\n"]
 
 
+# --- span extractor: whole-operation scanner == the tokenize-based loop ------
+
+def _extract_both(content: bytes):
+    """extract_doc of a two-font page, with the extractor's own page
+    loop and with the tokenize-based oracle loop."""
+    pdf = _two_font_pdf(content)
+    got = extract_doc(pdf, with_page_meta=True)
+    with mock.patch.object(extract, "extract_page_spans",
+                           oracles.tokenize_page_spans):
+        want = extract_doc(pdf, with_page_meta=True)
+    return got, want
+
+
+_content_token = st.one_of(
+    st.integers(-500, 500).map(lambda i: b"%d" % i),
+    st.sampled_from([b"1.5", b"-.5", b"1.", b"1.2.3", b"12abc", b"+.", b"+3",
+                     b"-", b"007"]),
+    st.sampled_from([b"/F1", b"/F2", b"/F3", b"/Im1", b"/"]),
+    st.sampled_from([b"Tf", b"Tj", b"TJ", b"T*", b"'", b'"', b"Do", b"BI",
+                     b"Td", b"TD", b"Tm", b"cm", b"re", b"BT", b"ET", b"q",
+                     b"Q", b"rg", b"true", b"null", b"ID", b"EI", b"Tjx",
+                     b"T", b"TJ'"]),
+    _hex_token(),
+    _literal_token,
+    _array().map(lambda case: case[0]),
+    st.sampled_from([b"<< /K 1 >>", b"%c\n", b"% Tj\n", b"]", b"\x00", b"{",
+                     b")", b">", b"\xff", b"BI /W 1 /H 1 ID x EI Q",
+                     b"BI /W 1 ID"]),
+)
+_separator = st.sampled_from([b" ", b" ", b"\n", b"", b"\t\r ", b"%c\n"])
+
+
+@st.composite
+def _content_stream(draw):
+    """Operations of the shapes the scanner takes, between any tokens."""
+    out = []
+    for tok in draw(st.lists(st.one_of(
+            _content_token,
+            st.sampled_from([b"/F1 11 Tf", b"/F2 11 Tf", b"0 -13 Td",
+                             b"T*", b"(ab) Tj", b"<00410042> Tj",
+                             b"[<0041> -250 (c)] TJ", b"1 0 0 1 72 720 cm"])),
+            max_size=24)):
+        out += [draw(_separator), tok]
+    return b"".join(out)
+
+
+@given(_content_stream())
+@example(b"BT /F1 %c\n 11 Tf (a) Tj 1 %x\n2 Td ET")
+@example(b"1.2.3 Td 12abc (a) Tj +. (b) Tj")
+@example(b"1 2 BI /W 1 ID x EI Q (a) Tj")
+@example(b"true null (a) Tj false")
+@example(b"/F2 11%c\nTf <0041> Tj (a) /F1 11 Tf (b) Tj")
+@example(b"/F1 11 Tf (a\\)b) Tj <414> Tj <41 42> Tj [[1] (a)] TJ")
+@example(b"/F2 11 Tf [(a) " + b"9" * 5000 + b" <0042>] TJ [-"
+         + b"9" * 5000 + b" <0043>] TJ")
+@example(b"/F1 11 Tf [(\xfe\xff\x00A) -250 (b)] TJ (\xfe\xff\x00B) Tj")
+@example(b"(a) Tj ] (b) Tj [1 2] ] TJ")
+@example(b"(a) Tj \x00 (b) Tj")
+@example(b"(a) Tj \xff (b) Tj")
+@example(b"(a) Tj { (b) Tj")
+@example(b"(x) %'")
+@example(b"(a) Tj\n% end")
+@example(b"/Im1 Do 1 0 0 1 0 0 cm /Im1 Do BI /W 1 EI")
+@settings(max_examples=400, deadline=None)
+def test_page_loop_equals_tokenize_loop(content):
+    got, want = _extract_both(content)
+    assert got == want
+
+
+def test_scanner_takes_the_common_shapes():
+    shapes = {b" 0 -13 Td": "skip", b" BT": "skip", b"1 0 0 1 72 720 cm": "skip",
+              b"true": "skip", b"/F1 11 Tf": "tf", b"<0041> Tj": "tjhex",
+              b"(ab) Tj": "tjlit", b"[<0041> -250 (c)] TJ": "tjarr",
+              b"T*": "tstar"}
+    for data, group in shapes.items():
+        assert _OPERATION.match(data).lastgroup == group, data
+    for data in (b"1 Tj", b"/F1 Tf", b"(a\\)b) Tj", b"[/N] TJ", b"/Im1 Do",
+                 b"BI", b"'", b"T*x", b"(x) %'"):
+        m = _OPERATION.match(data)
+        assert m is None or m.lastgroup == "skip" and data == b"T*x", data
+
+
+def test_page_loop_is_linear():
+    """200,000 numbers pending before one show, and 100,000 ignored
+    operations: each page is read in one pass."""
+    for content in (b" ".join([b"1"] * 200_000) + b" /x Tj",
+                    b" 0 0 Td" * 100_000):
+        pdf = _two_font_pdf(content)
+        t0 = time.perf_counter()
+        res = extract_doc(pdf)
+        assert time.perf_counter() - t0 < 2.0
+        assert res["error"] is None
+
+
+def test_hex_memo_is_bounded():
+    cm = parse_cmap(_TJ_CMAP)
+    long_digits = b"0041" * (cmap._HEX_KEY_MAX // 4 + 1)
+    assert cm.hex2text(long_digits) == "A" * (cmap._HEX_KEY_MAX // 4 + 1)
+    assert long_digits not in cm._hex_texts
+    for i in range(cmap._TEXT_MEMO_MAX + 10):
+        digits = b"%08x" % i
+        assert cm.hex2text(digits) == cm.code2text(bytes.fromhex(
+            digits.decode()))
+    assert len(cm._hex_texts) == cmap._TEXT_MEMO_MAX
+
+
 # --- extract_doc golden digests ------------------------------------------------
 
 _GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden",
@@ -522,6 +636,73 @@ def test_lzw_round_trip(seed, n, alphabet):
     data = bytes(rnd.randrange(alphabet) for _ in range(n))
     enc = pdfgen.lzw_encode(data)
     assert filters.lzw_decode(enc, None) == data
+
+
+# --- LZW: run-wise code extraction == the per-code decoder -------------------
+
+def _lzw_outcome(decode, data: bytes):
+    try:
+        return "bytes", decode(data, None)
+    except Exception as exc:  # noqa: BLE001 - the exception is the result
+        return "raises", type(exc).__name__
+
+
+@st.composite
+def _lzw_stream(draw):
+    """Encoder output across width bumps and CLEARs, STOP mid-stream,
+    truncations, bit flips, or random bytes."""
+    rnd = draw(st.randoms(use_true_random=False))
+    kind = draw(st.sampled_from(["random", "encoded", "stop", "cut", "flip"]))
+    if kind == "random":
+        return rnd.randbytes(rnd.randrange(600))
+    n = rnd.choice([0, 5, 300, 2000, 9000])
+    alphabet = rnd.choice([2, 16, 256])
+    enc = pdfgen.lzw_encode(bytes(rnd.randrange(alphabet) for _ in range(n)))
+    if kind == "stop":  # STOP, then bytes the decoder must not read
+        return enc + rnd.randbytes(rnd.randrange(1, 40))
+    if kind == "cut" and enc:
+        return enc[:rnd.randrange(len(enc))]
+    if kind == "flip" and enc:
+        b = bytearray(enc)
+        for _ in range(rnd.randint(1, 3)):
+            b[rnd.randrange(len(b))] ^= 1 << rnd.randrange(8)
+        return bytes(b)
+    return enc
+
+
+@given(_lzw_stream())
+@example(b"")
+@example(b"\x80\x00")  # CLEAR first
+@example(pdfgen.lzw_encode(bytes(range(256)) * 40))  # every width, a CLEAR
+@settings(max_examples=150, deadline=None)
+def test_lzw_runs_equal_per_code_decoder(data):
+    want = _lzw_outcome(oracles.lzw_decode_per_code, data)
+    if want == ("raises", "IndexError"):  # a first code past the table
+        want = ("raises", "PdfError")
+    assert _lzw_outcome(filters.lzw_decode, data) == want
+
+
+def _pack_codes(codes, width=9) -> bytes:
+    bits = "".join(format(c, "0%db" % width) for c in codes)
+    bits += "0" * (-len(bits) % 8)
+    return int(bits, 2).to_bytes(len(bits) // 8, "big")
+
+
+def test_bad_first_lzw_code_is_a_page_error():
+    """Page 2's stream starts with code 300, past the 258-entry table:
+    a page-level PdfError, so pages 1 and 3 keep their spans."""
+    def bad_page_two(b):
+        raw = _pack_codes([300, 65, 257])
+        b.bodies[3] = (b"<< /Filter /LZWDecode /Length %d >>\nstream\n"
+                       % len(raw) + raw + b"\nendstream")
+
+    pdf = pdfgen.simple_pdf(
+        [b"BT /F1 12 Tf (one) Tj ET", b"BT /F1 12 Tf (two) Tj ET",
+         b"BT /F1 12 Tf (three) Tj ET"],
+        content_filters=["LZWDecode"], builder_hook=bad_page_two)
+    res = extract_doc(pdf)
+    assert [s["text"] for s in res["spans"]] == ["one\n", "three\n"]
+    assert res["error"] == "page 1: LZW code 300 before any table entry"
 
 
 # --- fonts: one CMap per document --------------------------------------------
